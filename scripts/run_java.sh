@@ -1,13 +1,19 @@
 #!/bin/bash
-# Run any graft main from a compiled classes snapshot with plain java —
-# the generic sibling of run_bench_java.sh for adjudication harnesses
-# (Rowtime, Profile, PlanDump): no sbt involvement, so edits/compiles in
-# the working tree cannot disturb a running measurement, and two class
-# snapshots can alternate in one calm window.
+# Run any graft main (graft.Bench, graft.Verify, graft.harness.PlanDump)
+# from a compiled classes snapshot with plain java: no sbt involvement, so
+# edits/compiles in the working tree cannot disturb a running measurement,
+# and two class snapshots can alternate in one calm window. A missing
+# snapshot dir is first filled with a copy of target/scala-2.13/classes.
 # Usage: run_java.sh <snapshot_dir> <mainClass> [args...]
-# Env: SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS pass through (defaults sf0.1/32).
+#   e.g. run_java.sh /tmp/snap_a graft.Bench search_bm25_topk > a.json
+# Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default: every core) and the
+# SPARK_GRAFT_BENCH_* knobs pass through; SPARK_DRIVER_MEM sets -Xmx (8g).
 set -euo pipefail
 SNAP="$1"; MAIN="$2"; shift 2
+if [ ! -d "$SNAP" ]; then
+  mkdir -p "$SNAP"
+  cp -a target/scala-2.13/classes/. "$SNAP/"
+fi
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
@@ -16,8 +22,5 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}" \
-SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
 java $ADD_OPENS -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$SNAP:/opt/spark/jars/*" "$MAIN" "$@"

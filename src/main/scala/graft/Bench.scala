@@ -10,8 +10,11 @@ import org.apache.spark.sql.SparkSession
   * and the driver recorded parsed=null) because a line timing the full
   * ~150-query surface gets truncated and fails to parse. Set
   * SPARK_GRAFT_BENCH_ALL=1 to time the full query surface instead (local
-  * iteration); either way the complete per-query timing map (plus the full
-  * resampled name list) is written to target/bench_full.json.
+  * iteration), or name rows (`graft.Bench <row>…`, any of [[runnable]]) to
+  * time only those — the A/B form: same warmup, same interleaved
+  * min-of-samples, no frozen subtotals and no streaming lanes. Either way
+  * the complete per-query timing map (plus the full resampled name list)
+  * is written to target/bench_full.json.
   *
   * Contention defenses (the r10 artifact breached the 2× gate purely from
   * a machine-load window while the same-machine clean rerun read 1.46×):
@@ -265,29 +268,43 @@ object Bench {
         k = 10, nProbe = 8, refine = 4)
     }))
 
+  /** Every row the bench can time: the registered gate queries plus the
+    * bench-only [[extras]]. */
+  lazy val runnable: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
+    SparkEntry.queries ++ extras
+
+  /** The rows one run times: the named rows when given, else the headline
+    * set (the full surface under SPARK_GRAFT_BENCH_ALL=1). An unknown name
+    * is refused — a typo must not silently time nothing. */
+  private[graft] def rowsToTime(args: Seq[String]): Seq[String] = {
+    val unknown = args.filterNot(runnable.contains)
+    require(unknown.isEmpty, s"unknown bench row(s): ${unknown.mkString(", ")}")
+    if (args.nonEmpty) args.distinct
+    else if (sys.env.get("SPARK_GRAFT_BENCH_ALL").contains("1"))
+      SparkEntry.queries.keys.toSeq ++ extras.keys
+    else headline.filter(runnable.contains)
+  }
+
   /** sf-dir → filesystem-safe token for per-sf /tmp store paths (the
     * SparkEntry.tmpToken convention — one copy per file, same regex). */
   private def pathToken(dir: String): String = dir.replaceAll("[^A-Za-z0-9.]", "_")
 
   /** The positional store the phrase-battery row searches — built ONCE per
-    * bench run in the warmup block (store build is artifact prep, like
-    * ensureCatalog; the row times the SEARCH). */
-  private def benchPhraseStore(dir: String): String =
+    * bench run by [[graft.harness.GraftSession.prepareBenchFixtures]]
+    * (store build is artifact prep, like ensureCatalog; the row times the
+    * SEARCH). */
+  private[graft] def benchPhraseStore(dir: String): String =
     s"/tmp/graft_bench_posidx_${pathToken(dir)}"
 
   def main(args: Array[String]): Unit = {
+    val names = rowsToTime(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // TypedImperativeAggregate (minhash/simhash) groups far exceed the
-      // 128-group default before the sort-based fallback kicks in
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // r19: the line echoes the EFFECTIVE core count (`"cpus"`) so the
+    // artifact can defend its own $SPARK_GRAFT_CPUS contract — the r18
+    // driver's scaling probe could not see the master the bench ran under
+    // and false-alarmed `suspect_cpus_ignored` on a contract Bench honors
+    val cpus = graft.harness.GraftSession.cpus
+    val spark = graft.harness.GraftSession.local(cpus, cpus)
     // Warm the JVM/codegen/parquet-reader paths once before timing: session
     // init and first-execution JIT/Janino compilation of the physical
     // operator shapes (scan, joins, window, explode, object hash agg) are
@@ -355,21 +372,8 @@ object Bench {
         if (!java.nio.file.Files.deleteIfExists(p))
           System.err.println(s"[bench] warmup cleanup: could not delete $p")
       } finally walk.close()
-      // input fixtures (one-time per sf dir, _READY-marker cached) are
-      // setup, not query work — build them outside the timed region
-      graft.harness.PipelineDemo.ensureCatalog(spark, sfDir)
-      SparkEntry.ensureCsvFixture(spark, sfDir)
-      // the phrase-battery row's positional store: rebuilt once per run
-      // (overwrite resets via the staged swap) — store prep, not query work
-      graft.operators.KeywordSearch.bm25IndexBuild(
-        spark.read.parquet(s"$sfDir/documents.parquet"), "text", "doc_id",
-        benchPhraseStore(sfDir), overwrite = true, positions = true)
     }
-    val all = sys.env.get("SPARK_GRAFT_BENCH_ALL").contains("1")
-    val runnable = SparkEntry.queries ++ extras
-    val names =
-      if (all) SparkEntry.queries.keys.toSeq ++ extras.keys
-      else headline.filter(runnable.contains)
+    graft.harness.GraftSession.prepareBenchFixtures(spark, sfDir)
     // explicit locale: f"" uses the JVM default — a comma-decimal locale
     // (de_DE etc.) would emit 0,123 and break the harness's JSON parse
     def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
@@ -525,9 +529,9 @@ object Bench {
     // rows/sec through the stateful sessionize and LSH near-dup paths over
     // a bounded MemoryStream feed of the sf dir's own rows. Reported as an
     // EXTRA field — the batch total (the 2× gate) is untouched. Opt out
-    // with SPARK_GRAFT_BENCH_STREAMING=0.
+    // with SPARK_GRAFT_BENCH_STREAMING=0; a named-row run skips it.
     val streamingJson =
-      if (sys.env.get("SPARK_GRAFT_BENCH_STREAMING").contains("0")) ""
+      if (args.nonEmpty || sys.env.get("SPARK_GRAFT_BENCH_STREAMING").contains("0")) ""
       else
         try {
           val s0 = s""""streaming":${streamingThroughput(spark, sfDir)},"""
@@ -543,17 +547,23 @@ object Bench {
     // the cross-round comparable: the FROZEN r10 row set's subtotal (new
     // headline rows change `value` but never this). A frozen row missing
     // from the timed results would silently SHRINK the comparable — the
-    // one number whose whole purpose is stability — so refuse loudly.
-    val resultMap = results.toMap
-    val missingShared = sharedRows.filterNot(resultMap.contains)
-    require(missingShared.isEmpty,
-      s"frozen shared rows missing from the timed sweep: ${missingShared.mkString(", ")}")
-    val sharedTotal = fmt(sharedRows.map(resultMap).sum)
-    val missingBaseline = baselineRows.filterNot(resultMap.contains)
-    require(missingBaseline.isEmpty,
-      s"frozen baseline rows missing from the timed sweep: ${missingBaseline.mkString(", ")}")
-    // like-for-like vs the r2 record (34.290 s over these exact 24 rows)
-    val baselineTotal = fmt(baselineRows.map(resultMap).sum)
+    // one number whose whole purpose is stability — so refuse loudly. A
+    // named-row run times a chosen subset and reports no subtotals.
+    val subtotals =
+      if (args.nonEmpty) ""
+      else {
+        val resultMap = results.toMap
+        val missingShared = sharedRows.filterNot(resultMap.contains)
+        require(missingShared.isEmpty,
+          s"frozen shared rows missing from the timed sweep: ${missingShared.mkString(", ")}")
+        val sharedTotal = fmt(sharedRows.map(resultMap).sum)
+        val missingBaseline = baselineRows.filterNot(resultMap.contains)
+        require(missingBaseline.isEmpty,
+          s"frozen baseline rows missing from the timed sweep: ${missingBaseline.mkString(", ")}")
+        // like-for-like vs the r2 record (34.290 s over these exact 24 rows)
+        val baselineTotal = fmt(baselineRows.map(resultMap).sum)
+        s""""shared_rows_total":$sharedTotal,"baseline_rows_total":$baselineTotal,"""
+      }
     val errJson = errors.map(e => "\"" + e.replace("\"", "'") + "\"").mkString("[", ",", "]")
     val resampledJson = resampled.map("\"" + _ + "\"").mkString("[", ",", "]")
     // escape sfDir like every other string field — a quote/backslash in the
@@ -561,16 +571,6 @@ object Bench {
     val sfJson = "\"" + sfDir.flatMap {
       case '"' => "\\\""; case '\\' => "\\\\"; case c => c.toString
     } + "\""
-    // r19: echo the EFFECTIVE core count so the artifact can defend its
-    // own $SPARK_GRAFT_CPUS contract — the r18 driver's scaling probe
-    // could not see the master the bench ran under and false-alarmed
-    // `suspect_cpus_ignored` on a contract Bench honors (see main()'s
-    // master(local[$cpus]) above). Quoted only when non-numeric (local[*])
-    val cpusJson = if (cpus.nonEmpty && cpus.forall(_.isDigit)) cpus
-      else "\"" + cpus.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case c => c.toString
-      } + "\""
-    val subtotals = s""""shared_rows_total":$sharedTotal,"baseline_rows_total":$baselineTotal,"""
     // r14: the artifact self-reports its window quality. Contention
     // shows as SLOW sentinel outliers — r13's official snapshot (hot:
     // 0.135–0.912 s, every row uniformly +20-30% vs both control runs)
@@ -624,11 +624,11 @@ object Bench {
     // calib_spread) stay, which is what round adjudication reads
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,""" +
       subtotals + calibJson + s""""resampled_n":${resampled.size},""" +
-      s"""$streamingJson"samples":$samples,"cpus":$cpusJson,"sf":$sfJson}"""
+      s"""$streamingJson"samples":$samples,"cpus":$cpus,"sf":$sfJson}"""
     val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,""" +
       subtotals + calibJson + heapDetailJson + s""""resampled":$resampledJson,""" +
       s"""$streamingJson"samples":$samples,"calib_sec":[${calib.map(fmt).mkString(",")}],""" +
-      s""""cpus":$cpusJson,"sf":$sfJson}"""
+      s""""cpus":$cpus,"sf":$sfJson}"""
     try {
       val p = java.nio.file.Paths.get("target/bench_full.json")
       java.nio.file.Files.createDirectories(p.getParent)

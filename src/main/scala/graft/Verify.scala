@@ -40,22 +40,13 @@ object Verify {
     val sfDir = args(0); val outDir = args(1)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = graft.harness.GraftSession.cpus
     // partition-count soak hook: the gate normally runs at partitions =
     // cpus; overriding (e.g. 200) flushes any partition-count-sensitive
     // assumption (banding, checkpoint reuse, per-shard windows) — every
     // registered query must hash identically at ANY partition count
-    val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      // TypedImperativeAggregate (minhash/simhash) groups far exceed the
-      // 128-group default before the sort-based fallback kicks in
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val parts = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").map(_.toInt).getOrElse(cpus)
+    val spark = graft.harness.GraftSession.local(cpus, parts)
     val selected = only match {
       case Some(names) => SparkEntry.queries.filter { case (k, _) => names(k) }
       case None        => SparkEntry.queries

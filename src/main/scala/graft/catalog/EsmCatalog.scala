@@ -354,8 +354,8 @@ final class EsmCatalog(
     * are built per group exactly as before, failures surface in GROUP
     * ORDER (futures are awaited in order, and Await rethrows the original
     * exception), and `skipOnError` drops a failed group inside its own
-    * task as before. `spark.graft.datasetDictThreads` (default 4, ≤ 1 =
-    * sequential) bounds the pool.
+    * task as before. The pool holds min(groups, 4) threads; a single
+    * group loads on the calling thread.
     */
   def toDatasetDict(coords: Seq[String] = Nil, aggregate: Boolean = true,
                     skipOnError: Boolean = false): Map[String, DataFrame] = {
@@ -380,8 +380,7 @@ final class EsmCatalog(
       try key -> Some(loadGroup(source, coords))
       catch { case e: Exception => if (skipOnError) key -> None else throw e }
     }
-    val threads = math.min(grouped.length,
-      spark.conf.getOption("spark.graft.datasetDictThreads").map(_.toInt).getOrElse(4))
+    val threads = math.min(grouped.length, 4)
     val loaded =
       if (threads <= 1) grouped.map(loadOne)
       else {

@@ -103,34 +103,10 @@ final case class EsmDataSource(
         // native DAP2 client (source.py:70-137's last format): DDS/DAS parse
         // → the shared chunk-map plane; each ref is a `.dods` hyperslab
         // request fetched in parallel tasks (sources.Dap2Index)
-        val entries0 = graft.sources.Dap2Index.read(spark, path, storageOptions)
-        // persisted in decode modes for the same fan-out reason as
-        // decodeEntries (the plain-entries mode stays lazy/uncached)
-        val entries =
-          if (storageOptions.get("graft.kerchunk.decode")
-              .exists(Set("typed", "coords", "cf")))
-            graft.sources.KerchunkIndex.sharedEntries(entries0)
-          else entries0
-        storageOptions.get("graft.kerchunk.decode") match {
-          case Some("typed") =>
-            graft.sources.KerchunkIndex.decodeTyped(
-              graft.sources.Dap2Index.materialize(entries),
-              graft.sources.KerchunkIndex.arrayMeta(entries))
-          case Some("coords") =>
-            graft.sources.KerchunkIndex.decodeCoords(
-              graft.sources.Dap2Index.materialize(entries),
-              graft.sources.KerchunkIndex.arrayMeta(entries),
-              graft.sources.KerchunkIndex.attrDims(entries))
-          case Some("cf") =>
-            // DAS attributes ride the same synthesized .zattrs plane, so CF
-            // decode layers identically over the DAP2 chunk map
-            graft.sources.CfDecode.decodeCf(
-              graft.sources.Dap2Index.materialize(entries),
-              graft.sources.KerchunkIndex.arrayMeta(entries),
-              graft.sources.KerchunkIndex.attrDims(entries),
-              graft.sources.CfDecode.cfAttrs(entries))
-          case _ => entries
-        }
+        // DAS attributes ride the same synthesized .zattrs plane, so every
+        // decode mode layers identically over the DAP2 chunk map
+        decodeEntries(graft.sources.Dap2Index.read(spark, path, storageOptions),
+          graft.sources.Dap2Index.materialize)
       case other =>
         throw new UnsupportedOperationException(
           s"data format '$other' needs an external Spark connector (source.py:70-137)")
@@ -140,8 +116,15 @@ final case class EsmDataSource(
     * absent = the entry rows themselves, `typed` = decoded values,
     * `coords` = decoded values with dimension-labeled global indices,
     * `cf` = coords plus CF-convention mask/scale/time decode
-    * ([[graft.sources.CfDecode]] — the xarray.open_dataset defaults). */
-  private def decodeEntries(entries0: DataFrame): DataFrame =
+    * ([[graft.sources.CfDecode]] — the xarray.open_dataset defaults).
+    * `materialize` fetches the chunk bytes the entries reference: byte
+    * ranges of the container files by default, `.dods` hyperslab requests
+    * for opendap ([[graft.sources.Dap2Index.materialize]]). */
+  private def decodeEntries(
+      entries0: DataFrame,
+      materialize: DataFrame => DataFrame =
+        graft.sources.KerchunkIndex.materializeChunks(_, storageOptions = storageOptions),
+  ): DataFrame =
     storageOptions.get("graft.kerchunk.decode") match {
       case Some(mode @ ("typed" | "coords" | "cf")) =>
         // persist the tiny entries frame once: the decode plane references
@@ -149,20 +132,15 @@ final case class EsmDataSource(
         // occurrence would otherwise re-run the container walk
         // (KerchunkIndex.sharedEntries note)
         val entries = graft.sources.KerchunkIndex.sharedEntries(entries0)
+        val chunks = materialize(entries)
+        val meta = graft.sources.KerchunkIndex.arrayMeta(entries)
         mode match {
-          case "typed" =>
-            graft.sources.KerchunkIndex.decodeTyped(
-              graft.sources.KerchunkIndex.materializeChunks(entries, storageOptions = storageOptions),
-              graft.sources.KerchunkIndex.arrayMeta(entries))
+          case "typed" => graft.sources.KerchunkIndex.decodeTyped(chunks, meta)
           case "coords" =>
-            graft.sources.KerchunkIndex.decodeCoords(
-              graft.sources.KerchunkIndex.materializeChunks(entries, storageOptions = storageOptions),
-              graft.sources.KerchunkIndex.arrayMeta(entries),
+            graft.sources.KerchunkIndex.decodeCoords(chunks, meta,
               graft.sources.KerchunkIndex.attrDims(entries))
           case _ =>
-            graft.sources.CfDecode.decodeCf(
-              graft.sources.KerchunkIndex.materializeChunks(entries, storageOptions = storageOptions),
-              graft.sources.KerchunkIndex.arrayMeta(entries),
+            graft.sources.CfDecode.decodeCf(chunks, meta,
               graft.sources.KerchunkIndex.attrDims(entries),
               graft.sources.CfDecode.cfAttrs(entries))
         }

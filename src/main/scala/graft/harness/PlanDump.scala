@@ -1,15 +1,13 @@
 package graft.harness
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only plan capture: writes `explain("formatted")` output for named
   * queries (SparkEntry.queries ∪ Bench.extras) to `plans/<tag>/<name>_<suffix>.txt`
   * — the optimization-round evidence files the judge reads. Not part of the
   * driver contract; run with
   * `sbt "runMain graft.harness.PlanDump <tag> <suffix> <name>[,name...]"`.
   *
-  * The session mirrors Bench's exactly (same master, shuffle partitions,
-  * fallback threshold) so the captured plans are the plans the bench runs.
+  * The session and fixtures are Bench's ([[GraftSession]]), so the captured
+  * plans are the plans the bench runs.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -18,15 +16,7 @@ object PlanDump {
     val suffix = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus, GraftSession.cpus)
     // r19: optional session confs ("k=v;k=v") so branch-gated plans (e.g.
     // the phrase vote co-partitioning, which fires only at scale) can be
     // captured with the gate forced
@@ -34,15 +24,12 @@ object PlanDump {
       val Array(k, v) = kv.split("=", 2)
       spark.conf.set(k.trim, v.trim)
     })
-    // bench-parity fixtures (idempotent; _READY-marker cached)
-    graft.harness.PipelineDemo.ensureCatalog(spark, sfDir)
-    graft.SparkEntry.ensureCsvFixture(spark, sfDir)
-    val runnable = graft.SparkEntry.queries ++ graft.Bench.extras
+    GraftSession.prepareBenchFixtures(spark, sfDir)
     val outDir = java.nio.file.Paths.get(s"plans/$tag")
     java.nio.file.Files.createDirectories(outDir)
     names.foreach { name =>
       val df =
-        try runnable(name)(spark, sfDir)
+        try graft.Bench.runnable(name)(spark, sfDir)
         catch { case e: Throwable =>
           System.err.println(s"[plandump] $name BUILD FAILED: ${e.getMessage}")
           spark.emptyDataFrame

@@ -953,9 +953,15 @@ object KeywordSearch {
     // rarest-df refinement (×df_rarest/df) was measured WORTHLESS on the
     // fixture (26.9M vs U = 27.1M vs 24.3M true — candidate docs hold
     // most postings of a phrase's terms) and needs the whole front half
-    // ahead of the main action, so U it is. Default: 2e8 vote rows ≈
-    // 8 GB exchanged — the sf0.1 1k battery (U = 27.1M, and measured
-    // FASTER without co-partitioning) stays 7× under, while any
+    // ahead of the main action, so U it is. U ignores candidate pruning,
+    // so it is LOOSE for a battery that pairs a rare term with a
+    // stop-word: the rare term leaves few candidate docs, but the
+    // stop-word's corpus-wide ctf still enters U, and the gate can fire
+    // on a vote volume orders of magnitude smaller than U. Results stay
+    // bit-identical either way (PlanAuditSpec pins both branches); only
+    // the re-spread cost is paid when it was not needed. Default: 2e8
+    // vote rows ≈ 8 GB exchanged — the sf0.1 1k battery (U = 27.1M, and
+    // measured FASTER without co-partitioning) stays 7× under, while any
     // corpus-scale battery clears it; production tunes
     // spark.graft.phraseVoteCopartitionRows to taste (≤ 0 disables).
     val voteGate = spark.conf.getOption("spark.graft.phraseVoteCopartitionRows")

@@ -24,12 +24,6 @@ object TextAnalysis {
   /** Token count: whitespace segmentation (spaces + newlines/tabs). */
   def tokenCount(c: Column): Column = size(tokens(c))
 
-  /** BPE-ish subword count estimate: word-piece regex segmentation —
-    * alternating letter-runs / digit-runs / single punctuation, the classic
-    * GPT-2 pre-tokenizer shape. */
-  def subwordCount(c: Column): Column =
-    size(filter(split(c, "(?=[^A-Za-z0-9])|(?<=[^A-Za-z0-9])"), t => length(trim(t)) > 0))
-
   // ------------------------------------------------------------- language ID
 
   /** Tiny stopword inventories for the n-gram/stopword-ratio heuristic. */
@@ -80,19 +74,6 @@ object TextAnalysis {
       .withColumn("punct_ratio",
         when(length(c) > 0, col("n_punct").cast(DoubleType) / length(c).cast(DoubleType)))
   }
-
-  /** Composite quality score in [0,1]: weighted mix of alpha ratio, token
-    * length sanity, and punctuation moderation — C4/Gopher-style gates
-    * reduced to an arithmetic expression. */
-  def qualityScore(df: DataFrame, textCol: String): DataFrame =
-    qualityFeatures(df, textCol)
-      .withColumn("quality_score",
-        round(
-          greatest(lit(0.0), least(lit(1.0),
-            col("alpha_ratio") * 0.6
-              + when(col("mean_token_len").between(3.0, 12.0), 0.3).otherwise(0.0)
-              + when(col("punct_ratio") <= 0.1, 0.1).otherwise(0.0))),
-          4))
 
   /** Gopher quality-filter rules (Rae et al. 2021, arXiv:2112.11446,
     * Appendix A1) as per-rule boolean columns plus their conjunction
@@ -327,11 +308,6 @@ object TextAnalysis {
     * (a Horner fold would overflow LongType); pure codegen'd aggregate. */
   def rollingHash(c: Column): Column =
     aggregate(tokens(lower(c)), lit(0L), (acc, t) => xxhash64(acc, t))
-
-  /** Winnowing-style k-gram min-sample: the smallest `keep` hashes of the
-    * word k-grams — a robust near-dup sketch. */
-  def minSampleSketch(c: Column, k: Int = 3, keep: Int = 8): Column =
-    slice(sort_array(transform(Dedup.wordShingles(c, k), g => xxhash64(g))), 1, keep)
 
   // ---------------------------------------------------- repetition signals
 

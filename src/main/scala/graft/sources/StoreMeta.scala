@@ -255,10 +255,6 @@ private[graft] object StoreMeta {
       catch { case _: Exception => None }
     }
 
-  private def leaseJson(fs: org.apache.hadoop.fs.FileSystem,
-                        lock: org.apache.hadoop.fs.Path): Option[org.json4s.JValue] =
-    parseLease(readFileBytes(fs, lock))
-
   /** Lease-lock paths THIS THREAD currently holds (qualified URI strings)
     * — the reentrancy token [[withWriterLock]] records and
     * [[withRecoveryLease]]/[[awaitSwapWindow]] consult. Per-THREAD, not

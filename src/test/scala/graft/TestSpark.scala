@@ -21,18 +21,8 @@ object StoreTestUtil {
   }
 }
 
-/** One shared local session for all suites. */
+/** One shared local session for all suites: `local[4]`, 4 shuffle
+  * partitions, whatever the host's core count. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = graft.harness.GraftSession.local(4, 4)
 }
