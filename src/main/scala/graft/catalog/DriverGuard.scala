@@ -1,6 +1,6 @@
 package graft.catalog
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** Guard rail for the few deliberate driver-side materializations in the
   * catalog plane (group records in [[EsmCatalog.getEntry]], the dict-inline
@@ -24,7 +24,7 @@ object DriverGuard {
   /** Collect `df` to the driver, failing fast (with the configured cap and
     * the offending context in the message) if it exceeds the cap. */
   def boundedCollect(df: DataFrame, what: String): Array[Row] = {
-    val max  = df.sparkSession.conf.get(confKey, defaultMaxRows.toString).toInt
+    val max  = maxRows(df.sparkSession)
     val rows = df.limit(max + 1).collect()
     require(rows.length <= max,
       s"$what would materialize more than $max rows on the driver " +
@@ -39,9 +39,20 @@ object DriverGuard {
     * count alone would let the payload through. `limit(max+1).count()`
     * early-exits the scan. */
   def assertBounded(df: DataFrame, what: String): Unit = {
-    val max = df.sparkSession.conf.get(confKey, defaultMaxRows.toString).toInt
-    require(df.limit(max + 1).count() <= max,
+    val max = maxRows(df.sparkSession)
+    check(df.limit(max + 1).count(), max, what)
+  }
+
+  /** [[assertBounded]] for a row count the caller already holds (the
+    * catalog's group pass sums its counts): same cap, same message, no job. */
+  def requireBounded(rows: Long, spark: SparkSession, what: String): Unit =
+    check(rows, maxRows(spark), what)
+
+  private def maxRows(spark: SparkSession): Int =
+    spark.conf.get(confKey, defaultMaxRows.toString).toInt
+
+  private def check(rows: Long, max: Int, what: String): Unit =
+    require(rows <= max,
       s"$what exceeds $max rows (cap '$confKey' = $max); " +
         "fix the catalog bound or raise the cap.")
-  }
 }

@@ -3,6 +3,7 @@ package graft.catalog
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.derived.DerivedVariableRegistry
 import graft.search.QueryCompiler
@@ -13,7 +14,8 @@ import graft.search.QueryCompiler
   * Holds the descriptor + a single *lazy* DataFrame plan of the asset table
   * (subsuming the reference's pandas/polars/LazyFrame triple-cache,
   * cat.py:492-579 — one Catalyst plan is all three). Nothing collects the
-  * table except explicitly-bounded group materialization.
+  * table except the declared-attrs group pass (one row per group), `keys`
+  * itself, and explicitly-bounded group materialization.
   */
 final class EsmCatalog(
     val spark: SparkSession,
@@ -28,6 +30,7 @@ final class EsmCatalog(
     val descriptorDir: Option[String] = None,
 ) {
   import CatalogReader.ContainerType
+  import EsmCatalog.Grouping
 
   private def copyWith(
       df: DataFrame = df,
@@ -114,34 +117,82 @@ final class EsmCatalog(
 
   /** Tri-state null check per column (reference `_allnan_or_nonan`,
     * cat.py:26-45): all-null → drop the attr; mixed → error; else keep.
-    * One aggregate pass over all candidate columns — no collect.
-    */
-  private def pruneAllNull(cols: Seq[String]): Seq[String] = {
-    if (cols.isEmpty) return cols
-    val aggs  = cols.flatMap(c => Seq(count(col(c)).as(s"__nn_$c"))) :+ count(lit(1)).as("__total")
-    val row   = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    val total = row.getAs[Long]("__total")
+    * `nonNull(c)` counts the rows where `c` has a value, out of `total`. */
+  private def pruneNulls(cols: Seq[String], nonNull: String => Long, total: Long): Seq[String] =
     cols.filter { c =>
-      val nonNull = row.getAs[Long](s"__nn_$c")
-      if (nonNull == 0L) false
-      else if (nonNull < total)
+      val n = nonNull(c)
+      if (n == 0L) false
+      else if (n < total)
         throw new IllegalArgumentException(
           s"The data in the $c column should either be all NaN or there should be no NaNs")
       else true
     }
+
+  /** [[pruneNulls]] from one global aggregate over `cols` — no rows are
+    * collected. The row-sized cases use it, where the group attrs cover
+    * every column and a group pass would collect one row per asset:
+    * [[rowSizedAttrs]] and `toDatasetDict(aggregate = false)`. */
+  private def pruneAllNull(cols: Seq[String]): Seq[String] = {
+    if (cols.isEmpty) return cols
+    val aggs  = cols.map(c => count(col(c)).as(s"__nn_$c")) :+ count(lit(1)).as("__total")
+    val row   = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+    pruneNulls(cols, c => row.getAs[Long](s"__nn_$c"), row.getAs[Long]("__total"))
+  }
+
+  /** The group pass: `groupBy(cols cast to string).count()`, collected —
+    * one row per group. Every grouping fact derives from its tuples on the
+    * driver. A column is all-null when no tuple has a value and mixed when
+    * some tuples do, so the null check needs no second aggregate. The attrs
+    * it prunes are constant (null), so the tuples are exactly the kept
+    * attrs' groups, and their values are what [[keyColumn]] joins. */
+  private def groupPass(cols: Seq[String]): Grouping = {
+    val rows  = df.groupBy(cols.map(c => col(c).cast(StringType)): _*).count().collect()
+    val n     = cols.size // the count's ordinal
+    val total = rows.iterator.map(_.getLong(n)).sum
+    val attrs = pruneNulls(cols,
+      c => { val i = cols.indexOf(c); rows.iterator.filter(!_.isNullAt(i)).map(_.getLong(n)).sum },
+      total)
+    val idx = attrs.map(cols.indexOf)
+    // one key per distinct joined string: ("a.b","c") and ("a","b.c") are
+    // one key, as in the reference's dict (cat.py:378-385); sorted in
+    // Spark's string order (UTF-8 bytes), not String.compareTo's UTF-16
+    val keys = rows.map(r => idx.flatMap(i => Option(r.getString(i))).mkString(sep)).distinct
+      .map(k => UTF8String.fromString(k) -> k).sortWith((a, b) => a._1.compareTo(b._1) < 0).map(_._2)
+    Grouping(attrs, keys.toSeq, total)
+  }
+
+  /** Effective groupby attrs, keys and asset count (cat.py:355-385) from
+    * ONE group pass over the declared attrs per catalog instance: `df` is
+    * immutable per instance, so keys, length, effectiveGroupbyAttrs,
+    * reprStats, containsKey and toDatasetDict all read this value. The pass
+    * is metadata-sized (one row per dataset), and only this case gains from
+    * it. `None` when the declared attrs are none or every column, or are all
+    * null in a non-empty table: then the groups are the rows, so
+    * [[rowSizedAttrs]] and distributed `count` jobs answer instead, and only
+    * `keys` itself collects rows. */
+  private lazy val declaredGrouping: Option[Grouping] = {
+    val declared = model.groupbyAttrs.filter(df.columns.contains)
+    if (declared.isEmpty || declared.toSet == df.columns.toSet) None
+    else Some(groupPass(declared)).filter(g => g.attrs.nonEmpty || g.assets == 0L)
+  }
+
+  /** The attrs when [[declaredGrouping]] is `None`, by global aggregates:
+    * declared attrs that are every column, pruned, unless that leaves none
+    * or still every column; else the reference's fallback, every non-null
+    * column. (Declared attrs short of every column were pruned to nothing
+    * by the group pass already.) */
+  private def rowSizedAttrs: Seq[String] = {
+    val declared = model.groupbyAttrs.filter(df.columns.contains)
+    val kept     = if (declared.toSet == df.columns.toSet) pruneAllNull(declared) else Nil
+    if (kept.nonEmpty && kept.toSet != df.columns.toSet) kept
+    else pruneAllNull(df.columns.toSeq)
   }
 
   /** Effective groupby attributes (cat.py:355-376): pruned of all-null
     * columns; fall back to *all* non-null columns when empty or equal to the
-    * full column set. LAZY VAL: `df` is immutable per catalog instance and
-    * pruneAllNull is a full-table aggregate — as a def every keys/length/
-    * getEntry/containsKey/toDatasetDict call would re-scan the asset table
-    * (twice on the fallback path). */
-  lazy val effectiveGroupbyAttrs: Seq[String] = {
-    val attrs = pruneAllNull(model.groupbyAttrs.filter(df.columns.contains))
-    if (attrs.nonEmpty && attrs.toSet != df.columns.toSet) attrs
-    else pruneAllNull(df.columns.toSeq)
-  }
+    * full column set. LAZY VAL: off the group pass the prune is a full-table
+    * aggregate, which every keys/length/getEntry call would otherwise redo. */
+  lazy val effectiveGroupbyAttrs: Seq[String] = declaredGrouping.fold(rowSizedAttrs)(_.attrs)
 
   /** The group key expression: sep-joined stringified attr values
     * (cat.py:378-385). */
@@ -155,10 +206,17 @@ final class EsmCatalog(
     df.select(keyColumn(attrs).as("key") +: attrs.map(col): _*).distinct()
   }
 
-  def keys: Seq[String] =
-    keysInfo.select("key").orderBy("key").collect().map(_.getString(0)).toSeq
+  /** The distinct group keys, as a distributed plan (the row-sized cases). */
+  private def distinctKeys: DataFrame =
+    df.select(keyColumn(effectiveGroupbyAttrs).as("key")).distinct()
 
-  def length: Long = keysInfo.count()
+  /** The group keys, each once, in Spark's string order. */
+  def keys: Seq[String] = declaredGrouping.fold(
+    distinctKeys.orderBy("key").collect().map(_.getString(0)).toSeq)(_.keys)
+
+  def length: Long = declaredGrouping.fold(distinctKeys.count())(_.keys.size.toLong)
+
+  private def assets: Long = declaredGrouping.fold(df.count())(_.assets)
 
   /** Template used to build entry keys: the `sep`-joined DECLARED groupby
     * attrs, or every column when there is no aggregation control
@@ -178,9 +236,8 @@ final class EsmCatalog(
 
   /** `<id> catalog with N dataset(s) from M asset(s)` (core.py:358-378). */
   def reprStats: String = {
-    val nAssets = df.count()
-    val id      = model.id.getOrElse("catalog")
-    s"<$id catalog with $length dataset(s) from $nAssets asset(s)>"
+    val id = model.id.getOrElse("catalog")
+    s"<$id catalog with $length dataset(s) from $assets asset(s)>"
   }
 
   private def htmlEscape(s: String): String =
@@ -197,7 +254,7 @@ final class EsmCatalog(
       s"<tr><th>${htmlEscape(c)}</th><td>$n</td></tr>"
     }.mkString
     s"<p><strong>${htmlEscape(model.id.getOrElse(""))} catalog with $length dataset(s) " +
-      s"from ${df.count()} asset(s)</strong>:</p>" +
+      s"from $assets asset(s)</strong>:</p>" +
       s"""<table border="1"><thead><tr><th></th><th>unique</th></tr></thead><tbody>$body</tbody></table>"""
   }
 
@@ -274,10 +331,8 @@ final class EsmCatalog(
     buildSource(key, rows.map(rowToMap).toSeq)
   }
 
-  def containsKey(key: String): Boolean = {
-    val attrs = effectiveGroupbyAttrs
-    !df.filter(keyColumn(attrs) === lit(key)).isEmpty
-  }
+  def containsKey(key: String): Boolean = declaredGrouping.fold(
+    !df.filter(keyColumn(effectiveGroupbyAttrs) === lit(key)).isEmpty)(_.keys.contains(key))
 
   private def rowToMap(row: org.apache.spark.sql.Row): Map[String, Any] =
     row.schema.fieldNames.zipWithIndex.map { case (n, i) =>
@@ -359,16 +414,26 @@ final class EsmCatalog(
     */
   def toDatasetDict(coords: Seq[String] = Nil, aggregate: Boolean = true,
                     skipOnError: Boolean = false): Map[String, DataFrame] = {
-    if (df.isEmpty) return Map.empty // early exit (core.py:684-691)
-    val attrs =
-      if (aggregate) effectiveGroupbyAttrs
-      else pruneAllNull(df.columns.toSeq)
-    // One pass: group records collected per key (bounded: catalog metadata,
-    // with the DriverGuard tripwire in case the grouping assumption breaks).
-    // The RECORD count is what actually lands on the driver — every catalog
-    // row rides inside some group's collect_list — so cap it directly; the
-    // outer group-row cap alone would let a few-huge-groups catalog through.
-    DriverGuard.assertBounded(df, "toDatasetDict(catalog records)")
+    // Group records are collected per key (bounded: catalog metadata, with
+    // the DriverGuard tripwire in case the grouping assumption breaks). The
+    // RECORD count is what actually lands on the driver — every catalog row
+    // rides inside some group's collect_list — so cap it directly, before
+    // anything row-sized is collected; the outer group-row cap alone would
+    // let a few-huge-groups catalog through. The declared-attrs group pass
+    // already holds the record count, so there the empty exit
+    // (core.py:684-691) and the cap cost no job.
+    val records = "toDatasetDict(catalog records)"
+    val attrs = (if (aggregate) declaredGrouping else None) match {
+      case Some(g) =>
+        if (g.assets == 0L) return Map.empty
+        DriverGuard.requireBounded(g.assets, spark, records)
+        g.attrs
+      case None =>
+        if (df.isEmpty) return Map.empty
+        val attrs = if (aggregate) effectiveGroupbyAttrs else pruneAllNull(df.columns.toSeq)
+        DriverGuard.assertBounded(df, records)
+        attrs
+    }
     val grouped = DriverGuard.boundedCollect(
       df.groupBy(keyColumn(attrs).as("__graft_key"))
         .agg(collect_list(struct(df.columns.map(col): _*)).as("__graft_records")),
@@ -427,6 +492,10 @@ final class EsmCatalog(
 }
 
 object EsmCatalog {
+  /** What the group pass yields: the effective groupby attrs, the sorted
+    * distinct keys, and the asset (row) count. */
+  private final case class Grouping(attrs: Seq[String], keys: Seq[String], assets: Long)
+
   /** Open a datastore from a JSON descriptor path (core.py:89-153).
     * `storageOptions` is the per-call twin of the reference's fsspec
     * storage_options (cat.py:238-280): applied to the asset-table read and

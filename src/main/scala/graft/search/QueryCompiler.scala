@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.RegexFind.regexFind
+
 /** The catalog search algebra, compiled to a single Catalyst predicate.
   *
   * Semantics ported exactly from the reference (intake_esm/_search.py:32-58):
@@ -42,8 +44,9 @@ object QueryCompiler {
   }
 
   /** Embed a compiled pattern's flags as an inline `(?imsux)` group so the
-    * semantics survive the trip through Spark's `rlike` (which takes only a
-    * pattern string). Covers the flags `re` and `java.util.regex` share. */
+    * semantics survive the trip through [[graft.functions.RegexFind]] (which
+    * takes only a pattern string). Covers the flags `re` and
+    * `java.util.regex` share. */
   private def embedFlags(p: java.util.regex.Pattern): String = {
     import java.util.regex.Pattern._
     val flags = Seq(
@@ -87,13 +90,13 @@ object QueryCompiler {
     } else
       value match {
         case p: java.util.regex.Pattern if colIsString =>
-          c.rlike(embedFlags(p)) // compiled pattern: its flags ride along
+          regexFind(c, embedFlags(p)) // compiled pattern: its flags ride along
         case r: scala.util.matching.Regex if colIsString =>
-          c.rlike(embedFlags(r.pattern))
+          regexFind(c, embedFlags(r.pattern))
         case (_: java.util.regex.Pattern) | (_: scala.util.matching.Regex) =>
           lit(false) // reference: non-string column == pattern is all-False
         case s: String if colIsString && isPattern(s) =>
-          c.rlike(s) // unanchored, case-sensitive find (_search.py:49-50)
+          regexFind(c, s) // unanchored, case-sensitive find (_search.py:49-50)
         case v =>
           c === lit(v)
       }

@@ -1,0 +1,328 @@
+package graft
+
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.catalog._
+import graft.derived.{DerivedVariable, DerivedVariableRegistry}
+
+/** Catalog job census: how many Spark jobs the grouping calls run, counted
+  * with a listener, and equivalence of the one-pass grouping with the
+  * per-attr aggregate + `keysInfo.orderBy("key")` formulation it replaced.
+  * The one-pass grouping serves declared groupby attrs only; catalogs that
+  * group by every column keep the distributed formulation, and the census
+  * pins that none of their calls but `keys` collects one row per asset. */
+class CatalogCensusSpec extends AnyFunSuite {
+  import CatalogCensusSpec.Census
+  lazy val spark = TestSpark.spark
+  import spark.implicits._
+
+  private val censusIds = new AtomicLong
+  private val Key       = "graft.census"
+
+  /** Run `body` and take its [[CatalogCensusSpec.Census]]. Jobs are told
+    * apart by a local property, which the threads `body` spawns inherit;
+    * the call site and plan come from the action's execution-start event,
+    * because AQE submits stage jobs from its own threads. */
+  private def census[A](body: => A): (A, Census) = {
+    val sc    = spark.sparkContext
+    val tag   = s"census-${censusIds.incrementAndGet()}"
+    val jobs  = new ConcurrentLinkedQueue[Option[Long]]
+    val sites = new ConcurrentHashMap[Long, (String, String)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(Key) == tag)
+          jobs.add(Option(e.properties.getProperty(SQLExecution.EXECUTION_ID_KEY)).map(_.toLong))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          sites.put(s.executionId, (s.description, s.physicalPlanDescription))
+        case _                                 =>
+      }
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(Key, tag)
+    try {
+      val a = body
+      ListenerBusDrain(sc)
+      val seen    = jobs.asScala.toSeq
+      val actions = seen.flatten.distinct.map(id => sites.getOrDefault(id, (s"execution $id", "")))
+      (a, Census(seen.size, actions.map(_._1))(actions.map(_._2)))
+    } finally {
+      sc.setLocalProperty(Key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private def isCountLike(site: String): Boolean =
+    site.startsWith("isEmpty") || site.startsWith("count")
+
+  /** The `collect` actions that bring one row per group to the driver —
+    * one row per asset when the groups are the rows: a grouped aggregate
+    * (`Keys [n]: […]` in the formatted plan) that no global aggregate
+    * (`Keys: []`, as over a `countDistinct`'s partial groups) folds. */
+  private def groupedCollects(c: Census): Seq[String] =
+    c.actions.zip(c.plans).collect {
+      case (site, plan) if site.startsWith("collect") && plan.contains("Keys [") &&
+          !plan.contains("Keys: []") => site
+    }
+
+  private def withCap[A](max: Int)(body: => A): A = {
+    val prev = spark.conf.getOption(DriverGuard.confKey)
+    spark.conf.set(DriverGuard.confKey, max.toString)
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(DriverGuard.confKey, v)
+      case None    => spark.conf.unset(DriverGuard.confKey)
+    }
+  }
+
+  private def capMessage(max: Int): String =
+    s"requirement failed: toDatasetDict(catalog records) exceeds $max rows " +
+      s"(cap '${DriverGuard.confKey}' = $max); fix the catalog bound or raise the cap."
+
+  private def model(groupby: List[String]): EsmCatalogModel =
+    EsmCatalogModel(esmcatVersion = "0.1.0", id = Some("census"),
+      assets = Assets("path", Some("parquet")),
+      aggregationControl = Some(AggregationControl("variable", groupby, Nil)),
+      catalogDict = Some(Nil))
+
+  private def catalog(df: DataFrame, groupby: List[String], iterables: Set[String] = Set.empty,
+                      registry: DerivedVariableRegistry = new DerivedVariableRegistry): EsmCatalog =
+    new EsmCatalog(spark, model(groupby), df, iterables,
+      iterables.map(_ -> CatalogReader.ContainerType.ListT).toMap, registry)
+
+  /** Eight assets over two sources × two experiments × two variables; each
+    * asset is a real one-row parquet directory, so toDatasetDict loads. */
+  private lazy val assets: DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_census").toString
+    val rows = for (src <- Seq("GCM-1", "GCM-2"); exp <- Seq("historical", "ssp585");
+                    v <- Seq("tasmax", "tasmin")) yield {
+      val path = s"$dir/$src.$exp.$v"
+      Seq((1850L, 1.0)).toDF("time", v).write.parquet(path)
+      (src, exp, v, path)
+    }
+    // RDD-backed, like a scanned table: a filter over a local relation is
+    // folded by the optimizer and would run no job at all
+    val local = rows.toDF("source_id", "experiment_id", "variable", "path")
+    spark.createDataFrame(local.rdd, local.schema)
+  }
+
+  private def fresh(): EsmCatalog = catalog(assets, List("source_id", "experiment_id"))
+
+  /** No aggregation control: every column is a group attr, one group per
+    * asset. */
+  private def ungrouped(): EsmCatalog =
+    new EsmCatalog(spark, model(Nil).copy(aggregationControl = None), assets, Set.empty, Map.empty)
+
+  test("a plain search(q).keys runs at most 2 jobs") {
+    val cat = fresh()
+    for (q <- Seq[Map[String, Any]](
+           Map("experiment_id" -> "historical"),
+           Map("source_id" -> Seq("GCM-1", "GCM-2"), "variable" -> "tasmax"),
+           Map("source_id" -> "^GCM-[12]", "experiment_id" -> "ssp.*"))) {
+      val (ks, c) = census(cat.search(q).keys)
+      assert(ks.nonEmpty)
+      assert(c.jobs <= 2 && c.actions.size == 1, s"$q: $c")
+    }
+  }
+
+  test("one group pass serves keys, length, attrs, reprStats, containsKey and toDatasetDict") {
+    val cat = fresh()
+    val (_, pass) = census(cat.keys)
+    assert(pass.jobs >= 1 && pass.jobs <= 2 && pass.actions.size == 1, pass)
+    val (_, derived) = census {
+      (cat.length, cat.effectiveGroupbyAttrs, cat.reprStats, cat.containsKey("GCM-1.historical"))
+    }
+    assert(derived == Census(0, Nil)(Nil))
+    assert(cat.reprStats == "<census catalog with 4 dataset(s) from 8 asset(s)>")
+    val (dsets, warm) = census(cat.toDatasetDict())
+    assert(dsets.keySet == cat.keys.toSet)
+
+    // on a fresh instance toDatasetDict runs the pass itself: exactly the
+    // pass's jobs more, the pass's action first, and no isEmpty/count
+    val (_, cold) = census(fresh().toDatasetDict())
+    assert(cold.jobs == pass.jobs + warm.jobs, s"$cold vs $pass + $warm")
+    assert(cold.actions == pass.actions ++ warm.actions, s"$cold vs $pass + $warm")
+    assert(!cold.actions.exists(isCountLike), cold)
+  }
+
+  test("toDatasetDict: empty exit and record cap come from the pass") {
+    val (empty, e0) = census(fresh().search(Map("source_id" -> "none")).toDatasetDict())
+    assert(empty.isEmpty)
+    assert(e0.actions.size == 1 && !e0.actions.exists(isCountLike), e0)
+
+    withCap(7) {
+      val (e, capped) = census(intercept[IllegalArgumentException](fresh().toDatasetDict()))
+      assert(e.getMessage == capMessage(7))
+      val (_, pass) = census(fresh().keys)
+      assert(capped == pass, "the cap trips after the pass, before the records collect")
+    }
+  }
+
+  test("ungrouped catalogs: the record cap trips before any row-sized collect") {
+    withCap(7) {
+      for (aggregate <- Seq(true, false)) {
+        val (e, capped) = census(intercept[IllegalArgumentException](
+          ungrouped().toDatasetDict(aggregate = aggregate)))
+        assert(e.getMessage == capMessage(7))
+        // the empty check, the global-aggregate prune, the capped count
+        assert(capped.actions.map(_.takeWhile(_ != ' ')) == Seq("isEmpty", "collect", "count"),
+          s"aggregate=$aggregate: $capped")
+        assert(groupedCollects(capped).isEmpty, capped.plans)
+      }
+    }
+  }
+
+  test("ungrouped catalogs: only keys collects one row per asset") {
+    val cat = ungrouped()
+    val key = "GCM-1.historical.tasmax." + cat.df.filter(col("variable") === "tasmax")
+      .filter(col("source_id") === "GCM-1" && col("experiment_id") === "historical")
+      .select("path").as[String].head()
+    val (_, calls) = census {
+      (cat.effectiveGroupbyAttrs, cat.length, cat.reprStats, cat.reprHtml,
+        cat.containsKey(key), cat.getEntry(key), cat.keysInfo.count())
+    }
+    assert(groupedCollects(calls).isEmpty, calls)
+    assert(cat.reprStats == "<census catalog with 8 dataset(s) from 8 asset(s)>")
+    val (ks, keys) = census(cat.keys)
+    assert(ks.size == 8 && ks.contains(key))
+    assert(groupedCollects(keys).size == 1, keys)
+  }
+
+  // ------------------------------------------------- equivalence with the
+  // per-attr aggregate + keysInfo.orderBy("key") formulation
+
+  /** The replaced formulation: one global non-null count per attr list
+    * (all-null → pruned, mixed → error), the all-columns fallback, then the
+    * keys of `keysInfo`'s projection, distinct, in Spark's `orderBy`. */
+  private def replaced(cat: EsmCatalog): (Seq[String], Seq[String]) = {
+    val df = cat.df
+    def prune(cols: Seq[String]): Seq[String] =
+      if (cols.isEmpty) cols
+      else {
+        val row = df.agg(count(lit(1)), cols.map(c => count(col(c))): _*).collect()(0)
+        cols.zipWithIndex.filter { case (c, i) =>
+          val n = row.getLong(i + 1)
+          if (n == 0L) false
+          else if (n < row.getLong(0))
+            throw new IllegalArgumentException(
+              s"The data in the $c column should either be all NaN or there should be no NaNs")
+          else true
+        }.map(_._1)
+      }
+    val declared = prune(cat.model.groupbyAttrs.filter(df.columns.contains))
+    val attrs =
+      if (declared.nonEmpty && declared.toSet != df.columns.toSet) declared
+      else prune(df.columns.toSeq)
+    val keys = df.select(cat.keyColumn(attrs).as("key")).distinct().orderBy("key")
+      .collect().map(_.getString(0)).toSeq
+    (attrs, keys)
+  }
+
+  private def assertSame(cat: EsmCatalog): Unit = {
+    val (attrs, keys) = replaced(cat)
+    assert(cat.effectiveGroupbyAttrs == attrs)
+    assert(cat.keys == keys)
+    assert(cat.length == keys.size.toLong)
+    assert(cat.keysInfo.orderBy("key").select("key").collect().map(_.getString(0)).toSeq.distinct
+      == keys)
+  }
+
+  private val nullStr = lit(null).cast(StringType)
+
+  test("equivalence: an all-null attr is pruned") {
+    val cat = catalog(assets.withColumn("dcpp", nullStr),
+      List("source_id", "dcpp", "experiment_id"))
+    assertSame(cat)
+    assert(cat.effectiveGroupbyAttrs == Seq("source_id", "experiment_id"))
+  }
+
+  test("equivalence: a mixed-null attr raises the same error") {
+    val cat = catalog(assets.withColumn("dcpp",
+      when(col("source_id") === "GCM-1", lit("x")).otherwise(nullStr)),
+      List("source_id", "dcpp", "experiment_id"))
+    val want = intercept[IllegalArgumentException](replaced(cat)).getMessage
+    assert(intercept[IllegalArgumentException](cat.keys).getMessage == want)
+    assert(want == "The data in the dcpp column should either be all NaN or there should be no NaNs")
+  }
+
+  test("equivalence: fallback to all columns, array column cast to string") {
+    val withRealm = assets.withColumn("realm",
+      when(col("variable") === "tasmax", array(lit("atmos"))).otherwise(array(lit("atmos"), lit("land"))))
+    // declared attrs all-null → empty after pruning
+    val pruned = catalog(withRealm.withColumn("dcpp", nullStr), List("dcpp"), Set("realm"))
+    assertSame(pruned)
+    assert(pruned.effectiveGroupbyAttrs == Seq("source_id", "experiment_id", "variable", "path", "realm"))
+    assert(pruned.keys.exists(_.endsWith(".[atmos, land]")), pruned.keys)
+    // declared attrs are every column
+    assertSame(catalog(withRealm, withRealm.columns.toList.reverse, Set("realm")))
+    // declared attrs are every column, one of them all-null: the pruned
+    // declared attrs, in declared order, not the fallback
+    val dcpp = withRealm.withColumn("dcpp", nullStr)
+    val everyButNull = catalog(dcpp, dcpp.columns.toList.reverse, Set("realm"))
+    assertSame(everyButNull)
+    assert(everyButNull.effectiveGroupbyAttrs == withRealm.columns.toSeq.reverse)
+    // no aggregation control at all
+    assertSame(new EsmCatalog(spark, model(Nil).copy(aggregationControl = None), withRealm,
+      Set("realm"), Map("realm" -> CatalogReader.ContainerType.ListT)))
+  }
+
+  test("equivalence: an empty search result") {
+    val empty = fresh().search(Map("source_id" -> "nope"))
+    assertSame(empty)
+    assert(empty.keys.isEmpty && empty.length == 0L)
+    assert(empty.reprStats == "<census catalog with 0 dataset(s) from 0 asset(s)>")
+  }
+
+  test("equivalence: typed catalog_dict columns (Long/Double)") {
+    val df = CatalogReader.fromDict(spark, Seq(
+      Map("scode" -> 482L, "lev" -> 1.5, "variable" -> "a", "path" -> "p1"),
+      Map("scode" -> 482L, "lev" -> 2.0, "variable" -> "b", "path" -> "p2"),
+      Map("scode" -> 7L, "lev" -> 1.5, "variable" -> "c", "path" -> "p3")))
+    val cat = catalog(df, List("scode", "lev"))
+    assertSame(cat)
+    assert(cat.keys == Seq("482.1.5", "482.2.0", "7.1.5"))
+  }
+
+  test("equivalence: derived-variable and require_all_on searches") {
+    val registry = new DerivedVariableRegistry().register(DerivedVariable(
+      "tas_range", Map("variable" -> Seq("tasmax", "tasmin")),
+      df => df.withColumn("tas_range", col("tasmax") - col("tasmin"))))
+    val cat = catalog(assets, List("source_id", "experiment_id"), registry = registry)
+    val derived = cat.search(Map("variable" -> "tas_range", "source_id" -> "GCM-2"))
+    assertSame(derived)
+    assert(derived.keys == Seq("GCM-2.historical", "GCM-2.ssp585"))
+    val rao = cat.search(Map("experiment_id" -> Seq("historical", "ssp585"), "variable" -> "tasmin"),
+      requireAllOn = Some(Seq("source_id")))
+    assertSame(rao)
+    assert(rao.length == 4L)
+  }
+
+  test("equivalence: keys sort in UTF-8 byte order, not UTF-16") {
+    // U+FF21 < U+1F600 in UTF-8 (EF.. < F0..); UTF-16 puts the surrogate first
+    val df = Seq("😀", "Ａ", "z", "é").map(s => (s, s"p$s")).toDF("source_id", "path")
+    val cat = catalog(df, List("source_id"))
+    assertSame(cat)
+    assert(cat.keys == Seq("z", "é", "Ａ", "😀"))
+    assert(cat.keys != cat.keys.sorted)
+  }
+}
+
+object CatalogCensusSpec {
+  /** What a call ran: its job count, and the call site of each SQL action
+    * that ran a job (`isEmpty at …`, `collect at …`), in start order. The
+    * actions' formatted physical plans ride along outside equality, since
+    * their expression ids differ from run to run. */
+  final case class Census(jobs: Int, actions: Seq[String])(val plans: Seq[String])
+}

@@ -148,6 +148,20 @@ class CatalogSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](cat2.keys)
   }
 
+  test("keys lists a key once when two groups join to the same string (cat.py:378-385)") {
+    // ("a.b", "c") and ("a", "b.c") are two groups but one key with sep "."
+    val df = Seq(("a.b", "c", "p1"), ("a", "b.c", "p2"), ("x", "y", "p3"))
+      .toDF("component", "experiment", "path")
+    val model = EsmCatalogModel(esmcatVersion = "0.1.0",
+      assets = Assets("path", Some("parquet")),
+      aggregationControl = Some(AggregationControl("variable", List("component", "experiment"), Nil)),
+      catalogDict = Some(Nil))
+    val cat = new EsmCatalog(spark, model, df, Set.empty, Map.empty)
+    assert(cat.keys == Seq("a.b.c", "x.y"))
+    assert(cat.length == cat.keys.size)
+    assert(cat.reprStats == "<catalog catalog with 2 dataset(s) from 3 asset(s)>")
+  }
+
   test("unique / nunique flatten iterable columns") {
     val df = Seq(
       ("ocn", Seq("SHF", "SST")),

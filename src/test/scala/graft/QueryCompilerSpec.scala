@@ -122,6 +122,18 @@ class QueryCompilerSpec extends AnyFunSuite {
     assert(got3 == run(Map("C" -> Seq("^hist$")), None))
   }
 
+  test("regex values stay out of the generated Java") {
+    import org.apache.spark.sql.execution.debug._
+    // an RDD-backed copy: a filter over a local relation is folded away
+    // by the optimizer and never reaches codegen
+    val scanned = spark.createDataFrame(df.rdd, df.schema)
+    val hits = QueryCompiler.search(scanned, Map("C" -> Seq("^co.*ol$", "(?i)HIST")))
+    val code = hits.queryExecution.debug.codegenToSeq().map(_._2)
+    assert(!code.exists(c => c.contains("co.*ol") || c.contains("HIST")), code.mkString("\n"))
+    assert(code.exists(_.contains("RegexFind")), code.mkString("\n"))
+    assert(hits.count() == 9)
+  }
+
   test("is_pattern: compiled patterns are always patterns (test_search.py:23)") {
     assert(QueryCompiler.isPattern(java.util.regex.Pattern.compile("hist.*"): Any))
     assert(QueryCompiler.isPattern("hist.*".r: Any))
