@@ -5,6 +5,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.GraftColumnBridge
 
+import scala.collection.immutable.ListMap
+
+import graft.sources.StoreMeta
+
 /** Persisted IVF-PQ VECTOR-INDEX store — the maintenance path that makes
   * similarity search affordable over a GROWING corpus, the embedding-plane
   * twin of [[KeywordSearch]]'s BM25 posting index: [[Similarity.pqTopK]]
@@ -15,7 +19,8 @@ import org.apache.spark.sql.GraftColumnBridge
   * Layout (the engine's store conventions: batch-dir data, metadata LAST):
   *
   *   <dir>/meta.json            {"format":"graft-ann-index","version":1,
-  *                               "batches":B,"n":N,"dim":D,"m":M}
+  *                               "batches":B,"n":N,"dim":D,"m":M,
+  *                               "tombBatches":T,"tombRows":R}
   *   <dir>/model.json           frozen coarse centroids + PQ codebooks,
   *                              floats as raw IEEE-754 bits (bit-exact
   *                              across the JSON round trip — decimal text
@@ -26,7 +31,7 @@ import org.apache.spark.sql.GraftColumnBridge
   *                               vec array<float>), hive-partitioned by
   *                              coarse cell
   *   <dir>/tombstones/b<i>/part-….parquet
-  *                              (id) — deleted vectors (r15); searches
+  *                              (id) — deleted vectors; searches
   *                              anti-join this plane, compaction drops
   *                              the rows physically and resets it
   *
@@ -48,20 +53,12 @@ import org.apache.spark.sql.GraftColumnBridge
   *    re-ranks with exact cosines, so drift degrades RECALL, never the
   *    correctness of returned scores.
   *
-  * Crash/concurrency posture (the kerchunk/bm25-index conventions):
-  * `meta.json` writes LAST and atomically (staged hidden sibling +
-  * `FileContext` rename), so a reader mid-append sees the old consistent
-  * snapshot and a crashed append leaves only an orphan batch dir that the
-  * next append's overwrite-mode write clobbers. A REBUILD
-  * (`annIndexBuild(overwrite = true)`) stages the whole new store in a
-  * hidden sibling dir and swaps it in only after the staged meta commits
-  * (r15) — a failed rebuild leaves the old index byte-intact, the swap is
-  * rename-aside (r16: the old store parks at a hidden `.old` sibling until
-  * the new one is live; a crash between the renames auto-recovers on the
-  * next open). Writers are SINGLE-WRITER, CHECKED (r16): every mutation
-  * holds the create-exclusive writer lease
-  * ([[graft.sources.StoreMeta.withWriterLock]]); the optimistic meta
-  * recheck stays behind it as defense in depth.
+  * Crash/concurrency posture: build, append, delete and compact run the
+  * shared store lifecycle ([[graft.sources.StoreMeta.Store]]) — every
+  * mutation holds the store's writer lease, a rebuild stages the whole
+  * new store in a hidden sibling and swaps it in only after its meta
+  * commits, and `meta.json` writes LAST and atomically, so a reader
+  * mid-append sees the old consistent snapshot.
   *
   * Search results are BIT-IDENTICAL to [[Similarity.pqTopK]] run with the
   * same parameters over the same corpus (same NearestCells/PqEncode/
@@ -82,53 +79,18 @@ object AnnIndex {
                     nCentroids: Int = 16, kmeansIters: Int = 2,
                     train: Option[DataFrame] = None,
                     overwrite: Boolean = false): Unit = {
-    val spark = corpus.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = graft.sources.FsPaths.hadoopPath(dir)
-    val fs = graft.sources.FsPaths.fileSystemFor(root, conf)
-    // r16: all mutations run under the store's writer LEASE (the bm25
-    // convention) — single-writer checked at acquisition, with the
-    // optimistic meta recheck behind it as defense in depth
-    graft.sources.StoreMeta.withWriterLock(fs, root, "annIndexBuild") {
-      // heal a crashed swap BEFORE deciding what's here (r17 — without
-      // this, a fresh build saw the crashed swap's empty root as 'nothing
-      // here', deleted the staged sibling as stale, and swapped away the
-      // parked .old: both recoverable copies destroyed without the
-      // overwrite opt-in the healed live store correctly demands below)
-      graft.sources.StoreMeta.recoverCrashedSwap(fs, root)
-      val metaPath = new org.apache.hadoop.fs.Path(root, "meta.json")
-      if (fs.exists(metaPath))
-        require(overwrite,
-          s"annIndexBuild: '$dir' already holds an index — pass overwrite = true " +
-            "to rebuild, or annIndexAppend to grow it")
-      else if (fs.exists(root) && fs.listStatus(root).nonEmpty)
-        // a non-empty dir that is NOT a store holds someone else's bytes —
-        // the swap below replaces the root, so clobbering it needs the same
-        // explicit opt-in a store rebuild does (an empty placeholder dir —
-        // the createTempDirectory pattern — replaces silently)
-        require(overwrite,
-          s"annIndexBuild: '$dir' exists, is not an ann index, and is not " +
-            "empty — pass overwrite = true to replace it")
-      val trainDf = train.getOrElse(corpus)
-      // r18: fused trainer — one seed collect (which is also the dim
-      // probe) and one job per Lloyd round instead of two trainings of
-      // (seed + iters) jobs each; models bit-equal to the unfused pair
+    val index = store(corpus.sparkSession, dir)
+    index.build("annIndexBuild", overwrite) { staged =>
+      // fused trainer — one seed collect (which is also the dim probe) and
+      // one job per Lloyd round; models bit-equal to the unfused pair
       // (FusedTrainSpec)
-      val (_, cents, books) = Similarity.trainIvfPq(trainDf, idCol, vecCol,
+      val (_, cents, books) = Similarity.trainIvfPq(train.getOrElse(corpus), idCol, vecCol,
         nCells, m, nCentroids, kmeansIters, requireTag = "annIndexBuild")
       val dim = cents.head.length
-      // r15: the whole store builds into a hidden STAGED sibling and swaps
-      // into place only after the staged meta commits — a failure anywhere
-      // in training, encoding, or the batch write (duplicate corpus ids, a
-      // wrong-dim vector, executor loss) leaves the existing index
-      // byte-intact (the r14 delete-then-write window).
-      val staged = graft.sources.StoreMeta.stagedSibling(root)
-      if (fs.exists(staged)) fs.delete(staged, true) // stale crashed rebuild
-      writeModel(fs, staged, cents, books)
+      writeModel(index.fs, staged, cents, books)
       val n = writeBatch(corpus, idCol, vecCol, staged.toString, batch = 0, dim, cents, books)
-      writeMeta(fs, new org.apache.hadoop.fs.Path(staged, "meta.json"),
-        batches = 1, n = n, dim = dim, m = m, tombBatches = 0)
-      graft.sources.StoreMeta.swapInto(fs, staged, root)
+      StoreMeta.Meta(batches = 1, n = n, tombBatches = 0, tombRows = 0L,
+        ListMap("dim" -> dim.toLong, "m" -> m.toLong))
     }
   }
 
@@ -137,106 +99,24 @@ object AnnIndex {
   def annIndexAppend(spark: SparkSession, dir: String,
                      delta: DataFrame, idCol: String, vecCol: String,
                      lockWaitMs: Long = 0L): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = graft.sources.FsPaths.hadoopPath(dir)
-    val fs = graft.sources.FsPaths.fileSystemFor(root, conf)
-    graft.sources.StoreMeta.withWriterLock(fs, root, "annIndexAppend",
-        waitMs = lockWaitMs) {
-      val metaPath = new org.apache.hadoop.fs.Path(root, "meta.json")
-      val (batches, n0, dim, m, tomb, tombRows) = readMeta(fs, metaPath, dir)
-      val (cents, books) = readModel(fs, root, dir)
-      checkModel(cents, books, dim, m, dir)
-      // id-collision guard vs the store: a delta-sized semi-join against the
-      // store's one pruned id column — never a vector-volume read.
-      // Deliberately UNFILTERED by tombstones: re-appending a DELETED id
-      // would resurrect it only until the tombstone anti-join killed both
-      // rows — refuse; compaction reclaims the id.
-      val old = readBatches(spark, dir, batches).select("id")
-      val clash = delta.select(col(idCol).as("id"))
-        .join(old, Seq("id"), "left_semi").limit(1).count()
-      require(clash == 0L,
-        s"annIndexAppend: delta re-uses ids already in (or deleted from) " +
-          s"'$dir' — index semantics are per-vector; assign fresh ids, or " +
-          "compact to reclaim deleted ids")
-      val dn = writeBatch(delta, idCol, vecCol, dir, batch = batches, dim, cents, books)
-      // optimistic single-writer recheck BEHIND the lease (defense in
-      // depth — it also catches a lease-bypassing legacy writer): if
-      // another writer committed while this one wrote, both targeted the
-      // SAME batch number — refuse rather than commit disagreeing stats.
-      val (batchesNow, _, _, _, tombNow, _) = readMeta(fs, metaPath, dir)
-      require(batchesNow == batches && tombNow == tomb,
-        s"annIndexAppend: concurrent writer detected on '$dir' (batches " +
-          s"$batches → $batchesNow, tombstone batches $tomb → $tombNow " +
-          "mid-append) — the store is single-writer; retry this delta")
-      writeMeta(fs, metaPath, batches + 1, n0 + dn, dim, m, tomb, tombRows)
+    val index = store(spark, dir)
+    index.append("annIndexAppend", delta, idCol, lockWaitMs) { meta =>
+      val (cents, books) = checkedModel(index, meta)
+      (writeBatch(delta, idCol, vecCol, dir, batch = meta.batches, dimOf(meta), cents, books), 0L)
     }
   }
 
-  /** DELETE vectors from the index (r15) — the takedown/dedup-prune
-    * maintenance path, the [[KeywordSearch.bm25IndexDelete]] twin on the
-    * vector plane: a tombstone batch appends under the store's crash
-    * posture (batch dir first, meta LAST and atomic), both search forms
+  /** DELETE vectors from the index — the takedown/dedup-prune maintenance
+    * path ([[graft.sources.StoreMeta.Store.delete]]): both search forms
     * anti-join the tombstone plane (broadcast — above the scan, so
     * partition pruning and column pruning are untouched), and
     * [[annIndexCompact]] physically drops the rows and resets the plane.
     * The frozen model never moves, so search over the store-with-deletes
     * is BIT-IDENTICAL to a from-scratch rebuild of the surviving vectors
-    * trained on the same sample (the gate's pin). `ids` must be
-    * distinct, present, and not already deleted; deleted ids stay
-    * reserved until a compact (append refuses them). */
+    * trained on the same sample (the gate's pin). */
   def annIndexDelete(spark: SparkSession, dir: String,
-                     ids: DataFrame, idCol: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = graft.sources.FsPaths.hadoopPath(dir)
-    val fs = graft.sources.FsPaths.fileSystemFor(root, conf)
-    graft.sources.StoreMeta.withWriterLock(fs, root, "annIndexDelete") {
-      val metaPath = new org.apache.hadoop.fs.Path(root, "meta.json")
-      val (batches, n, dim, m, tomb, tombRows) = readMeta(fs, metaPath, dir)
-      // write to a STAGING sibling first, validate from the WRITTEN bytes
-      // (a pre-flight check of a non-deterministic `ids` frame is TOCTOU),
-      // and rename into the live b<tomb> slot only after every check
-      // passes (r16 — the bm25IndexDelete convention; the direct
-      // overwrite-mode write could clobber a committed tombstone batch if
-      // a concurrent delete won the race the lease now forecloses). On
-      // refusal, meta is untouched and the staging dir is an
-      // orphan the next delete clobbers.
-      val staging = s"$dir/tombstones/b$tomb.staging"
-      val delProj = ids.select(col(idCol).as("id"))
-      delProj.write.mode("overwrite").parquet(staging)
-      val written = spark.read.schema(delProj.schema).parquet(staging)
-      val liveIds = dropTombstoned(spark,
-        readBatches(spark, dir, batches).select("id"), dir, tomb)
-        .withColumn("__live", lit(1))
-      val st = written.join(liveIds, Seq("id"), "left")
-        .agg(count(lit(1)).as("n"), countDistinct(col("id")).as("nd"),
-          coalesce(sum(col("__live")), lit(0L)).as("live")).head()
-      val dn = st.getLong(0)
-      require(dn > 0L, s"annIndexDelete: empty id set — nothing to delete in '$dir'")
-      require(st.getLong(1) == dn,
-        s"annIndexDelete: id set has ${dn - st.getLong(1)} duplicates — a " +
-          "double delete would subtract the vector count twice; dedupe ids first")
-      require(st.getLong(2) == dn,
-        s"annIndexDelete: ${dn - st.getLong(2)} ids are not live in '$dir' " +
-          "(absent or already deleted) — deletes must name existing vectors")
-      // the accumulated-tombstone cap (r16, the bm25 convention): refuse
-      // HERE rather than let dropTombstoned's broadcast fail at read time
-      require(tombRows + dn <= graft.sources.StoreMeta.TombstoneRowCap,
-        s"annIndexDelete: '$dir' would hold ${tombRows + dn} tombstone rows, " +
-          s"past the ${graft.sources.StoreMeta.TombstoneRowCap} broadcast cap " +
-          "— run annIndexCompact to reclaim deleted rows first")
-      val (batchesNow, _, _, _, tombNow, _) = readMeta(fs, metaPath, dir)
-      require(batchesNow == batches && tombNow == tomb,
-        s"annIndexDelete: concurrent writer detected on '$dir' (batches " +
-          s"$batches → $batchesNow, tombstone batches $tomb → $tombNow " +
-          "mid-delete) — the store is single-writer; retry")
-      val slot = new org.apache.hadoop.fs.Path(root, s"tombstones/b$tomb")
-      if (fs.exists(slot)) fs.delete(slot, true) // orphan of a crashed delete
-      require(fs.rename(graft.sources.FsPaths.hadoopPath(staging), slot),
-        s"annIndexDelete: rename '$staging' -> '$slot' failed — meta is " +
-          "untouched; the staging dir is an orphan the next delete clobbers")
-      writeMeta(fs, metaPath, batches, n - dn, dim, m, tomb + 1, tombRows + dn)
-    }
-  }
+                     ids: DataFrame, idCol: String): Unit =
+    store(spark, dir).delete("annIndexDelete", ids, idCol)
 
   /** Search the index: zero corpus scans, zero training — probed cells
     * become PartitionFilters on the store, ADC scores the column-pruned
@@ -282,7 +162,7 @@ object AnnIndex {
                        refill: Boolean = false): DataFrame = {
     require(k >= 1 && nProbe >= 1 && refine >= 1,
       s"annSearchIndexed: k, nProbe, refine must be >= 1 (got $k, $nProbe, $refine)")
-    val (dim, cents, books, unfiltered) = openStore(spark, dir, "annSearchIndexed")
+    val (dim, cents, books, unfiltered) = openSearch(spark, dir, "annSearchIndexed")
     val store = predicate.map(unfiltered.filter).getOrElse(unfiltered)
     val qProj = queries.select(col(qidCol).as("query_id"), col(qvecCol).as("__qv"))
       .filter(col("__qv").isNotNull)
@@ -355,81 +235,37 @@ object AnnIndex {
     * ALREADY-ENCODED rows (no re-training, no re-encoding — model.json
     * copies verbatim, so the frozen-model contract and bit-identical
     * scores survive) clustered by cell into one batch, and validates the
-    * rewrite against the source meta's row count before committing the
-    * destination meta (LAST, as always). The source store is never
-    * touched — readers keep their snapshot; the caller swaps when ready
-    * (compact-to-sibling + swap is the only crash-safe shape: an in-place
-    * compact would race its own readers). */
+    * rewrite against the source meta's row count before the destination
+    * meta commits ([[graft.sources.StoreMeta.Store.compactFrom]]). */
   def annIndexCompact(spark: SparkSession, srcDir: String, dstDir: String,
                       overwrite: Boolean = false,
                       lockWaitMs: Long = 0L): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val srcRoot = graft.sources.FsPaths.hadoopPath(srcDir)
-    val srcFs = graft.sources.FsPaths.fileSystemFor(srcRoot, conf)
-    val srcMetaPath = new org.apache.hadoop.fs.Path(srcRoot, "meta.json")
-    val (batches, n, dim, m, tomb, _) = readMeta(srcFs, srcMetaPath, srcDir)
-    val (cents, books) = readModel(srcFs, srcRoot, srcDir)
-    checkModel(cents, books, dim, m, srcDir)
-    val dstRoot = graft.sources.FsPaths.hadoopPath(dstDir)
-    val dstFs = graft.sources.FsPaths.fileSystemFor(dstRoot, conf)
-    // a same-path "compact" with overwrite would DELETE the source before
-    // reading it — the one way this maintenance op could lose the store
-    require(srcFs.makeQualified(srcRoot) != dstFs.makeQualified(dstRoot),
-      s"annIndexCompact: source and destination are the same store " +
-        s"('$srcDir') — compact to a sibling and swap")
-    val dstMeta = new org.apache.hadoop.fs.Path(dstRoot, "meta.json")
-    graft.sources.StoreMeta.withWriterLock(dstFs, dstRoot, "annIndexCompact",
-        waitMs = lockWaitMs) {
-      if (dstFs.exists(dstMeta)) {
-        require(overwrite,
-          s"annIndexCompact: '$dstDir' already holds an index — pass overwrite = true")
-        dstFs.delete(dstRoot, true)
-      } else if (dstFs.exists(dstRoot) && dstFs.listStatus(dstRoot).nonEmpty)
-        // the r15 build-side rule applies here too: writing store planes
-        // among someone else's bytes turns their dir into a "store" a later
-        // overwrite would delete wholesale — refuse unless told to clobber
-        require(overwrite,
-          s"annIndexCompact: '$dstDir' exists, is not an ann index, and is " +
-            "not empty — pass overwrite = true to replace it")
-      // model copies as RAW BYTES (readModel above already validated them):
-      // a parse + re-render round trip would make byte identity incidental
-      // — e.g. signaling-NaN bit patterns may not survive intBitsToFloat
+    val src = store(spark, srcDir)
+    val dst = store(spark, dstDir)
+    dst.compactFrom(src, "annIndexCompact", overwrite, lockWaitMs) { (meta, staged) =>
+      checkedModel(src, meta)
+      // model copies as RAW BYTES (validated above): a parse + re-render
+      // round trip would make byte identity incidental — e.g.
+      // signaling-NaN bit patterns may not survive intBitsToFloat
       val srcModelBytes = {
-        val in = srcFs.open(new org.apache.hadoop.fs.Path(srcRoot, "model.json"))
+        val in = src.fs.open(new org.apache.hadoop.fs.Path(src.root, "model.json"))
         try in.readAllBytes() finally in.close()
       }
-      dstFs.mkdirs(dstRoot)
-      val modelOut = dstFs.create(
-        new org.apache.hadoop.fs.Path(dstRoot, "model.json"), true)
+      val modelOut = dst.fs.create(new org.apache.hadoop.fs.Path(staged, "model.json"), true)
       try modelOut.write(srcModelBytes) finally modelOut.close()
-      // tombstoned vectors DROP PHYSICALLY here (the reclamation path):
-      // the rewrite reads the live view, and the destination resets
-      // tombBatches to 0 — after a compact the deleted ids are free again
-      val all = dropTombstoned(spark,
-          readBatches(spark, dir = srcDir, batches), srcDir, tomb)
+      // tombstoned vectors DROP PHYSICALLY here (the reclamation path)
+      val all = src.live(src.plane("vectors", meta.batches), meta)
         .select("id", "cell", "codes", "vnorm", "vec")
       all.repartition(col("cell"))
-        .write.partitionBy("cell").mode("overwrite").parquet(s"$dstDir/vectors/b0")
-      // validate the rewrite against the SOURCE meta before committing:
+        .write.partitionBy("cell").mode("overwrite").parquet(s"$staged/vectors/b0")
       // meta's n is the live count (deletes already subtracted), so this
       // equality also validates the tombstone drop — a drift means a torn
       // source or a lost write; refuse rather than bless a store that
       // silently dropped (or resurrected) vectors
-      val written = spark.read.schema(all.schema)
-        .parquet(s"$dstDir/vectors/b0").count()
-      require(written == n,
-        s"annIndexCompact: rewrote $written rows but '$srcDir' meta says $n — " +
+      val written = spark.read.schema(all.schema).parquet(s"$staged/vectors/b0").count()
+      require(written == meta.n,
+        s"annIndexCompact: rewrote $written rows but '$srcDir' meta says ${meta.n} — " +
           "source store torn or write incomplete; not committing")
-      // optimistic recheck (the append convention): an append or delete
-      // landing on the source mid-compact would otherwise vanish at the
-      // caller's swap
-      val (batchesNow, _, _, _, tombNow, _) = readMeta(srcFs, srcMetaPath, srcDir)
-      require(batchesNow == batches && tombNow == tomb,
-        s"annIndexCompact: '$srcDir' moved ($batches → $batchesNow batches, " +
-          s"$tomb → $tombNow tombstone batches) mid-compact — re-run to " +
-          "include the new writes")
-      writeMeta(dstFs, dstMeta, batches = 1, n = n, dim = dim, m = m,
-        tombBatches = 0)
     }
   }
 
@@ -478,7 +314,7 @@ object AnnIndex {
                             refill: Boolean = false): DataFrame = {
     require(k >= 1 && nProbe >= 1 && refine >= 1,
       s"annSearchIndexedBatch: k, nProbe, refine must be >= 1 (got $k, $nProbe, $refine)")
-    val (dim, cents, books, unfiltered) = openStore(spark, dir, "annSearchIndexedBatch")
+    val (dim, cents, books, unfiltered) = openSearch(spark, dir, "annSearchIndexedBatch")
     // filtered search (r16): the predicate applies PRE-RANK, exactly as
     // in the driver form — short list drawn from survivors, candidate
     // pruning untouched (the cell-equality join composes above it)
@@ -591,14 +427,11 @@ object AnnIndex {
     * no vector-plane scan, no lease; a crashed swap heals on open like
     * every other reader. */
   def annIndexStats(spark: SparkSession, dir: String): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = graft.sources.FsPaths.hadoopPath(dir)
-    val fs = graft.sources.FsPaths.fileSystemFor(root, conf)
-    val (batches, n, dim, m, tombBatches, tombRows) =
-      readMeta(fs, new org.apache.hadoop.fs.Path(root, "meta.json"), dir)
-    val (cents, _) = readModel(fs, root, dir)
+    val (index, meta) = open(spark, dir)
+    val (cents, _) = readModel(index.fs, index.root, dir)
     import spark.implicits._
-    Seq((n, dim, m, cents.length, batches, tombBatches, tombRows))
+    import meta.{batches, n, tombBatches, tombRows}
+    Seq((n, dimOf(meta), subspacesOf(meta), cents.length, batches, tombBatches, tombRows))
       .toDF("vectors", "dim", "subspaces", "cells", "batches",
         "tomb_batches", "tomb_rows")
   }
@@ -631,25 +464,20 @@ object AnnIndex {
     * centroid join, one per-batch aggregate; tombstoned vectors are
     * excluded (they can never be returned, so their fit is moot). */
   def annIndexDrift(spark: SparkSession, dir: String): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = graft.sources.FsPaths.hadoopPath(dir)
-    val fs = graft.sources.FsPaths.fileSystemFor(root, conf)
-    val (batches, n, dim, m, tomb, _) =
-      readMeta(fs, new org.apache.hadoop.fs.Path(root, "meta.json"), dir)
-    require(n > 0, s"annIndexDrift: index at '$dir' holds no vectors")
-    val (cents, books) = readModel(fs, root, dir)
-    checkModel(cents, books, dim, m, dir)
+    val (index, meta) = open(spark, dir)
+    require(meta.n > 0, s"annIndexDrift: index at '$dir' holds no vectors")
+    val (cents, _) = checkedModel(index, meta)
     val centSchema = StructType(Seq(
       StructField("cell", IntegerType, nullable = false),
       StructField("__cent", ArrayType(FloatType, containsNull = false), nullable = false)))
     val centDf = spark.createDataFrame(
       java.util.Arrays.asList(cents.zipWithIndex.map { case (c, i) =>
         org.apache.spark.sql.Row(i, c.toSeq) }: _*), centSchema)
-    val tagged = (0 until batches)
+    val tagged = (0 until meta.batches)
       .map(i => spark.read.parquet(s"$dir/vectors/b$i")
         .select(col("id"), col("cell"), col("vec")).withColumn("batch", lit(i)))
       .reduce(_ unionByName _)
-    dropTombstoned(spark, tagged, dir, tomb)
+    index.live(tagged, meta)
       .join(broadcast(centDf), "cell")
       .withColumn("__dist", lit(1.0) - vec_cosine(col("vec"), col("__cent")))
       .groupBy("batch")
@@ -660,29 +488,15 @@ object AnnIndex {
   }
 
   /** The shared store-opening header of both search forms: meta + model
-    * reads, cross-checks, and the unioned batch view — tombstone-filtered
-    * (the LIVE view; a deleted vector can neither be a candidate nor a
-    * re-rank survivor). */
-  private def openStore(spark: SparkSession, dir: String, caller: String)
+    * reads, cross-checks, and the LIVE vector view (a deleted vector can
+    * neither be a candidate nor a re-rank survivor). */
+  private def openSearch(spark: SparkSession, dir: String, caller: String)
       : (Int, Array[Array[Float]], Array[Array[Array[Float]]], DataFrame) = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = graft.sources.FsPaths.hadoopPath(dir)
-    val fs = graft.sources.FsPaths.fileSystemFor(root, conf)
-    val (batches, n, dim, m, tomb, _) = readMeta(fs,
-      new org.apache.hadoop.fs.Path(root, "meta.json"), dir)
-    require(n > 0, s"$caller: index at '$dir' holds no vectors")
-    val (cents, books) = readModel(fs, root, dir)
-    checkModel(cents, books, dim, m, dir)
-    (dim, cents, books,
-      dropTombstoned(spark, readBatches(spark, dir, batches), dir, tomb))
+    val (index, meta) = open(spark, dir)
+    require(meta.n > 0, s"$caller: index at '$dir' holds no vectors")
+    val (cents, books) = checkedModel(index, meta)
+    (dimOf(meta), cents, books, index.live(index.plane("vectors", meta.batches), meta))
   }
-
-  /** Each batch root is hive-partitioned by `cell`; reading roots one by
-    * one (and unioning) keeps per-root partition discovery — a multi-path
-    * read would have to guess a common basePath across batch dirs. */
-  private def readBatches(spark: SparkSession, dir: String, batches: Int): DataFrame =
-    (0 until batches).map(i => spark.read.parquet(s"$dir/vectors/b$i"))
-      .reduce(_ unionByName _)
 
   /** One delta ENCODE → a `vectors/b<i>` batch (overwrite mode, so an
     * orphan dir from a crashed append clobbers). One shuffle clusters rows
@@ -727,12 +541,14 @@ object AnnIndex {
     dn
   }
 
-  /** Model/meta cross-checks shared by append and search: a mixed-up or
-    * partially-copied store (model.json from a different index) must
-    * refuse loudly, not probe wrong cells or crash executor-side. */
-  private def checkModel(cents: Array[Array[Float]],
-                         books: Array[Array[Array[Float]]],
-                         dim: Int, m: Int, dir: String): Unit = {
+  /** The frozen model of `index`, cross-checked against its meta: a
+    * mixed-up or partially-copied store (model.json from a different
+    * index) must refuse loudly, not probe wrong cells or crash
+    * executor-side. */
+  private def checkedModel(index: StoreMeta.Store, meta: StoreMeta.Meta)
+      : (Array[Array[Float]], Array[Array[Array[Float]]]) = {
+    val (cents, books) = readModel(index.fs, index.root, index.dir)
+    val (dim, m, dir) = (dimOf(meta), subspacesOf(meta), index.dir)
     require(books.length == m,
       s"'$dir' model holds ${books.length} codebooks but meta says m = $m")
     require(cents.nonEmpty && cents.forall(_.length == dim),
@@ -741,56 +557,23 @@ object AnnIndex {
     require(books.forall(_.nonEmpty) && books.map(_.head.length).sum == dim,
       s"'$dir' model codebook subspaces do not sum to meta dim $dim — " +
         "model.json belongs to a different index")
+    (cents, books)
   }
 
   // ------------------------------------------------------------- metadata
 
-  /** Atomic meta commit — staged hidden sibling + `FileContext` rename
-    * ([[graft.sources.StoreMeta]], the kerchunk/bm25 convention): a crash
-    * mid-write leaves the OLD meta readable. */
-  private def writeMeta(fs: org.apache.hadoop.fs.FileSystem,
-                        metaPath: org.apache.hadoop.fs.Path,
-                        batches: Int, n: Long, dim: Int, m: Int,
-                        tombBatches: Int, tombRows: Long = 0L): Unit =
-    graft.sources.StoreMeta.atomicWriteJson(fs, metaPath,
-      s"""{"format": "graft-ann-index", "version": 1, """ +
-        s""""batches": $batches, "n": $n, "dim": $dim, "m": $m, """ +
-        s""""tombBatches": $tombBatches, "tombRows": $tombRows}""")
+  /** The vector store, as the shared lifecycle sees it: its own meta
+    * fields are the frozen model's `dim` and `m`, and the vector plane is
+    * read batch by batch (each batch root is hive-partitioned by cell). */
+  private val IndexKind = StoreMeta.Kind(format = "graft-ann-index", noun = "an ann index",
+    ops = "annIndex", key = "id", keyPlane = "vectors", item = "vector",
+    stats = Seq("dim", "m"), flags = Nil, weight = None, unionBatches = true)
 
-  /** (batches, n, dim, m, tombBatches, tombRows). `n` is the LIVE vector
-    * count — [[annIndexDelete]] subtracts at commit time. `tombBatches`
-    * and `tombRows` (the [[graft.sources.StoreMeta.TombstoneRowCap]]
-    * ledger, r16) are absent in pre-r16 stores (semantically 0 — fully
-    * readable). Before reading, a crashed rebuild swap auto-completes
-    * ([[graft.sources.StoreMeta.recoverCrashedSwap]]), so any reader or
-    * writer heals the store. */
-  private def readMeta(fs: org.apache.hadoop.fs.FileSystem,
-                       metaPath: org.apache.hadoop.fs.Path,
-                       dir: String): (Int, Long, Int, Int, Int, Long) = {
-    graft.sources.StoreMeta.recoverCrashedSwap(fs, metaPath.getParent)
-    // a LIVE writer mid-swap is the one transient state left: wait out
-    // the two-rename window (bounded) instead of refusing (r17)
-    graft.sources.StoreMeta.awaitSwapWindow(fs, metaPath.getParent)
-    require(fs.exists(metaPath),
-      s"'$dir' is not an ann index (no meta.json — build one with annIndexBuild)")
-    val j = graft.sources.StoreMeta.parseChecked(fs, metaPath, dir,
-      "graft-ann-index", version = 1L)
-    def long(field: String): Long = graft.sources.StoreMeta.longField(j, field, dir)
-    (long("batches").toInt, long("n"), long("dim").toInt, long("m").toInt,
-      graft.sources.StoreMeta.longFieldOr(j, "tombBatches", dir, 0L).toInt,
-      graft.sources.StoreMeta.longFieldOr(j, "tombRows", dir, 0L))
-  }
+  private def store(spark: SparkSession, dir: String) = new StoreMeta.Store(IndexKind, spark, dir)
+  private def open(spark: SparkSession, dir: String) = StoreMeta.open(IndexKind, spark, dir)
 
-  /** Live view of a store plane keyed by `id` — the shared
-    * [[graft.sources.StoreMeta.dropTombstoned]] convention over this
-    * store's tombstone plane layout. */
-  private def dropTombstoned(spark: SparkSession, df: DataFrame, dir: String,
-                             tombBatches: Int): DataFrame =
-    graft.sources.StoreMeta.dropTombstoned(df, "id",
-      if (tombBatches == 0) None
-      else Some((0 until tombBatches)
-        .map(i => spark.read.parquet(s"$dir/tombstones/b$i"))
-        .reduce(_ unionByName _)))
+  private def dimOf(meta: StoreMeta.Meta): Int = meta.stats("dim").toInt
+  private def subspacesOf(meta: StoreMeta.Meta): Int = meta.stats("m").toInt
 
   /** The frozen model, floats as raw bits: centroids nCells×dim, codebooks
     * m×K×(dim/m). Written once at build; appends and searches only read. */
@@ -805,18 +588,13 @@ object AnnIndex {
     val json = s"""{"format": "graft-ann-model", "version": 1, """ +
       s""""cents": ${matrix(cents)}, """ +
       s""""books": ${books.map(matrix).mkString("[", ",", "]")}}"""
-    graft.sources.StoreMeta.atomicWriteJson(fs,
-      new org.apache.hadoop.fs.Path(root, "model.json"), json)
+    StoreMeta.atomicWriteJson(fs, new org.apache.hadoop.fs.Path(root, "model.json"), json)
   }
 
   private[graft] def readModel(fs: org.apache.hadoop.fs.FileSystem,
-                        root: org.apache.hadoop.fs.Path, dir: String)
+                               root: org.apache.hadoop.fs.Path, dir: String)
       : (Array[Array[Float]], Array[Array[Array[Float]]]) = {
-    val path = new org.apache.hadoop.fs.Path(root, "model.json")
-    require(fs.exists(path),
-      s"'$dir' has no model.json — the store is incomplete (crashed build?)")
-    val j = graft.sources.StoreMeta.parseChecked(fs, path, dir,
-      "graft-ann-model", version = 1L)
+    val j = StoreMeta.sidecar(fs, root, dir, "model.json", "graft-ann-model")
     import org.json4s._
     def floats(v: JValue): Array[Float] = v match {
       case JArray(xs) => xs.map {

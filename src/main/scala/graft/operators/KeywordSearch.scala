@@ -4,6 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
+import scala.collection.immutable.ListMap
+
+import graft.sources.StoreMeta
+
 /** Batch keyword retrieval over the corpus: Okapi BM25 top-k per query —
   * the lexical sibling of [[Similarity]]'s embedding search, and the shape
   * a training-data pipeline actually runs (score the WHOLE corpus against
@@ -450,214 +454,72 @@ object KeywordSearch {
 
   // ---------------------------------------------------------------- index
 
-  /** BM25 POSTING-INDEX store (r14) — the maintenance path that makes
+  /** BM25 POSTING-INDEX store — the maintenance path that makes
     * retrieval affordable over a GROWING corpus: [[bm25Batch]] re-scans
     * the whole corpus per battery (right for one-shot batteries), while
     * a production deployment indexes once and appends deltas — zero
     * corpus re-scans per search, the incremental-dedup-index doctrine on
-    * the lexical plane. Layout (the engine's store conventions: batch-dir
-    * data, metadata LAST):
+    * the lexical plane. Layout (batch-dir data, metadata LAST):
     *
     *   <dir>/meta.json                    {"format":"graft-bm25-index",
     *                                       "version":1,"batches":B,
-    *                                       "n":N,"sumdl":S}
+    *                                       "n":N,"sumdl":S,
+    *                                       "tombBatches":T,"tombRows":R,
+    *                                       "positions":P}
     *   <dir>/postings/b<i>/part-….parquet   (term, doc_id, tf, dl)
     *   <dir>/docs/b<i>/part-….parquet       (doc_id, dl)
-    *   <dir>/tombstones/b<i>/part-….parquet (doc_id) — deleted docs
-    *                                        (r15); readers anti-join,
+    *   <dir>/positions/b<i>/part-….parquet  (term, doc_id, positions) —
+    *                                        only when P (phrase search)
+    *   <dir>/tombstones/b<i>/part-….parquet (doc_id) — deleted docs;
+    *                                        readers anti-join,
     *                                        compaction drops physically
     *
     * Postings carry the FULL vocabulary (unlike bm25Batch's
     * battery-filtered build): the delta projects to (id, dl, tokens)
-    * ONCE (persisted), feeding both planes' writes. `meta.json` writes
-    * LAST and ATOMICALLY (staged sibling + `FileContext` rename — the
-    * kerchunk convention), so a reader mid-append sees the old
-    * consistent snapshot: batch dirs beyond `batches` are invisible, a
-    * crashed append leaves only an orphan dir the next append's
-    * overwrite-mode write clobbers, and a crash mid-meta-write can
-    * never leave a truncated meta that bricks the store. A REBUILD
-    * (`bm25IndexBuild(overwrite = true)`) stages the whole new store in
-    * a hidden sibling dir and swaps it in only after the staged meta
-    * commits (r15) — a failed rebuild leaves the old index byte-intact.
+    * ONCE (persisted), feeding every plane's write.
     * [[bm25SearchIndexed]] reads exactly the meta'd batches, prunes the
     * postings by the battery vocabulary, and runs the SAME retrieval
     * tail as bm25Batch — scores bit-identical to [[bm25TopK]] over the
     * equivalent corpus, which is what the gate pins. Duplicate doc ids
     * (within a delta or vs the store) refuse loudly: posting semantics
-    * are per-document. Appends are SINGLE-WRITER (like the kerchunk
-    * store): two concurrent appends would race the same batch number's
-    * dirs — the optimistic meta recheck before commit turns the common
-    * interleaving into a loud refusal, but it is a guard, not a lock. */
+    * are per-document. Build, append, delete and compact run the shared
+    * store lifecycle ([[graft.sources.StoreMeta.Store]]): every mutation
+    * holds the store's writer lease, a rebuild stages the whole new
+    * store in a hidden sibling and swaps it in only after its meta
+    * commits, and the meta commit is atomic and LAST, so a reader
+    * mid-write sees the old consistent snapshot. */
   def bm25IndexBuild(docs: DataFrame, textCol: String, idCol: String,
                      dir: String, overwrite: Boolean = false,
-                     positions: Boolean = false): Unit = {
-    val spark = docs.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = graft.sources.FsPaths.hadoopPath(dir)
-    val fs = graft.sources.FsPaths.fileSystemFor(root, conf)
-    // r16: all mutations run under the store's writer LEASE — the
-    // single-writer contract is checked at acquisition, not just by the
-    // optimistic meta recheck (which stays behind it as defense in depth)
-    graft.sources.StoreMeta.withWriterLock(fs, root, "bm25IndexBuild") {
-      // heal a crashed swap BEFORE deciding what's here (r17 — without
-      // this, a fresh build saw the crashed swap's empty root as 'nothing
-      // here', deleted the staged sibling as stale, and swapped away the
-      // parked .old: both recoverable copies destroyed without the
-      // overwrite opt-in the healed live store correctly demands below)
-      graft.sources.StoreMeta.recoverCrashedSwap(fs, root)
-      val metaPath = new org.apache.hadoop.fs.Path(root, "meta.json")
-      if (fs.exists(metaPath))
-        require(overwrite,
-          s"bm25IndexBuild: '$dir' already holds an index — pass overwrite = true " +
-            "to rebuild, or bm25IndexAppend to grow it")
-      else if (fs.exists(root) && fs.listStatus(root).nonEmpty)
-        // a non-empty dir that is NOT a store holds someone else's bytes —
-        // the swap below replaces the root, so clobbering it needs the same
-        // explicit opt-in a store rebuild does (an empty placeholder dir —
-        // the createTempDirectory pattern — replaces silently)
-        require(overwrite,
-          s"bm25IndexBuild: '$dir' exists, is not a bm25 index, and is not " +
-            "empty — pass overwrite = true to replace it")
-      // r15: the whole store builds into a hidden STAGED sibling and swaps
-      // into place only after the staged meta commits — an encode/write
-      // failure mid-rebuild (duplicate ids, executor loss) can no longer
-      // destroy the existing index (the r14 delete-then-write window).
-      val staged = graft.sources.StoreMeta.stagedSibling(root)
-      if (fs.exists(staged)) fs.delete(staged, true) // stale crashed rebuild
+                     positions: Boolean = false): Unit =
+    store(docs.sparkSession, dir).build("bm25IndexBuild", overwrite) { staged =>
       val (n, sumdl) = writeIndexBatch(docs, textCol, idCol, staged.toString,
         batch = 0, positions = positions)
-      writeIndexMeta(fs, new org.apache.hadoop.fs.Path(staged, "meta.json"),
-        IndexMeta(batches = 1, n = n, sumdl = sumdl, tombBatches = 0,
-          positions = positions))
-      graft.sources.StoreMeta.swapInto(fs, staged, root)
+      StoreMeta.Meta(batches = 1, n = n, tombBatches = 0, tombRows = 0L,
+        ListMap("sumdl" -> sumdl), ListMap("positions" -> positions))
     }
-  }
 
   /** Append a document delta to an existing index — only the DELTA is
     * scanned; existing batch files never rewrite (the concat dim of a
     * posting store is the document set, so append is pure accretion). */
   def bm25IndexAppend(spark: org.apache.spark.sql.SparkSession, dir: String,
                       newDocs: DataFrame, textCol: String, idCol: String,
-                      lockWaitMs: Long = 0L): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = graft.sources.FsPaths.hadoopPath(dir)
-    val fs = graft.sources.FsPaths.fileSystemFor(root, conf)
-    graft.sources.StoreMeta.withWriterLock(fs, root, "bm25IndexAppend",
-        waitMs = lockWaitMs) {
-      val metaPath = new org.apache.hadoop.fs.Path(root, "meta.json")
-      val meta = readIndexMeta(fs, metaPath, dir)
-      // id-collision guard vs the store: a delta-sized semi-join against
-      // the docs plane's one pruned column — never a posting-volume scan.
-      // Deliberately UNFILTERED by tombstones: re-appending a DELETED id
-      // would resurrect it only until the tombstone anti-join killed both
-      // its old and new postings — refuse; compaction reclaims the id.
-      val oldDocs = readPlane(spark, dir, "docs", meta.batches)
-      val clash = newDocs.select(col(idCol).as("doc_id"))
-        .join(oldDocs.select("doc_id"), Seq("doc_id"), "left_semi").limit(1).count()
-      require(clash == 0L,
-        s"bm25IndexAppend: delta re-uses doc ids already in (or deleted " +
-          s"from) '$dir' — posting semantics are per-document; assign fresh " +
-          "ids, or compact to reclaim deleted ids")
+                      lockWaitMs: Long = 0L): Unit =
+    store(spark, dir).append("bm25IndexAppend", newDocs, idCol, lockWaitMs) { meta =>
       // the delta inherits the store's positions setting: a positional
       // store's planes must stay aligned batch-for-batch
-      val (dn, dsum) = writeIndexBatch(newDocs, textCol, idCol, dir,
-        batch = meta.batches, positions = meta.positions)
-      // optimistic single-writer recheck BEHIND the lease (defense in
-      // depth — it also catches a lease-bypassing legacy writer): if
-      // another writer committed while this one wrote its batch dirs,
-      // both targeted the SAME batch number — refuse rather than commit
-      // a meta whose stats disagree with the interleaved dir contents.
-      val now = readIndexMeta(fs, metaPath, dir)
-      require(now.batches == meta.batches && now.tombBatches == meta.tombBatches,
-        s"bm25IndexAppend: concurrent writer detected on '$dir' (batches " +
-          s"${meta.batches} → ${now.batches}, tombstone batches " +
-          s"${meta.tombBatches} → ${now.tombBatches} mid-append) — the " +
-          "store is single-writer; retry this delta")
-      writeIndexMeta(fs, metaPath, meta.copy(batches = meta.batches + 1,
-        n = meta.n + dn, sumdl = meta.sumdl + dsum))
+      writeIndexBatch(newDocs, textCol, idCol, dir, batch = meta.batches,
+        positions = hasPositions(meta))
     }
-  }
 
-  /** DELETE documents from the index (r15) — the takedown/dedup-prune
-    * maintenance a production posting store runs daily, WITHOUT the
-    * full-corpus rebuild that was the only removal path before: a
-    * tombstone batch appends under the store's crash posture (batch dir
-    * first, meta LAST and atomic), every reader anti-joins the tombstone
-    * plane, and [[bm25IndexCompact]] physically drops the rows and
-    * resets the plane. The meta's n/sumdl subtract the deleted docs'
-    * stats at commit time, so idf/avgdl — and therefore every score —
-    * are BIT-IDENTICAL to a from-scratch rebuild without the deleted
-    * rows (the gate's pin). `ids` must be distinct, present, and not
-    * already deleted — a double delete would subtract stats twice, so
-    * it refuses loudly. Deleted ids stay reserved until a compact
-    * (append refuses them — resurrection would race the anti-join). */
+  /** DELETE documents from the index — the takedown/dedup-prune
+    * maintenance a production posting store runs daily, without a
+    * full-corpus rebuild ([[graft.sources.StoreMeta.Store.delete]]). The
+    * meta's n/sumdl subtract the deleted docs' stats at commit time, so
+    * idf/avgdl — and therefore every score — are BIT-IDENTICAL to a
+    * from-scratch rebuild without the deleted rows (the gate's pin). */
   def bm25IndexDelete(spark: org.apache.spark.sql.SparkSession, dir: String,
-                      ids: DataFrame, idCol: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = graft.sources.FsPaths.hadoopPath(dir)
-    val fs = graft.sources.FsPaths.fileSystemFor(root, conf)
-    graft.sources.StoreMeta.withWriterLock(fs, root, "bm25IndexDelete") {
-      val metaPath = new org.apache.hadoop.fs.Path(root, "meta.json")
-      val meta = readIndexMeta(fs, metaPath, dir)
-      // write to a STAGING sibling first, validate from the WRITTEN bytes
-      // (the writeBatch convention — a pre-flight validation of a
-      // non-deterministic `ids` frame would be TOCTOU), and rename into
-      // the live b<tomb> slot only after every check passes (r16; through
-      // r15 this wrote b<tomb> directly in overwrite mode, which could
-      // clobber a COMMITTED tombstone batch if a concurrent delete had
-      // won the race — the lease now forecloses that race, and the
-      // staged rename closes it even against a lease-bypassing legacy
-      // writer). On any refusal, meta is untouched and the
-      // staging dir is an orphan the next delete clobbers.
-      val staging = s"$dir/tombstones/b${meta.tombBatches}.staging"
-      val delProj = ids.select(col(idCol).as("doc_id"))
-      delProj.write.mode("overwrite").parquet(staging)
-      // explicit schema so a zero-row write (no part files to infer from)
-      // still reads back as an empty frame and refuses below
-      val written = spark.read.schema(delProj.schema).parquet(staging)
-      // one validation pass: count + distinct + liveness + the Σdl the meta
-      // commit needs. The docs plane joins column-pruned (doc_id, dl);
-      // already-tombstoned ids read as not-live (their dl row anti-joins
-      // away), folding the double-delete case into the liveness refusal.
-      val liveDocs = dropTombstoned(spark,
-        readPlane(spark, dir, "docs", meta.batches), dir, meta.tombBatches)
-      val st = written.join(liveDocs, Seq("doc_id"), "left")
-        .agg(count(lit(1)).as("n"), countDistinct(col("doc_id")).as("nd"),
-          sum(when(col("dl").isNotNull, 1L).otherwise(0L)).as("live"),
-          coalesce(sum(col("dl")), lit(0L)).as("dsum")).head()
-      val dn = st.getLong(0)
-      require(dn > 0L, s"bm25IndexDelete: empty id set — nothing to delete in '$dir'")
-      require(st.getLong(1) == dn,
-        s"bm25IndexDelete: id set has ${dn - st.getLong(1)} duplicates — a " +
-          "double delete would subtract corpus stats twice; dedupe ids first")
-      require(st.getLong(2) == dn,
-        s"bm25IndexDelete: ${dn - st.getLong(2)} ids are not live in '$dir' " +
-          "(absent or already deleted) — deletes must name existing documents")
-      // the accumulated-tombstone cap (r16): past it, dropTombstoned's
-      // broadcast — not this delete — would be the thing that fails, at
-      // read time, for every reader; refuse HERE instead and point at
-      // compaction, which drops the backlog physically
-      require(meta.tombRows + dn <= graft.sources.StoreMeta.TombstoneRowCap,
-        s"bm25IndexDelete: '$dir' would hold ${meta.tombRows + dn} tombstone " +
-          s"rows, past the ${graft.sources.StoreMeta.TombstoneRowCap} broadcast " +
-          "cap — run bm25IndexCompact to reclaim deleted rows first")
-      val now = readIndexMeta(fs, metaPath, dir)
-      require(now.batches == meta.batches && now.tombBatches == meta.tombBatches,
-        s"bm25IndexDelete: concurrent writer detected on '$dir' (batches " +
-          s"${meta.batches} → ${now.batches}, tombstone batches " +
-          s"${meta.tombBatches} → ${now.tombBatches} mid-delete) — the " +
-          "store is single-writer; retry")
-      val slot = new org.apache.hadoop.fs.Path(root,
-        s"tombstones/b${meta.tombBatches}")
-      if (fs.exists(slot)) fs.delete(slot, true) // orphan of a crashed delete
-      require(fs.rename(graft.sources.FsPaths.hadoopPath(staging), slot),
-        s"bm25IndexDelete: rename '$staging' -> '$slot' failed — meta is " +
-          "untouched; the staging dir is an orphan the next delete clobbers")
-      writeIndexMeta(fs, metaPath, meta.copy(n = meta.n - dn,
-        sumdl = meta.sumdl - st.getLong(3), tombBatches = meta.tombBatches + 1,
-        tombRows = meta.tombRows + dn))
-    }
-  }
+                      ids: DataFrame, idCol: String): Unit =
+    store(spark, dir).delete("bm25IndexDelete", ids, idCol)
 
   /** Search the index: zero corpus scans — the battery's vocabulary
     * semi-joins the meta'd posting batches and the shared retrieval tail
@@ -666,21 +528,16 @@ object KeywordSearch {
                         queries: DataFrame, qidCol: String, qtextCol: String,
                         k: Int = 10, k1: Double = 1.2, b: Double = 0.75,
                         scope: CacheScope = CacheScope.untracked): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = graft.sources.FsPaths.hadoopPath(dir)
-    val fs = graft.sources.FsPaths.fileSystemFor(root, conf)
-    val meta = readIndexMeta(fs,
-      new org.apache.hadoop.fs.Path(root, "meta.json"), dir)
-    import meta.{batches, n, sumdl, tombBatches => tomb}
+    val (store, meta) = open(spark, dir)
+    import meta.{batches, n}
     require(n > 0, s"bm25SearchIndexed: index at '$dir' holds no documents")
-    val avgdl = sumdl.toDouble / n.toDouble
     val qTerms = batteryTerms(queries, qidCol, qtextCol, scope)
     // battery geometry only — corpus facts come from the meta, so the
     // pre-job cost is ONE tiny action over the persisted occurrences
     val g = qTerms.agg(max(col("ord")), countDistinct(col("term"))).collect()(0)
     val maxOrd = if (g.isNullAt(0)) -1 else g.getInt(0)
     val nTerms = g.getLong(1)
-    val postings = readPlane(spark, dir, "postings", batches)
+    val postings = store.plane("postings", batches)
     // ADAPTIVE vocabulary pruning against the term-sorted store:
     //  - human-sized battery (≤1024 distinct terms): a bounded collect
     //    turns the vocabulary into a pushed `term IN (…)` scan filter —
@@ -704,7 +561,7 @@ object KeywordSearch {
     // broadcast against the battery's posting slice, not the store) and
     // BEFORE retrieve's df aggregation — per-term df must equal the
     // rebuild-without-deleted-rows value, like meta's n/avgdl already do
-    val live = dropTombstoned(spark, pruned, dir, tomb)
+    val live = store.live(pruned, meta)
     // spread the survivors before the retrieval join (the broadcast-
     // battery fan-out inherits this partitioning — the two-core trap);
     // r18: by doc_id alone, so the (query_id, doc_id) pivot reduction
@@ -716,7 +573,7 @@ object KeywordSearch {
     // materialize before planning the retrieval so the cache reports its
     // doc_id partitioning — the bm25Batch exchange-elision note
     filtered.count()
-    retrieve(qTerms, filtered, n, avgdl, maxOrd, k1, b, k)
+    retrieve(qTerms, filtered, n, avgdl(meta), maxOrd, k1, b, k)
   }
 
   /** QUOTED-PHRASE BM25 top-k over a POSITIONAL index (r15) — the
@@ -767,26 +624,21 @@ object KeywordSearch {
                      k1: Double = 1.2, b: Double = 0.75,
                      scope: CacheScope = CacheScope.untracked,
                      slop: Int = 0): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = graft.sources.FsPaths.hadoopPath(dir)
-    val fs = graft.sources.FsPaths.fileSystemFor(root, conf)
-    val meta = readIndexMeta(fs,
-      new org.apache.hadoop.fs.Path(root, "meta.json"), dir)
+    val (store, meta) = open(spark, dir)
     require(slop >= 0, s"bm25PhraseTopK: slop must be >= 0, got $slop")
-    require(meta.positions,
+    require(hasPositions(meta),
       s"bm25PhraseTopK: index at '$dir' was built without the positions " +
         "plane — rebuild or compact from a build with positions = true")
     require(meta.n > 0, s"bm25PhraseTopK: index at '$dir' holds no documents")
     val perPhrase = parseBattery(phrases)
-    val plane = dropTombstoned(spark,
-      readPlane(spark, dir, "positions", meta.batches), dir, meta.tombBatches)
+    val plane = store.live(store.plane("positions", meta.batches), meta)
     // persisted: the matched (query, doc, tf) rows feed BOTH the df
     // aggregation and the scoring join — without the cache the whole
     // positions scan + double explode + adjacency count re-runs for the
     // second consumer (the batteryTerms/filtered-postings precedent)
     val occurrences = scope.persisted(phraseOccurrences(plane, perPhrase, slop),
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    phraseScoreTail(spark, dir, meta, occurrences, k, k1, b)
+    phraseScoreTail(store, meta, occurrences, k, k1, b)
   }
 
   /** The Okapi pseudo-term scoring tail shared by [[bm25PhraseTopK]] and
@@ -797,17 +649,14 @@ object KeywordSearch {
     * phrase's full match set through one reducer), then idf/norm from the
     * meta's live n/avgdl and the shared (score desc, doc_id asc) tie
     * rule. `occurrences` carries (query_id, doc_id, tf). */
-  private def phraseScoreTail(spark: org.apache.spark.sql.SparkSession,
-                              dir: String, meta: IndexMeta,
+  private def phraseScoreTail(store: StoreMeta.Store, meta: StoreMeta.Meta,
                               occurrences: DataFrame, k: Int,
                               k1: Double, b: Double): DataFrame = {
-    val avgdl = meta.sumdl.toDouble / meta.n.toDouble
     val dfTab = occurrences.groupBy("query_id")
       .agg(count(lit(1)).cast(DoubleType).as("__df"))
-    val docsPlane = dropTombstoned(spark,
-      readPlane(spark, dir, "docs", meta.batches), dir, meta.tombBatches)
+    val docsPlane = store.live(store.plane("docs", meta.batches), meta)
     val norm = lit(k1 * (1 - b)) +
-      lit(k1 * b / avgdl) * col("dl").cast(DoubleType)
+      lit(k1 * b / avgdl(meta)) * col("dl").cast(DoubleType)
     val tfc = col("tf").cast(DoubleType)
     val scored = occurrences
       .join(broadcast(dfTab), Seq("query_id"))
@@ -856,13 +705,9 @@ object KeywordSearch {
                       k: Int = 10, k1: Double = 1.2, b: Double = 0.75,
                       scope: CacheScope = CacheScope.untracked,
                       slop: Int = 0): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = graft.sources.FsPaths.hadoopPath(dir)
-    val fs = graft.sources.FsPaths.fileSystemFor(root, conf)
-    val meta = readIndexMeta(fs,
-      new org.apache.hadoop.fs.Path(root, "meta.json"), dir)
+    val (store, meta) = open(spark, dir)
     require(slop >= 0, s"bm25PhraseBatch: slop must be >= 0, got $slop")
-    require(meta.positions,
+    require(hasPositions(meta),
       s"bm25PhraseBatch: index at '$dir' was built without the positions " +
         "plane — rebuild or compact from a build with positions = true")
     require(meta.n > 0, s"bm25PhraseBatch: index at '$dir' holds no documents")
@@ -881,8 +726,7 @@ object KeywordSearch {
           .collect().map(_.getString(0)).sorted.toSeq)
       else None
     def prunedPlane(name: String): DataFrame = {
-      val plane = dropTombstoned(spark,
-        readPlane(spark, dir, name, meta.batches), dir, meta.tombBatches)
+      val plane = store.live(store.plane(name, meta.batches), meta)
       smallVocab match {
         case Some(terms) => plane.filter(col("term").isin(terms: _*))
         case None => plane.join(qTerms.select("term").distinct(),
@@ -966,7 +810,7 @@ object KeywordSearch {
     // spark.graft.phraseVoteCopartitionRows to taste (≤ 0 disables).
     val voteGate = spark.conf.getOption("spark.graft.phraseVoteCopartitionRows")
       .map(_.toLong).getOrElse(200000000L)
-    val voteBound = batteryRows.toDouble * meta.sumdl.toDouble * (slop + 1).toDouble
+    val voteBound = batteryRows.toDouble * sumdl(meta).toDouble * (slop + 1).toDouble
     val estVotes =
       if (voteGate <= 0 || voteBound <= voteGate.toDouble) 0.0
       else qTerms.groupBy("term").agg(count(lit(1)).as("__mult"))
@@ -1011,7 +855,7 @@ object KeywordSearch {
         .filter(col("__nOrd") === col("__l"))
         .groupBy("query_id", "doc_id").agg(count(lit(1)).as("tf")),
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    phraseScoreTail(spark, dir, meta, occurrences, k, k1, b)
+    phraseScoreTail(store, meta, occurrences, k, k1, b)
   }
 
   /** Matched (query_id, doc_id, tf) rows for a phrase battery over the
@@ -1071,19 +915,14 @@ object KeywordSearch {
                                dir: String, phrases: Seq[(String, String)],
                                k1: Double = 1.2, b: Double = 0.75,
                                slop: Int = 0): PhraseModel = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = graft.sources.FsPaths.hadoopPath(dir)
-    val fs = graft.sources.FsPaths.fileSystemFor(root, conf)
-    val meta = readIndexMeta(fs,
-      new org.apache.hadoop.fs.Path(root, "meta.json"), dir)
+    val (store, meta) = open(spark, dir)
     require(slop >= 0, s"bm25PhraseModelFromIndex: slop must be >= 0, got $slop")
-    require(meta.positions,
+    require(hasPositions(meta),
       s"bm25PhraseModelFromIndex: index at '$dir' was built without the " +
         "positions plane — rebuild or compact from a build with positions = true")
     require(meta.n > 0, s"bm25PhraseModelFromIndex: index at '$dir' holds no documents")
     val perPhrase = parseBattery(phrases)
-    val plane = dropTombstoned(spark,
-      readPlane(spark, dir, "positions", meta.batches), dir, meta.tombBatches)
+    val plane = store.live(store.plane("positions", meta.batches), meta)
     // one bounded collect: ONE row per phrase (battery is driver-sized)
     val dfByPhrase: Map[String, Long] = phraseOccurrences(plane, perPhrase, slop)
       .groupBy("query_id").agg(count(lit(1)).as("df"))
@@ -1094,8 +933,7 @@ object KeywordSearch {
     val idf = perPhrase.map { case (qid, _) =>
       idfOf(meta.n, dfByPhrase.getOrElse(qid, 0L).toDouble)
     }.toArray
-    PhraseModel(k1, b, meta.n, meta.sumdl.toDouble / meta.n.toDouble, perPhrase,
-      idf, slop)
+    PhraseModel(k1, b, meta.n, avgdl(meta), perPhrase, idf, slop)
   }
 
   /** Score a document frame — batch OR `readStream` — against a frozen
@@ -1179,21 +1017,16 @@ object KeywordSearch {
   def bm25ModelFromIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                          queries: Seq[(String, String)],
                          k1: Double = 1.2, b: Double = 0.75): Bm25Model = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = graft.sources.FsPaths.hadoopPath(dir)
-    val fs = graft.sources.FsPaths.fileSystemFor(root, conf)
-    val meta = readIndexMeta(fs,
-      new org.apache.hadoop.fs.Path(root, "meta.json"), dir)
+    val (store, meta) = open(spark, dir)
     require(meta.n > 0, s"bm25ModelFromIndex: index at '$dir' holds no documents")
     val perQuery = parseBattery(queries)
     val allTerms = perQuery.flatMap(_._2).distinct.sorted
-    val dfByTerm: Map[String, Long] = dropTombstoned(spark,
-        readPlane(spark, dir, "postings", meta.batches)
-          .filter(col("term").isin(allTerms: _*)), dir, meta.tombBatches)
+    val dfByTerm: Map[String, Long] = store.live(store.plane("postings", meta.batches)
+        .filter(col("term").isin(allTerms: _*)), meta)
       .groupBy("term").agg(count(lit(1)).as("df"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val idf = allTerms.map(t => idfOf(meta.n, dfByTerm.getOrElse(t, 0L).toDouble)).toArray
-    Bm25Model(k1, b, meta.sumdl.toDouble / meta.n.toDouble, allTerms, idf, perQuery)
+    Bm25Model(k1, b, avgdl(meta), allTerms, idf, perQuery)
   }
 
   /** One delta TOKENIZATION → docs + postings batch dirs (overwrite
@@ -1260,99 +1093,58 @@ object KeywordSearch {
     * skips row groups per batch; after compaction it skips across the
     * whole store). Tokenization never re-runs — the rows are already
     * postings; N/sumdl carry over from the source meta and the rewrite is
-    * validated against it before the destination meta commits (LAST). The
-    * source store is never touched: compact-to-sibling + caller swap is
-    * the crash-safe shape. */
+    * validated against it before the destination meta commits
+    * ([[graft.sources.StoreMeta.Store.compactFrom]]). */
   def bm25IndexCompact(spark: org.apache.spark.sql.SparkSession,
                        srcDir: String, dstDir: String,
                        overwrite: Boolean = false,
                        lockWaitMs: Long = 0L): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val srcRoot = graft.sources.FsPaths.hadoopPath(srcDir)
-    val srcFs = graft.sources.FsPaths.fileSystemFor(srcRoot, conf)
-    val srcMetaPath = new org.apache.hadoop.fs.Path(srcRoot, "meta.json")
-    val srcMeta = readIndexMeta(srcFs, srcMetaPath, srcDir)
-    import srcMeta.{batches, n, sumdl, tombBatches => tomb}
-    val dstRoot = graft.sources.FsPaths.hadoopPath(dstDir)
-    val dstFs = graft.sources.FsPaths.fileSystemFor(dstRoot, conf)
-    // a same-path "compact" with overwrite would DELETE the source before
-    // reading it — the one way this maintenance op could lose the store
-    require(srcFs.makeQualified(srcRoot) != dstFs.makeQualified(dstRoot),
-      s"bm25IndexCompact: source and destination are the same store " +
-        s"('$srcDir') — compact to a sibling and swap")
-    val dstMeta = new org.apache.hadoop.fs.Path(dstRoot, "meta.json")
-    graft.sources.StoreMeta.withWriterLock(dstFs, dstRoot, "bm25IndexCompact",
-        waitMs = lockWaitMs) {
-      if (dstFs.exists(dstMeta)) {
-        require(overwrite,
-          s"bm25IndexCompact: '$dstDir' already holds an index — pass overwrite = true")
-        dstFs.delete(dstRoot, true)
-      } else if (dstFs.exists(dstRoot) && dstFs.listStatus(dstRoot).nonEmpty)
-        // the r15 build-side rule applies here too: writing store planes
-        // among someone else's bytes turns their dir into a "store" a later
-        // overwrite would delete wholesale — refuse unless told to clobber
-        require(overwrite,
-          s"bm25IndexCompact: '$dstDir' exists, is not a bm25 index, and is " +
-            "not empty — pass overwrite = true to replace it")
-      // tombstoned docs DROP PHYSICALLY here (the reclamation path): both
-      // planes rewrite through the anti-join, and the destination resets
-      // tombBatches to 0 — after a compact the deleted ids are free again
-      dropTombstoned(spark, readPlane(spark, srcDir, "docs", batches), srcDir, tomb)
-        .write.mode("overwrite").parquet(s"$dstDir/docs/b0")
-      dropTombstoned(spark, readPlane(spark, srcDir, "postings", batches), srcDir, tomb)
-        // RANGE partition + in-file sort = truly term-sorted across the
-        // whole plane (file ordinals cover disjoint term ranges), so
-        // row-group min/max skipping is as tight as the layout allows
-        .repartitionByRange(col("term"), col("doc_id"))
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode("overwrite").parquet(s"$dstDir/postings/b0")
-      // validate BOTH planes before committing: docs against the source
-      // meta's stats (which are live-row stats — the delete already
-      // subtracted, so this equality also validates the tombstone drop),
-      // postings by row count against the source's live read
-      val st = spark.read.parquet(s"$dstDir/docs/b0")
-        .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).collect()(0)
-      require(st.getLong(0) == n && st.getLong(1) == sumdl,
-        s"bm25IndexCompact: rewrote ${st.getLong(0)} docs / Σdl ${st.getLong(1)} " +
-          s"but '$srcDir' meta says $n / $sumdl — source torn or write " +
-          "incomplete; not committing")
-      val srcPostings = dropTombstoned(spark,
-        readPlane(spark, srcDir, "postings", batches), srcDir, tomb).count()
-      val dstPostings = spark.read.parquet(s"$dstDir/postings/b0").count()
-      require(srcPostings == dstPostings,
-        s"bm25IndexCompact: rewrote $dstPostings postings of $srcPostings — " +
-          "write incomplete; not committing")
-      // the positions plane (if present) compacts alongside, same layout
-      // discipline and the same count validation
-      if (srcMeta.positions) {
-        dropTombstoned(spark, readPlane(spark, srcDir, "positions", batches),
-            srcDir, tomb)
+    val src = store(spark, srcDir)
+    store(spark, dstDir).compactFrom(src, "bm25IndexCompact", overwrite, lockWaitMs) {
+      (meta, staged) =>
+        // tombstoned docs DROP PHYSICALLY here (the reclamation path):
+        // every plane rewrites through the anti-join
+        def liveSrc(plane: String) = src.live(src.plane(plane, meta.batches), meta)
+        liveSrc("docs").write.mode("overwrite").parquet(s"$staged/docs/b0")
+        liveSrc("postings")
+          // RANGE partition + in-file sort = truly term-sorted across the
+          // whole plane (file ordinals cover disjoint term ranges), so
+          // row-group min/max skipping is as tight as the layout allows
           .repartitionByRange(col("term"), col("doc_id"))
           .sortWithinPartitions("term", "doc_id")
-          .write.mode("overwrite").parquet(s"$dstDir/positions/b0")
-        val srcPos = dropTombstoned(spark,
-          readPlane(spark, srcDir, "positions", batches), srcDir, tomb).count()
-        val dstPos = spark.read.parquet(s"$dstDir/positions/b0").count()
-        require(srcPos == dstPos,
-          s"bm25IndexCompact: rewrote $dstPos position rows of $srcPos — " +
+          .write.mode("overwrite").parquet(s"$staged/postings/b0")
+        // validate BOTH planes before committing: docs against the source
+        // meta's stats (which are live-row stats — the delete already
+        // subtracted, so this equality also validates the tombstone drop),
+        // postings by row count against the source's live read
+        val st = spark.read.parquet(s"$staged/docs/b0")
+          .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).collect()(0)
+        require(st.getLong(0) == meta.n && st.getLong(1) == sumdl(meta),
+          s"bm25IndexCompact: rewrote ${st.getLong(0)} docs / Σdl ${st.getLong(1)} " +
+            s"but '$srcDir' meta says ${meta.n} / ${sumdl(meta)} — source torn or " +
             "write incomplete; not committing")
-      }
-      // optimistic recheck (the append convention): an append or delete
-      // landing on the source mid-compact would otherwise vanish at the
-      // caller's swap
-      val now = readIndexMeta(srcFs, srcMetaPath, srcDir)
-      require(now.batches == batches && now.tombBatches == tomb,
-        s"bm25IndexCompact: '$srcDir' moved ($batches → ${now.batches} " +
-          s"batches, $tomb → ${now.tombBatches} tombstone batches) " +
-          "mid-compact — re-run to include the new writes")
-      // tombRows resets with the plane: the destination holds zero
-      // tombstones, so the broadcast-cap ledger restarts from a clean slate
-      writeIndexMeta(dstFs, dstMeta, srcMeta.copy(batches = 1, tombBatches = 0,
-        tombRows = 0L))
+        val srcPostings = liveSrc("postings").count()
+        val dstPostings = spark.read.parquet(s"$staged/postings/b0").count()
+        require(srcPostings == dstPostings,
+          s"bm25IndexCompact: rewrote $dstPostings postings of $srcPostings — " +
+            "write incomplete; not committing")
+        // the positions plane (if present) compacts alongside, same layout
+        // discipline and the same count validation
+        if (hasPositions(meta)) {
+          liveSrc("positions")
+            .repartitionByRange(col("term"), col("doc_id"))
+            .sortWithinPartitions("term", "doc_id")
+            .write.mode("overwrite").parquet(s"$staged/positions/b0")
+          val srcPos = liveSrc("positions").count()
+          val dstPos = spark.read.parquet(s"$staged/positions/b0").count()
+          require(srcPos == dstPos,
+            s"bm25IndexCompact: rewrote $dstPos position rows of $srcPos — " +
+              "write incomplete; not committing")
+        }
     }
   }
 
-  /** One-row OPERATIONAL snapshot of a posting store (r17) — the
+  /** One-row OPERATIONAL snapshot of a posting store — the
     * inspection op that completes the lifecycle (build / append / delete
     * / compact / search / STATS): live corpus stats straight from the
     * meta (`docs`, `sumdl`, `avgdl` — delete-adjusted, so they equal a
@@ -1368,88 +1160,37 @@ object KeywordSearch {
     * swap heals on the meta read like every other reader. */
   def bm25IndexStats(spark: org.apache.spark.sql.SparkSession,
                      dir: String): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = graft.sources.FsPaths.hadoopPath(dir)
-    val fs = graft.sources.FsPaths.fileSystemFor(root, conf)
-    val meta = readIndexMeta(fs, new org.apache.hadoop.fs.Path(root, "meta.json"), dir)
-    dropTombstoned(spark, readPlane(spark, dir, "postings", meta.batches),
-        dir, meta.tombBatches)
+    val (store, meta) = open(spark, dir)
+    store.live(store.plane("postings", meta.batches), meta)
       .agg(countDistinct(col("term")).as("terms"),
         count(lit(1)).as("postings"))
-      .select(lit(meta.n).as("docs"), lit(meta.sumdl).as("sumdl"),
+      .select(lit(meta.n).as("docs"), lit(sumdl(meta)).as("sumdl"),
         // a fully-deleted store (n = 0, legal: stats must still report)
         // shows avgdl as NULL, never NaN
-        (if (meta.n > 0) lit(meta.sumdl.toDouble / meta.n.toDouble)
+        (if (meta.n > 0) lit(avgdl(meta))
          else lit(null).cast(DoubleType)).as("avgdl"),
         col("terms"), col("postings"),
         lit(meta.batches).as("batches"),
         lit(meta.tombBatches).as("tomb_batches"),
         lit(meta.tombRows).as("tomb_rows"),
-        lit(meta.positions).as("positions"))
+        lit(hasPositions(meta)).as("positions"))
   }
 
-  /** One plane's batch dirs (`<dir>/<plane>/b0..b<batches-1>`) as one
-    * frame — the store layout expression, in one place. */
-  private def readPlane(spark: org.apache.spark.sql.SparkSession, dir: String,
-                        plane: String, batches: Int): DataFrame =
-    spark.read.parquet((0 until batches).map(i => s"$dir/$plane/b$i"): _*)
+  /** The posting store, as the shared lifecycle sees it: its own meta
+    * fields are `sumdl` (Σdl of the live docs, kept by appends and deletes
+    * as the docs plane's `dl` weight) and the `positions` flag (absent in
+    * stores built before the positions plane existed: false). */
+  private val IndexKind = StoreMeta.Kind(format = "graft-bm25-index", noun = "a bm25 index",
+    ops = "bm25Index", key = "doc_id", keyPlane = "docs", item = "document",
+    stats = Seq("sumdl"), flags = Seq("positions"), weight = Some("dl" -> "sumdl"),
+    unionBatches = false)
 
-  /** Atomic meta commit via [[graft.sources.StoreMeta]] (the kerchunk
-    * convention): a crash mid-write leaves the OLD meta readable; a
-    * truncate-in-place create would brick the store (empty meta =
-    * unparseable forever AND 'already holds an index' on rebuild). */
-  /** The store's self-description: batch/tombstone-batch counts, live
-    * corpus stats, accumulated tombstone rows (r16 — the
-    * [[graft.sources.StoreMeta.TombstoneRowCap]] guard's ledger), and
-    * whether the positions plane exists. */
-  private final case class IndexMeta(batches: Int, n: Long, sumdl: Long,
-                                     tombBatches: Int, positions: Boolean,
-                                     tombRows: Long = 0L)
+  private def store(spark: org.apache.spark.sql.SparkSession, dir: String) =
+    new StoreMeta.Store(IndexKind, spark, dir)
+  private def open(spark: org.apache.spark.sql.SparkSession, dir: String) =
+    StoreMeta.open(IndexKind, spark, dir)
 
-  private def writeIndexMeta(fs: org.apache.hadoop.fs.FileSystem,
-                             metaPath: org.apache.hadoop.fs.Path,
-                             meta: IndexMeta): Unit =
-    graft.sources.StoreMeta.atomicWriteJson(fs, metaPath,
-      s"""{"format": "graft-bm25-index", "version": 1, """ +
-        s""""batches": ${meta.batches}, "n": ${meta.n}, """ +
-        s""""sumdl": ${meta.sumdl}, "tombBatches": ${meta.tombBatches}, """ +
-        s""""tombRows": ${meta.tombRows}, "positions": ${meta.positions}}""")
-
-  /** `n`/`sumdl` are the LIVE corpus stats — [[bm25IndexDelete]] subtracts
-    * the deleted docs' count and Σdl when it commits a tombstone batch, so
-    * idf/avgdl always equal a from-scratch rebuild without the deleted
-    * rows. `tombBatches` (0), `tombRows` (0), and `positions` (false) are
-    * absent in pre-r16 stores — fully readable. Before reading, a crashed
-    * rebuild swap auto-completes ([[graft.sources.StoreMeta
-    * .recoverCrashedSwap]] — staged meta committed ⇒ the rebuilt store is
-    * authoritative), so any reader or writer heals the store. */
-  private def readIndexMeta(fs: org.apache.hadoop.fs.FileSystem,
-                            metaPath: org.apache.hadoop.fs.Path,
-                            dir: String): IndexMeta = {
-    graft.sources.StoreMeta.recoverCrashedSwap(fs, metaPath.getParent)
-    // a LIVE writer mid-swap is the one transient state left: wait out
-    // the two-rename window (bounded) instead of refusing (r17)
-    graft.sources.StoreMeta.awaitSwapWindow(fs, metaPath.getParent)
-    require(fs.exists(metaPath),
-      s"'$dir' is not a bm25 index (no meta.json — build one with bm25IndexBuild)")
-    // an unknown layout version refuses loudly inside parseChecked —
-    // batches/n/sumdl could mean something else under a future layout
-    val j = graft.sources.StoreMeta.parseChecked(fs, metaPath, dir,
-      "graft-bm25-index", version = 1L)
-    def long(field: String): Long = graft.sources.StoreMeta.longField(j, field, dir)
-    IndexMeta(long("batches").toInt, long("n"), long("sumdl"),
-      graft.sources.StoreMeta.longFieldOr(j, "tombBatches", dir, 0L).toInt,
-      graft.sources.StoreMeta.boolFieldOr(j, "positions", dir, default = false),
-      graft.sources.StoreMeta.longFieldOr(j, "tombRows", dir, 0L))
-  }
-
-  /** Live view of a plane keyed by `doc_id` — the shared
-    * [[graft.sources.StoreMeta.dropTombstoned]] convention over this
-    * store's tombstone plane layout. */
-  private def dropTombstoned(spark: org.apache.spark.sql.SparkSession,
-                             df: DataFrame, dir: String,
-                             tombBatches: Int): DataFrame =
-    graft.sources.StoreMeta.dropTombstoned(df, "doc_id",
-      if (tombBatches == 0) None
-      else Some(readPlane(spark, dir, "tombstones", tombBatches)))
+  private def sumdl(meta: StoreMeta.Meta): Long = meta.stats("sumdl")
+  private def avgdl(meta: StoreMeta.Meta): Double = sumdl(meta).toDouble / meta.n.toDouble
+  private def hasPositions(meta: StoreMeta.Meta): Boolean = meta.flags("positions")
 }

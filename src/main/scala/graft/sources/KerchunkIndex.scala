@@ -864,11 +864,10 @@ object KerchunkIndex {
     val fs = try FsPaths.fileSystemFor(root, conf.value)
     catch { case e: java.io.IOException if FsPaths.isNoFilesystem(e) =>
       FsPaths.connectorRefusal(dir, e) }
-    // r16: mutations run under the shared store writer LEASE (the
-    // bm25/ann convention) — the single-writer contract is checked at
-    // acquisition, and a dead same-host writer's lease self-breaks
+    // the shared store writer LEASE: the single-writer contract is checked
+    // at acquisition, and a dead same-host writer's lease self-breaks
     StoreMeta.withWriterLock(fs, root, "kerchunk parquet write") {
-      // heal a crashed swap before deciding what's here (the r17 build-path
+      // heal a crashed swap before deciding what's here (the build-path
       // rule all three stores share)
       StoreMeta.recoverCrashedSwap(fs, root, ".zmetadata")
       if (fs.exists(root)) {
@@ -880,27 +879,23 @@ object KerchunkIndex {
           s"kerchunk parquet write: '$dir' exists and is neither empty nor a " +
             "parquet reference store (.zmetadata) — refusing to delete unrelated data")
       }
-      // r17: the whole store stages into the hidden sibling and swaps in
-      // only after its .zmetadata (the completion marker) writes LAST —
-      // the bm25/ann rebuild crash posture; through r16 this deleted the
-      // prior store FIRST, so a crash mid-write destroyed it with no
-      // recovery. A crash now leaves the prior store byte-intact (or, if
-      // the crash lands between swapInto's two renames, fully recoverable
-      // on the next open).
-      val staged = StoreMeta.stagedSibling(root)
-      if (fs.exists(staged)) fs.delete(staged, true) // stale crashed rebuild
-      fs.mkdirs(staged)
-      writeRecordFiles(recordRowsOf(entries, geometry, recordSize), staged,
-        recordSize, geometry.map { case (v, (_, n)) => v -> n }, conf,
-        overwrite = false)
-      val metaJson = JObject(List(
-        JField("metadata", JObject(metaDocs.map { case (k, v) => JField(k, v) }.toList)),
-        JField("record_size", JLong(recordSize)),
-        JField("zarr_consolidated_format", JInt(1))))
-      val out = fs.create(new org.apache.hadoop.fs.Path(staged, ".zmetadata"), true)
-      try out.write(JsonMethods.compact(JsonMethods.render(metaJson)).getBytes("UTF-8"))
-      finally out.close()
-      StoreMeta.swapInto(fs, staged, root)
+      // the whole store stages into the hidden sibling and swaps in only
+      // after its .zmetadata (the completion marker) writes LAST, so a
+      // crash leaves the prior store byte-intact, or recoverable on the
+      // next open if it lands between the swap's two renames
+      StoreMeta.rebuildStaged(fs, root) { staged =>
+        fs.mkdirs(staged)
+        writeRecordFiles(recordRowsOf(entries, geometry, recordSize), staged,
+          recordSize, geometry.map { case (v, (_, n)) => v -> n }, conf,
+          overwrite = false)
+        val metaJson = JObject(List(
+          JField("metadata", JObject(metaDocs.map { case (k, v) => JField(k, v) }.toList)),
+          JField("record_size", JLong(recordSize)),
+          JField("zarr_consolidated_format", JInt(1))))
+        val out = fs.create(new org.apache.hadoop.fs.Path(staged, ".zmetadata"), true)
+        try out.write(JsonMethods.compact(JsonMethods.render(metaJson)).getBytes("UTF-8"))
+        finally out.close()
+      }
     }
   }
 

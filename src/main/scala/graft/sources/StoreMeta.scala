@@ -1,20 +1,26 @@
 package graft.sources
 
-/** Shared metadata-commit helpers for the engine's persisted index stores
-  * (the BM25 posting index and the ANN vector index — the kerchunk
-  * parquet-ref writer inlines the same rename convention around its own
-  * record-padding logic). One copy of the crash-safety-critical sequence:
-  * bytes stage in a HIDDEN sibling (invisible to Spark file indexes and to
-  * readers listing the store) and a `FileContext` rename with OVERWRITE
-  * swaps them in — atomic on POSIX and HDFS — so a crash mid-write leaves
-  * the OLD file readable. A truncate-in-place create would brick a store:
-  * an empty meta.json is unparseable forever AND reads as 'already holds
-  * an index' on rebuild. */
+import scala.collection.immutable.ListMap
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, countDistinct, lit, sum}
+
+/** The persisted stores' lifecycle and its crash-safety primitives. The
+  * BM25 posting index and the IVF-PQ vector index run every open, build,
+  * append, delete and compact through [[Store]], parameterized only by a
+  * [[Kind]]; the kerchunk parquet-ref writer shares the writer lease, the
+  * crashed-swap healing and the staged rebuild ([[rebuildStaged]]).
+  *
+  * Bytes stage in a HIDDEN sibling (invisible to Spark file indexes and to
+  * readers listing the store) and a rename swaps them in, so a crash
+  * mid-write leaves the OLD file readable. A truncate-in-place create would
+  * brick a store: an empty meta.json is unparseable forever AND reads as
+  * 'already holds an index' on rebuild. */
 private[graft] object StoreMeta {
 
   /** Atomically replace `path` with `json` (staged sibling + rename). */
-  def atomicWriteJson(fs: org.apache.hadoop.fs.FileSystem,
-                      path: org.apache.hadoop.fs.Path, json: String): Unit = {
+  def atomicWriteJson(fs: FileSystem, path: Path, json: String): Unit = {
     val qualified = fs.makeQualified(path)
     if (qualified.toUri.getScheme == "file") {
       // rename(2) via ATOMIC_MOVE: a reader NEVER sees the destination
@@ -30,8 +36,7 @@ private[graft] object StoreMeta {
         java.nio.file.StandardCopyOption.REPLACE_EXISTING,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     } else {
-      val tmp = new org.apache.hadoop.fs.Path(
-        path.getParent, s".${path.getName}.inprogress")
+      val tmp = new Path(path.getParent, s".${path.getName}.inprogress")
       val out = fs.create(tmp, true)
       try out.write(json.getBytes("UTF-8")) finally out.close()
       val fc = org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, fs.getConf)
@@ -40,56 +45,33 @@ private[graft] object StoreMeta {
     }
   }
 
-  /** Ceiling on a store's ACCUMULATED tombstone rows (r16): the tombstone
-    * plane is BROADCAST by [[dropTombstoned]], so letting it grow without
+  /** Ceiling on a store's ACCUMULATED tombstone rows: the tombstone
+    * plane is BROADCAST by [[Store.live]], so letting it grow without
     * bound turns a forgotten compact into a driver-memory/broadcast-limit
     * failure at read time, with nothing but a doc comment in between.
-    * Both stores track `tombRows` in meta and their deletes REFUSE past
+    * Stores track `tombRows` in meta and [[Store.delete]] REFUSES past
     * this cap (10M ids ≈ low hundreds of MB broadcast — well inside the
     * limit, far past any sane pre-compact backlog), nudging toward
-    * compaction while the store still reads fine. Pre-r16 metas lack the
+    * compaction while the store still reads fine. Older metas lack the
     * field (reads as 0 — the guard re-arms from the next delete on). */
   val TombstoneRowCap: Long = 10000000L
 
-  /** The LIVE view of a store plane: drop rows whose key appears in the
-    * tombstone plane (r15) — ONE copy of the join convention both index
-    * stores compose (each keeps only its own plane reader). The
-    * tombstone side is BROADCAST by design: deletes are deltas
-    * (takedowns, dedup prunes), bounded by compaction, which physically
-    * drops them and resets the plane — and since r16 bounded HARD by
-    * [[TombstoneRowCap]], which deletes enforce at commit time, so a
-    * store whose tombstones could threaten the broadcast cannot be
-    * built in the first place. Sits ABOVE the scan, so partition
-    * filters and column pruning push through untouched. */
-  def dropTombstoned(df: org.apache.spark.sql.DataFrame, key: String,
-                     tombstones: Option[org.apache.spark.sql.DataFrame])
-      : org.apache.spark.sql.DataFrame =
-    tombstones match {
-      case None => df
-      case Some(t) => df.join(
-        org.apache.spark.sql.functions.broadcast(t.select(key)),
-        Seq(key), "left_anti")
-    }
-
-  /** Hidden staging sibling for a WHOLE-STORE rebuild (r15): a rebuild
+  /** Hidden staging sibling for a WHOLE-STORE rebuild: a rebuild
     * writes its complete store — batches, model, its own meta LAST —
     * under this path, then [[swapInto]] replaces the live root. Hidden
     * (dot-prefixed) so Spark file listings and store readers never see
     * it; a sibling (same parent) so the final rename never crosses a
     * filesystem. A stale dir here is a crashed rebuild — callers delete
-    * it before staging anew. */
-  def stagedSibling(root: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(root.getParent, s".${root.getName}.rebuild")
+    * it before staging anew ([[rebuildStaged]]). */
+  def stagedSibling(root: Path): Path = new Path(root.getParent, s".${root.getName}.rebuild")
 
   /** Hidden rename-aside sibling [[swapInto]] parks the OLD root at while
-    * the staged store renames in — the r16 window shrink: the old store is
-    * never deleted until the new one is live. */
-  def oldSibling(root: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(root.getParent, s".${root.getName}.old")
+    * the staged store renames in: the old store is never deleted until the
+    * new one is live. */
+  def oldSibling(root: Path): Path = new Path(root.getParent, s".${root.getName}.old")
 
   /** Swap a fully-built staged store into place — rename-aside, NOT
-    * delete-then-rename (r16; through r15 this deleted the old root first,
-    * leaving a crash window with NO live store and only manual recovery):
+    * delete-then-rename (that leaves a crash window with NO live store):
     *
     *   1. old root renames aside to the hidden [[oldSibling]];
     *   2. staged renames into the root;
@@ -104,9 +86,7 @@ private[graft] object StoreMeta {
     * a crash between (2) and (3) leaves the new store live plus a stale
     * old sibling the next swap (or recovery) clears. Rebuilds are
     * single-writer, like appends — [[withWriterLock]] enforces it. */
-  def swapInto(fs: org.apache.hadoop.fs.FileSystem,
-               staged: org.apache.hadoop.fs.Path,
-               root: org.apache.hadoop.fs.Path): Unit = {
+  def swapInto(fs: FileSystem, staged: Path, root: Path): Unit = {
     val old = oldSibling(root)
     if (fs.exists(old)) fs.delete(old, true) // stale from a crashed prior swap
     val hadRoot = fs.exists(root)
@@ -118,6 +98,18 @@ private[graft] object StoreMeta {
         s"parked byte-intact at '$old' and the complete rebuilt store is at " +
         "the staged path; the next open auto-recovers (or rename by hand)")
     if (hadRoot) fs.delete(old, true)
+  }
+
+  /** Rebuild the whole store at `root`: `write` fills the [[stagedSibling]]
+    * (a stale one from a crashed rebuild deletes first), which then swaps
+    * into place ([[swapInto]]). A failure anywhere in `write` leaves the
+    * live store byte-intact. The caller holds the writer lease and has
+    * healed a crashed swap first ([[recoverCrashedSwap]]). */
+  def rebuildStaged(fs: FileSystem, root: Path)(write: Path => Unit): Unit = {
+    val staged = stagedSibling(root)
+    if (fs.exists(staged)) fs.delete(staged, true)
+    write(staged)
+    swapInto(fs, staged, root)
   }
 
   /** Complete a crashed [[swapInto]] on open: if the root holds no
@@ -142,30 +134,29 @@ private[graft] object StoreMeta {
     * the swap's LAST step when the root is live but a crash left the
     * parked old sibling behind (the .old leak). Returns true if recovery
     * moved anything. All three stores call this from their meta readers
-    * AND their build paths (r17 — a build that skipped recovery would
+    * AND their build paths: a build that skipped recovery would
     * read a crashed swap's empty root as 'nothing here', delete the
     * staged sibling as stale, and swap away the parked old store:
     * destroying BOTH recoverable copies without the overwrite opt-in the
-    * healed live store correctly demands), so any open heals the store. */
-  def recoverCrashedSwap(fs: org.apache.hadoop.fs.FileSystem,
-                         root: org.apache.hadoop.fs.Path,
+    * healed live store correctly demands. So any open heals the store. */
+  def recoverCrashedSwap(fs: FileSystem, root: Path,
                          metaFile: String = "meta.json"): Boolean = {
     val staged = stagedSibling(root)
     val old = oldSibling(root)
-    val rootLive = fs.exists(new org.apache.hadoop.fs.Path(root, metaFile))
+    val rootLive = fs.exists(new Path(root, metaFile))
     val stagedComplete = !rootLive && !fs.exists(root) &&
-      fs.exists(new org.apache.hadoop.fs.Path(staged, metaFile))
+      fs.exists(new Path(staged, metaFile))
     val oldLeaked = rootLive && fs.exists(old)
     if (!stagedComplete && !oldLeaked) return false
     withRecoveryLease(fs, root) {
       // re-check under the lease — the state may have healed meanwhile
       if (!fs.exists(root) &&
-          fs.exists(new org.apache.hadoop.fs.Path(staged, metaFile))) {
+          fs.exists(new Path(staged, metaFile))) {
         require(fs.rename(staged, root),
           s"store recovery: rename '$staged' -> '$root' failed — the complete " +
             "rebuilt store is still at the staged path; rename it into place manually")
       }
-      if (fs.exists(new org.apache.hadoop.fs.Path(root, metaFile)) &&
+      if (fs.exists(new Path(root, metaFile)) &&
           fs.exists(old))
         fs.delete(old, true)
       true
@@ -183,8 +174,7 @@ private[graft] object StoreMeta {
     * on a store that ended up consistent (plausible on a Spark driver
     * serving searches during a rebuild). Such a reader skips, and its
     * open waits out the window via [[awaitSwapWindow]]. */
-  private def withRecoveryLease[T](fs: org.apache.hadoop.fs.FileSystem,
-                                   root: org.apache.hadoop.fs.Path)
+  private def withRecoveryLease[T](fs: FileSystem, root: Path)
                                   (body: => T): Option[T] = {
     val lock = lockPath(root)
     if (heldByThisThread(fs, lock)) return Some(body)
@@ -205,10 +195,9 @@ private[graft] object StoreMeta {
     * the root, or THIS THREAD is the writer (its own read of a root it
     * has not yet swapped must refuse immediately, not stall). On budget
     * exhaustion it simply returns — the caller's own refusal fires. */
-  def awaitSwapWindow(fs: org.apache.hadoop.fs.FileSystem,
-                      root: org.apache.hadoop.fs.Path,
+  def awaitSwapWindow(fs: FileSystem, root: Path,
                       metaFile: String = "meta.json"): Unit = {
-    val metaPath = new org.apache.hadoop.fs.Path(root, metaFile)
+    val metaPath = new Path(root, metaFile)
     if (fs.exists(metaPath)) return
     val lock = lockPath(root)
     if (heldByThisThread(fs, lock)) return
@@ -221,7 +210,7 @@ private[graft] object StoreMeta {
     // backoff budget per open (r17 review).
     def swapInFlight(): Boolean =
       fs.exists(oldSibling(root)) ||
-        fs.exists(new org.apache.hadoop.fs.Path(stagedSibling(root), metaFile))
+        fs.exists(new Path(stagedSibling(root), metaFile))
     var backoff = 10L
     var waited = 0L
     while (waited < 2000L && !fs.exists(metaPath) && swapInFlight() &&
@@ -242,8 +231,7 @@ private[graft] object StoreMeta {
     if (!fs.exists(metaPath)) recoverCrashedSwap(fs, root, metaFile)
   }
 
-  private def readFileBytes(fs: org.apache.hadoop.fs.FileSystem,
-                            path: org.apache.hadoop.fs.Path): Option[Array[Byte]] =
+  private def readFileBytes(fs: FileSystem, path: Path): Option[Array[Byte]] =
     try {
       val in = fs.open(path)
       try Some(in.readAllBytes()) finally in.close()
@@ -264,8 +252,7 @@ private[graft] object StoreMeta {
     override def initialValue(): Set[String] = Set.empty
   }
 
-  private def heldByThisThread(fs: org.apache.hadoop.fs.FileSystem,
-                               lock: org.apache.hadoop.fs.Path): Boolean =
+  private def heldByThisThread(fs: FileSystem, lock: Path): Boolean =
     threadHeldLocks.get.contains(fs.makeQualified(lock).toString)
 
   /** TTL past which a lease whose HEARTBEAT has gone silent is judged
@@ -301,9 +288,7 @@ private[graft] object StoreMeta {
     * which let two threads racing one freed lock both pass the exists
     * check and both hold, r17). Throws [[java.io.IOException]] (locally
     * a [[java.nio.file.FileAlreadyExistsException]]) when `path` exists. */
-  private def createExclusiveJson(fs: org.apache.hadoop.fs.FileSystem,
-                                  path: org.apache.hadoop.fs.Path,
-                                  json: String): Unit = {
+  private def createExclusiveJson(fs: FileSystem, path: Path, json: String): Unit = {
     val qualified = fs.makeQualified(path)
     if (qualified.toUri.getScheme == "file") {
       val p = java.nio.file.Paths.get(qualified.toUri.getPath)
@@ -349,8 +334,7 @@ private[graft] object StoreMeta {
       }
     }
 
-  private def leaseIsStale(fs: org.apache.hadoop.fs.FileSystem,
-                           lock: org.apache.hadoop.fs.Path): Boolean =
+  private def leaseIsStale(fs: FileSystem, lock: Path): Boolean =
     staleLeaseBytes(readFileBytes(fs, lock))
 
   /** Hidden create-exclusive writer-lease file guarding a store root —
@@ -360,8 +344,8 @@ private[graft] object StoreMeta {
     * loudly at acquisition instead of racing the optimistic meta recheck.
     * A sibling (not a child) so it guards roots that do not exist yet
     * (fresh builds) and never pollutes the store's own listing. */
-  def lockPath(root: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(root.getParent, s".${root.getName}.writer.lock")
+  def lockPath(root: Path): Path =
+    new Path(root.getParent, s".${root.getName}.writer.lock")
 
   /** Run `body` holding the store's writer lease. Acquisition is
     * create-exclusive — atomic on HDFS and object stores with
@@ -405,8 +389,7 @@ private[graft] object StoreMeta {
     * so a budgeted acquirer also breaks a lease that goes stale while it
     * waits. The single-holder invariant is untouched: waiting changes
     * WHEN acquisition is attempted, never how it is decided. */
-  def withWriterLock[T](fs: org.apache.hadoop.fs.FileSystem,
-                        root: org.apache.hadoop.fs.Path,
+  def withWriterLock[T](fs: FileSystem, root: Path,
                         op: String, waitMs: Long = 0L)(body: => T): T = {
     val lock = lockPath(root)
     def held() = new IllegalStateException(
@@ -437,8 +420,7 @@ private[graft] object StoreMeta {
           // time, and the delete fires only on the EXACT bytes judged
           // stale — a takeover racing a faster acquirer re-reads that
           // winner's fresh lease and refuses instead of destroying it
-          val breaker = new org.apache.hadoop.fs.Path(
-            lock.getParent, s"${lock.getName}.breaker")
+          val breaker = new Path(lock.getParent, s"${lock.getName}.breaker")
           try createExclusiveJson(fs, breaker, who())
           catch { case eb: java.io.IOException =>
             if (!isExistsFailure(eb) && !fs.exists(breaker)) throw eb
@@ -573,8 +555,7 @@ private[graft] object StoreMeta {
         }
       }
       // best-effort sweep of a heartbeat rewrite interrupted mid-stage
-      val tmp = new org.apache.hadoop.fs.Path(
-        lock.getParent, s".${lock.getName}.inprogress")
+      val tmp = new Path(lock.getParent, s".${lock.getName}.inprogress")
       if (fs.exists(tmp)) fs.delete(tmp, false)
     }
   }
@@ -582,9 +563,8 @@ private[graft] object StoreMeta {
   /** Parse a JSON file and refuse loudly unless its `format` field equals
     * `format` and its `version` field equals `version` — an unknown layout
     * must never be misread (its fields could mean something else). */
-  def parseChecked(fs: org.apache.hadoop.fs.FileSystem,
-                   path: org.apache.hadoop.fs.Path, dir: String,
-                   format: String, version: Long): org.json4s.JValue = {
+  private def parseChecked(fs: FileSystem, path: Path, dir: String,
+                           format: String, version: Long): org.json4s.JValue = {
     val in = fs.open(path)
     val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
     val j = org.json4s.jackson.JsonMethods.parse(text)
@@ -604,42 +584,269 @@ private[graft] object StoreMeta {
     j
   }
 
-  /** Read a required integral field from a parsed meta document. */
-  def longField(j: org.json4s.JValue, field: String, dir: String): Long = {
+  /** Read an integral meta field; absent → `default` when one is given
+    * (how a layout gains a backward-compatible field, e.g. `tombBatches`,
+    * absent in older stores and semantically 0 there), else a refusal.
+    * A present but non-integral value always refuses. */
+  private def longField(j: org.json4s.JValue, field: String, dir: String,
+                        default: Option[Long] = None): Long = {
     import org.json4s._
     (j \ field) match {
       case JInt(v) => v.longValue
+      case JNothing if default.isDefined => default.get
       case other => throw new IllegalArgumentException(
         s"'$dir' meta.json '$field' is ${other.getClass.getSimpleName}")
     }
   }
 
-  /** Read an OPTIONAL boolean field: absent → `default` (the
-    * [[longFieldOr]] rule for booleans — e.g. the bm25 store's
-    * `positions` flag, absent in every pre-r15 store). */
-  def boolFieldOr(j: org.json4s.JValue, field: String, dir: String,
-                  default: Boolean): Boolean = {
+  /** Read an OPTIONAL boolean meta field: absent → false. */
+  private def flagField(j: org.json4s.JValue, field: String, dir: String): Boolean = {
     import org.json4s._
     (j \ field) match {
       case JBool(v) => v
-      case JNothing => default
+      case JNothing => false
       case other => throw new IllegalArgumentException(
         s"'$dir' meta.json '$field' is ${other.getClass.getSimpleName}")
     }
   }
 
-  /** Read an OPTIONAL integral field: absent → `default` (how a layout
-    * gains a backward-compatible field — e.g. `tombBatches`, absent in
-    * every pre-r15 store, semantically 0 there); present-but-non-integral
-    * still refuses loudly. */
-  def longFieldOr(j: org.json4s.JValue, field: String, dir: String,
-                  default: Long): Long = {
-    import org.json4s._
-    (j \ field) match {
-      case JInt(v) => v.longValue
-      case JNothing => default
-      case other => throw new IllegalArgumentException(
-        s"'$dir' meta.json '$field' is ${other.getClass.getSimpleName}")
+  /** A store's required versioned JSON file besides its meta (the ANN
+    * model): present, and of `format` version 1. */
+  def sidecar(fs: FileSystem, root: Path, dir: String, name: String,
+              format: String): org.json4s.JValue = {
+    val path = new Path(root, name)
+    require(fs.exists(path),
+      s"'$dir' has no $name — the store is incomplete (crashed build?)")
+    parseChecked(fs, path, dir, format, version = 1L)
+  }
+
+  // ------------------------------------------------------------ lifecycle
+
+  /** What tells one index store from another, as data:
+    *  - `format`: meta.json's `format` name;
+    *  - `noun`: the store in messages ("a bm25 index");
+    *  - `ops`: the op-name prefix (`bm25Index` names `bm25IndexBuild`, …);
+    *  - `key`: the id column of every plane, the tombstone plane's only one;
+    *  - `keyPlane`: the plane the id-clash and delete checks read `key` from;
+    *  - `item`: what one id names, in messages;
+    *  - `stats`: the store's own required integral meta fields;
+    *  - `flags`: its own optional boolean meta fields (absent = false);
+    *  - `weight`: a `keyPlane` column whose live sum meta keeps as a stat
+    *    (bm25: Σ`dl` as `sumdl`), so appends add and deletes subtract it;
+    *  - `unionBatches`: read a plane batch by batch and union, instead of
+    *    one multi-path read. The ANN vector plane needs it: each batch root
+    *    is hive-partitioned by `cell`, and a multi-path read would have to
+    *    guess a common basePath across batch dirs. */
+  final case class Kind(format: String, noun: String, ops: String, key: String,
+                        keyPlane: String, item: String, stats: Seq[String],
+                        flags: Seq[String], weight: Option[(String, String)],
+                        unionBatches: Boolean) {
+    /** The key column named in messages ("doc ids"). */
+    def ids: String = key.replace('_', ' ') + "s"
+  }
+
+  /** A store's self-description. `n` is the LIVE row count: a delete
+    * subtracts its rows (and the [[Kind]]'s weight) at commit, so stats
+    * read from meta equal a rebuild without the deleted rows.
+    * `tombBatches`/`tombRows` are the tombstone plane's batch count and the
+    * [[TombstoneRowCap]] ledger. `stats` and `flags` are the kind's own
+    * fields, in the kind's order. */
+  final case class Meta(batches: Int, n: Long, tombBatches: Int, tombRows: Long,
+                        stats: ListMap[String, Long],
+                        flags: ListMap[String, Boolean] = ListMap.empty) {
+    /** Layout: `{"format": …, "version": 1, "batches": B, "n": N, <stats>,
+      * "tombBatches": T, "tombRows": R, <flags>}` — meta.json writes LAST,
+      * so a crashed write leaves only orphan batch dirs beyond `batches`,
+      * invisible to readers and clobbered by the next write. */
+    private[StoreMeta] def json(format: String): String =
+      s"""{"format": "$format", "version": 1, "batches": $batches, "n": $n, """ +
+        stats.map { case (f, v) => s""""$f": $v, """ }.mkString +
+        s""""tombBatches": $tombBatches, "tombRows": $tombRows""" +
+        flags.map { case (f, v) => s""", "$f": $v""" }.mkString + "}"
+  }
+
+  /** Open `dir` as a `kind` store for reading: the store and its meta. */
+  def open(kind: Kind, spark: SparkSession, dir: String): (Store, Meta) = {
+    val store = new Store(kind, spark, dir)
+    (store, store.readMeta())
+  }
+
+  /** The `kind` store at `dir`. Writers run under the store's writer lease
+    * ([[withWriterLock]]) and re-read the meta before they commit (the
+    * optimistic recheck — defense in depth behind the lease; it also
+    * catches a lease-bypassing writer). Readers take no lease. */
+  final class Store(val kind: Kind, val spark: SparkSession, val dir: String) {
+    val root: Path = FsPaths.hadoopPath(dir)
+    val fs: FileSystem = FsPaths.fileSystemFor(root, spark.sparkContext.hadoopConfiguration)
+
+    /** The meta, after healing a crashed rebuild swap and waiting out a
+      * LIVE writer's two-rename swap window (bounded) — so any reader or
+      * writer heals the store. */
+    private[StoreMeta] def readMeta(): Meta = {
+      recoverCrashedSwap(fs, root)
+      awaitSwapWindow(fs, root)
+      val path = new Path(root, "meta.json")
+      require(fs.exists(path),
+        s"'$dir' is not ${kind.noun} (no meta.json — build one with ${kind.ops}Build)")
+      val j = parseChecked(fs, path, dir, kind.format, version = 1L)
+      Meta(longField(j, "batches", dir).toInt, longField(j, "n", dir),
+        longField(j, "tombBatches", dir, Some(0L)).toInt,
+        longField(j, "tombRows", dir, Some(0L)),
+        ListMap.from(kind.stats.map(f => f -> longField(j, f, dir))),
+        ListMap.from(kind.flags.map(f => f -> flagField(j, f, dir))))
+    }
+
+    /** Atomic meta commit into `at` (the root, or a staged rebuild). */
+    private def commit(meta: Meta, at: Path = root): Unit =
+      atomicWriteJson(fs, new Path(at, "meta.json"), meta.json(kind.format))
+
+    /** A plane's batch dirs `<dir>/<name>/b0..b<batches-1>` as one frame. */
+    def plane(name: String, batches: Int): DataFrame = {
+      val paths = (0 until batches).map(i => s"$dir/$name/b$i")
+      if (kind.unionBatches) paths.map(p => spark.read.parquet(p)).reduce(_ unionByName _)
+      else spark.read.parquet(paths: _*)
+    }
+
+    /** The LIVE view of `df`: rows whose key is in the tombstone plane
+      * drop. The tombstone side is BROADCAST by design: deletes are deltas
+      * (takedowns, dedup prunes), bounded hard by [[TombstoneRowCap]] at
+      * delete time and reset by compaction, which drops them physically.
+      * Sits ABOVE the scan, so partition filters and column pruning push
+      * through untouched. */
+    def live(df: DataFrame, meta: Meta): DataFrame =
+      if (meta.tombBatches == 0) df
+      else df.join(broadcast(plane("tombstones", meta.tombBatches).select(kind.key)),
+        Seq(kind.key), "left_anti")
+
+    private def weighted(meta: Meta, delta: Long): ListMap[String, Long] =
+      kind.weight.fold(meta.stats) { case (_, stat) =>
+        meta.stats.updated(stat, meta.stats(stat) + delta) }
+
+    private def recheck(op: String, was: Meta, advice: String): Unit = {
+      val now = readMeta()
+      require(now.batches == was.batches && now.tombBatches == was.tombBatches,
+        s"$op: concurrent writer detected on '$dir' (batches ${was.batches} → " +
+          s"${now.batches}, tombstone batches ${was.tombBatches} → ${now.tombBatches}) " +
+          s"— the store is single-writer; $advice")
+    }
+
+    /** Build this store from scratch under its lease: heal a crashed swap
+      * BEFORE deciding what is here (a build that saw the crashed swap's
+      * empty root as 'nothing here' would delete the staged sibling as
+      * stale and swap away the parked old store), refuse to replace an
+      * index or a non-empty non-store dir without `overwrite` (the swap
+      * replaces the root, so someone else's bytes need the same explicit
+      * opt-in; an empty placeholder dir replaces silently), then
+      * [[rebuildStaged]]: `write` fills the staged sibling and returns its
+      * meta, which commits there LAST, and the store swaps in. */
+    def build(op: String, overwrite: Boolean, waitMs: Long = 0L)(write: Path => Meta): Unit =
+      withWriterLock(fs, root, op, waitMs) {
+        recoverCrashedSwap(fs, root)
+        if (fs.exists(new Path(root, "meta.json")))
+          require(overwrite, s"$op: '$dir' already holds an index — pass " +
+            "overwrite = true to replace it")
+        else if (fs.exists(root) && fs.listStatus(root).nonEmpty)
+          require(overwrite, s"$op: '$dir' exists, is not ${kind.noun}, and is not " +
+            "empty — pass overwrite = true to replace it")
+        rebuildStaged(fs, root)(staged => commit(write(staged), staged))
+      }
+
+    /** Append a delta batch: `write` writes batch `meta.batches` of every
+      * plane from `delta` and returns its (rows, weight). Before it, the
+      * id-clash guard: a delta-sized semi-join against the key plane's one
+      * pruned column. Deliberately UNFILTERED by tombstones: re-appending a
+      * DELETED id would resurrect it only until the tombstone anti-join
+      * killed both rows — refuse; compaction reclaims the id. */
+    def append(op: String, delta: DataFrame, idCol: String, waitMs: Long)
+              (write: Meta => (Long, Long)): Unit =
+      withWriterLock(fs, root, op, waitMs) {
+        val meta = readMeta()
+        val clash = delta.select(col(idCol).as(kind.key))
+          .join(plane(kind.keyPlane, meta.batches).select(kind.key), Seq(kind.key), "left_semi")
+          .limit(1).count()
+        require(clash == 0L,
+          s"$op: delta re-uses ${kind.ids} already in (or deleted from) '$dir' — " +
+            s"the store holds one row per ${kind.item}; assign fresh ids, or compact " +
+            "to reclaim deleted ids")
+        val (rows, weight) = write(meta)
+        // two writers that interleaved both targeted the SAME batch number
+        recheck(op, meta, "retry this delta")
+        commit(meta.copy(batches = meta.batches + 1, n = meta.n + rows,
+          stats = weighted(meta, weight)))
+      }
+
+    /** Delete the rows keyed by `ids`: a tombstone batch appends, every
+      * reader anti-joins the plane ([[live]]), and compaction drops the
+      * rows physically. The ids write to a STAGING dir first and validate
+      * from the WRITTEN bytes (a pre-flight check of a non-deterministic
+      * `ids` frame is TOCTOU); one aggregate over them joined to the live
+      * key plane gives count, distinct, live and the weight sum. Only after
+      * every check does the staging dir rename into the `b<tombBatches>`
+      * slot, so a refusal leaves meta untouched and an orphan the next
+      * delete clobbers. `ids` must be distinct, present and not already
+      * deleted — a double delete would subtract the stats twice. Deleted
+      * ids stay reserved until a compact. */
+    def delete(op: String, ids: DataFrame, idCol: String): Unit =
+      withWriterLock(fs, root, op) {
+        val meta = readMeta()
+        val staging = s"$dir/tombstones/b${meta.tombBatches}.staging"
+        val delProj = ids.select(col(idCol).as(kind.key))
+        delProj.write.mode("overwrite").parquet(staging)
+        // explicit schema so a zero-row write (no part files to infer from)
+        // still reads back as an empty frame and refuses below
+        val written = spark.read.schema(delProj.schema).parquet(staging)
+        val liveKeys = live(plane(kind.keyPlane, meta.batches), meta)
+          .select(col(kind.key), kind.weight.fold(lit(0L))(w => col(w._1)).as("__w"),
+            lit(1).as("__live"))
+        val st = written.join(liveKeys, Seq(kind.key), "left")
+          .agg(count(lit(1)), countDistinct(col(kind.key)),
+            coalesce(sum(col("__live")), lit(0L)), coalesce(sum(col("__w")), lit(0L)))
+          .head()
+        val dn = st.getLong(0)
+        require(dn > 0L, s"$op: empty id set — nothing to delete in '$dir'")
+        require(st.getLong(1) == dn,
+          s"$op: id set has ${dn - st.getLong(1)} duplicates — a double delete " +
+            "would subtract the store's stats twice; dedupe ids first")
+        require(st.getLong(2) == dn,
+          s"$op: ${dn - st.getLong(2)} ids are not live in '$dir' (absent or " +
+            s"already deleted) — deletes must name existing ${kind.item}s")
+        // past the cap the readers' tombstone broadcast, not this delete,
+        // would fail; refuse here and point at compaction
+        require(meta.tombRows + dn <= TombstoneRowCap,
+          s"$op: '$dir' would hold ${meta.tombRows + dn} tombstone rows, past the " +
+            s"$TombstoneRowCap broadcast cap — run ${kind.ops}Compact to reclaim " +
+            "deleted rows first")
+        recheck(op, meta, "retry")
+        val slot = new Path(root, s"tombstones/b${meta.tombBatches}")
+        if (fs.exists(slot)) fs.delete(slot, true) // orphan of a crashed delete
+        require(fs.rename(FsPaths.hadoopPath(staging), slot),
+          s"$op: rename '$staging' -> '$slot' failed — meta is untouched; the " +
+            "staging dir is an orphan the next delete clobbers")
+        commit(meta.copy(n = meta.n - dn, tombBatches = meta.tombBatches + 1,
+          tombRows = meta.tombRows + dn, stats = weighted(meta, -st.getLong(3))))
+      }
+
+    /** Compact `src` into this store: a [[build]] of this store whose
+      * `write` reads `src`'s live rows into one batch, validating the
+      * rewrite against `src`'s meta. The destination stays live until the
+      * compacted store swaps in, so a refusal or a crash leaves it intact;
+      * the source is never touched (compact to a sibling, then swap). After
+      * the write, the optimistic recheck on `src`: an append or delete
+      * landing there mid-compact would otherwise vanish at the caller's
+      * swap. The destination holds no tombstones, so its ledger restarts. */
+    def compactFrom(src: Store, op: String, overwrite: Boolean, waitMs: Long)
+                   (write: (Meta, Path) => Unit): Unit = {
+      val srcMeta = src.readMeta()
+      // in place, the swap would pull the store out from under its own
+      // readers mid-compact
+      require(src.fs.makeQualified(src.root) != fs.makeQualified(root),
+        s"$op: source and destination are the same store ('${src.dir}') — " +
+          "compact to a sibling and swap")
+      build(op, overwrite, waitMs) { staged =>
+        write(srcMeta, staged)
+        src.recheck(op, srcMeta, "re-run the compact to include the new writes")
+        srcMeta.copy(batches = 1, tombBatches = 0, tombRows = 0L)
+      }
     }
   }
 }

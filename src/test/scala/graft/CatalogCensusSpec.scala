@@ -1,15 +1,6 @@
 package graft
 
-import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
-import java.util.concurrent.atomic.AtomicLong
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 import org.scalatest.funsuite.AnyFunSuite
@@ -24,45 +15,11 @@ import graft.derived.{DerivedVariable, DerivedVariableRegistry}
   * group by every column keep the distributed formulation, and the census
   * pins that none of their calls but `keys` collects one row per asset. */
 class CatalogCensusSpec extends AnyFunSuite {
-  import CatalogCensusSpec.Census
+  import JobCensus.Census
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private val censusIds = new AtomicLong
-  private val Key       = "graft.census"
-
-  /** Run `body` and take its [[CatalogCensusSpec.Census]]. Jobs are told
-    * apart by a local property, which the threads `body` spawns inherit;
-    * the call site and plan come from the action's execution-start event,
-    * because AQE submits stage jobs from its own threads. */
-  private def census[A](body: => A): (A, Census) = {
-    val sc    = spark.sparkContext
-    val tag   = s"census-${censusIds.incrementAndGet()}"
-    val jobs  = new ConcurrentLinkedQueue[Option[Long]]
-    val sites = new ConcurrentHashMap[Long, (String, String)]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(Key) == tag)
-          jobs.add(Option(e.properties.getProperty(SQLExecution.EXECUTION_ID_KEY)).map(_.toLong))
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart =>
-          sites.put(s.executionId, (s.description, s.physicalPlanDescription))
-        case _                                 =>
-      }
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(Key, tag)
-    try {
-      val a = body
-      ListenerBusDrain(sc)
-      val seen    = jobs.asScala.toSeq
-      val actions = seen.flatten.distinct.map(id => sites.getOrDefault(id, (s"execution $id", "")))
-      (a, Census(seen.size, actions.map(_._1))(actions.map(_._2)))
-    } finally {
-      sc.setLocalProperty(Key, null)
-      sc.removeSparkListener(listener)
-    }
-  }
+  private def census[A](body: => A): (A, Census) = JobCensus(spark)(body)
 
   private def isCountLike(site: String): Boolean =
     site.startsWith("isEmpty") || site.startsWith("count")
@@ -317,12 +274,4 @@ class CatalogCensusSpec extends AnyFunSuite {
     assert(cat.keys == Seq("z", "é", "Ａ", "😀"))
     assert(cat.keys != cat.keys.sorted)
   }
-}
-
-object CatalogCensusSpec {
-  /** What a call ran: its job count, and the call site of each SQL action
-    * that ran a job (`isEmpty at …`, `collect at …`), in start order. The
-    * actions' formatted physical plans ride along outside equality, since
-    * their expression ids differ from run to run. */
-  final case class Census(jobs: Int, actions: Seq[String])(val plans: Seq[String])
 }
