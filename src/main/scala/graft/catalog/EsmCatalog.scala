@@ -386,12 +386,7 @@ final class EsmCatalog(
       .getOrElse(default)
 
   /** Materialize one group as a tidy DataFrame. */
-  def loadGroup(source: EsmDataSource, coords: Seq[String]): DataFrame = {
-    val frames = source.records.map { r =>
-      source.loadAsset(spark, r, r.getOrElse("_data_format_", "parquet").toString, coords)
-    }
-    source.combineByCoords(frames, coords)
-  }
+  def loadGroup(source: EsmDataSource, coords: Seq[String]): DataFrame = source.load(spark, coords)
 
   /** to_dataset_dict (core.py:606-762): key → tidy DataFrame for every group.
     * `aggregate = false` groups by all columns — one asset per dataset

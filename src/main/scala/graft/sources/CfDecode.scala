@@ -189,14 +189,14 @@ object CfDecode {
       // that silently shifted every date (unknown calendar) or left a
       // time axis raw (unparseable unit/epoch) would be worse than failing
       .filter(coalesce(assert_true(!timeLike || calStandard || calFixed,
-        concat(lit("CF variable '"), col("variable"), lit("' has calendar '"),
+        concat(lit("CF variable '"), KerchunkIndex.shown(col("variable")), lit("' has calendar '"),
           col("cf_calendar"),
           lit("' — standard/gregorian/proleptic_gregorian decode to timestamps, " +
             "noleap/365_day/all_leap/366_day/360_day/julian/proleptic_julian " +
             "to calendar-date strings; anything else refuses"))),
         lit(true)))
       .filter(coalesce(assert_true(!timeLike || (unitSec.isNotNull && epochOk),
-        concat(lit("CF variable '"), col("variable"), lit("' time units '"),
+        concat(lit("CF variable '"), KerchunkIndex.shown(col("variable")), lit("' time units '"),
           col("cf_units"), lit("' did not parse as '<unit> since <datetime>'"))),
         lit(true)))
       .select(col("variable"), col("chunk"), col("idx"),

@@ -50,6 +50,16 @@ private[graft] object FsPaths {
       c
     }
 
+  /** [[confWith]] as a broadcast, for task closures. A captured
+    * `SerializableConfiguration` is ~110 KB that every task of every stage
+    * over the frame deserializes again (~10 ms each, and a group's decode
+    * chain carries one per asset); a broadcast deserializes once per
+    * executor and ships as a handle. */
+  def broadcastConf(spark: org.apache.spark.sql.SparkSession, options: Map[String, String])
+      : org.apache.spark.broadcast.Broadcast[org.apache.spark.util.SerializableConfiguration] =
+    spark.sparkContext.broadcast(new org.apache.spark.util.SerializableConfiguration(
+      confWith(spark.sparkContext.hadoopConfiguration, options)))
+
   def connectorRefusal(url: String, cause: Throwable): Nothing =
     throw new UnsupportedOperationException(
       s"byte-range access for '${url.takeWhile(_ != ':')}://' urls is behind the " +

@@ -1417,8 +1417,7 @@ object Hdf5Index {
   def readMany(spark: SparkSession, paths: Seq[String],
                storageOptions: Map[String, String] = Map.empty): DataFrame = {
     import spark.implicits._
-    val hconf = new org.apache.spark.util.SerializableConfiguration(
-      FsPaths.confWith(spark.sparkContext.hadoopConfiguration, storageOptions))
+    val hconf = FsPaths.broadcastConf(spark, storageOptions)
     val parts = math.max(1, math.min(paths.size, spark.sparkContext.defaultParallelism))
     val seed  = spark.createDataset(paths)
     // no round-robin exchange for the single-file (read()) path — the
@@ -1429,15 +1428,15 @@ object Hdf5Index {
         // tar members parse at their base offset (addresses are
         // superblock-relative); refs point into the archive itself
         val (real, base, _) =
-          if (TarMember.isTarUrl(p)) TarMember.locate(p, hconf.value) else (p, 0L, 0L)
+          if (TarMember.isTarUrl(p)) TarMember.locate(p, hconf.value.value) else (p, 0L, 0L)
         val hPath = FsPaths.hadoopPath(real)
-        val fs = FsPaths.fileSystemFor(hPath, hconf.value)
+        val fs = FsPaths.fileSystemFor(hPath, hconf.value.value)
         val in = fs.open(hPath)
         val (groupAttrs, vars, externals, _) =
           try parseFile(new Reader(in, p, base), p)
           finally in.close()
         entriesOf(groupAttrs, vars, real, base) ++
-          resolveExternals(externals, p, real, hconf.value)
+          resolveExternals(externals, p, real, hconf.value.value)
       }
     }
     ds.toDF("key", "variable", "member", "kind", "url", "offset", "length", "inline_value")

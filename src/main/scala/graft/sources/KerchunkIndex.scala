@@ -759,6 +759,27 @@ object KerchunkIndex {
     metaDf.unionByName(shifted).unionByName(identical)
   }
 
+  /** Several stores' entries decode through ONE chain once each store's
+    * variables are renamed apart: store `i`'s variable `v` becomes
+    * `"<i>::v"` (a root-level key, `v == ""`, becomes `"<i>::"`). The
+    * decode joins its metadata on `variable`, so tagged stores never see
+    * each other's arrays; [[taggedOrdinal]] and [[untagged]] split a
+    * decoded row's tag back. */
+  def tagVariable(variable: Column, ordinal: Column): Column =
+    concat(ordinal.cast("string"), lit("::"), variable)
+
+  /** The store ordinal of a [[tagVariable]] variable. */
+  def taggedOrdinal(variable: Column): Column = substring_index(variable, "::", 1).cast("int")
+
+  /** The variable name inside a [[tagVariable]] one. */
+  def untagged(variable: Column): Column =
+    variable.substr(instr(variable, "::") + 2, lit(Int.MaxValue))
+
+  /** A variable as error messages name it: its [[tagVariable]] prefix, if any,
+    * removed (evaluated only when a refusal fires). */
+  private[sources] def shown(variable: Column): Column =
+    regexp_replace(variable, "^[0-9]+::", "")
+
   /** [[combineAlong]] in COORDINATE order (kerchunk MultiZarrToZarr's
     * coo-map mode): instead of trusting the caller's source order, the
     * concat dimension's OWN coordinate variable decodes per source (its
@@ -775,7 +796,7 @@ object KerchunkIndex {
     def fail(msg: String): Nothing =
       throw new IllegalArgumentException(s"kerchunk combine by '$dim' coordinates: $msg")
     val coordEntries = tagged.filter(col("variable") === dim)
-      .withColumn("variable", concat(col("__src").cast("string"), lit("::"), col("variable")))
+      .withColumn("variable", tagVariable(col("variable"), col("__src")))
       .withColumn("key", concat(col("variable"), lit("/"), col("member")))
       .drop("__src")
     // decodeCoords, not decodeTyped: a RAGGED last source stores its edge
@@ -1262,11 +1283,11 @@ object KerchunkIndex {
     *    `FileSystem` API, so `file://` (and bare paths) and `hdfs://` share
     *    one code path and object-store schemes need only their connector
     *    jar (`s3a://` + hadoop-aws, ...), not a code change. Rows are
-    *    repartitioned by (url, offset band) and range-sorted inside each
+    *    hashed on (url, offset band) and range-sorted inside each
     *    partition, so each task reads its ranges in ascending order AND one
     *    physical file with thousands of chunks (the kerchunk-over-netCDF
-    *    shape) spreads across ~fileBytes/bytesPerTask tasks instead of
-    *    serializing into one;
+    *    shape) spreads its bands over several tasks instead of serializing
+    *    into one;
     *  - `ref` entries whose scheme has no installed Hadoop FileSystem
     *    (s3:// without a connector), or an http(s):// url (Hadoop's http FS
     *    cannot seek, so positioned range reads are impossible): raise
@@ -1279,6 +1300,16 @@ object KerchunkIndex {
     * corrupt index with a pathological length must fail loudly, not OOM an
     * executor. `bytesPerTask` is the offset-band width of the partition key
     * (default 256 MiB): smaller values spread one file across more tasks.
+    *
+    * Partition count: min(`spark.sql.shuffle.partitions`, default
+    * parallelism) — known without a job, so building the frame runs none,
+    * and AQE leaves an explicit count alone (it would otherwise coalesce on
+    * the SHUFFLED bytes, the ref metadata, far below the bytes each row
+    * reads). A tiny store therefore runs at most one task per core, never
+    * hundreds of empty ones. The trade-off at scale: the read stage never
+    * runs more tasks than the session has cores (or shuffle partitions),
+    * so a huge index reads in core-count tasks of many bands each; the
+    * bands still spread one file over all of them.
     */
   def materializeChunks(entries: DataFrame,
                         maxChunkBytes: Long = 256L << 20,
@@ -1302,8 +1333,7 @@ object KerchunkIndex {
           .otherwise(col("inline_value").cast(org.apache.spark.sql.types.BinaryType)))
       .select(cols.map(col): _*)
 
-    val hconf = new org.apache.spark.util.SerializableConfiguration(
-      FsPaths.confWith(spark.sparkContext.hadoopConfiguration, storageOptions))
+    val hconf = FsPaths.broadcastConf(spark, storageOptions)
     // kind='seqref' (DAP2 Sequence streams, Dap2Index.read) is a DIFFERENT
     // plane — its url is a whole record stream, not a chunk; admitting it
     // here would fetch the entire sequence per array-plane decode (and
@@ -1313,32 +1343,20 @@ object KerchunkIndex {
       .filter(col("kind") === "ref" || col("url").isNotNull)
       .select($"key", $"variable", $"member", $"kind", $"url", $"offset", $"length",
         floor(coalesce($"offset", lit(0L)) / lit(bytesPerTask)).as("__band"))
-      // persisted: the band count below is an EAGER job, and without the
-      // persist it would recompute the whole upstream entries plan (for
-      // kerchunk, the wholetext JSON parse + variant shred) once for the
-      // count and again for the refs read — ref METADATA is ~100 B/row, so
-      // the persist is small; Spark's LRU reclaims it
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // (url, offset band), NOT url alone: all chunks of one physical file on
     // one key would serialize a 1000-chunk netCDF into a single task —
-    // banding bounds per-task byte volume while the within-partition sort
-    // below keeps each task's reads sequential-ascending per file. The
-    // partition count is pinned to the distinct band count (one tiny
-    // metadata-only job over the persisted band frame): left to AQE,
-    // coalescing would size on the SHUFFLED bytes — ref metadata —
-    // underestimating by orders of magnitude the positioned-read volume
-    // each row fans out into.
-    val nTasks = {
-      val bands = withBand.select("url", "__band").distinct().count()
-      math.max(1L, math.min(bands, 1L << 20)).toInt
-    }
+    // banding spreads one file's bands over the partitions while the
+    // within-partition sort below keeps each task's reads
+    // sequential-ascending per file
+    val nTasks = math.max(1, math.min(spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      spark.sparkContext.defaultParallelism))
     val refs = withBand
       .repartition(nTasks, col("url"), col("__band"))
       .sortWithinPartitions("url", "offset")
       .drop("__band")
       .as[(String, String, String, String, String, Option[Long], Option[Long])]
       .mapPartitions { it =>
-        val conf = hconf.value
+        val conf = hconf.value.value
         var openUrl: String = null
         var openPath: org.apache.hadoop.fs.Path = null
         var fs: org.apache.hadoop.fs.FileSystem = null
@@ -1500,7 +1518,7 @@ object KerchunkIndex {
         coalesce(col("order"), lit("C")).as("order"), col("perm"))), Seq("variable"))
       .join(broadcast(dims), Seq("variable"), "left")
       .filter(coalesce(assert_true(col("order").isin("C", "F"),
-        concat(lit("zarr variable '"), col("variable"), lit("' declares order '"),
+        concat(lit("zarr variable '"), shown(col("variable")), lit("' declares order '"),
           col("order"), lit("' — only C and F address correctly"))), lit(true)))
       // 0-d (scalar) arrays: zarr stores shape [] / chunks [] with chunk
       // key "0" — normalize both to [1] so the grid math yields coord [0];
@@ -1544,7 +1562,7 @@ object KerchunkIndex {
       // assert_true returns NULL on pass (coalesce → keep row) and raises on
       // the guarded condition — evaluated per row, inside the scan stage
       .filter(coalesce(assert_true(col("dtype").isNotNull,
-        concat(lit("zarr variable '"), col("variable"),
+        concat(lit("zarr variable '"), shown(col("variable")),
           lit("' has no inline .zarray metadata (missing, or stored as a " +
             "byte-range ref) — cannot decode its chunks"))),
         lit(true)))
@@ -1564,7 +1582,7 @@ object KerchunkIndex {
     chunks.filter(col("member").rlike("^[0-9]+([.][0-9]+)*$"))
       .join(broadcast(meta), Seq("variable"), "left")
       .filter(coalesce(assert_true(col("dtype").isNotNull,
-        concat(lit("zarr variable '"), col("variable"),
+        concat(lit("zarr variable '"), shown(col("variable")),
           lit("' has no inline .zarray metadata (missing, or stored as a " +
             "byte-range ref) — cannot decode its chunks"))),
         lit(true)))

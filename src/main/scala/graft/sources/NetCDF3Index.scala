@@ -230,8 +230,7 @@ object NetCDF3Index {
   def readMany(spark: SparkSession, paths: Seq[String],
                storageOptions: Map[String, String] = Map.empty): DataFrame = {
     import spark.implicits._
-    val hconf = new org.apache.spark.util.SerializableConfiguration(
-      FsPaths.confWith(spark.sparkContext.hadoopConfiguration, storageOptions))
+    val hconf = FsPaths.broadcastConf(spark, storageOptions)
     val parts = math.max(1, math.min(paths.size, spark.sparkContext.defaultParallelism))
     val seed  = spark.createDataset(paths)
     val spread = if (paths.size <= 1) seed else seed.repartition(parts)
@@ -239,9 +238,9 @@ object NetCDF3Index {
       it.flatMap { p =>
         // tar members read at their base offset; refs point into the archive
         val (real, base, _) =
-          if (TarMember.isTarUrl(p)) TarMember.locate(p, hconf.value) else (p, 0L, 0L)
+          if (TarMember.isTarUrl(p)) TarMember.locate(p, hconf.value.value) else (p, 0L, 0L)
         val hPath = FsPaths.hadoopPath(real)
-        val fs = FsPaths.fileSystemFor(hPath, hconf.value)
+        val fs = FsPaths.fileSystemFor(hPath, hconf.value.value)
         val header = {
           val raw = fs.open(hPath)
           if (base > 0) raw.seek(base)

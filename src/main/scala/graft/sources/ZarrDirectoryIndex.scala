@@ -357,12 +357,11 @@ object ZarrDirectoryIndex {
   def read(spark: SparkSession, storePath: String,
            storageOptions: Map[String, String] = Map.empty): DataFrame = {
     import spark.implicits._
-    val hconf = new org.apache.spark.util.SerializableConfiguration(
-      FsPaths.confWith(spark.sparkContext.hadoopConfiguration, storageOptions))
+    val hconf = FsPaths.broadcastConf(spark, storageOptions)
     val ds = spark.createDataset(Seq(storePath)).mapPartitions { paths =>
       paths.flatMap { p =>
         val root = FsPaths.hadoopPath(p)
-        val fs   = FsPaths.fileSystemFor(root, hconf.value)
+        val fs   = FsPaths.fileSystemFor(root, hconf.value.value)
         validateStore(fs, root, p)
         val rootUri = root.toUri.getPath.stripSuffix("/")
         def relOf(f: org.apache.hadoop.fs.Path): String =
