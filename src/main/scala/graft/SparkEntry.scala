@@ -3562,7 +3562,7 @@ object SparkEntry {
       // r15: the STREAM-shaped phrase plane — score the corpus against a
       // frozen PhraseModel (per-phrase df + N/avgdl derived from the
       // positional store with zero corpus scans; tf row-local via the
-      // codegen'd PhraseCount adjacency kernel). The rows are the
+      // codegen'd PhraseCountBatch adjacency kernel). The rows are the
       // indexed search's scored surface minus ranking (bit-identity
       // spec-pinned); the oracle re-derives every tf by direct string
       // adjacency — the search_bm25_phrase truth without the top-k.
@@ -3584,7 +3584,7 @@ object SparkEntry {
       // r16: the STREAM-shaped NEAR plane — score the corpus against a
       // frozen PhraseModel derived at slop = 1 (per-phrase df from the
       // positional store's banded vote, zero corpus scans; tf row-local
-      // via the slop-aware PhraseCount kernel). The search_bm25_near
+      // via the slop-aware PhraseCountBatch kernel). The search_bm25_near
       // battery and truth minus the top-k: every (doc, dl, tf) row
       // re-derived by direct windowed string indexing in DuckDB — the
       // search_bm25_phrase_scored pattern on the proximity plane.

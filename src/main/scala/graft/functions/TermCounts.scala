@@ -180,62 +180,14 @@ case class TermPostings(
     copy(child = newChild)
 }
 
-/** Per-row QUOTED-PHRASE occurrence count: token array → number of
-  * starts where the phrase's tokens occur CONSECUTIVELY — the row-local
-  * twin of [[graft.operators.KeywordSearch.bm25PhraseTopK]]'s
-  * positional-index adjacency vote (same semantics: overlapping matches
-  * all count, repeated phrase terms must each match). `slop` (r16)
-  * widens each ordinal's slot to the same banded-proximity rule as the
-  * positional vote — ordinal i matches anywhere in [start+i,
-  * start+i+slop], including the documented repeated-term band overlap —
-  * so the frozen-model scorer stays bit-identical to the indexed NEAR
-  * search. Codegen'd via the shared reference-object pattern;
-  * O(tokens·L·(slop+1)) worst case per row, zero shuffle — what lets
-  * [[KeywordSearch.bm25PhraseScore]] score a STREAM against a frozen
-  * phrase model with no state store. */
-case class PhraseCount(
-    child: org.apache.spark.sql.catalyst.expressions.Expression,
-    phrase: Seq[String],
-    slop: Int = 0)
-  extends UnaryExpression {
-
-  require(phrase.nonEmpty, "phrase_count: empty phrase")
-  require(slop >= 0, s"phrase_count: slop must be >= 0, got $slop")
-
-  override def dataType: DataType = IntegerType
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"phrase_count expects array<string> tokens, got $other")
-    }
-
-  @transient private lazy val termBytes: Array[UTF8String] =
-    phrase.map(UTF8String.fromString).toArray
-
-  def count(tokens: ArrayData): Int =
-    PhraseKernel.count(tokens, termBytes, slop)
-
-  override def nullSafeEval(v: Any): Any = count(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("phraseCount", this, classOf[PhraseCount].getName)
-    nullSafeCodeGen(ctx, ev, toks => s"${ev.value} = $ref.count($toks);")
-  }
-
-  override protected def withNewChildInternal(
-      newChild: org.apache.spark.sql.catalyst.expressions.Expression)
-      : org.apache.spark.sql.catalyst.expressions.Expression =
-    copy(child = newChild)
-}
-
-/** The ONE copy of the banded-proximity occurrence loop [[PhraseCount]]
-  * and [[PhraseCountBatch]] share (r17) — a single kernel, not parallel
-  * maintenance, is what makes the per-phrase scorer and the
-  * battery-as-data scorer bit-identical by construction. */
+/** The banded-proximity occurrence count of ONE phrase in one token
+  * array — the row-local twin of
+  * [[graft.operators.KeywordSearch.bm25PhraseTopK]]'s positional-index
+  * adjacency vote (same semantics: overlapping matches all count,
+  * repeated phrase terms must each match; ordinal i matches anywhere in
+  * [start+i, start+i+slop], including the documented repeated-term band
+  * overlap), so the frozen-model scorer stays bit-identical to the
+  * indexed phrase/NEAR search. O(tokens·L·(slop+1)) worst case per row. */
 private[functions] object PhraseKernel {
   def count(tokens: ArrayData, termBytes: Array[UTF8String], slop: Int): Int = {
     val n = tokens.numElements()
@@ -266,25 +218,25 @@ private[functions] object PhraseKernel {
   }
 }
 
-/** BATTERY-AS-DATA twin of [[PhraseCount]] (r17): evaluate a WHOLE
+/** Per-row QUOTED-PHRASE battery count (r17): evaluate a WHOLE
   * phrase battery against one token array in one expression — token
   * array → sparse `array<struct<phrase int, tf int>>` of the battery
-  * indices with tf > 0, ascending. The per-phrase scorer plans one
-  * [[PhraseCount]] branch (and one corpus pass) per phrase, degrading
-  * on PLAN size past a few hundred probes; here the battery is a
-  * reference object inside ONE expression, so the plan shape is
-  * constant at any battery size — the decontamination stream's shape
-  * (thousands of eval n-gram probes scored against every arriving doc).
+  * indices with tf > 0, ascending. The battery is a reference object
+  * inside ONE expression, so the plan shape is constant at any battery
+  * size, with one corpus pass and zero shuffle — what lets
+  * [[graft.operators.KeywordSearch.bm25PhraseScore]] score a STREAM
+  * against a frozen phrase model with no state store, from a few
+  * phrases up to the decontamination stream's thousands of eval n-gram
+  * probes.
   *
   * Work per row is NOT battery-linear: candidates gate through a
   * first-token hash index (a phrase can only match if its first term
   * occurs in the doc — the band extends right), then an all-terms-
   * present check against the row's token set, and only survivors run
   * the full [[PhraseKernel]] loop — the row-local mirror of
-  * bm25PhraseBatch's rarest-term candidate pruning. tf bits equal
-  * [[PhraseCount]]'s per phrase by construction (same kernel). An
-  * EMPTY phrase matches nothing (the battery-as-data rule: a blank
-  * probe must not refuse a million-probe sweep). */
+  * bm25PhraseBatch's rarest-term candidate pruning. An EMPTY phrase
+  * matches nothing (the battery-as-data rule: a blank probe must not
+  * refuse a million-probe sweep). */
 case class PhraseCountBatch(
     child: org.apache.spark.sql.catalyst.expressions.Expression,
     phrases: Seq[Seq[String]],

@@ -36,7 +36,6 @@ object BpeTokenizer {
     * Id 0 is reserved for UNK (a character unseen at training time). */
   final case class BpeModel(merges: Seq[(String, String)], vocab: Map[String, Int]) {
     def inverse: Map[Int, String] = vocab.map(_.swap)
-    def vocabSize: Int = vocab.size + 1 // + reserved UNK
   }
 
   /** Learn `nMerges` BPE merges from the corpus' word-frequency dictionary

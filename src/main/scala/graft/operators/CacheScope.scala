@@ -7,9 +7,11 @@ import org.apache.spark.storage.StorageLevel
   * release them once its own downstream results are materialized or
   * checkpoint-cut. Library operators can't unpersist what their returned
   * lazy plans still reference; a scope gives the owner of the final action
-  * the handles. In a long-lived session (notebook, service), releasing the
-  * scope after each pipeline run is what keeps repeated runs from
-  * accumulating executor storage.
+  * the handles.
+  *
+  * Each operator persists at one fixed level. Only [[Dedup.ngramJaccard]]
+  * takes a scope — [[CorpusPipeline.clean]] passes its own and releases
+  * it once the cleaned frame is counted:
   *
   * {{{
   *   val scope = new CacheScope
@@ -17,17 +19,20 @@ import org.apache.spark.storage.StorageLevel
   *   ... // consume pairs fully (count / write / checkpoint)
   *   scope.release()
   * }}}
+  *
+  * Every other operator persists into [[CacheScope.untracked]], whose
+  * bounded FIFO is what keeps a long-lived session (notebook, service)
+  * from accumulating executor storage.
   */
 class CacheScope {
   private val tracked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
   protected def record(df: DataFrame): Unit = synchronized { tracked += df }
 
-  /** Persist `df` at `level` (no-op for `StorageLevel.NONE`) and remember
-    * the handle for [[release]]. */
-  private[graft] def persisted(df: DataFrame, level: StorageLevel): DataFrame =
-    if (level == StorageLevel.NONE) df
-    else { df.persist(level); record(df); df }
+  /** Persist `df` at `level` and remember the handle for [[release]]. */
+  private[graft] def persisted(df: DataFrame, level: StorageLevel): DataFrame = {
+    df.persist(level); record(df); df
+  }
 
   /** Unpersist (non-blocking) everything registered in this scope. */
   def release(): Unit = synchronized {
@@ -45,7 +50,8 @@ object CacheScope {
     * ALREADY-CONSUMED intermediates from earlier invocations. */
   private val MaxUntracked = 64
 
-  /** Default scope when the caller passes none. Earlier rounds persisted
+  /** The scope every operator but [[Dedup.ngramJaccard]] (and that one
+    * when its caller passes none) persists into. Earlier rounds persisted
     * WITHOUT keeping handles, which meant every invocation in a long-lived
     * session (notebook, service, test suite) accumulated MEMORY_AND_DISK
     * blocks until session end — unlike `localCheckpoint` blocks, DataFrame
@@ -55,9 +61,7 @@ object CacheScope {
     * scope-persisted intermediate in this codebase is a DETERMINISTIC
     * plan (minhash/band hashes, xxhash-seeded Voronoi assignments) — a
     * worst-case eviction recomputes identical rows, it can never change
-    * them. Callers that want deterministic, immediate release (the
-    * long-lived-session recommendation) still pass their own scope and
-    * call `release()` once the returned plan is materialized. */
+    * them. */
   val untracked: CacheScope = new CacheScope {
     private val fifo = new java.util.ArrayDeque[DataFrame]()
     override protected def record(df: DataFrame): Unit = synchronized {

@@ -273,8 +273,6 @@ object CorpusPipeline {
       minAlphaRatio: Double = 0.5,
       allowedLangs: Seq[String] = Nil,
       nearDupThreshold: Double = 0.8,
-      featureStorage: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK,
       normalize: Boolean = false,
       qualityPlane: Option[QualityPlane] = None,
       dsirPlane: Option[DsirPlane] = None,
@@ -297,7 +295,7 @@ object CorpusPipeline {
     val qualityCond = col("n_tokens") >= minTokens && col("alpha_ratio") >= minAlphaRatio
     val feats = TextAnalysis.qualityFeatures(docs0, textCol)
       .withColumn("__pass", qualityCond)
-      .persist(featureStorage)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val counts = feats
       .agg(count(lit(1)).as("n0"),
         sum(when(col("__pass"), 1L).otherwise(0L)).as("n1")).head()
@@ -360,9 +358,9 @@ object CorpusPipeline {
     // components → keep each cluster's min id. The exact verify makes the
     // stage independent of the minhash estimator (and oracle-checkable);
     // candidate generation is still the near-linear LSH equality join.
-    // The scope collects the dedup internals' persisted tables (shingle
-    // rows, signatures) so repeated clean() calls in a long-lived session
-    // don't accumulate executor storage.
+    // The scope collects the dedup internals' persisted tables
+    // (signatures, candidate pairs) so repeated clean() calls in a
+    // long-lived session don't accumulate executor storage.
     val scope = new CacheScope
     val pairs = Dedup.ngramJaccard(exact, textCol, idCol, threshold = nearDupThreshold,
       scope = scope)

@@ -232,27 +232,22 @@ object Dedup {
     * corpus.
     *
     * The signature table (one k-long array per doc) is consumed three times
-    * (banding + two pair rejoins), so it persists at `sigStorage`; pass
-    * `StorageLevel.NONE` to recompute instead. The persisted table lives
-    * until the session ends or the caller clears it — library operators
-    * can't unpersist what the returned lazy plan still references, so in a
-    * long-lived session the CALLER owns the cache lifecycle
-    * (`spark.catalog.clearCache()` or an explicit unpersist after the final
-    * action).
+    * (banding + two pair rejoins), so it persists at MEMORY_AND_DISK in
+    * [[CacheScope.untracked]]: the returned lazy plan still references it,
+    * and the untracked scope's bounded FIFO unpersists it once later
+    * operator calls have pushed it out.
     */
   def minhashLshFromShingleRows(
       shRows: DataFrame,
       bands: Int,
       rowsPerBand: Int,
       threshold: Double,
-      sigStorage: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-      scope: CacheScope = CacheScope.untracked,
   ): DataFrame =
     minhashLshFromSignatures(
       shRows.groupBy("id")
         .agg(graft.functions.SketchFunctions.minhash_agg(col("sh"), bands * rowsPerBand)
           .as("sig")),
-      bands, rowsPerBand, threshold, sigStorage, scope)
+      bands, rowsPerBand, threshold)
 
   /** Banding + estimate over a precomputed (id, sig) signature frame —
     * the shared tail of [[minhashLsh]] (row-local signatures) and
@@ -262,9 +257,16 @@ object Dedup {
       bands: Int,
       rowsPerBand: Int,
       threshold: Double,
-      sigStorage: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-      scope: CacheScope = CacheScope.untracked,
-  ): DataFrame = {
+  ): DataFrame =
+    lshPairs(sigFrame, bands, rowsPerBand, threshold,
+      StorageLevel.MEMORY_AND_DISK, CacheScope.untracked)
+
+  /** [[minhashLshFromSignatures]] with the signature persist's level and
+    * scope spelled out — [[ngramJaccard]] persists at DISK_ONLY in its
+    * caller's scope. */
+  private def lshPairs(
+      sigFrame: DataFrame, bands: Int, rowsPerBand: Int, threshold: Double,
+      sigStorage: StorageLevel, scope: CacheScope): DataFrame = {
     val k    = bands * rowsPerBand
     val sigs = scope.persisted(sigFrame, sigStorage)
     // band bucket = native per-band hash of the signature (one tiny loop
@@ -484,11 +486,10 @@ object Dedup {
     * and the split seeding's determinism needs the id order to be total.
     * Both are checked up front (one cheap two-column aggregate).
     *
-    * The assignment is persisted at `assignStorage` (NONE to opt out —
-    * everything downstream is deterministic either way, recomputation is
-    * just extra scans): the size probe, each split round, and the pair
-    * join's two branches all consume it. Cache lifecycle follows the
-    * [[CacheScope]] convention (`scope.release()` once consumed).
+    * The assignment is persisted at MEMORY_AND_DISK in
+    * [[CacheScope.untracked]]: the size probe, each split round, and the
+    * pair join's two branches all consume it (everything downstream is
+    * deterministic, so an eviction only costs a recompute).
     *
     * Output: every input id with (id, cell, keep, dup_of) where `dup_of`
     * is the EARLIEST same-cluster doc above threshold (null for kept);
@@ -507,11 +508,9 @@ object Dedup {
       kmeansIters: Int = 2,
       targetClusterSize: Int = 4096,
       maxSplitRounds: Int = 2,
-      assignStorage: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-      scope: CacheScope = CacheScope.untracked,
   ): DataFrame = {
     val pruned = semanticPrune(df, idCol, vecCol, threshold, nCells, kmeansIters,
-      targetClusterSize, maxSplitRounds, assignStorage, scope)._2
+      targetClusterSize, maxSplitRounds)._2
       .select("id", "cell", "keep", "dup_of")
     // vectorless docs re-enter so the output covers the WHOLE input —
     // the incremental twin's contract (batch and standing-corpus paths
@@ -529,8 +528,8 @@ object Dedup {
     * (id, cell, __v, keep, dup_of). */
   private def semanticPrune(
       df: DataFrame, idCol: String, vecCol: String, threshold: Double,
-      nCells: Int, kmeansIters: Int, targetClusterSize: Int, maxSplitRounds: Int,
-      assignStorage: StorageLevel, scope: CacheScope): (DataFrame, DataFrame) = {
+      nCells: Int, kmeansIters: Int, targetClusterSize: Int,
+      maxSplitRounds: Int): (DataFrame, DataFrame) = {
     require(df.schema(idCol).dataType.isInstanceOf[NumericType],
       s"semanticDedup: id column '$idCol' is ${df.schema(idCol).dataType.simpleString} — " +
         "the greedy keep-first rule orders docs by a numeric id, and casting would silently " +
@@ -552,7 +551,7 @@ object Dedup {
     val assigned = boundedClusters(
       Similarity.ivfAssign(docs, "id", "__v", centroids, "cent_id", "cent_vec")
         .select(col("id"), col("__v"), col("cell").cast("string").as("cell")),
-      targetClusterSize, maxSplitRounds, assignStorage, scope)
+      targetClusterSize, maxSplitRounds)
     val shadows = assigned.select(col("cell"), col("id").as("id_a"), col("__v").as("__va"))
       .join(assigned.select(col("cell"), col("id").as("id_b"), col("__v").as("__vb")),
         Seq("cell"))
@@ -600,11 +599,9 @@ object Dedup {
       kmeansIters: Int = 2,
       targetClusterSize: Int = 4096,
       maxSplitRounds: Int = 2,
-      assignStorage: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-      scope: CacheScope = CacheScope.untracked,
   ): SemanticIndex = {
     val (centroids, pruned) = semanticPrune(corpus, idCol, vecCol, threshold,
-      nCells, kmeansIters, targetClusterSize, maxSplitRounds, assignStorage, scope)
+      nCells, kmeansIters, targetClusterSize, maxSplitRounds)
     SemanticIndex(centroids,
       pruned.filter(col("keep"))
         .select(col("id"),
@@ -687,8 +684,9 @@ object Dedup {
     * re-scan the whole lineage (each round's size collect materializes
     * the new assignment fully, after which its predecessor unpersists). */
   private def boundedClusters(
-      start: DataFrame, target: Int, maxSplitRounds: Int,
-      storage: StorageLevel, scope: CacheScope): DataFrame = {
+      start: DataFrame, target: Int, maxSplitRounds: Int): DataFrame = {
+    def persisted(df: DataFrame) =
+      CacheScope.untracked.persisted(df, StorageLevel.MEMORY_AND_DISK)
     def oversized(assigned: DataFrame): Array[(String, Long)] =
       assigned.groupBy("cell").count()
         .filter(col("count") > target)
@@ -698,11 +696,11 @@ object Dedup {
       rows.map { case (c, n) => (c, ((n + target - 1) / target).toInt) }
         .toSeq.toDF("cell", "__k")
     }
-    var assigned = scope.persisted(start, storage)
+    var assigned = persisted(start)
     var round    = 0
     var over     = oversized(assigned) // materializes the persist in full
     while (round < maxSplitRounds && over.nonEmpty) {
-      val next = scope.persisted(splitOversized(assigned, overDF(over), target), storage)
+      val next = persisted(splitOversized(assigned, overDF(over), target))
       round += 1
       over = oversized(next) // materializes next before its input unpersists
       assigned.unpersist(false)
@@ -784,8 +782,10 @@ object Dedup {
     * only — the former pipeline persisted exploded (id, shingle) rows at
     * corpus × words size (DISK_ONLY against the executor-memory cliff) and
     * re-aggregated them twice; now no shingle relation exists at all.
-    * `shingleStorage` is retained for signature persistence (the banding +
-    * two rejoins consume the signature table).
+    * The signature table (banding + two rejoins consume it) persists at
+    * DISK_ONLY and the candidate pairs at MEMORY_AND_DISK, both in `scope`
+    * ([[CorpusPipeline.clean]] passes its own and releases it once its
+    * result is consumed; everyone else gets [[CacheScope.untracked]]).
     */
   def ngramJaccard(
       df: DataFrame,
@@ -795,17 +795,15 @@ object Dedup {
       threshold: Double = 0.5,
       bands: Int = 0,
       rowsPerBand: Int = 0,
-      shingleStorage: StorageLevel = StorageLevel.DISK_ONLY,
       scope: CacheScope = CacheScope.untracked,
   ): DataFrame = {
     val (b, r) =
       if (bands > 0 && rowsPerBand > 0) (bands, rowsPerBand)
       else if (lshDetectProb(threshold, 32, 4) >= 0.98) (32, 4)
       else lshAutoParams(threshold)
-    val candidates = minhashLshFromSignatures(
+    val candidates = lshPairs(
         minhashSignaturesRowLocal(df, textCol, idCol, n, b * r), b, r,
-        threshold = math.max(0.0, threshold - 0.2),
-        sigStorage = shingleStorage, scope = scope)
+        math.max(0.0, threshold - 0.2), StorageLevel.DISK_ONLY, scope)
       .select("id_a", "id_b")
       // PERSISTED (scope-tracked), not checkpointed, for the THREE
       // consumers below (twice via the candIds union, plus the final pair
@@ -856,8 +854,6 @@ object Dedup {
       idCol: String,
       n: Int = 3,
       threshold: Double = 0.5,
-      shingleStorage: StorageLevel = StorageLevel.DISK_ONLY,
-      scope: CacheScope = CacheScope.untracked,
   ): DataFrame = {
     val (b, r) = nearDupParams(threshold)
     val k = b * r
@@ -872,11 +868,11 @@ object Dedup {
     val candidates = bandsOf(sigsOf(batch), "id_batch")
       .join(bandsOf(sigsOf(corpus), "id_corpus"), Seq("band", "bucket"))
       .select("id_batch", "id_corpus").distinct()
-      // scope-persisted for the three consumers below (two semi-joins +
-      // the pair join) — see ngramJaccard's candidate note for why persist
+      // persisted for the three consumers below (two semi-joins + the
+      // pair join) — see ngramJaccard's candidate note for why persist
       // beats localCheckpoint here (lineage survives executor loss,
-      // deterministic release, no lazy-checkpoint race for caches)
-      .transform(c => scope.persisted(c, StorageLevel.MEMORY_AND_DISK))
+      // bounded release, no lazy-checkpoint race for caches)
+      .transform(c => CacheScope.untracked.persisted(c, StorageLevel.MEMORY_AND_DISK))
     def setsFor(side: DataFrame, ids: DataFrame, idName: String, shName: String) =
       side.select(col(idCol).as("id"),
           graft.functions.SketchFunctions.window_strings(tokens(col(textCol)), n).as(shName))
@@ -941,8 +937,6 @@ object Dedup {
       idCol: String,
       n: Int = 3,
       threshold: Double = 0.5,
-      shingleStorage: StorageLevel = StorageLevel.DISK_ONLY,
-      scope: CacheScope = CacheScope.untracked,
   ): DataFrame = {
     val (b, r) = nearDupParams(threshold)
     val k = b * r
@@ -961,9 +955,9 @@ object Dedup {
       .join(bandsOf(guarded.select(col("id").as("id_corpus"), col("sig")), "id_corpus"),
         Seq("band", "bucket"))
       .select("id_batch", "id_corpus").distinct()
-      // scope-persisted for the three consumers below (two semi-joins +
-      // the pair join) — see ngramJaccard's candidate note
-      .transform(c => scope.persisted(c, StorageLevel.MEMORY_AND_DISK))
+      // persisted for the three consumers below (two semi-joins + the
+      // pair join) — see ngramJaccard's candidate note
+      .transform(c => CacheScope.untracked.persisted(c, StorageLevel.MEMORY_AND_DISK))
     val setsB = batch.select(col(idCol).as("id_batch"),
         graft.functions.SketchFunctions.window_strings(tokens(col(textCol)), n).as("sh_b"))
       .join(candidates.select("id_batch"), Seq("id_batch"), "left_semi")
@@ -1128,8 +1122,6 @@ object Dedup {
       textCol: String,
       idCol: String,
       windowTokens: Int = 50,
-      winStorage: StorageLevel = StorageLevel.DISK_ONLY,
-      scope: CacheScope = CacheScope.untracked,
   ): DataFrame = {
     require(windowTokens >= 2, s"windowTokens must be >= 2, got $windowTokens")
     val L = windowTokens
@@ -1148,7 +1140,7 @@ object Dedup {
       concat(lit("exactSubstringSpans: doc_id "), col("doc_id"),
         lit(" / pos "), col("pos"),
         lit(" outside the packed-key range [0, 2^63/10^9) x [0, 10^9)")))
-    val wins = scope.persisted(
+    val wins = CacheScope.untracked.persisted(
       df.select(col(idCol).cast("long").as("doc_id"), toks.as("__t"))
         .select(col("doc_id"), posexplode(arrays_zip(
           window_hashes(col("__t"), L).as("h1"),
@@ -1157,7 +1149,7 @@ object Dedup {
         .select(col("doc_id"), col("pos"),
           col("col.h1").as("h1"), col("col.h2").as("h2"),
           (col("doc_id") * lit(1000000000L) + col("pos")).as("k")),
-      winStorage)
+      StorageLevel.DISK_ONLY)
     val dup = wins.groupBy("h1", "h2")
       .agg(count(lit(1)).as("c"), min(col("k")).as("canon"))
       .where(col("c") > 1)

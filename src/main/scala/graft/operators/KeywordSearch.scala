@@ -188,8 +188,7 @@ object KeywordSearch {
     * data, with bit-identical scores). */
   def bm25TopK(docs: DataFrame, textCol: String, idCol: String,
                queries: Seq[(String, String)], k: Int = 10,
-               k1: Double = 1.2, b: Double = 0.75,
-               scope: CacheScope = CacheScope.untracked): DataFrame = {
+               k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val perQuery = parseBattery(queries)
     val allTerms: Seq[String] =
       perQuery.flatMap(_._2).distinct.sorted // deterministic kernel layout
@@ -203,10 +202,9 @@ object KeywordSearch {
     // every query's scoring branch — the corpus text is read exactly once
     // no matter the battery size (bm25Score by contrast recomputes tf
     // inline: it serves streams, which cannot persist)
-    val projected = scope.persisted(
+    val projected = persisted(
       docs.select(col(idCol).as("doc_id"), tf.as("__tf"),
-        size(toks).cast(LongType).as("dl")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        size(toks).cast(LongType).as("dl")))
     val (_, avgdl, idf) = statsOf(projected, allTerms.size)
 
     // per-row length normalization, shared by every term of every query
@@ -268,12 +266,11 @@ object KeywordSearch {
   def bm25Batch(docs: DataFrame, textCol: String, idCol: String,
                 queries: DataFrame, qidCol: String, qtextCol: String,
                 k: Int = 10, k1: Double = 1.2, b: Double = 0.75,
-                scope: CacheScope = CacheScope.untracked,
                 kernelVocabCap: Int = KernelVocabCap): DataFrame = {
     val toks = coalesce(Dedup.tokens(col(textCol)), array().cast("array<string>"))
 
     // persisted: occurrence rows feed the vocabulary AND the retrieval join
-    val qTerms = batteryTerms(queries, qidCol, qtextCol, scope)
+    val qTerms = batteryTerms(queries, qidCol, qtextCol)
     val vocab = qTerms.select("term").distinct()
 
     // ONE probe action computes the corpus statistics (N, avgdl) AND the
@@ -365,8 +362,7 @@ object KeywordSearch {
           // contribution rows that exchange would carry
           .repartition(col("doc_id"))
     }
-    val postings = scope.persisted(postingRows,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val postings = persisted(postingRows)
     // materialize the posting cache BEFORE planning the retrieval (r18):
     // a cold cache hides its hashpartitioning(doc_id) behind an
     // unfinished AQE subplan, so the planner re-inserts the
@@ -378,19 +374,24 @@ object KeywordSearch {
     retrieve(qTerms, postings, n, avgdl, maxOrd, k1, b, k)
   }
 
+  /** Every intermediate this object persists: MEMORY_AND_DISK in
+    * [[CacheScope.untracked]]'s bounded FIFO (the returned lazy plans
+    * still reference them, so no operator here can unpersist its own). */
+  private def persisted(df: DataFrame): DataFrame =
+    CacheScope.untracked.persisted(df, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
   /** Battery → persisted (query_id, ord, term, first_occ) occurrence
     * rows — the shared front half of [[bm25Batch]] and
     * [[bm25SearchIndexed]]. */
-  private def batteryTerms(queries: DataFrame, qidCol: String, qtextCol: String,
-                           scope: CacheScope): DataFrame = {
+  private def batteryTerms(queries: DataFrame, qidCol: String,
+                           qtextCol: String): DataFrame = {
     val qToks = coalesce(Dedup.tokens(col(qtextCol)), array().cast("array<string>"))
     val wFirst = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id", "term").orderBy("ord")
-    scope.persisted(
+    persisted(
       queries.select(col(qidCol).as("query_id"), posexplode(qToks))
         .withColumnRenamed("pos", "ord").withColumnRenamed("col", "term")
-        .withColumn("first_occ", row_number().over(wFirst) === 1),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .withColumn("first_occ", row_number().over(wFirst) === 1))
   }
 
   /** The RETRIEVAL tail shared by [[bm25Batch]] and [[bm25SearchIndexed]]:
@@ -526,12 +527,11 @@ object KeywordSearch {
     * scores them. Output and tie rule match [[bm25TopK]] exactly. */
   def bm25SearchIndexed(spark: org.apache.spark.sql.SparkSession, dir: String,
                         queries: DataFrame, qidCol: String, qtextCol: String,
-                        k: Int = 10, k1: Double = 1.2, b: Double = 0.75,
-                        scope: CacheScope = CacheScope.untracked): DataFrame = {
+                        k: Int = 10, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val (store, meta) = open(spark, dir)
     import meta.{batches, n}
     require(n > 0, s"bm25SearchIndexed: index at '$dir' holds no documents")
-    val qTerms = batteryTerms(queries, qidCol, qtextCol, scope)
+    val qTerms = batteryTerms(queries, qidCol, qtextCol)
     // battery geometry only — corpus facts come from the meta, so the
     // pre-job cost is ONE tiny action over the persisted occurrences
     val g = qTerms.agg(max(col("ord")), countDistinct(col("term"))).collect()(0)
@@ -567,9 +567,7 @@ object KeywordSearch {
     // r18: by doc_id alone, so the (query_id, doc_id) pivot reduction
     // downstream needs no Exchange of the contribution rows (the
     // bm25Batch co-partitioning note)
-    val filtered = scope.persisted(
-      live.repartition(col("doc_id")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val filtered = persisted(live.repartition(col("doc_id")))
     // materialize before planning the retrieval so the cache reports its
     // doc_id partitioning — the bm25Batch exchange-elision note
     filtered.count()
@@ -622,7 +620,6 @@ object KeywordSearch {
   def bm25PhraseTopK(spark: org.apache.spark.sql.SparkSession, dir: String,
                      phrases: Seq[(String, String)], k: Int = 10,
                      k1: Double = 1.2, b: Double = 0.75,
-                     scope: CacheScope = CacheScope.untracked,
                      slop: Int = 0): DataFrame = {
     val (store, meta) = open(spark, dir)
     require(slop >= 0, s"bm25PhraseTopK: slop must be >= 0, got $slop")
@@ -636,8 +633,7 @@ object KeywordSearch {
     // aggregation and the scoring join — without the cache the whole
     // positions scan + double explode + adjacency count re-runs for the
     // second consumer (the batteryTerms/filtered-postings precedent)
-    val occurrences = scope.persisted(phraseOccurrences(plane, perPhrase, slop),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val occurrences = persisted(phraseOccurrences(plane, perPhrase, slop))
     phraseScoreTail(store, meta, occurrences, k, k1, b)
   }
 
@@ -703,7 +699,6 @@ object KeywordSearch {
   def bm25PhraseBatch(spark: org.apache.spark.sql.SparkSession, dir: String,
                       phrases: DataFrame, qidCol: String, qtextCol: String,
                       k: Int = 10, k1: Double = 1.2, b: Double = 0.75,
-                      scope: CacheScope = CacheScope.untracked,
                       slop: Int = 0): DataFrame = {
     val (store, meta) = open(spark, dir)
     require(slop >= 0, s"bm25PhraseBatch: slop must be >= 0, got $slop")
@@ -716,7 +711,7 @@ object KeywordSearch {
     // vocabulary-pruning branch, exactly like bm25SearchIndexed (r19:
     // the battery row count rides the same action — it pre-filters the
     // vote-volume size gate below)
-    val qTerms = batteryTerms(phrases, qidCol, qtextCol, scope)
+    val qTerms = batteryTerms(phrases, qidCol, qtextCol)
     val qGeo = qTerms.agg(countDistinct(col("term")), count(lit(1))).collect()(0)
     val nTerms = qGeo.getLong(0)
     val batteryRows = qGeo.getLong(1)
@@ -756,9 +751,7 @@ object KeywordSearch {
     // 4.01-4.33 s persist-only) against exchange savings the fixture
     // keeps in memory anyway. r19 lands it SIZE-GATED (below): the slice
     // carries tf so the vote volume is estimable from its own stats.
-    val postPruned = scope.persisted(
-      prunedPlane("postings").select("term", "doc_id", "tf"),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val postPruned = persisted(prunedPlane("postings").select("term", "doc_id", "tf"))
     // __ctf (the term's total corpus positions among the slice) rides the
     // df aggregation for the size gate's estimate — same shuffle, one
     // extra long per term
@@ -820,9 +813,8 @@ object KeywordSearch {
         .head().getDouble(0) * (slop + 1).toDouble
     val voteSlice =
       if (voteGate > 0 && estVotes > voteGate.toDouble) {
-        val spread = scope.persisted(
-          postPruned.select("term", "doc_id").repartition(col("doc_id")),
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val spread = persisted(
+          postPruned.select("term", "doc_id").repartition(col("doc_id")))
         spread.count() // materialize: a cold cache hides its partitioning
         spread         // behind an unfinished AQE subplan (the r18 lesson)
       } else postPruned
@@ -848,13 +840,12 @@ object KeywordSearch {
     // row — so the plain count IS the distinct count (the
     // phraseOccurrences rule, same reasoning)
     val nOrd = if (slop == 0) count(lit(1)) else count_distinct(col("ord"))
-    val occurrences = scope.persisted(
+    val occurrences = persisted(
       starts.filter(col("start") >= 0)
         .groupBy("query_id", "doc_id", "start")
         .agg(nOrd.as("__nOrd"), max(col("__len")).as("__l"))
         .filter(col("__nOrd") === col("__l"))
-        .groupBy("query_id", "doc_id").agg(count(lit(1)).as("tf")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .groupBy("query_id", "doc_id").agg(count(lit(1)).as("tf")))
     phraseScoreTail(store, meta, occurrences, k, k1, b)
   }
 
@@ -938,56 +929,37 @@ object KeywordSearch {
 
   /** Score a document frame — batch OR `readStream` — against a frozen
     * [[PhraseModel]]: (query_id, doc_id, score, dl, tf) rows for docs
-    * containing the phrase at least once, tf computed ROW-LOCALLY from
-    * the doc's own tokens (the codegen'd
-    * [[graft.functions.PhraseCount]] adjacency kernel at the model's
-    * `slop` — same banded-proximity, overlap, and repeated-term
-    * semantics as the positional index's vote, exact at slop = 0).
-    * STATELESS, so the same call is the streaming twin with
-    * byte-identical scores (the [[bm25Score]] precedent); and over the
-    * indexed corpus itself the rows are BIT-IDENTICAL to
-    * [[bm25PhraseTopK]]'s scored surface minus the ranking (same
-    * tokens → same tf; same df/N/avgdl through the same StrictMath
-    * idf; same expression shapes — spec-pinned). */
+    * containing the phrase at least once. Refuses a model holding an
+    * EMPTY phrase, then scores exactly as [[bm25PhraseScoreBatch]] (one
+    * corpus pass for the whole battery). STATELESS, so the same call is
+    * the streaming twin with byte-identical scores (the [[bm25Score]]
+    * precedent); and over the indexed corpus itself the rows are
+    * BIT-IDENTICAL to [[bm25PhraseTopK]]'s scored surface minus the
+    * ranking (same tokens → same tf; same df/N/avgdl through the same
+    * StrictMath idf; same expression shapes — spec-pinned). */
   def bm25PhraseScore(docs: DataFrame, textCol: String, idCol: String,
                       model: PhraseModel): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
-    val toks = coalesce(Dedup.tokens(col(textCol)), array().cast("array<string>"))
-    val base = docs.select(col(idCol).as("doc_id"), toks.as("__toks"),
-      size(toks).cast(LongType).as("dl"))
-    val norm = lit(model.k1 * (1 - model.b)) +
-      lit(model.k1 * model.b / model.avgdl) * col("dl").cast(DoubleType)
-    model.phrases.zipWithIndex.map { case ((qid, ts), i) =>
-      val tf = GraftColumnBridge.column(graft.functions.PhraseCount(
-        GraftColumnBridge.expression(col("__toks")), ts, model.slop))
-      base.withColumn("tf", tf.cast(LongType))
-        .filter(col("tf") > 0)
-        .withColumn("score", lit(model.idf(i)) * col("tf").cast(DoubleType) *
-          lit(model.k1 + 1.0) / (col("tf").cast(DoubleType) + norm))
-        .select(lit(qid).as("query_id"), col("doc_id"), col("score"),
-          col("dl"), col("tf"))
-    }.reduce(_ unionByName _)
+    model.phrases.find(_._2.isEmpty).foreach { case (qid, _) =>
+      throw new IllegalArgumentException(
+        s"bm25PhraseScore: phrase '$qid' has no tokens — use bm25PhraseScoreBatch " +
+          "to score a battery whose blank probes should match nothing")
+    }
+    bm25PhraseScoreBatch(docs, textCol, idCol, model)
   }
 
-  /** BATTERY-AS-DATA twin of [[bm25PhraseScore]] (r17), completing the
-    * doctrine on the SCORER plane: [[bm25PhraseScore]] plans one
-    * [[graft.functions.PhraseCount]] branch + one corpus pass PER
-    * phrase, so a decontamination-sized battery (thousands of eval
-    * n-gram probes) degrades on plan size exactly like the pre-r17
-    * positional retrieval did. Here the whole battery rides INSIDE one
-    * [[graft.functions.PhraseCountBatch]] expression (first-token-gated
-    * candidate pruning — the row-local mirror of bm25PhraseBatch's
-    * rarest-term join), and the phrase ids / idf table ride as two
-    * array LITERALS indexed in-plan — ONE corpus pass, constant plan
-    * shape at any battery size. Same (query_id, doc_id, score, dl, tf)
-    * surface, STATELESS (the same call is the streaming twin), and
-    * rows are BIT-IDENTICAL to [[bm25PhraseScore]] on the same model:
-    * one shared adjacency kernel ([[graft.functions.PhraseKernel]])
-    * and the same float expression shapes with the scalar idf literal
-    * replaced by an array-literal extraction of the same double.
-    * One battery-as-data divergence: an EMPTY phrase scores nothing
-    * instead of refusing the sweep (the bm25Batch blank-probe rule;
-    * the per-phrase form's [[graft.functions.PhraseCount]] refuses). */
+  /** BATTERY-AS-DATA phrase scorer (r17): the whole battery rides
+    * INSIDE one [[graft.functions.PhraseCountBatch]] expression — tf
+    * computed ROW-LOCALLY from the doc's own tokens by the shared
+    * adjacency kernel ([[graft.functions.PhraseKernel]]) at the model's
+    * `slop`, with the same banded-proximity, overlap and repeated-term
+    * semantics as the positional index's vote (exact at slop = 0);
+    * first-token-gated candidate pruning is the row-local mirror of
+    * bm25PhraseBatch's rarest-term join. The phrase ids / idf table
+    * ride as two array LITERALS indexed in-plan — ONE corpus pass,
+    * constant plan shape at any battery size. STATELESS (the same call
+    * is the streaming twin). An EMPTY phrase scores nothing instead of
+    * refusing the sweep (the bm25Batch blank-probe rule;
+    * [[bm25PhraseScore]] refuses it). */
   def bm25PhraseScoreBatch(docs: DataFrame, textCol: String, idCol: String,
                            model: PhraseModel): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge
@@ -1005,7 +977,10 @@ object KeywordSearch {
       .withColumn("score", idfLit.getItem(col("__h.phrase")) *
         col("tf").cast(DoubleType) * lit(model.k1 + 1.0) /
         (col("tf").cast(DoubleType) + norm))
-      .select(qidLit.getItem(col("__h.phrase")).as("query_id"),
+      // the kernel only emits battery indices, so the id lookup never
+      // misses: query_id is non-null, as in the model's phrase list
+      .select(GraftColumnBridge.column(org.apache.spark.sql.catalyst.expressions.KnownNotNull(
+          GraftColumnBridge.expression(qidLit.getItem(col("__h.phrase"))))).as("query_id"),
         col("doc_id"), col("score"), col("dl"), col("tf"))
   }
 

@@ -521,9 +521,7 @@ object Similarity {
              queries: DataFrame, queryId: String, queryVec: String,
              k: Int = 10, m: Int = 8, nCentroids: Int = 16,
              nCells: Int = 16, nProbe: Int = 8, kmeansIters: Int = 2,
-             refine: Int = 4,
-             scope: graft.operators.CacheScope = graft.operators.CacheScope.untracked)
-      : DataFrame = {
+             refine: Int = 4): DataFrame = {
     val qProj = queries.select(col(queryId).as("query_id"), col(queryVec).as("__qv"))
       .filter(col("__qv").isNotNull)
     val qRows = qProj.collect()
@@ -560,7 +558,7 @@ object Similarity {
     // without the cache the full assignment+encode scan re-runs per query.
     // Norms via the codegen'd vec_dot kernel (the interpreted HOF fold is
     // the r10 classifier lesson; values identical — same fold order).
-    val encoded = scope.persisted(
+    val encoded = CacheScope.untracked.persisted(
       ivfAssignCollected(
           corpus.select(col(corpusId).as("neighbor_id"), col(corpusVec).as("__cv")),
           "__cv", cellIds, cents, nProbe = 1)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
+import org.apache.spark.storage.StorageLevel
 
 /** fastText-style LINEAR text-classifier inference over hashed word n-gram
   * features (Joulin et al. 2016, arXiv:1607.01759 — the model family behind
@@ -124,10 +125,7 @@ object TextClassifier {
     * pin PROPERTIES (accuracy, sign agreement), not bits. */
   def train(df: DataFrame, textCol: String, labelCol: String,
             dim: Int, iters: Int = 40, lr: Double = 1.0,
-            addBigrams: Boolean = true,
-            storage: org.apache.spark.storage.StorageLevel =
-              org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      : (Array[Double], Double) = {
+            addBigrams: Boolean = true): (Array[Double], Double) = {
     require(dim > 0 && dim <= MaxDim, s"train: dim $dim outside (0, $MaxDim]")
     require(iters > 0 && lr > 0.0, s"train: iters/lr must be positive")
     val toks = coalesce(Dedup.tokens(col(textCol)), array().cast("array<string>"))
@@ -146,7 +144,7 @@ object TextClassifier {
       .groupBy(col("did"), col("y"),
         featureId(col("g"), dim).cast(IntegerType).as("fid"))
       .agg(count(lit(1)).cast(DoubleType).as("x"))
-      .persist(storage)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val st = feats0.agg(count_distinct(col("did")).as("nd"),
       count(lit(1)).as("nnz")).head()
     val nFeatured = st.getLong(0)
@@ -161,8 +159,8 @@ object TextClassifier {
       .head()
     val nEmpty = emptyRow.getLong(0)
     val emptyPos = emptyRow.getDouble(1)
-    val feats = clusterByDoc(feats0, st.getLong(1), storage)
-    val got = gdLoop(feats, nFeatured + nEmpty, nEmpty, emptyPos, dim, iters, lr, storage)
+    val feats = clusterByDoc(feats0, st.getLong(1))
+    val got = gdLoop(feats, nFeatured + nEmpty, nEmpty, emptyPos, dim, iters, lr)
     feats.unpersist(false)
     got
   }
@@ -181,12 +179,11 @@ object TextClassifier {
     * relation: ≥ 250k rows per task until defaultParallelism is covered,
     * then ~2M rows (~80 MB) per task at scale — never from the session's
     * shuffle width. One extra exchange at build replaces 2·iters of them. */
-  private def clusterByDoc(feats0: DataFrame, nnz: Long,
-                           storage: org.apache.spark.storage.StorageLevel): DataFrame = {
+  private def clusterByDoc(feats0: DataFrame, nnz: Long): DataFrame = {
     val sc = feats0.sparkSession.sparkContext
     val p = math.max(math.max(1L, nnz / 2000000L),
       math.min((nnz + 249999L) / 250000L, sc.defaultParallelism.toLong)).toInt
-    val out = feats0.repartition(p, col("did")).persist(storage)
+    val out = feats0.repartition(p, col("did")).persist(StorageLevel.MEMORY_AND_DISK)
     // materialize BEFORE the loop plans against it: a cold cache hides its
     // partitioning behind an unfinished AQE subplan and the planner
     // re-inserts the per-iteration exchanges (the bm25Batch lesson)
@@ -200,9 +197,7 @@ object TextClassifier {
     * reasoning) — shared by the binary trainer and the one-vs-rest
     * language-id trainer. */
   private def gdLoop(feats: DataFrame, nDocs: Long, nEmpty: Long, emptyPos: Double,
-                     dim: Int, iters: Int, lr: Double,
-                     storage: org.apache.spark.storage.StorageLevel)
-      : (Array[Double], Double) = {
+                     dim: Int, iters: Int, lr: Double): (Array[Double], Double) = {
     val w = new Array[Double](dim)
     var bias = 0.0
     var it = 0
@@ -213,7 +208,7 @@ object TextClassifier {
         .agg(sum(col("x") * element_at(wLit, col("fid") + 1)).as("m"))
         .select(col("did"),
           (lit(1.0) / (lit(1.0) + exp(-(col("m") + bias))) - col("y")).as("r"))
-        .persist(storage)
+        .persist(StorageLevel.MEMORY_AND_DISK)
       // ONE action per iteration (the r10 judge's nit: the separate
       // gradient + residual-sum jobs doubled driver-coordinated scheduling
       // at 60 iterations): the bias gradient rides the same collect as a
@@ -282,30 +277,28 @@ object TextClassifier {
     * pipeline_classifier_train gate does), ready for [[langIdScore]]. */
   def trainLangId(df: DataFrame, textCol: String, langCol: String,
                   langs: Seq[String], dim: Int, n: Int = 3,
-                  iters: Int = 40, lr: Double = 1.0,
-                  storage: org.apache.spark.storage.StorageLevel =
-                    org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): LangIdModel = {
+                  iters: Int = 40, lr: Double = 1.0): LangIdModel = {
     require(dim > 0 && dim <= MaxDim, s"trainLangId: dim $dim outside (0, $MaxDim]")
     require(langs.nonEmpty && langs.distinct == langs, s"trainLangId: bad language set $langs")
     val grams = charGrams(col(textCol), n)
     val base = df
       .select(monotonically_increasing_id().as("did"),
         col(langCol).cast("string").as("lang"), grams.as("__g"))
-      .persist(storage)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val feats0 = base
       .filter(size(col("__g")) > 0)
       .select(col("did"), col("lang"), explode(col("__g")).as("g"))
       .groupBy(col("did"), col("lang"),
         featureId(col("g"), dim).cast(IntegerType).as("fid"))
       .agg(count(lit(1)).cast(DoubleType).as("x"))
-      .persist(storage)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val st = feats0.agg(count_distinct(col("did")).as("nd"),
       count(lit(1)).as("nnz")).head()
     val nFeatured = st.getLong(0)
     require(nFeatured > 0, "trainLangId: no document carries any feature")
     // did-clustered cache: the K one-vs-rest GD loops below each pay
     // iters iterations — the exchange elision multiplies K × iters here
-    val feats = clusterByDoc(feats0, st.getLong(1), storage)
+    val feats = clusterByDoc(feats0, st.getLong(1))
     // zero-feature docs: per-language positive mass for each intercept
     val emptyByLang = base.filter(size(col("__g")) === 0)
       .groupBy("lang").agg(count(lit(1)).as("n")).collect()
@@ -321,7 +314,7 @@ object TextClassifier {
       val yFeats = feats.withColumn("y",
         when(col("lang") === lit(lang), 1.0).otherwise(0.0))
       gdLoop(yFeats, nDocs, nEmpty,
-        emptyByLang.getOrElse(lang, 0L).toDouble, dim, iters, lr, storage)
+        emptyByLang.getOrElse(lang, 0L).toDouble, dim, iters, lr)
     }
     feats.unpersist(false)
     // quantize onto the dyadic grid with ONE scale SHARED across all K

@@ -10,6 +10,70 @@ import graft.harness.PipelineDemo
 class EsmCatalogSourceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
+  /** A 5-row CSV catalog shaped like intake-esm's
+    * `multi-variable-catalog` (FIXTURES.md §1.2): the §1.1 CESM schema
+    * with `variable` cells written as Python tuple literals. */
+  private lazy val multiVariableCatalog: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_multivar")
+    val vars = Seq(
+      "('SHF', 'REGION_MASK', 'ANGLE', 'DXU', 'KMT', 'NO2', 'O2')",
+      "('SHF', 'NO2', 'O2')",
+      "('SHF', 'REGION_MASK', 'ANGLE')",
+      "('NO2', 'O2')",
+      "('KMT', 'DXU')")
+    val rows = Seq(
+      ("CTRL", "b.e11.B1850C5CN.f09_g16.005", 0, "040001-049912"),
+      ("CTRL", "b.e11.B1850C5CN.f09_g16.005", 0, "050001-059912"),
+      ("20C", "b.e11.B20TRC5CNBDRD.f09_g16.001", 1, "192001-200512"),
+      ("20C", "b.e11.B20TRC5CNBDRD.f09_g16.002", 2, "192001-200512"),
+      ("RCP85", "b.e11.BRCP85C5CNBDRD.f09_g16.001", 1, "200601-208012"))
+    val csv = ("experiment,case,component,stream,variable,member_id,path,time_range" +:
+      rows.zip(vars).map { case ((exp, cs, member, tr), v) =>
+        s"""$exp,$cs,ocn,pop.h,"$v",$member,./sample_data/$cs.pop.h.$tr.nc,$tr"""
+      }).mkString("", "\n", "\n")
+    java.nio.file.Files.writeString(dir.resolve("multi-variable-catalog.csv"), csv)
+    val json = dir.resolve("multi-variable-catalog.json")
+    java.nio.file.Files.writeString(json,
+      """{"esmcat_version": "0.1.0", "id": "sample-multi-variable-cesm1-lens",
+        |"catalog_file": "multi-variable-catalog.csv",
+        |"attributes": [],
+        |"assets": {"column_name": "path", "format": "netcdf"},
+        |"aggregation_control": {"variable_column_name": "variable",
+        |  "groupby_attrs": ["component", "experiment", "stream"],
+        |  "aggregations": [{"type": "union", "attribute_name": "variable"},
+        |    {"type": "join_existing", "attribute_name": "time_range",
+        |     "options": {"dim": "time"}}]}}""".stripMargin)
+    json.toString
+  }
+
+  /** An inline `catalog_dict` catalog shaped like intake-esm's
+    * `noaa-pathfinder-opendap` (FIXTURES.md §1.5): string columns, an
+    * integer `scode`, http paths, `format=opendap`. */
+  private lazy val opendapCatalog: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_opendap")
+    val rows = Seq(
+      ("AVHRR_OI", "sst", "1981-09-01", "1981-09-30", 482),
+      ("AVHRR_OI", "sst", "1981-10-01", "1981-10-31", 482),
+      ("AVHRR_OI", "ice", "1981-09-01", "1981-09-30", 7),
+      ("NOAA_ASC", "sst", "1982-01-01", "1982-01-31", 1023),
+      ("NOAA_ASC", "ice", "1982-01-01", "1982-01-31", 36)).zipWithIndex.map {
+        case ((dom, v, first, last, scode), i) =>
+          s"""{"domain": "$dom", "variable": "$v", "first_swap": "$first",
+             |"last_swap": "$last", "scode": $scode,
+             |"path": "https://opendap.example.org/pathfinder/$dom/$v/$i.nc"}""".stripMargin
+      }
+    val json = dir.resolve("noaa-pathfinder-opendap.json")
+    java.nio.file.Files.writeString(json,
+      s"""{"esmcat_version": "0.1.0", "id": "noaa-pathfinder-opendap",
+         |"attributes": [],
+         |"assets": {"column_name": "path", "format": "opendap"},
+         |"aggregation_control": {"variable_column_name": "variable",
+         |  "groupby_attrs": ["domain"],
+         |  "aggregations": [{"type": "union", "attribute_name": "variable"}]},
+         |"catalog_dict": [${rows.mkString(",\n")}]}""".stripMargin)
+    json.toString
+  }
+
   test("format(esmcat) reads a csv-backed catalog, same rows as EsmCatalog.open") {
     val json = PipelineDemo.ensureCatalog(spark, "/root/testdata/sf0.001")
     val dsv2 = spark.read.format("esmcat").load(json)
@@ -19,9 +83,8 @@ class EsmCatalogSourceSpec extends AnyFunSuite {
     assert(dsv2.exceptAll(api).isEmpty && api.exceptAll(dsv2).isEmpty)
   }
 
-  test("format(esmcat) decodes tuple-literal iterable columns from the reference fixture") {
-    val df = spark.read.format("esmcat")
-      .load("/root/reference/tests/sample-catalogs/multi-variable-catalog.json")
+  test("format(esmcat) decodes tuple-literal iterable columns (multi-variable-catalog shape)") {
+    val df = spark.read.format("esmcat").load(multiVariableCatalog)
     import org.apache.spark.sql.types._
     assert(df.schema("variable").dataType == ArrayType(StringType))
     val first = df.orderBy("time_range").select("variable").limit(1)
@@ -56,8 +119,7 @@ class EsmCatalogSourceSpec extends AnyFunSuite {
   }
 
   test("format(esmcat) declines array-column predicates (residual-only, still correct)") {
-    val df = spark.read.format("esmcat")
-      .load("/root/reference/tests/sample-catalogs/multi-variable-catalog.json")
+    val df = spark.read.format("esmcat").load(multiVariableCatalog)
       .filter(array_contains(col("variable"), "SHF"))
     val plan = df.queryExecution.executedPlan.toString
     val pushedList = "esmcat PushedFilters: \\[([^\\]]*)\\]".r
@@ -115,8 +177,7 @@ class EsmCatalogSourceSpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(gotF == wantF)
     // grouping by an ARRAY column stays declined (still correct via Spark)
-    val arrCat = spark.read.format("esmcat")
-      .load("/root/reference/tests/sample-catalogs/multi-variable-catalog.json")
+    val arrCat = spark.read.format("esmcat").load(multiVariableCatalog)
     val byArr = arrCat.groupBy("variable").agg(count(lit(1)).as("n"))
     val aPlan = byArr.queryExecution.executedPlan.toString
     assert(!aPlan.contains("PushedGroupBy: [variable]"), aPlan.take(1500))
@@ -124,13 +185,11 @@ class EsmCatalogSourceSpec extends AnyFunSuite {
   }
 
   test("format(esmcat) aggregate pushdown on a dict catalog incl. non-string scalars") {
-    val agg = spark.read.format("esmcat")
-      .load("/root/reference/tests/sample-catalogs/noaa-pathfinder-opendap.json")
+    val agg = spark.read.format("esmcat").load(opendapCatalog)
       .agg(count(lit(1)).as("n"), min("scode").as("lo"), max("scode").as("hi"))
     val plan = agg.queryExecution.executedPlan.toString
     assert(plan.contains("PushedAggregates: [COUNT(*), MIN(scode), MAX(scode)]"), plan.take(1500))
-    val raw = graft.catalog.EsmCatalog.open(spark,
-      "/root/reference/tests/sample-catalogs/noaa-pathfinder-opendap.json").df
+    val raw = graft.catalog.EsmCatalog.open(spark, opendapCatalog).df
     assert(agg.head() == raw.agg(count(lit(1)), min("scode"), max("scode")).head())
   }
 

@@ -2133,8 +2133,8 @@ class Bm25IndexSpec extends AnyFunSuite {
 
   test("NEAR scorer: frozen slop model scores bit-identically to the indexed NEAR search (r16)") {
     // the streaming-shaped proximity plane: df frozen from the positions
-    // plane's BANDED vote, tf row-local via the slop-aware PhraseCount
-    // kernel — both sides must implement one proximity rule or the
+    // plane's BANDED vote, tf row-local via the slop-aware PhraseKernel
+    // loop — both sides must implement one proximity rule or the
     // score bits drift (the r15 phrase-scorer pin, at slop = 1)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text")
@@ -2656,7 +2656,7 @@ class Bm25IndexSpec extends AnyFunSuite {
 
   test("phrase scorer: frozen model scores bit-identically to the indexed search (r15)") {
     // the streaming-shaped phrase plane: tf from the doc's OWN tokens
-    // (PhraseCount kernel) + df/N/avgdl frozen from the positional store
+    // (PhraseKernel loop) + df/N/avgdl frozen from the positional store
     // must reproduce bm25PhraseTopK's scored surface exactly — same
     // adjacency semantics, same StrictMath idf, same float expression
     // shapes; a divergence in any of them breaks the score BITS
@@ -2741,11 +2741,10 @@ class Bm25IndexSpec extends AnyFunSuite {
   }
 
   test("battery-as-data phrase scorer: bit-identical to the per-phrase scorer (r17)") {
-    // bm25PhraseScore plans one PhraseCount branch + one corpus pass per
-    // phrase; the batch form rides the whole battery inside ONE
-    // PhraseCountBatch expression. One shared adjacency kernel + the
-    // same float shapes must make the rows bit-identical — at slop 0
-    // and 2, with repeated-term phrases, zero-match probes, and
+    // bm25PhraseScore refuses an empty phrase and otherwise runs the
+    // bm25PhraseScoreBatch body (the whole battery inside ONE
+    // PhraseCountBatch expression): the rows must be bit-identical — at
+    // slop 0 and 2, with repeated-term phrases, zero-match probes, and
     // null-text docs in the corpus.
     val corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text")
@@ -2771,13 +2770,23 @@ class Bm25IndexSpec extends AnyFunSuite {
       assert(perPhrase.nonEmpty && asData == perPhrase, s"slop=$slop")
       assert(perPhrase.exists(_._1 == "p3")) // repeated-term phrase matched
     }
-    // blank probe: the per-phrase kernel refuses an empty phrase; the
-    // batch form scores it as nothing (a sweep must not abort on one
+    // blank probe: bm25PhraseScore refuses an empty phrase, naming it;
+    // the batch form scores it as nothing (a sweep must not abort on one
     // blank probe) and leaves every other probe untouched
     val model0 = KeywordSearch.bm25PhraseModelFromIndex(spark, dir, phrases)
     val blanked = model0.copy(
       phrases = model0.phrases :+ ("pe" -> Seq.empty[String]),
       idf = model0.idf :+ 0.0)
+    val refused = intercept[IllegalArgumentException] {
+      KeywordSearch.bm25PhraseScore(docs, "text", "doc_id", blanked)
+    }
+    assert(refused.getMessage.contains("phrase 'pe' has no tokens"), refused.getMessage)
+    // the per-phrase scorer's schema, nullability included (query_id, dl
+    // and tf non-null; doc_id and score follow the input's nullability)
+    assert(KeywordSearch.bm25PhraseScore(docs, "text", "doc_id", model0).schema
+      .map(f => (f.name, f.dataType.simpleString, f.nullable)) == Seq(
+        ("query_id", "string", false), ("doc_id", "bigint", true),
+        ("score", "double", true), ("dl", "bigint", false), ("tf", "bigint", false)))
     val outB = key(KeywordSearch.bm25PhraseScoreBatch(docs, "text", "doc_id", blanked))
     assert(!outB.exists(_._1 == "pe"))
     assert(outB == key(KeywordSearch.bm25PhraseScore(docs, "text", "doc_id", model0)))

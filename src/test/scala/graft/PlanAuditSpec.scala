@@ -586,12 +586,10 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("battery-as-data phrase scorer: ONE corpus pass at any battery size (r17)") {
-    // bm25PhraseScore plans one PhraseCount branch + one corpus scan per
-    // phrase (unioned); the batch scorer rides the battery inside ONE
-    // PhraseCountBatch expression — one corpus scan, zero unions, no
-    // shuffle at all (row-local kernel + literal-array id/idf lookup),
-    // the shape that scores a decontamination STREAM against thousands
-    // of probes
+    // the batch scorer rides the battery inside ONE PhraseCountBatch
+    // expression — one corpus scan, zero unions, no shuffle at all
+    // (row-local kernel + literal-array id/idf lookup), the shape that
+    // scores a decontamination STREAM against thousands of probes
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val idx = java.nio.file.Files.createTempDirectory("graft_bm25_psbaudit").toString
     graft.operators.KeywordSearch.bm25IndexBuild(docs, "text", "doc_id", idx,
@@ -613,13 +611,13 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(corpusScans(big) == 1, big.take(3000))
     assert(!big.contains("Union"), big.take(3000))
     assert(!big.contains("Exchange"), big.take(3000))
-    // the per-phrase scorer really is plan-linear (its right trade for
-    // driver-sized batteries): one corpus scan branch per phrase
+    // bm25PhraseScore runs the same body: one corpus scan for 8 phrases,
+    // not one scan branch per phrase
     val model8 = graft.operators.KeywordSearch.bm25PhraseModelFromIndex(
       spark, idx, (0 until 8).map(i => (s"p$i", s"w${i}x w${i}y")))
     val perPhrase = graft.operators.KeywordSearch.bm25PhraseScore(
       docs, "text", "doc_id", model8).queryExecution.executedPlan.toString
-    assert(corpusScans(perPhrase) == 8, perPhrase.take(3000))
+    assert(corpusScans(perPhrase) == 1, perPhrase.take(3000))
   }
 
   test("ann index probes prune store partitions; ADC candidates never read vec (r14)") {
