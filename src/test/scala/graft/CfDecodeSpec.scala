@@ -196,8 +196,9 @@ class CfDecodeSpec extends AnyFunSuite {
     // (the filename's 040001 period start, stamped at interval end);
     // 146059 → day-of-year 59 → Mar 1 (noleap). TLAT values equal the
     // load_netcdf4 oracle's pinned raw values (no scale/offset attrs).
-    val f = "/root/reference/tests/sample_data/cesm-le/" +
+    val f = s"${ReferenceData.sampleData}/cesm-le/" +
       "b.e11.B1850C5CN.f09_g16.005.pop.h.SHF.040001-049912.nc"
+    ReferenceData.assumePresent(f)
     val df = graft.catalog.EsmDataSource("cesm", Nil, "path", None, Nil,
         storageOptions = Map("graft.kerchunk.decode" -> "cf"))
       .openAsset(spark, f, "netcdf")

@@ -10,41 +10,10 @@ import graft.harness.PipelineDemo
 class EsmCatalogSourceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  /** A 5-row CSV catalog shaped like intake-esm's
-    * `multi-variable-catalog` (FIXTURES.md §1.2): the §1.1 CESM schema
-    * with `variable` cells written as Python tuple literals. */
-  private lazy val multiVariableCatalog: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_multivar")
-    val vars = Seq(
-      "('SHF', 'REGION_MASK', 'ANGLE', 'DXU', 'KMT', 'NO2', 'O2')",
-      "('SHF', 'NO2', 'O2')",
-      "('SHF', 'REGION_MASK', 'ANGLE')",
-      "('NO2', 'O2')",
-      "('KMT', 'DXU')")
-    val rows = Seq(
-      ("CTRL", "b.e11.B1850C5CN.f09_g16.005", 0, "040001-049912"),
-      ("CTRL", "b.e11.B1850C5CN.f09_g16.005", 0, "050001-059912"),
-      ("20C", "b.e11.B20TRC5CNBDRD.f09_g16.001", 1, "192001-200512"),
-      ("20C", "b.e11.B20TRC5CNBDRD.f09_g16.002", 2, "192001-200512"),
-      ("RCP85", "b.e11.BRCP85C5CNBDRD.f09_g16.001", 1, "200601-208012"))
-    val csv = ("experiment,case,component,stream,variable,member_id,path,time_range" +:
-      rows.zip(vars).map { case ((exp, cs, member, tr), v) =>
-        s"""$exp,$cs,ocn,pop.h,"$v",$member,./sample_data/$cs.pop.h.$tr.nc,$tr"""
-      }).mkString("", "\n", "\n")
-    java.nio.file.Files.writeString(dir.resolve("multi-variable-catalog.csv"), csv)
-    val json = dir.resolve("multi-variable-catalog.json")
-    java.nio.file.Files.writeString(json,
-      """{"esmcat_version": "0.1.0", "id": "sample-multi-variable-cesm1-lens",
-        |"catalog_file": "multi-variable-catalog.csv",
-        |"attributes": [],
-        |"assets": {"column_name": "path", "format": "netcdf"},
-        |"aggregation_control": {"variable_column_name": "variable",
-        |  "groupby_attrs": ["component", "experiment", "stream"],
-        |  "aggregations": [{"type": "union", "attribute_name": "variable"},
-        |    {"type": "join_existing", "attribute_name": "time_range",
-        |     "options": {"dim": "time"}}]}}""".stripMargin)
-    json.toString
-  }
+  /** The FIXTURES.md §1.2 `multi-variable-catalog` shape
+    * ([[CatalogFixtures.multiVariable]]). */
+  private lazy val multiVariableCatalog: String = CatalogFixtures.multiVariable(
+    java.nio.file.Files.createTempDirectory("graft_multivar")).toString
 
   /** An inline `catalog_dict` catalog shaped like intake-esm's
     * `noaa-pathfinder-opendap` (FIXTURES.md §1.5): string columns, an

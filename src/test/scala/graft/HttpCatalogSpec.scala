@@ -16,11 +16,19 @@ import graft.sources.HttpFetch
   * This spec pins the engine's http catalog plane against a local fixture
   * server: descriptor + relative catalog_file resolve over http, iterable
   * columns decode, search/keys work, downloads cache, and oversized bodies
-  * refuse. No external egress — the server binds a loopback ephemeral port.
+  * refuse. No external egress — the server binds a loopback ephemeral port
+  * and serves catalogs the spec writes itself: the FIXTURES.md §1.2
+  * `multi-variable-catalog` (tuple-literal cells, relative catalog_file)
+  * and an `access-columns-with-lists` catalog whose table is gzipped.
   */
 class HttpCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val spark = TestSpark.spark
-  private val fixtureDir = "/root/reference/tests/sample-catalogs"
+  private val fixtureDir: java.nio.file.Path = {
+    val dir = Files.createTempDirectory("graft_http_catalogs")
+    CatalogFixtures.multiVariable(dir)
+    CatalogFixtures.accessColumnsWithLists(dir)
+    dir
+  }
   private val hits = new AtomicInteger(0)
   private var server: HttpServer = _
   private def base: String = s"http://127.0.0.1:${server.getAddress.getPort}"
@@ -30,7 +38,7 @@ class HttpCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     server.createContext("/", { exchange =>
       hits.incrementAndGet()
       val rel = exchange.getRequestURI.getPath.stripPrefix("/")
-      val p = Paths.get(fixtureDir, rel)
+      val p = fixtureDir.resolve(rel)
       if (Files.isRegularFile(p)) {
         val bytes = Files.readAllBytes(p)
         exchange.sendResponseHeaders(200, bytes.length.toLong)

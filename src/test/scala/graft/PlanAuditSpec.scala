@@ -191,7 +191,7 @@ class PlanAuditSpec extends AnyFunSuite {
       !p.contains("BroadcastNestedLoopJoin"), p.take(2000))
     assert("Exchange hashpartitioning".r.findAllIn(p).size <= 1, p.take(2000))
     // the netCDF3 plane compiles to the same shape (shared machinery)
-    val nc = "/root/reference/tests/sample_data/cmip/cmip5/output1/NIMR-KMA/HadGEM2-AO/" +
+    val nc = s"${ReferenceData.sampleData}/cmip/cmip5/output1/NIMR-KMA/HadGEM2-AO/" +
       "rcp85/mon/atmos/Amon/r1i1p1/v20130815/tasmax/" +
       "tasmax_Amon_HadGEM2-AO_rcp85_r1i1p1_200511-200512.nc"
     val nEntries = graft.sources.NetCDF3Index.read(spark, nc)
@@ -243,6 +243,8 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("catalog netcdf flagship keeps per-member work parallel: broadcast metadata, banded reads") {
+    // the registered gate plans over the reference's cesm1-lens catalog
+    ReferenceData.assumePresent(s"${ReferenceData.catalogs}/cesm1-lens-netcdf.json")
     val p = plan("load_catalog_netcdf")
     assert(p.contains("BroadcastHashJoin"), p.take(2000))
     assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct") &&

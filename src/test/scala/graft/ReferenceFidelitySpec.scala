@@ -9,12 +9,17 @@ import graft.catalog.{CatalogReader, EsmCatalog}
   * numbers (reference: tests/test_core.py:243-281, tests/utils.py paths).
   * The catalog/query plane must reproduce the reference's counts exactly;
   * asset materialization is not exercised (netCDF/zarr need connectors).
+  * Each test that reads the reference's files first checks they exist
+  * ([[ReferenceData.assumePresent]]) and cancels where they do not; the
+  * tests on generated inputs run everywhere.
   */
 class ReferenceFidelitySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-  val base = "/root/reference/tests/sample-catalogs"
+  val base = ReferenceData.catalogs
+  private val noaaIndex = s"${ReferenceData.sampleData}/kerchunk-files/noaa-nwm-test-reference.json"
 
   test("cesm1-lens: key membership (test_catalog_contains)") {
+    ReferenceData.assumePresent(s"$base/cesm1-lens-netcdf.json")
     val cat = EsmCatalog.open(spark, s"$base/cesm1-lens-netcdf.json")
     assert(cat.containsKey("ocn.20C.pop.h"))
     assert(cat.containsKey("ocn.CTRL.pop.h"))
@@ -23,6 +28,7 @@ class ReferenceFidelitySpec extends AnyFunSuite {
   }
 
   test("cesm1-lens: search sizes (test_catalog_search expected_size table)") {
+    ReferenceData.assumePresent(s"$base/cesm1-lens-netcdf.json")
     val cat = EsmCatalog.open(spark, s"$base/cesm1-lens-netcdf.json")
     assert(cat.search(Map("experiment" -> "CTRL")).length == 1L)
     assert(cat.search(Map("experiment" -> Seq("CTRL", "20C"))).length == 2L)
@@ -31,6 +37,7 @@ class ReferenceFidelitySpec extends AnyFunSuite {
   }
 
   test("access catalogs: gz csv + container dtypes + membership search (test_catalog_search_columns_with_iterables)") {
+    ReferenceData.assumePresent(s"$base/access-columns-with-lists.json", s"$base/access-columns-with-tuples.json")
     for ((file, ct) <- Seq(
         "access-columns-with-lists.json"  -> CatalogReader.ContainerType.ListT,
         "access-columns-with-tuples.json" -> CatalogReader.ContainerType.TupleT)) {
@@ -42,6 +49,7 @@ class ReferenceFidelitySpec extends AnyFunSuite {
   }
 
   test("single-item iterables decode (access-single-item-iterables)") {
+    ReferenceData.assumePresent(s"$base/access-single-item-iterables.json")
     val cat = EsmCatalog.open(spark, s"$base/access-single-item-iterables.json")
     assert(cat.columnsWithIterables.contains("variable"))
     val sizes = cat.df.select(size(col("variable"))).collect().map(_.getInt(0))
@@ -49,6 +57,7 @@ class ReferenceFidelitySpec extends AnyFunSuite {
   }
 
   test("noaa opendap dict catalog: non-string scalar equality search (_search.py:54)") {
+    ReferenceData.assumePresent(s"$base/noaa-pathfinder-opendap.json")
     val cat = EsmCatalog.open(spark, s"$base/noaa-pathfinder-opendap.json")
     assert(cat.df.schema("scode").dataType == org.apache.spark.sql.types.LongType)
     val expected = cat.df.filter(col("scode") === 482).count()
@@ -57,6 +66,7 @@ class ReferenceFidelitySpec extends AnyFunSuite {
   }
 
   test("cmip6: all-null dcpp_init_year pruned from groupby attrs (cat.py:26-45)") {
+    ReferenceData.assumePresent(s"$base/cmip6-netcdf.json")
     val cat = EsmCatalog.open(spark, s"$base/cmip6-netcdf.json")
     assert(cat.model.groupbyAttrs.contains("dcpp_init_year") ||
       cat.df.columns.contains("dcpp_init_year"))
@@ -65,6 +75,7 @@ class ReferenceFidelitySpec extends AnyFunSuite {
   }
 
   test("catalog-dict-records: inline zarr records group and search") {
+    ReferenceData.assumePresent(s"$base/catalog-dict-records.json")
     val cat = EsmCatalog.open(spark, s"$base/catalog-dict-records.json")
     assert(cat.length > 0)
     val sub = cat.search(Map("variable" -> "FLNS"))
@@ -72,6 +83,7 @@ class ReferenceFidelitySpec extends AnyFunSuite {
   }
 
   test("multi-variable catalog: flattened uniques") {
+    ReferenceData.assumePresent(s"$base/multi-variable-catalog.json")
     val cat = EsmCatalog.open(spark, s"$base/multi-variable-catalog.json")
     val u   = cat.uniqueValues("variable").toSet
     assert(Set("SHF", "REGION_MASK", "NO2", "O2").subsetOf(u))
@@ -79,12 +91,14 @@ class ReferenceFidelitySpec extends AnyFunSuite {
   }
 
   test("set-container catalog decodes as SetT (access-columns-with-sets)") {
+    ReferenceData.assumePresent(s"$base/access-columns-with-sets.json")
     val cat = EsmCatalog.open(spark, s"$base/access-columns-with-sets.json")
     assert(cat.iterableDtypes.get("variable").contains(CatalogReader.ContainerType.SetT))
     assert(cat.search(Map("variable" -> Seq("aice_m"))).length == 1L)
   }
 
   test("parquet catalog file loads identically to its csv twin (cmip5-netcdf-parquet)") {
+    ReferenceData.assumePresent(s"$base/cmip5-netcdf-parquet.json", s"$base/cmip5-netcdf.json")
     val pq  = EsmCatalog.open(spark, s"$base/cmip5-netcdf-parquet.json")
     val csv = EsmCatalog.open(spark, s"$base/cmip5-netcdf.json")
     assert(pq.df.count() == csv.df.count())
@@ -93,6 +107,7 @@ class ReferenceFidelitySpec extends AnyFunSuite {
   }
 
   test("no aggregation_control: groupby falls back, unique has no derived entry (test_catalog_unique)") {
+    ReferenceData.assumePresent(s"$base/cmip6-netcdf-noagg.json")
     val cat = EsmCatalog.open(spark, s"$base/cmip6-netcdf-noagg.json")
     // reference: len(uniques) == len(cat.df.columns) + 0 for the noagg catalog
     assert(cat.uniqueValues.size == cat.df.columns.length)
@@ -102,6 +117,7 @@ class ReferenceFidelitySpec extends AnyFunSuite {
   }
 
   test("per-row format column drives asset dispatch (cmip6-bcc-mixed-formats)") {
+    ReferenceData.assumePresent(s"$base/cmip6-bcc-mixed-formats.json")
     val cat = EsmCatalog.open(spark, s"$base/cmip6-bcc-mixed-formats.json")
     assert(cat.model.assets.formatColumnName.contains("format"))
     val formats = cat.df.select("format").distinct()
@@ -119,6 +135,7 @@ class ReferenceFidelitySpec extends AnyFunSuite {
   }
 
   test("bad catalog: dangling './tests/…' catalog_file recovers via the sibling fallback") {
+    ReferenceData.assumePresent(s"$base/bad.json")
     // the reference fails on this fixture (cat.py:318-322 resolves only
     // against the descriptor dir); the engine's documented extra fallback
     // (CatalogReader.resolveCatalogFile) finds the csv next to the json
@@ -127,10 +144,11 @@ class ReferenceFidelitySpec extends AnyFunSuite {
   }
 
   test("kerchunk reference index: chunk map matches the sample the reference opens") {
+    ReferenceData.assumePresent(noaaIndex)
     // tests/sample_data/kerchunk-files + test_source.py:93-108: the same
     // noaa-nwm index the reference feeds xarray's zarr engine
     import org.apache.spark.sql.functions.col
-    val path = "/root/reference/tests/sample_data/kerchunk-files/noaa-nwm-test-reference.json"
+    val path = noaaIndex
     val idx = graft.sources.KerchunkIndex.read(spark, path)
     assert(idx.count() == 345) // every entry of the refs map is enumerated
     // remote byte-range chunk: [url, offset, length]
@@ -159,8 +177,9 @@ class ReferenceFidelitySpec extends AnyFunSuite {
   }
 
   test("kerchunk chunk materialization: local ranges byte-exact, remote refused, inline decoded") {
+    ReferenceData.assumePresent(noaaIndex)
     import org.apache.spark.sql.functions.col
-    val noaa = "/root/reference/tests/sample_data/kerchunk-files/noaa-nwm-test-reference.json"
+    val noaa = noaaIndex
     // inline base64 chunks of the noaa sample decode to the json's own bytes
     val idx = graft.sources.KerchunkIndex.read(spark, noaa)
     val inline = graft.sources.KerchunkIndex
@@ -191,12 +210,13 @@ class ReferenceFidelitySpec extends AnyFunSuite {
   }
 
   test("one file's chunks spread across offset-band partitions, bytes stay exact") {
+    ReferenceData.assumePresent(noaaIndex)
     import org.apache.spark.sql.functions.spark_partition_id
     import spark.implicits._
     // 64 ranges of ONE physical file: under url-only partitioning they all
     // land in one task; offset banding (bytesPerTask=512 → 8 bands) must
     // spread them while every band still reads its exact bytes
-    val file = "/root/reference/tests/sample_data/kerchunk-files/noaa-nwm-test-reference.json"
+    val file = noaaIndex
     val n = 64
     val entries = (0 until n).map { i =>
       (s"v/$i", "v", s"$i", "ref", file, Some(i.toLong * 64), Some(32L), None: Option[String])
@@ -214,13 +234,14 @@ class ReferenceFidelitySpec extends AnyFunSuite {
   }
 
   test("zarr typed decode reproduces the reference sample's inline chunk values") {
+    ReferenceData.assumePresent(noaaIndex)
     import org.apache.spark.sql.functions.col
     // ground truth derived independently (python: base64 -> zlib.decompress
     // -> struct.unpack('<i')) from the same noaa-nwm index the reference
     // opens via xarray/zarr (test_source.py:93-108):
     //   time/0          <i4, compressor null : 24850080 + 60*i, 10 values
     //   reference_time/0 <i4, compressor zlib: [24720480]
-    val noaa = "/root/reference/tests/sample_data/kerchunk-files/noaa-nwm-test-reference.json"
+    val noaa = noaaIndex
     val idx = graft.sources.KerchunkIndex.read(spark, noaa)
     val typed = graft.sources.KerchunkIndex.decodeTyped(
         graft.sources.KerchunkIndex.materializeChunks(idx.filter(col("kind") =!= "ref")),
@@ -735,9 +756,13 @@ class ReferenceFidelitySpec extends AnyFunSuite {
   }
 
   test("netcdf classic: the real CMIP5 sample decodes with labeled coordinates") {
-    val nc = "/root/reference/tests/sample_data/cmip/cmip5/output1/NIMR-KMA/HadGEM2-AO/" +
+    val nc = s"${ReferenceData.sampleData}/cmip/cmip5/output1/NIMR-KMA/HadGEM2-AO/" +
       "rcp85/mon/atmos/Amon/r1i1p1/v20130815/tasmax/" +
       "tasmax_Amon_HadGEM2-AO_rcp85_r1i1p1_200511-200512.nc"
+    val h5 = s"${ReferenceData.sampleData}/cmip/CMIP6/CMIP/BCC/BCC-ESM1/piControl/" +
+      "r1i1p1f1/Amon/tasmax/gn/v20181214/tasmax/" +
+      "tasmax_Amon_BCC-ESM1_piControl_r1i1p1f1_gn_185001-230012.nc"
+    ReferenceData.assumePresent(nc, h5)
     val entries = graft.sources.NetCDF3Index.read(spark, nc)
     val meta = graft.sources.KerchunkIndex.arrayMeta(entries).collect()
       .map(r => r.getAs[String]("variable") -> r).toMap
@@ -766,9 +791,6 @@ class ReferenceFidelitySpec extends AnyFunSuite {
     assert(temps.length == 50 && temps.forall(t => t > 150 && t < 350))
     // HDF5-backed netCDF-4 (the CMIP6 samples) now dispatches to Hdf5Index
     // through the same `netcdf` format — the magic decides the parser
-    val h5 = "/root/reference/tests/sample_data/cmip/CMIP6/CMIP/BCC/BCC-ESM1/piControl/" +
-      "r1i1p1f1/Amon/tasmax/gn/v20181214/tasmax/" +
-      "tasmax_Amon_BCC-ESM1_piControl_r1i1p1f1_gn_185001-230012.nc"
     val h5entries = graft.catalog.EsmDataSource("k", Nil, "path", None, Nil)
       .openAsset(spark, h5, "netcdf")
     assert(h5entries.filter(col("member") === ".zarray").count() == 9)
@@ -776,6 +798,14 @@ class ReferenceFidelitySpec extends AnyFunSuite {
 
   test("netCDF-4 (HDF5): real CESM-LE/CMIP6/MPI-GE samples decode via dispatch") {
     import org.apache.spark.sql.functions.col
+    val bcc = s"${ReferenceData.sampleData}/cmip/CMIP6/CMIP/BCC/BCC-ESM1/piControl/" +
+      "r1i1p1f1/Amon/tasmax/gn/v20181214/tasmax/" +
+      "tasmax_Amon_BCC-ESM1_piControl_r1i1p1f1_gn_185001-230012.nc"
+    val mpi = s"${ReferenceData.sampleData}/mpi-ge/hist/hist0001/outdata/mpiom/" +
+      "hist0001_mpiom_data_2d_mm_18500101_18501231.nc"
+    val huge = s"${ReferenceData.sampleData}/cesm-le/" +
+      "b.e11.B1850C5CN.f09_g16.005.pop.h.SHF.040001-049912.nc"
+    ReferenceData.assumePresent(bcc, mpi, huge)
     def coordRows(path: String, vars: Seq[String]) =
       graft.catalog.EsmDataSource("n4", Nil, "path", None, Nil,
           storageOptions = Map("graft.kerchunk.decode" -> "coords"))
@@ -789,9 +819,6 @@ class ReferenceFidelitySpec extends AnyFunSuite {
     // CMIP6 (BCC writer): contiguous f8/f4 variables, LE data, dense root
     // attrs (multi-row fractal heap + depth-1 name b-tree). Values pinned
     // by the independent python struct parse (scripts/h5survey.py).
-    val bcc = "/root/reference/tests/sample_data/cmip/CMIP6/CMIP/BCC/BCC-ESM1/piControl/" +
-      "r1i1p1f1/Amon/tasmax/gn/v20181214/tasmax/" +
-      "tasmax_Amon_BCC-ESM1_piControl_r1i1p1f1_gn_185001-230012.nc"
     val b = coordRows(bcc, Seq("lat", "tasmax", "height"))
     assert(b(("lat", "0")) == ("lat", -87.86379883923263))
     assert(b(("tasmax", "0.0.0")) == ("time.lat.lon", 249.50198364257812))
@@ -800,8 +827,6 @@ class ReferenceFidelitySpec extends AnyFunSuite {
 
     // MPI-GE (CDO writer): BIG-endian f4 dimension scales next to LE data
     // in the same file, 4-D contiguous variables
-    val mpi = "/root/reference/tests/sample_data/mpi-ge/hist/hist0001/outdata/mpiom/" +
-      "hist0001_mpiom_data_2d_mm_18500101_18501231.nc"
     val m = coordRows(mpi, Seq("sst", "time", "y"))
     assert(m(("sst", "0.0.0.0"))._2 == 279.2419738769531)
     assert(m(("sst", "0.0.0.1"))._2 == 279.3222351074219)
@@ -812,8 +837,6 @@ class ReferenceFidelitySpec extends AnyFunSuite {
 
     // CESM-LE file whose `history` exceeds the managed-object limit: the
     // huge-object path (v2 b-tree type 1) must surface the full attribute
-    val huge = "/root/reference/tests/sample_data/cesm-le/" +
-      "b.e11.B1850C5CN.f09_g16.005.pop.h.SHF.040001-049912.nc"
     val rootAttrs = graft.sources.Hdf5Index.read(spark, huge)
       .filter(col("key") === ".zattrs").head().getAs[String]("inline_value")
     assert(rootAttrs.contains("history"))
@@ -847,6 +870,7 @@ class ReferenceFidelitySpec extends AnyFunSuite {
   }
 
   test("catalog netcdf end-to-end: relative paths resolve, to_dataset_dict decodes") {
+    ReferenceData.assumePresent(s"$base/cesm1-lens-netcdf.json")
     import org.apache.spark.sql.functions.col
     // the reference's own catalog: './tests/sample_data/…' asset paths are
     // CWD-relative there; the engine's descriptor-ancestor fallback finds
@@ -871,7 +895,7 @@ class ReferenceFidelitySpec extends AnyFunSuite {
     // on the original name, not a mangled one)
     val cat2 = EsmCatalog.open(spark, s"$base/cesm1-lens-netcdf.json")
     val entry = cat2.getEntry("ocn.CTRL.pop.h")
-    assert(entry.records.forall(_.apply("path").toString.startsWith("/root/reference/")))
+    assert(entry.records.forall(_.apply("path").toString.startsWith(s"${ReferenceData.root}/")))
     // toDatatree rebuilds the catalog with sep="/" — descriptorDir must
     // survive that copy or the same assets go unresolved
     val tree = cat.toDatatree(Nil)
@@ -879,10 +903,11 @@ class ReferenceFidelitySpec extends AnyFunSuite {
     // Hadoop's single-slash file:/ descriptor form resolves the same way
     val cat3 = EsmCatalog.open(spark, s"file:$base/cesm1-lens-netcdf.json")
     assert(cat3.getEntry("ocn.CTRL.pop.h").records
-      .forall(_.apply("path").toString.startsWith("/root/reference/")))
+      .forall(_.apply("path").toString.startsWith(s"${ReferenceData.root}/")))
   }
 
   test("corpus sweep: EVERY HDF5 .nc file in the reference sample data parses") {
+    ReferenceData.assumePresent(ReferenceData.sampleData)
     import org.apache.spark.sql.functions.col
     // the honest completeness claim behind the netcdf dispatch: the whole
     // sample corpus (CESM-LE, CMIP5/6, MPI-GE, ...) parses structurally —
@@ -890,7 +915,7 @@ class ReferenceFidelitySpec extends AnyFunSuite {
     import scala.jdk.CollectionConverters._
     val magic = Array[Byte](0x89.toByte, 'H', 'D', 'F')
     val all = java.nio.file.Files.walk(
-        java.nio.file.Paths.get("/root/reference/tests/sample_data"))
+        java.nio.file.Paths.get(ReferenceData.sampleData))
       .filter(p => p.toString.endsWith(".nc"))
       .iterator().asScala.toList
     val h5files = all.filter { p =>
