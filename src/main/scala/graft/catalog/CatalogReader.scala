@@ -2,6 +2,8 @@ package graft.catalog
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -10,15 +12,19 @@ import org.apache.spark.sql.types._
   *
   * Spark-first re-expression of the reference's CatalogFileDataReader
   * (intake_esm/cat.py:582-711): the JSON descriptor is parsed on the driver,
-  * the asset table is a *lazy* `DataFrame` plan (`spark.read.csv/parquet`),
-  * all columns read as strings (`infer_schema=False`, cat.py:641,648), and
-  * python-literal iterable cells are decoded into `ArrayType(StringType)`
-  * columns (cat.py:652-682).
+  * the asset table is read with `spark.read.csv/parquet/json`, all columns
+  * as strings (`infer_schema=False`, cat.py:641,648), and python-literal
+  * iterable cells are decoded into `ArrayType(StringType)` columns
+  * (cat.py:652-682).
   *
-  * Scale posture: the table itself may be huge (100 TB of catalog rows is
-  * just a big parquet scan) — nothing here collects it. The only driver-side
-  * materialization is a single `limit(1)` schema probe, mirroring the
-  * reference's `lf.head(1)` (cat.py:562).
+  * Scale posture: a metadata-sized table (at most [[DriverGuard]]'s cap of
+  * rows, the common case) is collected once at open and held as a local
+  * relation, like the reference's in-memory frame (cat.py:492-579): the
+  * optimizer then folds every search filter and projection over it on the
+  * driver, so searching it runs no Spark job. A larger table (100 TB of
+  * catalog rows is just a big parquet scan) stays a lazy plan after the
+  * `limit(cap + 1)` collect that finds it too big; its iterable probe is a
+  * `limit(1)`, mirroring the reference's `lf.head(1)` (cat.py:562).
   */
 object CatalogReader {
 
@@ -92,22 +98,25 @@ object CatalogReader {
     */
   def probeIterableColumns(df: DataFrame): Map[String, ContainerType.Value] = {
     val stringCols = df.schema.fields.collect { case f if f.dataType == StringType => f.name }
-    if (stringCols.isEmpty) return Map.empty
-    val head = df.select(stringCols.map(col): _*).limit(1).collect()
-    if (head.isEmpty) return Map.empty
-    val row = head(0)
-    stringCols.zipWithIndex.flatMap { case (c, i) =>
-      Option(row.getString(i)).map(_.trim).collect {
-        case s if iterableProbe.matches(s) =>
-          val ct = s.head match {
-            case '(' => ContainerType.TupleT
-            case '{' => ContainerType.SetT
-            case _   => ContainerType.ListT
-          }
-          c -> ct
-      }
-    }.toMap
+    if (stringCols.isEmpty) Map.empty
+    else probeRow(stringCols.toSeq, df.select(stringCols.map(col): _*).limit(1).collect().headOption)
   }
+
+  /** [[probeIterableColumns]] over a first row already on the driver. */
+  private def probeRow(stringCols: Seq[String], first: Option[Row]): Map[String, ContainerType.Value] =
+    first.fold(Map.empty[String, ContainerType.Value]) { row =>
+      stringCols.flatMap { c =>
+        Option(row.getAs[String](c)).map(_.trim).collect {
+          case s if iterableProbe.matches(s) =>
+            val ct = s.head match {
+              case '(' => ContainerType.TupleT
+              case '{' => ContainerType.SetT
+              case _   => ContainerType.ListT
+            }
+            c -> ct
+        }
+      }.toMap
+    }
 
   /** Python-literal → JSON → array decode, as a codegen'd expression chain.
     *
@@ -126,6 +135,26 @@ object CatalogReader {
   def decodeIterableColumns(df: DataFrame, cols: Set[String]): DataFrame =
     if (cols.isEmpty) df
     else df.withColumns(cols.map(c => c -> decodeIterable(col(c))).toMap)
+
+  /** [[decodeIterableColumns]] over rows already on the driver, as a local
+    * relation of the decoded rows. Each distinct iterable cell is decoded
+    * once, by [[decodeIterable]] folded over a local relation of the
+    * cells: catalog rows repeat their iterable values (one realm or
+    * variable list per table), and the fold evaluates row by row. */
+  private def decodeRows(spark: SparkSession, raw: DataFrame, rows: Array[Row],
+                         cols: Set[String]): DataFrame = {
+    val schema = decodeIterableColumns(raw, cols).schema
+    val idx    = cols.map(raw.schema.fieldIndex)
+    val cells  = idx.toSeq.flatMap(i => rows.iterator.map(_.getString(i))).distinct
+    val cellDf = spark.createDataFrame(cells.map(Row(_)).asJava,
+      StructType(Seq(StructField("cell", StringType))))
+    val decoded = cellDf.select(col("cell"), decodeIterable(col("cell"))).collect()
+      .map(r => r.getString(0) -> r.get(1)).toMap
+    val out = rows.map(r => Row.fromSeq(r.toSeq.zipWithIndex.map {
+      case (v, i) => if (idx(i)) decoded(v.asInstanceOf[String]) else v
+    }))
+    spark.createDataFrame(out.toSeq.asJava, schema)
+  }
 
   /** Render a Seq as a python-literal list string (`['a', 'b']`, nulls as
     * `None`) — the degrade form when a dict column mixes arrays and scalars
@@ -182,7 +211,7 @@ object CatalogReader {
         }
       })
     }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toList, 1), schema)
+    spark.createDataFrame(rows.asJava, schema)
   }
 
   /** Full load: JSON descriptor path → (model, decoded asset table).
@@ -215,11 +244,23 @@ object CatalogReader {
     (model, table)
   }
 
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** The decoded asset table of `model`. A `catalog_dict` is already on the
+    * driver and stays there. A `catalog_file` table with at most the
+    * [[DriverGuard]] cap of rows is collected (one `limit(cap + 1)` job),
+    * probed and decoded on the driver, and held as a local relation; above
+    * the cap it stays a lazy scan. One INFO line records which. */
   def loadTable(spark: SparkSession, model: EsmCatalogModel, jsonPath: Option[String],
-                storageOptions: Map[String, String] = Map.empty): LoadedTable =
+                storageOptions: Map[String, String] = Map.empty): LoadedTable = {
+    val cap = DriverGuard.maxRows(spark)
+    def logHeld(source: String, rows: String, held: Boolean): Unit =
+      log.info(s"catalog asset table $source: $rows rows (cap '${DriverGuard.confKey}' = $cap), " +
+        (if (held) "held on the driver as a local relation" else "left as a distributed scan"))
     model.catalogDict match {
       case Some(records) =>
         val df = fromDict(spark, records)
+        logHeld("catalog_dict", records.size.toString, held = true)
         // array-valued dict columns ARE iterable columns — the reference
         // derives columns_with_iterables from frame contents for dict
         // catalogs too (cat.py:558-568); without this, membership search
@@ -231,8 +272,18 @@ object CatalogReader {
         val file = model.catalogFile.getOrElse(
           throw new IllegalArgumentException("catalog needs catalog_file or catalog_dict"))
         val resolved = jsonPath.map(resolveCatalogFile(_, file)).getOrElse(file)
-        val raw = readAssetTable(spark, resolved, storageOptions)
-        val dtypes = probeIterableColumns(raw)
-        LoadedTable(decodeIterableColumns(raw, dtypes.keySet), dtypes.keySet, dtypes)
+        val raw  = readAssetTable(spark, resolved, storageOptions)
+        val head = raw.limit(cap + 1).collect()
+        if (head.length <= cap) {
+          val stringCols = raw.schema.fields.collect { case f if f.dataType == StringType => f.name }
+          val dtypes     = probeRow(stringCols.toSeq, head.headOption)
+          logHeld(resolved, head.length.toString, held = true)
+          LoadedTable(decodeRows(spark, raw, head, dtypes.keySet), dtypes.keySet, dtypes)
+        } else {
+          val dtypes = probeIterableColumns(raw)
+          logHeld(resolved, s"more than $cap", held = false)
+          LoadedTable(decodeIterableColumns(raw, dtypes.keySet), dtypes.keySet, dtypes)
+        }
     }
+  }
 }

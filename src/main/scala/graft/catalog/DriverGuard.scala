@@ -1,14 +1,17 @@
 package graft.catalog
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 
-/** Guard rail for the few deliberate driver-side materializations in the
-  * catalog plane (group records in [[EsmCatalog.getEntry]], the dict-inline
-  * save in [[CatalogWriter]]). Each is bounded *by construction* — catalog
-  * groups are metadata-sized — but at 100 TB "by construction" deserves a
-  * tripwire: a mis-grouped catalog (e.g. groupby attrs that don't actually
-  * partition the asset rows) would otherwise OOM the driver with no useful
-  * message.
+/** Guard rail for the deliberate driver-side materializations in the
+  * catalog plane: the asset table itself when it has at most the cap of
+  * rows ([[CatalogReader.loadTable]] holds it as a local relation), group
+  * records in [[EsmCatalog.getEntry]] and [[EsmCatalog.toDatasetDict]], and
+  * the dict-inline save in [[CatalogWriter]]. Each is bounded — catalog
+  * groups are metadata-sized, and a table above the cap stays a distributed
+  * scan — but at 100 TB "by construction" deserves a tripwire: a
+  * mis-grouped catalog (e.g. groupby attrs that don't actually partition the
+  * asset rows) would otherwise OOM the driver with no useful message.
   *
   * The cap is read from the session conf (`spark.graft.driverCollect.maxRows`,
   * default 100k rows) so an operator who KNOWS a big dict catalog is fine can
@@ -48,7 +51,17 @@ object DriverGuard {
   def requireBounded(rows: Long, spark: SparkSession, what: String): Unit =
     check(rows, maxRows(spark), what)
 
-  private def maxRows(spark: SparkSession): Int =
+  /** The rows of `df` when its optimized plan is a local relation — the
+    * optimizer folded every filter and projection over a driver-held table
+    * — else `None`. The collect reuses the plan just optimized and runs no
+    * job. */
+  private[catalog] def localRows(df: DataFrame): Option[Array[Row]] =
+    df.queryExecution.optimizedPlan match {
+      case _: LocalRelation => Some(df.collect())
+      case _                => None
+    }
+
+  private[catalog] def maxRows(spark: SparkSession): Int =
     spark.conf.get(confKey, defaultMaxRows.toString).toInt
 
   private def check(rows: Long, max: Int, what: String): Unit =

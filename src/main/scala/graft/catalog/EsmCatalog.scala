@@ -1,6 +1,6 @@
 package graft.catalog
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -11,11 +11,17 @@ import graft.search.QueryCompiler
 /** The user-facing datastore — Spark-native equivalent of the reference's
   * `esm_datastore` (intake_esm/core.py:60-922).
   *
-  * Holds the descriptor + a single *lazy* DataFrame plan of the asset table
+  * Holds the descriptor + a single DataFrame plan of the asset table
   * (subsuming the reference's pandas/polars/LazyFrame triple-cache,
-  * cat.py:492-579 — one Catalyst plan is all three). Nothing collects the
-  * table except the declared-attrs group pass (one row per group), `keys`
-  * itself, and explicitly-bounded group materialization.
+  * cat.py:492-579 — one Catalyst plan is all three). A table of at most
+  * [[DriverGuard]]'s cap of rows is a local relation
+  * ([[CatalogReader.loadTable]]): a search's filters fold over it on the
+  * driver, and the group pass and `toDatasetDict`'s record collect take
+  * its rows and group them on the driver, with no Spark job. Any other plan
+  * (a table above the cap, a derived or require_all_on search result)
+  * stays distributed: there nothing collects the table except the
+  * declared-attrs group pass (one row per group), `keys` itself, and
+  * explicitly-bounded group materialization.
   */
 final class EsmCatalog(
     val spark: SparkSession,
@@ -139,26 +145,33 @@ final class EsmCatalog(
     pruneNulls(cols, c => row.getAs[Long](s"__nn_$c"), row.getAs[Long]("__total"))
   }
 
-  /** The group pass: `groupBy(cols cast to string).count()`, collected —
-    * one row per group. Every grouping fact derives from its tuples on the
-    * driver. A column is all-null when no tuple has a value and mixed when
-    * some tuples do, so the null check needs no second aggregate. The attrs
-    * it prunes are constant (null), so the tuples are exactly the kept
-    * attrs' groups, and their values are what [[keyColumn]] joins. */
+  /** The group pass: each distinct tuple of `cols` cast to string, with its
+    * row count — one entry per group. Over a local relation the tuples are
+    * counted on the driver; otherwise `groupBy(...).count()` is collected.
+    * Every grouping fact derives from these tuples on the driver. A column
+    * is all-null when no tuple has a value and mixed when some tuples do, so
+    * the null check needs no second aggregate. The attrs it prunes are
+    * constant (null), so the tuples are exactly the kept attrs' groups, and
+    * their values are what [[keyColumn]] joins. */
   private def groupPass(cols: Seq[String]): Grouping = {
-    val rows  = df.groupBy(cols.map(c => col(c).cast(StringType)): _*).count().collect()
-    val n     = cols.size // the count's ordinal
-    val total = rows.iterator.map(_.getLong(n)).sum
+    val n       = cols.size
+    val keyCols = cols.map(c => col(c).cast(StringType))
+    val tuples: Seq[(Seq[String], Long)] = DriverGuard.localRows(df.select(keyCols: _*)) match {
+      case Some(rows) => rows.toSeq.groupMapReduce(r => Seq.tabulate(n)(r.getString))(_ => 1L)(_ + _).toSeq
+      case None       => df.groupBy(keyCols: _*).count().collect().toSeq
+          .map(r => Seq.tabulate(n)(r.getString) -> r.getLong(n))
+    }
+    val total = tuples.iterator.map(_._2).sum
     val attrs = pruneNulls(cols,
-      c => { val i = cols.indexOf(c); rows.iterator.filter(!_.isNullAt(i)).map(_.getLong(n)).sum },
+      c => { val i = cols.indexOf(c); tuples.iterator.filter(_._1(i) != null).map(_._2).sum },
       total)
     val idx = attrs.map(cols.indexOf)
     // one key per distinct joined string: ("a.b","c") and ("a","b.c") are
     // one key, as in the reference's dict (cat.py:378-385); sorted in
     // Spark's string order (UTF-8 bytes), not String.compareTo's UTF-16
-    val keys = rows.map(r => idx.flatMap(i => Option(r.getString(i))).mkString(sep)).distinct
+    val keys = tuples.map(t => idx.flatMap(i => Option(t._1(i))).mkString(sep)).distinct
       .map(k => UTF8String.fromString(k) -> k).sortWith((a, b) => a._1.compareTo(b._1) < 0).map(_._2)
-    Grouping(attrs, keys.toSeq, total)
+    Grouping(attrs, keys, total)
   }
 
   /** Effective groupby attrs, keys and asset count (cat.py:355-385) from
@@ -334,7 +347,7 @@ final class EsmCatalog(
   def containsKey(key: String): Boolean = declaredGrouping.fold(
     !df.filter(keyColumn(effectiveGroupbyAttrs) === lit(key)).isEmpty)(_.keys.contains(key))
 
-  private def rowToMap(row: org.apache.spark.sql.Row): Map[String, Any] =
+  private def rowToMap(row: Row): Map[String, Any] =
     row.schema.fieldNames.zipWithIndex.map { case (n, i) =>
       n -> (row.get(i) match {
         case s: scala.collection.Seq[_] => s.toSeq
@@ -412,7 +425,7 @@ final class EsmCatalog(
     // Group records are collected per key (bounded: catalog metadata, with
     // the DriverGuard tripwire in case the grouping assumption breaks). The
     // RECORD count is what actually lands on the driver — every catalog row
-    // rides inside some group's collect_list — so cap it directly, before
+    // rides inside some group's records — so cap it directly, before
     // anything row-sized is collected; the outer group-row cap alone would
     // let a few-huge-groups catalog through. The declared-attrs group pass
     // already holds the record count, so there the empty exit
@@ -429,14 +442,10 @@ final class EsmCatalog(
         DriverGuard.assertBounded(df, records)
         attrs
     }
-    val grouped = DriverGuard.boundedCollect(
-      df.groupBy(keyColumn(attrs).as("__graft_key"))
-        .agg(collect_list(struct(df.columns.map(col): _*)).as("__graft_records")),
-      "toDatasetDict(group records)")
-    def loadOne(row: org.apache.spark.sql.Row): (String, Option[DataFrame]) = {
-      val key     = row.getString(0)
-      val records = row.getSeq[org.apache.spark.sql.Row](1).map(rowToMap)
-      val source  = buildSource(key, records.toSeq)
+    val grouped = groupRecords(attrs)
+    def loadOne(group: (String, Seq[Map[String, Any]])): (String, Option[DataFrame]) = {
+      val (key, records) = group
+      val source         = buildSource(key, records)
       try key -> Some(loadGroup(source, coords))
       catch { case e: Exception => if (skipOnError) key -> None else throw e }
     }
@@ -447,7 +456,7 @@ final class EsmCatalog(
         val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
         val ec = scala.concurrent.ExecutionContext.fromExecutor(pool)
         try {
-          val futs = grouped.map(row => scala.concurrent.Future(loadOne(row))(ec))
+          val futs = grouped.map(group => scala.concurrent.Future(loadOne(group))(ec))
           futs.map(f => scala.concurrent.Await.result(
             f, scala.concurrent.duration.Duration.Inf))
         } finally pool.shutdown() // no interrupts: a losing task's lazy
@@ -460,6 +469,24 @@ final class EsmCatalog(
     }
     datasets = result // cache, like the reference's .datasets (core.py:761)
     result
+  }
+
+  /** Each group's key and records, grouped by `attrs`. Over a local
+    * relation the rows are grouped on the driver, groups and records in
+    * table order; otherwise by one bounded `collect_list` aggregate. The
+    * caller caps the record count first. */
+  private[graft] def groupRecords(attrs: Seq[String]): Seq[(String, Seq[Map[String, Any]])] = {
+    val key    = keyColumn(attrs).as("__graft_key")
+    val record = struct(df.columns.map(col): _*)
+    val groups = DriverGuard.localRows(df.select(key, record)) match {
+      case Some(rows) =>
+        val byKey = rows.toSeq.groupBy(_.getString(0))
+        rows.iterator.map(_.getString(0)).distinct.map(k => k -> byKey(k).map(_.getStruct(1))).toSeq
+      case None =>
+        DriverGuard.boundedCollect(df.groupBy(key).agg(collect_list(record).as("__graft_records")),
+          "toDatasetDict(group records)").toSeq.map(r => r.getString(0) -> r.getSeq[Row](1).toSeq)
+    }
+    groups.map { case (k, rows) => k -> rows.map(rowToMap) }
   }
 
   /** to_datatree (core.py:764-867): keys joined with '/'. */

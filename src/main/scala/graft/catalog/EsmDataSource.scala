@@ -170,9 +170,13 @@ final case class EsmDataSource(
     // occurrence would otherwise re-run the container walk
     // (KerchunkIndex.sharedEntries note)
     val entries = KerchunkIndex.sharedEntries(union)
+    // every mode decodes data chunks only, so metadata stored as a
+    // byte-range ref is never fetched: a missing one fails the decode's own
+    // "no inline .zarray" check, not a read racing it in another task
     val chunks =
       if (members.head._2.dods) graft.sources.Dap2Index.materialize(entries)
-      else KerchunkIndex.materializeChunks(entries, storageOptions = storageOptions)
+      else KerchunkIndex.materializeChunks(entries.filter(KerchunkIndex.isChunk(col("member"))),
+        storageOptions = storageOptions)
     val meta = KerchunkIndex.arrayMeta(entries)
     val decoded = mode match {
       case "typed" => KerchunkIndex.decodeTyped(chunks, meta)

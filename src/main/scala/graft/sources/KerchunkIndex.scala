@@ -1535,6 +1535,10 @@ object KerchunkIndex {
       .drop("shape")
   }
 
+  /** Whether a `member` key names a data chunk ("0", "1.0.2") rather than
+    * metadata (".zarray", ".zattrs"): the only rows the decode planes read. */
+  def isChunk(member: Column): Column = member.rlike("^[0-9]+([.][0-9]+)*$")
+
   /** Decode materialized DATA chunks into typed values — the full depth of
     * the reference's zarr open (source.py:82-96) for the codecs the JDK
     * carries (raw/zlib/gzip; see [[ZarrCodec]]).
@@ -1553,7 +1557,7 @@ object KerchunkIndex {
     * than a loud connector-boundary error.
     */
   def decodeTyped(chunks: DataFrame, meta: DataFrame): DataFrame = {
-    val dataChunk = chunks.filter(col("member").rlike("^[0-9]+([.][0-9]+)*$"))
+    val dataChunk = chunks.filter(isChunk(col("member")))
       // LEFT join so a data chunk whose variable has NO .zarray row (or a
       // .zarray stored as a byte-range ref, which arrayMeta cannot parse —
       // dtype comes back null either way) is still present to fail the
@@ -1579,7 +1583,7 @@ object KerchunkIndex {
     * numeric variables drop here exactly as string variables drop from
     * the numeric plane. Same scan shape: one generated stage, no shuffle. */
   def decodeLabelsTyped(chunks: DataFrame, meta: DataFrame): DataFrame = {
-    chunks.filter(col("member").rlike("^[0-9]+([.][0-9]+)*$"))
+    chunks.filter(isChunk(col("member")))
       .join(broadcast(meta), Seq("variable"), "left")
       .filter(coalesce(assert_true(col("dtype").isNotNull,
         concat(lit("zarr variable '"), shown(col("variable")),

@@ -1,6 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,7 +16,10 @@ import graft.derived.{DerivedVariable, DerivedVariableRegistry}
   * per-attr aggregate + `keysInfo.orderBy("key")` formulation it replaced.
   * The one-pass grouping serves declared groupby attrs only; catalogs that
   * group by every column keep the distributed formulation, and the census
-  * pins that none of their calls but `keys` collects one row per asset. */
+  * pins that none of their calls but `keys` collects one row per asset.
+  * A catalog opened under the driver-collect cap is a local relation: its
+  * searches and group phase run no job, and every equivalence case runs on
+  * a local twin of its table as well. */
 class CatalogCensusSpec extends AnyFunSuite {
   import JobCensus.Census
   lazy val spark = TestSpark.spark
@@ -76,6 +82,25 @@ class CatalogCensusSpec extends AnyFunSuite {
   }
 
   private def fresh(): EsmCatalog = catalog(assets, List("source_id", "experiment_id"))
+
+  private def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+
+  /** The rows of `df` as a scanned table would hold them. */
+  private def rddBacked(df: DataFrame): DataFrame = spark.createDataFrame(df.rdd, df.schema)
+
+  /** `cat` over a local relation of its table's rows, like a catalog opened
+    * under the cap: its group pass and record collect run on the driver. */
+  private def twinOf(cat: EsmCatalog): EsmCatalog = {
+    val local = spark.createDataFrame(cat.df.collect().toSeq.asJava, cat.df.schema)
+    assert(isLocal(local))
+    new EsmCatalog(spark, cat.model, local, cat.columnsWithIterables, cat.iterableDtypes,
+      cat.derivedRegistry)
+  }
+
+  private val tasRange = new DerivedVariableRegistry().register(DerivedVariable(
+    "tas_range", Map("variable" -> Seq("tasmax", "tasmin")),
+    df => df.withColumn("tas_range", col("tasmax") - col("tasmin"))))
 
   /** No aggregation control: every column is a group attr, one group per
     * asset. */
@@ -187,14 +212,23 @@ class CatalogCensusSpec extends AnyFunSuite {
     (attrs, keys)
   }
 
-  private def assertSame(cat: EsmCatalog): Unit = {
+  /** `cat` (over a distributed plan) and `twin` (the same catalog, or the
+    * same search, over a local relation of the table) both answer what the
+    * replaced formulation answers for `cat`, and print the same reprStats. */
+  private def assertSame(cat: EsmCatalog, twin: => EsmCatalog): Unit = {
+    assert(!isLocal(cat.df))
     val (attrs, keys) = replaced(cat)
-    assert(cat.effectiveGroupbyAttrs == attrs)
-    assert(cat.keys == keys)
-    assert(cat.length == keys.size.toLong)
-    assert(cat.keysInfo.orderBy("key").select("key").collect().map(_.getString(0)).toSeq.distinct
-      == keys)
+    for (c <- Seq(cat, twin)) {
+      assert(c.effectiveGroupbyAttrs == attrs)
+      assert(c.keys == keys)
+      assert(c.length == keys.size.toLong)
+      assert(c.keysInfo.orderBy("key").select("key").collect().map(_.getString(0)).toSeq.distinct
+        == keys)
+      assert(c.reprStats == cat.reprStats)
+    }
   }
+
+  private def assertSame(cat: EsmCatalog): Unit = assertSame(cat, twinOf(cat))
 
   private val nullStr = lit(null).cast(StringType)
 
@@ -211,6 +245,7 @@ class CatalogCensusSpec extends AnyFunSuite {
       List("source_id", "dcpp", "experiment_id"))
     val want = intercept[IllegalArgumentException](replaced(cat)).getMessage
     assert(intercept[IllegalArgumentException](cat.keys).getMessage == want)
+    assert(intercept[IllegalArgumentException](twinOf(cat).keys).getMessage == want)
     assert(want == "The data in the dcpp column should either be all NaN or there should be no NaNs")
   }
 
@@ -236,42 +271,110 @@ class CatalogCensusSpec extends AnyFunSuite {
   }
 
   test("equivalence: an empty search result") {
-    val empty = fresh().search(Map("source_id" -> "nope"))
-    assertSame(empty)
+    val q     = Map[String, Any]("source_id" -> "nope")
+    val empty = fresh().search(q)
+    assertSame(empty, twinOf(fresh()).search(q))
     assert(empty.keys.isEmpty && empty.length == 0L)
     assert(empty.reprStats == "<census catalog with 0 dataset(s) from 0 asset(s)>")
   }
 
   test("equivalence: typed catalog_dict columns (Long/Double)") {
-    val df = CatalogReader.fromDict(spark, Seq(
+    val dict = CatalogReader.fromDict(spark, Seq(
       Map("scode" -> 482L, "lev" -> 1.5, "variable" -> "a", "path" -> "p1"),
       Map("scode" -> 482L, "lev" -> 2.0, "variable" -> "b", "path" -> "p2"),
       Map("scode" -> 7L, "lev" -> 1.5, "variable" -> "c", "path" -> "p3")))
-    val cat = catalog(df, List("scode", "lev"))
+    assert(isLocal(dict)) // the records are on the driver already
+    val cat = catalog(rddBacked(dict), List("scode", "lev"))
     assertSame(cat)
     assert(cat.keys == Seq("482.1.5", "482.2.0", "7.1.5"))
   }
 
   test("equivalence: derived-variable and require_all_on searches") {
-    val registry = new DerivedVariableRegistry().register(DerivedVariable(
-      "tas_range", Map("variable" -> Seq("tasmax", "tasmin")),
-      df => df.withColumn("tas_range", col("tasmax") - col("tasmin"))))
-    val cat = catalog(assets, List("source_id", "experiment_id"), registry = registry)
-    val derived = cat.search(Map("variable" -> "tas_range", "source_id" -> "GCM-2"))
-    assertSame(derived)
+    val cat  = catalog(assets, List("source_id", "experiment_id"), registry = tasRange)
+    val twin = twinOf(cat)
+    val dq   = Map[String, Any]("variable" -> "tas_range", "source_id" -> "GCM-2")
+    val derived = cat.search(dq)
+    assertSame(derived, twin.search(dq))
     assert(derived.keys == Seq("GCM-2.historical", "GCM-2.ssp585"))
-    val rao = cat.search(Map("experiment_id" -> Seq("historical", "ssp585"), "variable" -> "tasmin"),
-      requireAllOn = Some(Seq("source_id")))
-    assertSame(rao)
+    val rq  = Map[String, Any]("experiment_id" -> Seq("historical", "ssp585"), "variable" -> "tasmin")
+    val rao = cat.search(rq, requireAllOn = Some(Seq("source_id")))
+    assertSame(rao, twin.search(rq, requireAllOn = Some(Seq("source_id"))))
     assert(rao.length == 4L)
   }
 
   test("equivalence: keys sort in UTF-8 byte order, not UTF-16") {
     // U+FF21 < U+1F600 in UTF-8 (EF.. < F0..); UTF-16 puts the surrogate first
     val df = Seq("😀", "Ａ", "z", "é").map(s => (s, s"p$s")).toDF("source_id", "path")
-    val cat = catalog(df, List("source_id"))
+    val cat = catalog(rddBacked(df), List("source_id"))
     assertSame(cat)
     assert(cat.keys == Seq("z", "é", "Ａ", "😀"))
     assert(cat.keys != cat.keys.sorted)
+  }
+
+  test("equivalence: toDatasetDict keys and per-key records, local twin and distributed table") {
+    for (aggregate <- Seq(true, false)) {
+      val cat  = fresh()
+      val twin = twinOf(cat)
+      assert(twin.toDatasetDict(aggregate = aggregate).keySet ==
+        cat.toDatasetDict(aggregate = aggregate).keySet)
+      def records(c: EsmCatalog): Map[String, Set[Map[String, Any]]] = {
+        val attrs = if (aggregate) c.effectiveGroupbyAttrs else c.df.columns.toSeq
+        c.groupRecords(attrs).map { case (k, rs) => k -> rs.toSet }.toMap
+      }
+      val want = records(cat)
+      assert(want.size == (if (aggregate) 4 else 8) && want.values.map(_.size).sum == 8)
+      assert(records(twin) == want, s"aggregate=$aggregate")
+    }
+  }
+
+  // ------------------------------------------ a catalog opened under the cap
+
+  /** [[assets]] as a CSV catalog on disk, opened with [[tasRange]]. */
+  private lazy val csvCatalog: String = {
+    val dir  = java.nio.file.Files.createTempDirectory("graft_census_csv")
+    val rows = assets.select("source_id", "experiment_id", "variable", "path")
+      .as[(String, String, String, String)].collect().toSeq
+    CatalogFixtures.gcmAssets(dir, rows).toString
+  }
+
+  private val queries = Seq[Map[String, Any]](
+    Map("experiment_id" -> "historical"),
+    Map("source_id" -> Seq("GCM-1", "GCM-2"), "realm" -> "land"),
+    Map("source_id" -> "^GCM-[12]", "experiment_id" -> "ssp.*"))
+
+  test("a catalog under the cap lives on the driver: searches and the group phase run no job") {
+    val json        = csvCatalog // written outside the census
+    val (cat, open) = census(EsmCatalog.open(spark, json, tasRange))
+    assert(open.jobs <= 2, open)
+    assert(isLocal(cat.df) && cat.columnsWithIterables == Set("realm"))
+    for (q <- queries) {
+      val (ks, c) = census(cat.search(q).keys)
+      assert(ks.nonEmpty && c.jobs == 0, s"$q: $c")
+    }
+    // the dependency search's emptiness check of a derived variable
+    val (derived, dc) = census(cat.search(Map("variable" -> "tas_range", "source_id" -> "GCM-2")))
+    assert(dc.jobs == 0, dc)
+    assert(derived.keys == Seq("GCM-2.historical", "GCM-2.ssp585"))
+    // the group phase runs no SQL action: every job left opens an asset
+    // (one parquet footer read per asset at most)
+    val (dsets, load) = census(cat.search(Map("source_id" -> "GCM-1")).toDatasetDict())
+    assert(dsets.keySet == Set("GCM-1.historical", "GCM-1.ssp585"))
+    assert(load.actions.isEmpty && load.jobs <= 4, load)
+  }
+
+  test("a catalog over the cap keeps the lazy scan and its distributed search") {
+    val held = EsmCatalog.open(spark, csvCatalog, tasRange)
+    withCap(7) {
+      val cat = EsmCatalog.open(spark, csvCatalog, tasRange)
+      assert(!isLocal(cat.df))
+      // the driver-side decode gives the lazy scan's rows and schema
+      assert(cat.df.schema == held.df.schema && cat.columnsWithIterables == Set("realm"))
+      assert(cat.df.collect().toSet == held.df.collect().toSet)
+      for (q <- queries) {
+        val (ks, c) = census(cat.search(q).keys)
+        assert(ks.nonEmpty, q)
+        assert(c.jobs >= 1 && c.jobs <= 2 && c.actions.size == 1, s"$q: $c")
+      }
+    }
   }
 }

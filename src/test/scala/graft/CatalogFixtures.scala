@@ -71,4 +71,27 @@ object CatalogFixtures {
         |  "aggregations": [{"type": "union", "attribute_name": "variable"}]}}""".stripMargin)
     json
   }
+
+  /** A CSV catalog over `assets` — (source_id, experiment_id, variable,
+    * path) rows of parquet assets — grouped by source and experiment, with
+    * a python-literal `realm` list per asset (`['atmos']` for tasmax,
+    * `['atmos', 'land']` otherwise). Writes `gcm-assets.{json,csv}` into
+    * `dir` and returns the json path. */
+  def gcmAssets(dir: Path, assets: Seq[(String, String, String, String)]): Path = {
+    val csv = ("source_id,experiment_id,variable,realm,path" +: assets.map { case (src, exp, v, p) =>
+      val realm = if (v == "tasmax") "['atmos']" else "['atmos', 'land']"
+      s"""$src,$exp,$v,"$realm",$p"""
+    }).mkString("", "\n", "\n")
+    Files.writeString(dir.resolve("gcm-assets.csv"), csv)
+    val json = dir.resolve("gcm-assets.json")
+    Files.writeString(json,
+      """{"esmcat_version": "0.1.0", "id": "gcm-assets",
+        |"catalog_file": "gcm-assets.csv",
+        |"attributes": [],
+        |"assets": {"column_name": "path", "format": "parquet"},
+        |"aggregation_control": {"variable_column_name": "variable",
+        |  "groupby_attrs": ["source_id", "experiment_id"],
+        |  "aggregations": []}}""".stripMargin)
+    json
+  }
 }
