@@ -1244,7 +1244,7 @@ object SparkEntry {
     }),
 
     "scan_catalog_esmcat" -> ((s, dir) => {
-      // DataSourceV2: descriptor + asset index as one relation
+      // the esmcat data source: descriptor + asset index as one relation
       val json = PipelineDemo.ensureCatalog(s, dir)
       s.read.format("esmcat").load(json)
         .select("status", "member", "year", "variable")

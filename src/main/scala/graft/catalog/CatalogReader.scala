@@ -160,7 +160,7 @@ object CatalogReader {
     * `None`) — the degrade form when a dict column mixes arrays and scalars
     * and unifies to StringType; matches CatalogWriter.renderIterable's shape
     * so the value stays decodeIterable-round-trippable. */
-  def pythonLiteral(v: Seq[_]): String =
+  private def pythonLiteral(v: Seq[_]): String =
     v.map(x => if (x == null) "None" else s"'$x'").mkString("[", ", ", "]")
 
   /** Build a DataFrame from inline `catalog_dict` records
@@ -250,7 +250,9 @@ object CatalogReader {
     * driver and stays there. A `catalog_file` table with at most the
     * [[DriverGuard]] cap of rows is collected (one `limit(cap + 1)` job),
     * probed and decoded on the driver, and held as a local relation; above
-    * the cap it stays a lazy scan. One INFO line records which. */
+    * the cap it stays a lazy scan. One INFO line records which. A
+    * `catalog_file` that reads as no columns at all (a 0-byte csv) is
+    * refused; a header-only csv is a valid empty table. */
   def loadTable(spark: SparkSession, model: EsmCatalogModel, jsonPath: Option[String],
                 storageOptions: Map[String, String] = Map.empty): LoadedTable = {
     val cap = DriverGuard.maxRows(spark)
@@ -273,7 +275,8 @@ object CatalogReader {
           throw new IllegalArgumentException("catalog needs catalog_file or catalog_dict"))
         val resolved = jsonPath.map(resolveCatalogFile(_, file)).getOrElse(file)
         val raw  = readAssetTable(spark, resolved, storageOptions)
-        val head = raw.limit(cap + 1).collect()
+        require(raw.schema.nonEmpty, s"empty catalog table (no header, no columns): $resolved")
+        val head = raw.limit(DriverGuard.probeLimit(cap)).collect()
         if (head.length <= cap) {
           val stringCols = raw.schema.fields.collect { case f if f.dataType == StringType => f.name }
           val dtypes     = probeRow(stringCols.toSeq, head.headOption)

@@ -15,9 +15,10 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
   *
   * The cap is read from the session conf (`spark.graft.driverCollect.maxRows`,
   * default 100k rows) so an operator who KNOWS a big dict catalog is fine can
-  * raise it per session without a code change. The check costs nothing extra:
-  * we collect `limit(max + 1)` — one row beyond the cap proves the overflow
-  * without counting the full result.
+  * raise it per session without a code change; `Int.MaxValue` means no cap,
+  * and a value that is not a non-negative integer is refused. The check
+  * costs nothing extra: we collect `limit(max + 1)` — one row beyond the cap
+  * proves the overflow without counting the full result.
   */
 object DriverGuard {
 
@@ -28,7 +29,7 @@ object DriverGuard {
     * the offending context in the message) if it exceeds the cap. */
   def boundedCollect(df: DataFrame, what: String): Array[Row] = {
     val max  = maxRows(df.sparkSession)
-    val rows = df.limit(max + 1).collect()
+    val rows = df.limit(probeLimit(max)).collect()
     require(rows.length <= max,
       s"$what would materialize more than $max rows on the driver " +
         s"(cap '$confKey' = $max). This usually means the catalog grouping " +
@@ -43,7 +44,7 @@ object DriverGuard {
     * early-exits the scan. */
   def assertBounded(df: DataFrame, what: String): Unit = {
     val max = maxRows(df.sparkSession)
-    check(df.limit(max + 1).count(), max, what)
+    check(df.limit(probeLimit(max)).count(), max, what)
   }
 
   /** [[assertBounded]] for a row count the caller already holds (the
@@ -61,8 +62,16 @@ object DriverGuard {
       case _                => None
     }
 
-  private[catalog] def maxRows(spark: SparkSession): Int =
-    spark.conf.get(confKey, defaultMaxRows.toString).toInt
+  private[catalog] def maxRows(spark: SparkSession): Int = {
+    val raw = spark.conf.get(confKey, defaultMaxRows.toString)
+    raw.trim.toIntOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
+      s"'$confKey' must be a row count from 0 to ${Int.MaxValue}, got '$raw'"))
+  }
+
+  /** The `limit` that proves a result has more than `max` rows: `max + 1`,
+    * or `max` itself at `Int.MaxValue` (no cap), where `max + 1` overflows. */
+  private[catalog] def probeLimit(max: Int): Int =
+    if (max == Int.MaxValue) max else max + 1
 
   private def check(rows: Long, max: Int, what: String): Unit =
     require(rows <= max,

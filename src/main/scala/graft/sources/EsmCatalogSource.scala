@@ -1,682 +1,42 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
-import java.util.zip.GZIPInputStream
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SQLContext}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, PrunedScan, RelationProvider}
+import org.apache.spark.sql.types.StructType
 
-import scala.jdk.CollectionConverters._
+import graft.catalog.CatalogReader
 
-import com.univocity.parsers.csv.{CsvParser, CsvParserSettings}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
-
-import graft.catalog.{CatalogReader, EsmCatalogModel}
-
-/** DataSourceV2 reader for ESM catalog descriptors:
+/** The asset table of an ESM catalog descriptor as a relation:
   *
   * {{{ spark.read.format("esmcat").load("/path/to/catalog.json") }}}
   *
-  * presents the JSON descriptor + its asset index (csv/csv.gz or inline
-  * catalog_dict) as ONE relation, with python-literal iterable columns
-  * already decoded to `array<string>` — the "DataFrame reader + custom
-  * source" surface (reference entry point: intake.open_esm_datastore,
-  * core.py:89-153).
-  *
-  * Scope: the *file-pair* catalog shape (small/medium catalogs; single CSV).
-  * Parquet-indexed catalogs should go through `spark.read.parquet` — at
-  * 100 TB the native parquet scan (pushdown, row-group pruning, splits)
-  * strictly dominates anything a custom reader would do, so EsmCatalog.load
-  * routes them there and this source intentionally does not reimplement it.
+  * is the table `EsmCatalog.open` holds (reference entry point:
+  * intake.open_esm_datastore, core.py:89-153). `load()` reads it through
+  * [[CatalogReader.load]] — csv/csv.gz, part-file directories, parquet,
+  * json, inline `catalog_dict`, http and `file:` URIs, python-literal
+  * iterable columns decoded to `array<string>` — so a table under the
+  * driver-collect cap is read once, at `load()`, and later actions scan the
+  * held rows. The scan prunes unprojected columns; Spark evaluates filters
+  * and aggregates over its output.
   */
-final class EsmCatalogSource extends TableProvider with DataSourceRegister {
+final class EsmCatalogSource extends RelationProvider with DataSourceRegister {
   override def shortName(): String = "esmcat"
 
-  override def supportsExternalMetadata(): Boolean = false
-
-  private def jsonPath(options: CaseInsensitiveStringMap): String = {
-    val p = Option(options.get("path")).orElse(Option(options.get("paths")))
-    p.getOrElse(throw new IllegalArgumentException("esmcat: .load(<descriptor.json>) path required"))
-  }
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    EsmCatalogSource.describe(jsonPath(options)).schema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: java.util.Map[String, String]): Table = {
-    val path = Option(properties.get("path")).getOrElse(
-      throw new IllegalArgumentException("esmcat: path property missing"))
-    new EsmCatalogTable(path, schema)
+  override def createRelation(sqlContext: SQLContext,
+                              parameters: Map[String, String]): BaseRelation = {
+    val path = parameters.getOrElse("path",
+      throw new IllegalArgumentException("esmcat: .load(<descriptor.json>) path required"))
+    new EsmCatalogRelation(sqlContext, CatalogReader.load(sqlContext.sparkSession, path)._2.df)
   }
 }
 
-object EsmCatalogSource {
+/** A loaded catalog table `df` as a column-pruned scan. */
+final class EsmCatalogRelation(override val sqlContext: SQLContext, df: DataFrame)
+    extends BaseRelation with PrunedScan {
+  override def schema: StructType = df.schema
 
-  final case class Described(
-      model: EsmCatalogModel,
-      schema: StructType,
-      csvPath: Option[String],
-      iterableCols: Set[String],
-  )
-
-  /** Driver-side probe: parse the descriptor, read the CSV header + first
-    * data row to detect iterable columns (mirrors CatalogReader's
-    * `limit(1)` probe, reference cat.py:562). */
-  def describe(descriptorPath: String): Described = {
-    val model = EsmCatalogModel.fromJson(
-      new String(Files.readAllBytes(Paths.get(descriptorPath)), "UTF-8"))
-    model.catalogDict match {
-      case Some(records) =>
-        val cols = records.foldLeft(Vector.empty[String]) { (acc, r) =>
-          acc ++ r.keys.filterNot(acc.contains)
-        }
-        // unify across ALL values (same rule as CatalogReader.fromDict):
-        // first-match typing CCEs at scan time when a later value has a
-        // different JSON type — ints+floats widen to double, other mixes
-        // degrade to string
-        def typeOf(v: Any): DataType = v match {
-          case _: Int | _: Long => LongType
-          case _: Double        => DoubleType
-          case _: Boolean       => BooleanType
-          case _: Seq[_]        => ArrayType(StringType)
-          case _                => StringType
-        }
-        def unify(a: DataType, b: DataType): DataType = (a, b) match {
-          case (x, y) if x == y                                => x
-          case (LongType, DoubleType) | (DoubleType, LongType) => DoubleType
-          case _                                               => StringType
-        }
-        def typeFor(c: String): DataType =
-          records.iterator.flatMap(_.get(c)).filter(_ != null)
-            .map(typeOf).reduceOption(unify).getOrElse(StringType)
-        Described(model,
-          StructType(cols.map(c => StructField(c, typeFor(c), nullable = true))),
-          None, Set.empty)
-      case None =>
-        val file = model.catalogFile.getOrElse(
-          throw new IllegalArgumentException("catalog needs catalog_file or catalog_dict"))
-        val resolved = CatalogReader.resolveCatalogFile(descriptorPath, file)
-        val rows     = readCsvRows(resolved, limit = 2)
-        val header   = rows.headOption.getOrElse(
-          throw new IllegalArgumentException(s"empty catalog csv: $resolved"))
-        val probe = rows.lift(1)
-        val iterables = probe match {
-          case Some(first) =>
-            header.indices.collect {
-              case i if first.lift(i).flatMap(Option(_)).exists(v =>
-                v.trim.matches("^[\\[\\(\\{].*[\\]\\)\\}]$")) => header(i)
-            }.toSet
-          case None => Set.empty[String]
-        }
-        val schema = StructType(header.map { c =>
-          StructField(c, if (iterables.contains(c)) ArrayType(StringType) else StringType,
-            nullable = true)
-        })
-        Described(model, schema, Some(resolved), iterables)
-    }
-  }
-
-  /** Read catalog CSV rows (header first). `path` may be a single file OR a
-    * directory of Spark part files — CatalogWriter.save(singleFile=false)
-    * leaves catalog_file as a directory, and each part carries its own
-    * header row (Spark's csv writer emits one per file), so concatenation
-    * keeps the first part's header and drops the rest. */
-  def readCsvRows(path: String, limit: Int = -1): Vector[Array[String]] = {
-    val p = Paths.get(path)
-    if (Files.isDirectory(p)) {
-      val parts = Files.list(p).iterator().asScala.map(_.toString)
-        .filter { f =>
-          val n = Paths.get(f).getFileName.toString
-          !n.startsWith("_") && !n.startsWith(".") &&
-            (n.endsWith(".csv") || n.endsWith(".csv.gz"))
-        }.toVector.sorted
-      if (parts.isEmpty)
-        throw new IllegalArgumentException(s"esmcat: directory $path holds no csv part files")
-      return parts.tail.foldLeft(readCsvFile(parts.head, limit)) { (acc, part) =>
-        if (limit > 0 && acc.length >= limit) acc
-        else acc ++ readCsvFile(part, if (limit > 0) limit - acc.length + 1 else -1).drop(1)
-      }
-    }
-    readCsvFile(path, limit)
-  }
-
-  private def readCsvFile(path: String, limit: Int): Vector[Array[String]] = {
-    val raw: java.io.InputStream = Files.newInputStream(Paths.get(path))
-    val in  = if (path.toLowerCase.endsWith(".gz")) new GZIPInputStream(raw) else raw
-    try {
-      val settings = new CsvParserSettings
-      settings.setMaxCharsPerColumn(1 << 20)
-      if (limit > 0) settings.setNumberOfRecordsToRead(limit.toLong)
-      val parser = new CsvParser(settings)
-      parser.parseAll(new java.io.InputStreamReader(in, "UTF-8")).asScala.toVector
-    } finally in.close()
-  }
-
-  /** Python-literal container → element list, matching the normalization of
-    * CatalogReader.decodeIterable (reference cat.py:671-681): first char →
-    * `[`, last char → `]`, trailing commas dropped, `'` → `"`, JSON decode.
-    * Handles single-quoted, double-quoted, and unquoted (e.g. numeric)
-    * elements alike; falls back to a comma split if the JSON parse fails.
-    * A cell that is NOT container-shaped returns `null` (the caller emits
-    * SQL NULL, like decodeIterable) — chopping its first/last characters
-    * would fabricate elements from scalar data. */
-  def parseLiteral(cell: String): Seq[String] = {
-    val t = cell.trim
-    if (t.isEmpty) return Seq.empty
-    if (!(t.length >= 2 && "[({".contains(t.head) && "])}".contains(t.last))) return null
-    val bracketed = "[" + (if (t.length >= 2) t.substring(1, t.length - 1) else "") + "]"
-    val json = bracketed.replaceAll(",\\s*\\]", "]").replace('\'', '"')
-    try {
-      import org.json4s._
-      org.json4s.jackson.JsonMethods.parse(json) match {
-        case JArray(vs) => vs.map {
-          case JString(s)  => s
-          case JInt(i)     => i.toString
-          case JLong(l)    => l.toString
-          case JDouble(d)  => d.toString
-          case JDecimal(d) => d.toString
-          case JBool(b)    => b.toString
-          case JNull       => null
-          case other       => org.json4s.jackson.JsonMethods.compact(other)
-        }
-        case _ => Seq.empty
-      }
-    } catch {
-      case _: Throwable =>
-        // Not valid JSON after normalization (e.g. unquoted words):
-        // split on commas, strip residual quotes/space.
-        bracketed.stripPrefix("[").stripSuffix("]")
-          .split(",").toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\""))
-          .filter(_.nonEmpty)
-    }
-  }
-}
-
-final class EsmCatalogTable(descriptorPath: String, schema0: StructType)
-    extends Table with SupportsRead {
-  override def name(): String            = s"esmcat(`$descriptorPath`)"
-  override def schema(): StructType      = schema0
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with Scan with Batch
-      with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns
-      with org.apache.spark.sql.connector.read.SupportsPushDownFilters
-      with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
-      // column pruning: a projection over the catalog reaches the reader, so
-      // only the requested columns are decoded (visible as a narrowed
-      // ReadSchema in explain — same contract as the parquet scan)
-      private var pruned: StructType = schema0
-      override def pruneColumns(required: StructType): Unit =
-        pruned = StructType(schema0.fields.filter(f => required.fieldNames.contains(f.name)))
-      // predicate pushdown (mirrors the reference's polars lazy-scan predicate
-      // pushdown, cat.py:630-691): supported filters are evaluated EXACTLY
-      // inside the reader (Kleene three-valued logic, EsmCatalogFilters.eval3)
-      // and returned as HANDLED — no residual re-check — so Spark's aggregate
-      // pushdown can fire on filtered scans too. Shapes the evaluator does
-      // not implement are declined in supported() and stay residual: the
-      // defense-in-depth posture narrows to exactly the declined subset.
-      private var pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty
-      override def pushFilters(filters: Array[org.apache.spark.sql.sources.Filter])
-          : Array[org.apache.spark.sql.sources.Filter] = {
-        val (sup, unsup) = filters.partition(EsmCatalogFilters.supported(schema0, _))
-        pushed = sup
-        unsup
-      }
-      override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
-      // aggregate pushdown (the last pushdown dimension, mirroring the
-      // reference's polars lazy aggregation): count/count-distinct/min/max
-      // over scalar columns — GLOBAL or GROUPED BY scalar columns — compute
-      // COMPLETELY inside the reader: one partition, so complete pushdown
-      // is exact by construction. Spark offers aggregates only when no
-      // post-scan filters remain; since supported filters are fully handled
-      // by the reader, this fires on filterless AND handled-filter scans
-      // (the reader applies the filters before folding the aggregate).
-      private var aggPushed: Option[EsmCatalogAggs.Pushed] = None
-      override def supportCompletePushDown(
-          agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
-        EsmCatalogAggs.supported(schema0, agg).isDefined
-      override def pushAggregation(
-          agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
-        EsmCatalogAggs.supported(schema0, agg) match {
-          case some @ Some(_) => aggPushed = some; true
-          case None           => false
-        }
-      override def build(): Scan             = this
-      override def readSchema(): StructType  =
-        aggPushed.map(EsmCatalogAggs.outputSchema(schema0, _)).getOrElse(pruned)
-      override def toBatch: Batch            = this
-      override def description(): String =
-        s"esmcat PushedFilters: [${pushed.mkString(", ")}], " +
-          s"PushedAggregates: [${aggPushed.map(_.specs.mkString(", ")).getOrElse("")}], " +
-          s"PushedGroupBy: [${aggPushed.map(_.groupCols.mkString(", ")).getOrElse("")}], " +
-          s"ReadSchema: ${readSchema().simpleString}"
-      override def planInputPartitions(): Array[InputPartition] =
-        Array(EsmCatalogPartition(descriptorPath))
-      override def createReaderFactory(): PartitionReaderFactory =
-        new EsmCatalogReaderFactory(readSchema(), pushed, aggPushed)
-    }
-}
-
-/** Row-level evaluator for the V1 `Filter` subset the esmcat reader pushes.
-  *
-  * Supported: null tests, equality, In, string prefix/suffix/contains, and
-  * And/Or/Not compositions — over scalar (non-array) catalog columns only.
-  * Anything else is declined in [[supported]] and left to Spark's residual
-  * Filter node.
-  *
-  * Pushed filters are HANDLED (no residual re-check), so [[eval3]] must
-  * match Catalyst exactly — including SQL's three-valued logic: e.g.
-  * `NOT (a = 'x')` over a NULL `a` is UNKNOWN, and the row is dropped; a
-  * two-valued evaluator would negate false into true and keep it.
-  */
-object EsmCatalogFilters {
-  import org.apache.spark.sql.sources._
-
-  private val TRUE  = java.lang.Boolean.TRUE
-  private val FALSE = java.lang.Boolean.FALSE
-
-  def supported(schema: StructType, f: Filter): Boolean = f match {
-    case And(l, r) => supported(schema, l) && supported(schema, r)
-    case Or(l, r)  => supported(schema, l) && supported(schema, r)
-    case Not(c)    => supported(schema, c)
-    case _ =>
-      val scalarRefs = f.references.forall { r =>
-        schema.fields.find(_.name == r).exists(!_.dataType.isInstanceOf[ArrayType])
-      }
-      scalarRefs && (f match {
-        case _: EqualTo | _: EqualNullSafe | _: In | _: IsNull | _: IsNotNull |
-             _: StringStartsWith | _: StringEndsWith | _: StringContains => true
-        case _ => false
-      })
-  }
-
-  /** SQL equality on coerced values: double NaN = NaN is TRUE and
-    * 0.0 = -0.0 is TRUE (Spark's comparison semantics), everything else is
-    * value equality. Both sides are already coerced to the column's
-    * declared type, so no cross-type numeric compare arises. */
-  private def sqlEq(x: Any, v: Any): Boolean = (x, v) match {
-    case (a: java.lang.Double, b: java.lang.Double) =>
-      (a.isNaN && b.isNaN) || a.doubleValue() == b.doubleValue()
-    case _ => x == v
-  }
-
-  /** Kleene three-valued evaluation of a pushed filter against a
-    * full-schema row accessor (column name → decoded value or null):
-    * TRUE / FALSE / null (UNKNOWN). A row survives only when every pushed
-    * filter is TRUE — exactly Catalyst's Filter semantics, which is the
-    * contract now that handled filters get no residual re-check. */
-  def eval3(f: Filter, row: String => Any): java.lang.Boolean = f match {
-    case And(l, r) =>
-      val a = eval3(l, row); val b = eval3(r, row)
-      if (a == FALSE || b == FALSE) FALSE
-      else if (a == null || b == null) null
-      else TRUE
-    case Or(l, r) =>
-      val a = eval3(l, row); val b = eval3(r, row)
-      if (a == TRUE || b == TRUE) TRUE
-      else if (a == null || b == null) null
-      else FALSE
-    case Not(c) =>
-      val a = eval3(c, row)
-      if (a == null) null else java.lang.Boolean.valueOf(!a.booleanValue())
-    case EqualTo(a, v) =>
-      val x = row(a)
-      if (x == null || v == null) null else java.lang.Boolean.valueOf(sqlEq(x, v))
-    case EqualNullSafe(a, v) =>
-      val x = row(a)
-      java.lang.Boolean.valueOf(if (x == null || v == null) x == v else sqlEq(x, v))
-    case In(a, vs) =>
-      // SQL IN: match → TRUE; no match but a NULL among the values →
-      // UNKNOWN; NULL probe → UNKNOWN
-      val x = row(a)
-      if (x == null) null
-      else if (vs.exists(v => v != null && sqlEq(x, v))) TRUE
-      else if (vs.contains(null)) null
-      else FALSE
-    case IsNull(a)    => java.lang.Boolean.valueOf(row(a) == null)
-    case IsNotNull(a) => java.lang.Boolean.valueOf(row(a) != null)
-    case StringStartsWith(a, v) => row(a) match {
-      case null      => null
-      case s: String => java.lang.Boolean.valueOf(s.startsWith(v))
-      case _         => FALSE
-    }
-    case StringEndsWith(a, v) => row(a) match {
-      case null      => null
-      case s: String => java.lang.Boolean.valueOf(s.endsWith(v))
-      case _         => FALSE
-    }
-    case StringContains(a, v) => row(a) match {
-      case null      => null
-      case s: String => java.lang.Boolean.valueOf(s.contains(v))
-      case _         => FALSE
-    }
-    case other =>
-      // cannot be reached for supported() shapes, and ONLY those are pushed;
-      // a silent keep (or drop) here would be a wrong answer, so fail loudly
-      throw new IllegalStateException(s"esmcat: unevaluable pushed filter $other")
-  }
-
-  /** A row survives iff every pushed filter evaluates to TRUE. */
-  def keepRow(filters: Array[Filter], row: String => Any): Boolean = {
-    var i = 0
-    while (i < filters.length) {
-      if (eval3(filters(i), row) != TRUE) return false
-      i += 1
-    }
-    true
-  }
-}
-
-/** The V2 `Aggregation` subset the esmcat reader computes completely:
-  * CountStar, Count(col) (incl. distinct), Min(col), Max(col) over scalar
-  * columns, GLOBAL or GROUPED BY scalar columns. Anything else is declined
-  * and Spark aggregates the raw rows itself — declining is a perf choice,
-  * never a correctness one. String min/max compares `UTF8String`s, i.e.
-  * Spark's own binary collation, not Java's UTF-16 order. */
-object EsmCatalogAggs {
-  import org.apache.spark.sql.connector.expressions.aggregate._
-  import org.apache.spark.sql.connector.expressions.NamedReference
-
-  /** op ∈ count_star | count | min | max; serializable for the reader. */
-  final case class AggSpec(op: String, col: String, distinct: Boolean) {
-    override def toString: String = op match {
-      case "count_star" => "COUNT(*)"
-      case "count"      => s"COUNT(${if (distinct) "DISTINCT " else ""}$col)"
-      case other        => s"${other.toUpperCase}($col)"
-    }
-  }
-
-  /** A complete pushed aggregation: grouping columns (empty = global) +
-    * aggregate specs. Serializable for the reader. */
-  final case class Pushed(groupCols: Seq[String], specs: Seq[AggSpec])
-
-  private def scalarCol(schema: StructType, e: Any): Option[String] = e match {
-    case fr: NamedReference if fr.fieldNames.length == 1 =>
-      val n = fr.fieldNames()(0)
-      schema.fields.find(_.name == n)
-        .filterNot(_.dataType.isInstanceOf[ArrayType]).map(_.name)
-    case _ => None
-  }
-
-  def supported(schema: StructType, agg: Aggregation): Option[Pushed] = {
-    val groupCols = agg.groupByExpressions.map { e =>
-      scalarCol(schema, e) match {
-        case Some(n) => n
-        case None    => return None // expression or array-typed group key
-      }
-    }
-    val specs = agg.aggregateExpressions.map {
-      case _: CountStar => AggSpec("count_star", "", distinct = false)
-      case c: Count =>
-        scalarCol(schema, c.column) match {
-          case Some(n) => AggSpec("count", n, c.isDistinct)
-          case None    => return None
-        }
-      case m: Min =>
-        scalarCol(schema, m.column) match {
-          case Some(n) => AggSpec("min", n, distinct = false)
-          case None    => return None
-        }
-      case m: Max =>
-        scalarCol(schema, m.column) match {
-          case Some(n) => AggSpec("max", n, distinct = false)
-          case None    => return None
-        }
-      case _ => return None
-    }
-    if (specs.isEmpty) None else Some(Pushed(groupCols.toIndexedSeq, specs.toIndexedSeq))
-  }
-
-  /** DSv2 contract: grouping columns first, then aggregate columns. */
-  def outputSchema(schema: StructType, p: Pushed): StructType =
-    StructType(
-      p.groupCols.map(c => schema.fields.find(_.name == c).get) ++
-        p.specs.zipWithIndex.map { case (s, i) =>
-          s.op match {
-            case "count_star" | "count" => StructField(s"agg_$i", LongType, nullable = false)
-            case _ =>
-              StructField(s"agg_$i", schema.fields.find(_.name == s.col).get.dataType,
-                nullable = true)
-          }
-        })
-
-  /** Fold the decoded row lookups into one aggregated InternalRow PER GROUP
-    * (exactly one row — the global group — when `groupCols` is empty, even
-    * on empty input; zero rows for empty grouped input, matching SQL).
-    * Values arrive as plain literals; group keys AND min/max values COERCE
-    * to the column's declared schema type before comparing (a dict catalog
-    * can mix JSON ints and floats in a LongType-inferred column — comparing
-    * them lexically via toString would be silently wrong, and boxing a
-    * Double into a LongType slot would CCE downstream). Unconvertible
-    * values fail loudly. String comparison goes through UTF8String —
-    * Spark's binary order, not Java's UTF-16 order. Group keys normalize
-    * -0.0 to 0.0 (boxed equality would split a group Spark merges); boxed
-    * Double NaNs already compare equal, matching Spark's grouping. */
-  def aggregate(p: Pushed, schema: StructType,
-                rows: Iterator[String => Any]): Iterator[InternalRow] = {
-    val specs     = p.specs
-    val nSpecs    = specs.length
-    final class State {
-      val counts    = new Array[Long](nSpecs)
-      val distincts = Array.fill(nSpecs)(scala.collection.mutable.HashSet.empty[Any])
-      val minmax    = new Array[Any](nSpecs)
-    }
-    val groups    = new java.util.LinkedHashMap[List[Any], State]()
-    val fieldType = schema.fields.map(f => f.name -> f.dataType).toMap
-    def coerce(v: Any, dt: DataType, colName: String): Any = (v, dt) match {
-      case (null, _)                         => null
-      // STRICT: only widenings the row path also performs — a Double in a
-      // LongType column must fail here like it fails (CCE) when the rows
-      // surface unpushed, not silently truncate
-      case (n: java.lang.Integer, LongType)  => n.longValue()
-      case (n: java.lang.Long, LongType)     => n
-      case (n: java.lang.Number, DoubleType) => n.doubleValue()
-      case (b: java.lang.Boolean, BooleanType) => b
-      case (x: Seq[_], StringType)           => CatalogReader.pythonLiteral(x)
-      case (x, StringType)                   => x.toString
-      case (x, other) => throw new IllegalArgumentException(
-        s"esmcat aggregate pushdown: value '$x' (${x.getClass.getSimpleName}) " +
-          s"in column '$colName' does not coerce to its declared $other")
-    }
-    def cmp(a: Any, b: Any): Int = (a, b) match {
-      case (x: String, y: String)   => UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
-      case (x: Long, y: Long)       => java.lang.Long.compare(x, y)
-      case (x: Double, y: Double)   => java.lang.Double.compare(x, y)
-      case (x: Boolean, y: Boolean) => java.lang.Boolean.compare(x, y)
-      case (x, y) => throw new IllegalStateException(s"uncomparable after coercion: $x vs $y")
-    }
-    // -0.0 → 0.0 for hash identity: Spark normalizes floats before grouping
-    // AND before distinct counting — boxed Double.equals would split what
-    // the unpushed path merges (boxed NaNs already compare equal)
-    def normFloat(v: Any): Any = v match {
-      case d: java.lang.Double if d.doubleValue() == 0.0 => java.lang.Double.valueOf(0.0)
-      case other                                         => other
-    }
-    def groupKey(row: String => Any): List[Any] =
-      p.groupCols.map(c => normFloat(coerce(row(c), fieldType.getOrElse(c, StringType), c))).toList
-    if (p.groupCols.isEmpty) groups.put(Nil, new State) // global agg: one row even on empty input
-    rows.foreach { row =>
-      val st = groups.computeIfAbsent(groupKey(row), _ => new State)
-      var i = 0
-      while (i < nSpecs) {
-        val s = specs(i)
-        s.op match {
-          case "count_star" => st.counts(i) += 1
-          case "count" =>
-            val v = row(s.col)
-            // DISTINCT must coerce like min/max: a DoubleType-unified dict
-            // column can carry Integer(9) and Double(9.0) for the same
-            // logical value — raw boxing would count them as two distincts
-            // while the unpushed row path widens both to 9.0 and counts one
-            if (v != null) {
-              if (s.distinct)
-                st.distincts(i) += normFloat(coerce(v, fieldType.getOrElse(s.col, StringType), s.col))
-              else st.counts(i) += 1
-            }
-          case "min" =>
-            val v = coerce(row(s.col), fieldType.getOrElse(s.col, StringType), s.col)
-            if (v != null && (st.minmax(i) == null || cmp(v, st.minmax(i)) < 0)) st.minmax(i) = v
-          case "max" =>
-            val v = coerce(row(s.col), fieldType.getOrElse(s.col, StringType), s.col)
-            if (v != null && (st.minmax(i) == null || cmp(v, st.minmax(i)) > 0)) st.minmax(i) = v
-        }
-        i += 1
-      }
-    }
-    def toCatalyst(v: Any): Any = v match {
-      case null      => null
-      case s: String => UTF8String.fromString(s)
-      case other     => other // already coerced to the schema type
-    }
-    import scala.jdk.CollectionConverters._
-    groups.entrySet().iterator().asScala.map { e =>
-      val key = e.getKey; val st = e.getValue
-      InternalRow.fromSeq(key.map(toCatalyst) ++ specs.zipWithIndex.map { case (s, i) =>
-        s.op match {
-          case "count_star"          => st.counts(i)
-          case "count" if s.distinct => st.distincts(i).size.toLong
-          case "count"               => st.counts(i)
-          case _                     => toCatalyst(st.minmax(i))
-        }
-      })
-    }
-  }
-}
-
-final case class EsmCatalogPartition(descriptorPath: String) extends InputPartition
-
-final class EsmCatalogReaderFactory(schema: StructType,
-    filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
-    aggPushed: Option[EsmCatalogAggs.Pushed] = None)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val desc = EsmCatalogSource.describe(
-      partition.asInstanceOf[EsmCatalogPartition].descriptorPath)
-
-    def toInternal(value: Any, dt: DataType): Any = (value, dt) match {
-      case (null, _)                       => null
-      // array-and-scalar mix unified to StringType: render the literal form
-      // (same degrade as CatalogReader.fromDict) instead of Scala's
-      // List(...) toString — MUST precede the generic StringType case
-      case (v: Seq[_], StringType) =>
-        UTF8String.fromString(CatalogReader.pythonLiteral(v))
-      case (v, StringType)                 => UTF8String.fromString(v.toString)
-      case (v: String, ArrayType(StringType, _)) =>
-        // parseLiteral returns null for a non-container cell — surface SQL
-        // NULL (matching CatalogReader.decodeIterable), don't fabricate
-        val parsed = EsmCatalogSource.parseLiteral(v)
-        if (parsed == null) null
-        else new GenericArrayData(parsed.map(x =>
-          if (x == null) null else UTF8String.fromString(x)).toArray[Any])
-      case (v: Seq[_], ArrayType(StringType, _)) =>
-        new GenericArrayData(v.map(x => UTF8String.fromString(String.valueOf(x))).toArray[Any])
-      case (v: Int, LongType)              => v.toLong
-      case (v, LongType)                   => v.asInstanceOf[Long]
-      case (v: java.lang.Number, DoubleType) => v.doubleValue() // unified col may mix Int/Long/Double
-      case (v, DoubleType)                 => v.asInstanceOf[Double]
-      case (v, BooleanType)                => v.asInstanceOf[Boolean]
-      case (v, _)                          => UTF8String.fromString(v.toString)
-    }
-
-    // pushed-filter evaluation values: plain Scala/Java literals (String,
-    // Long, Double, Boolean — matching the types Catalyst puts in V1 Filter
-    // values), looked up by name over the FULL catalog schema: a pushed
-    // predicate may reference a column the projection pruned away.
-    def toFilterVal(value: Any, dt: DataType): Any = (value, dt) match {
-      case (null, _)                         => null
-      case (v: java.lang.Integer, LongType)  => v.longValue()
-      case (v: java.lang.Long, LongType)     => v
-      // a DoubleType-unified dict column can hold raw JSON ints — widen like
-      // the row path, or EqualTo(col, 9.0) would miss Integer(9)
-      case (v: java.lang.Number, DoubleType) => v.doubleValue()
-      case (v: Seq[_], StringType)           => CatalogReader.pythonLiteral(v)
-      case (v, StringType)                   => v.toString
-      case (v, _)                            => v
-    }
-    val filterRefs: Array[String] =
-      if (filters.isEmpty) Array.empty else filters.flatMap(_.references).distinct
-    def keep(lookup: String => Any): Boolean =
-      EsmCatalogFilters.keepRow(filters, lookup)
-
-    // complete aggregate pushdown: fold the (filtered) decoded rows into
-    // one aggregated InternalRow per group (one total when global).
-    // `schema` is already the aggregate output schema in this mode
-    // (ScanBuilder.readSchema), so the plain-row branch below never runs.
-    if (aggPushed.isDefined) {
-      val fullType = desc.schema.fields.map(f => f.name -> f.dataType).toMap
-      val lookups: Iterator[String => Any] = desc.csvPath match {
-        case Some(csv) =>
-          val all    = EsmCatalogSource.readCsvRows(csv)
-          val header = all.head
-          // FIRST-wins on duplicate header names (plain toMap keeps the
-          // last), matching the row path's header.indexOf resolution — the
-          // same query must not change answers when pushdown fires
-          val colIdx = header.zipWithIndex.reverseIterator.toMap
-          all.iterator.drop(1)
-            .map { cells =>
-              (name: String) =>
-                toFilterVal(colIdx.get(name).filter(_ < cells.length).map(cells(_)).orNull,
-                  fullType.getOrElse(name, StringType))
-            }
-            .filter(lookup => filters.isEmpty || keep(lookup))
-        case None =>
-          desc.model.catalogDict.get.iterator
-            .map { rec =>
-              (name: String) =>
-                toFilterVal(rec.getOrElse(name, null), fullType.getOrElse(name, StringType))
-            }
-            .filter(lookup => filters.isEmpty || keep(lookup))
-      }
-      val out = EsmCatalogAggs.aggregate(aggPushed.get, desc.schema, lookups)
-      return new PartitionReader[InternalRow] {
-        private var current: InternalRow = _
-        override def next(): Boolean = { val h = out.hasNext; if (h) current = out.next(); h }
-        override def get(): InternalRow = current
-        override def close(): Unit = ()
-      }
-    }
-
-    val rows: Iterator[InternalRow] = desc.csvPath match {
-      case Some(csv) =>
-        val all    = EsmCatalogSource.readCsvRows(csv)
-        val header = all.head
-        val idx    = schema.fields.map(f => header.indexOf(f.name))
-        val fullType = desc.schema.fields.map(f => f.name -> f.dataType).toMap
-        val refIdx   = filterRefs.map(r => r -> header.indexOf(r)).toMap
-        all.iterator.drop(1).filter { cells =>
-          filters.isEmpty || keep { name =>
-            val i = refIdx.getOrElse(name, -1)
-            toFilterVal(if (i >= 0 && i < cells.length) cells(i) else null,
-              fullType.getOrElse(name, StringType))
-          }
-        }.map { cells =>
-          InternalRow.fromSeq(schema.fields.zip(idx).map { case (f, i) =>
-            toInternal(if (i >= 0 && i < cells.length) cells(i) else null, f.dataType)
-          }.toIndexedSeq)
-        }
-      case None =>
-        val fullType = desc.schema.fields.map(f => f.name -> f.dataType).toMap
-        desc.model.catalogDict.get.iterator.filter { rec =>
-          filters.isEmpty || keep(name =>
-            toFilterVal(rec.getOrElse(name, null), fullType.getOrElse(name, StringType)))
-        }.map { rec =>
-          InternalRow.fromSeq(schema.fields.map(f =>
-            toInternal(rec.getOrElse(f.name, null), f.dataType)).toIndexedSeq)
-        }
-    }
-
-    new PartitionReader[InternalRow] {
-      private var current: InternalRow = _
-      override def next(): Boolean = { val h = rows.hasNext; if (h) current = rows.next(); h }
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-    }
-  }
+  override def buildScan(requiredColumns: Array[String]): RDD[Row] =
+    df.select(requiredColumns.map(c => col(s"`${c.replace("`", "``")}`")).toIndexedSeq: _*).rdd
 }

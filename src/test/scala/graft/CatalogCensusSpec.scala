@@ -362,6 +362,20 @@ class CatalogCensusSpec extends AnyFunSuite {
     assert(load.actions.isEmpty && load.jobs <= 4, load)
   }
 
+  test("format(esmcat) reads the table once, at load, in open's jobs") {
+    val dir  = java.nio.file.Files.createTempDirectory("graft_census_esmcat")
+    val rows = assets.select("source_id", "experiment_id", "variable", "path")
+      .as[(String, String, String, String)].collect().toSeq
+    val json = CatalogFixtures.gcmAssets(dir, rows).toString
+    val (_, open)    = census(EsmCatalog.open(spark, json))
+    val (df, loaded) = census(spark.read.format("esmcat").load(json))
+    assert(loaded.jobs <= 2 && loaded.jobs == open.jobs, s"$loaded vs $open")
+    // later actions scan the rows held at load, not the file
+    java.nio.file.Files.delete(dir.resolve("gcm-assets.csv"))
+    assert(df.count() == rows.size)
+    assert(df.filter(col("experiment_id") === "historical").count() == rows.size / 2)
+  }
+
   test("a catalog over the cap keeps the lazy scan and its distributed search") {
     val held = EsmCatalog.open(spark, csvCatalog, tasRange)
     withCap(7) {

@@ -19,16 +19,6 @@ class PlanAuditSpec extends AnyFunSuite {
       p.take(1500))
   }
 
-  test("search predicate lands in the esmcat DSv2 scan's pushed filters") {
-    val json = graft.harness.PipelineDemo.ensureCatalog(spark, dir)
-    val df = spark.read.format("esmcat").load(json)
-    val searched = graft.search.QueryCompiler.search(df,
-      Map("status" -> Seq("O", "F")), Set("variable"))
-    val p = searched.queryExecution.executedPlan.toString
-    assert(p.contains("esmcat PushedFilters: [") &&
-      (p.contains("In(status") || p.contains("EqualTo(status,O)")), p.take(1500))
-  }
-
   test("projection prunes the read schema") {
     val p = plan("project_requested_vars")
     assert(p.contains("ReadSchema: struct<l_orderkey:bigint,l_partkey:bigint,l_suppkey:bigint,l_linenumber:int,l_quantity:double>"),
