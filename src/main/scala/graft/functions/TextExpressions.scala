@@ -703,4 +703,11 @@ object TextFunctions {
     * [[DeflateSize]]). */
   def deflate_size(c: Column, level: Int = 6): Column =
     column(DeflateSize(expression(c), level))
+
+  /** Whitespace tokens, empties removed (see [[WhitespaceTokens]]). */
+  def whitespace_tokens(c: Column): Column = column(WhitespaceTokens(expression(c)))
+
+  /** (n_tokens, n_alpha, n_digit, n_punct, n_space) per row (see
+    * [[QualityCounts]]). */
+  def quality_counts(c: Column): Column = column(QualityCounts(expression(c)))
 }

@@ -89,12 +89,18 @@ object Dedup {
   def wordShingles(c: Column, n: Int = 3): Column =
     graft.functions.SketchFunctions.window_strings(tokens(c), n)
 
-  /** Lowercased whitespace tokens, empties removed — trim-then-split stays
-    * codegen'd (see TextAnalysis.tokens). */
-  def tokens(c: Column): Column = {
-    val t = regexp_replace(lower(c), "^\\s+|\\s+$", "") // trim() strips spaces ONLY
-    when(length(t) === 0, array().cast("array<string>")).otherwise(split(t, "\\s+"))
-  }
+  /** The text has an n-token window of [[tokens]], i.e. its
+    * `minhash_sig_windows` is not null — counted without building tokens.
+    * Filter on this, not on the signature: Catalyst pushes a filter on a
+    * projected signature below the projection, and the kernel then runs
+    * twice per document. */
+  private[graft] def hasWindow(c: Column, n: Int): Column =
+    TextAnalysis.tokenCount(lower(c)) >= n
+
+  /** Lowercased whitespace tokens, empties removed: [[TextAnalysis.tokens]]
+    * (the byte-scan [[graft.functions.WhitespaceTokens]] kernel) of
+    * `lower(c)`. */
+  def tokens(c: Column): Column = TextAnalysis.tokens(lower(c))
 
   // ---------------------------------------------------------------- minhash
 
@@ -217,14 +223,15 @@ object Dedup {
     * the [[minhashSignatures]] explode + lead-window + MinHashAgg pipeline
     * but with ZERO shuffle: at 100 TB the agg path's window stage alone
     * exchanges the full exploded corpus. Docs with fewer than
-    * `shingleWords` tokens are absent (matching the agg path).
+    * `shingleWords` tokens are absent (matching the agg path; dropped by
+    * [[hasWindow]] before the signature is taken).
     * Output: (id, sig: array&lt;long&gt;). */
   def minhashSignaturesRowLocal(df: DataFrame, textCol: String, idCol: String,
                                 shingleWords: Int, k: Int): DataFrame =
-    df.select(col(idCol).as("id"),
+    df.filter(hasWindow(col(textCol), shingleWords))
+      .select(col(idCol).as("id"),
         graft.functions.SketchFunctions.minhash_sig_windows(
           tokens(col(textCol)), shingleWords, k).as("sig"))
-      .filter(col("sig").isNotNull)
 
   /** Core of [[minhashLsh]] over pre-computed (id, sh) shingle rows — callers
     * that need the shingles for other purposes too (e.g. [[ngramJaccard]]'s
@@ -783,7 +790,8 @@ object Dedup {
     * corpus × words size (DISK_ONLY against the executor-memory cliff) and
     * re-aggregated them twice; now no shingle relation exists at all.
     * The signature table (banding + two rejoins consume it) persists at
-    * DISK_ONLY and the candidate pairs at MEMORY_AND_DISK, both in `scope`
+    * DISK_ONLY, the candidate pairs and the candidates' shingle sets at
+    * MEMORY_AND_DISK, all in `scope`
     * ([[CorpusPipeline.clean]] passes its own and releases it once its
     * result is consumed; everyone else gets [[CacheScope.untracked]]).
     */
@@ -819,14 +827,18 @@ object Dedup {
       // apply to a cache: a cached partition computes once under the
       // block-manager lock and concurrent branches wait on it.
       .transform(c => scope.persisted(c, StorageLevel.MEMORY_AND_DISK))
-    // exact sets only for docs that appear in some candidate pair —
-    // computed per ROW after the semi-join, so the only shuffled shingle
-    // sets are the candidate-touched ones (near the pair count)
+    // exact sets only for docs that appear in some candidate pair: the
+    // semi-join runs on the raw text and the sets are projected above it,
+    // once per candidate-touched doc — persisted in `scope` because both
+    // sides of the pair join read them (a projection below the semi-join
+    // would shingle every document, once per side)
     val candIds = candidates.select(col("id_a").as("id"))
       .unionByName(candidates.select(col("id_b").as("id"))).distinct()
-    val sh = df.select(col(idCol).as("id"),
-        graft.functions.SketchFunctions.window_strings(tokens(col(textCol)), n).as("sh"))
+    val sh = df.select(col(idCol).as("id"), col(textCol).as("text"))
       .join(candIds, Seq("id"), "left_semi")
+      .select(col("id"),
+        graft.functions.SketchFunctions.window_strings(tokens(col("text")), n).as("sh"))
+      .transform(t => scope.persisted(t, StorageLevel.MEMORY_AND_DISK))
     candidates
       .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
       .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
@@ -914,12 +926,12 @@ object Dedup {
     // ONE scan, zero shuffle (r8): distinct shingle set + fused minhash
     // signature per corpus row — the index build never explodes or
     // aggregates anything
-    corpus.select(col(idCol).as("id"),
+    corpus.filter(hasWindow(col(textCol), n))
+      .select(col(idCol).as("id"),
         graft.functions.SketchFunctions.window_strings(
           tokens(col(textCol)), n).as("shingles"),
         graft.functions.SketchFunctions.minhash_sig_windows(
           tokens(col(textCol)), n, b * r).as("sig"))
-      .filter(col("sig").isNotNull)
   }
 
   private def nearDupParams(threshold: Double): (Int, Int) =
@@ -1125,9 +1137,7 @@ object Dedup {
   ): DataFrame = {
     require(windowTokens >= 2, s"windowTokens must be >= 2, got $windowTokens")
     val L = windowTokens
-    val trimmed = regexp_replace(col(textCol), "^\\s+|\\s+$", "")
-    val toks = when(length(trimmed) === 0, array().cast("array<string>"))
-      .otherwise(split(trimmed, "\\s+"))
+    val toks = TextAnalysis.tokens(col(textCol))
     // both hash lanes computed per DOCUMENT row in the scan (no
     // lead()-window shuffle of the corpus text), zipped and exploded to
     // fixed-width rows. Persisted because BOTH the duplicate-group
@@ -1189,9 +1199,7 @@ object Dedup {
       .groupBy("doc_id")
       .agg(collect_list(struct(col("span_start").as("s"), col("span_end").as("e")))
         .as("spans"))
-    val trimmed = regexp_replace(col(textCol), "^\\s+|\\s+$", "")
-    val toks = when(length(trimmed) === 0, array().cast("array<string>"))
-      .otherwise(split(trimmed, "\\s+"))
+    val toks = TextAnalysis.tokens(col(textCol))
     df.withColumn("__did", col(idCol).cast("long"))
       .join(spans, col("__did") === spans("doc_id"), "left")
       .withColumn("__kept",

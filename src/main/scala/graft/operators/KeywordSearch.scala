@@ -90,13 +90,11 @@ object KeywordSearch {
       terms: Seq[String], idf: Array[Double],
       queries: Seq[(String, Seq[String])])
 
-  /** driver-side mirror of Dedup.tokens' contract — regex `\s` trim, NOT
-    * String.trim (which also strips control chars <= U+0020 that the
-    * corpus tokenizer keeps attached; the two forms must tokenize a
-    * battery identically or the bm25TopK/bm25Batch bit-parity breaks on
-    * control-character probes) */
+  /** [[Dedup.tokens]] of a query on the driver: lowercased, then split by
+    * the corpus side's own kernel ([[graft.functions.Tokenize]]), so a
+    * battery tokenizes as the documents it scores. */
   private def qTokens(s: String): Seq[String] =
-    s.toLowerCase.replaceAll("^\\s+|\\s+$", "").split("\\s+").filter(_.nonEmpty).toSeq
+    graft.functions.Tokenize.stringTokens(s.toLowerCase).toSeq
 
   private def parseBattery(queries: Seq[(String, String)]): Seq[(String, Seq[String])] = {
     require(queries.nonEmpty, "bm25: empty query battery")

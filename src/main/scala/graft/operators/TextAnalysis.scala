@@ -11,18 +11,15 @@ import org.apache.spark.sql.types._
   */
 object TextAnalysis {
 
-  /** Whitespace tokens with empties removed. */
-  /** Whitespace tokens, empties removed. trim-then-split keeps the whole
-    * expression in codegen (a `filter(split(…))` higher-order function is
-    * interpreted) — `\s+` splitting of a trimmed string can only produce
-    * empties for the empty string, special-cased to an empty array. */
-  def tokens(c: Column): Column = {
-    val t = regexp_replace(c, "^\\s+|\\s+$", "") // trim() strips spaces ONLY, not \t\n
-    when(length(t) === 0, array().cast("array<string>")).otherwise(split(t, "\\s+"))
-  }
+  /** Whitespace tokens (Java regex `\s`), empties removed: the byte-scan
+    * [[graft.functions.WhitespaceTokens]] kernel, one codegen'd call per
+    * row. */
+  def tokens(c: Column): Column = graft.functions.TextFunctions.whitespace_tokens(c)
 
-  /** Token count: whitespace segmentation (spaces + newlines/tabs). */
-  def tokenCount(c: Column): Column = size(tokens(c))
+  /** Token count: the size of [[tokens]], read from the one-pass
+    * [[graft.functions.QualityCounts]] scan, which builds no token. */
+  def tokenCount(c: Column): Column =
+    graft.functions.TextFunctions.quality_counts(c).getField("n_tokens")
 
   // ------------------------------------------------------------- language ID
 
@@ -60,12 +57,13 @@ object TextAnalysis {
     * arithmetic so a SQL oracle can reproduce them bit-for-bit. */
   def qualityFeatures(df: DataFrame, textCol: String): DataFrame = {
     val c = col(textCol)
-    df.withColumn("n_chars_m", length(c))
-      .withColumn("n_tokens", tokenCount(c))
-      .withColumn("n_alpha", length(regexp_replace(c, "[^A-Za-z]", "")))
-      .withColumn("n_digit", length(regexp_replace(c, "[^0-9]", "")))
-      .withColumn("n_punct", length(regexp_replace(c, "[^.,;:!?]", "")))
-      .withColumn("n_space", length(c) - length(regexp_replace(c, " ", "")))
+    // n_tokens … n_space come from one byte scan (QualityCounts), staged
+    // as one struct column so each row is scanned once
+    val staged = df.withColumn("n_chars_m", length(c))
+      .withColumn("__q", graft.functions.TextFunctions.quality_counts(c))
+    graft.functions.QualityCounts.fields
+      .foldLeft(staged)((f, name) => f.withColumn(name, col(s"__q.$name")))
+      .drop("__q")
       .withColumn("mean_token_len",
         when(col("n_tokens") > 0,
           (length(c) - col("n_space")).cast(DoubleType) / col("n_tokens").cast(DoubleType)))

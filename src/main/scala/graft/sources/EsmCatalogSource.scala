@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SQLContext}
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, PrunedScan, RelationProvider}
 import org.apache.spark.sql.types.StructType
@@ -19,7 +20,9 @@ import graft.catalog.CatalogReader
   * iterable columns decoded to `array<string>` — so a table under the
   * driver-collect cap is read once, at `load()`, and later actions scan the
   * held rows. The scan prunes unprojected columns; Spark evaluates filters
-  * and aggregates over its output.
+  * and aggregates over its output. Every reader option but `path` is a
+  * storage option (Hadoop filesystem keys, reader options, the http fetch
+  * byte cap), as `EsmCatalog.open(…, storageOptions)` takes them.
   */
 final class EsmCatalogSource extends RelationProvider with DataSourceRegister {
   override def shortName(): String = "esmcat"
@@ -28,7 +31,16 @@ final class EsmCatalogSource extends RelationProvider with DataSourceRegister {
                               parameters: Map[String, String]): BaseRelation = {
     val path = parameters.getOrElse("path",
       throw new IllegalArgumentException("esmcat: .load(<descriptor.json>) path required"))
-    new EsmCatalogRelation(sqlContext, CatalogReader.load(sqlContext.sparkSession, path)._2.df)
+    // every other option is a storage option, as `EsmCatalog.open` takes
+    // them; Spark hands the options over case-insensitively, lower-cased
+    // on iteration, so read the keys as the caller spelled them
+    val options = parameters match {
+      case m: CaseInsensitiveMap[String @unchecked] => m.originalMap
+      case m => m
+    }
+    val storageOptions = options.filter { case (k, _) => !k.equalsIgnoreCase("path") }
+    new EsmCatalogRelation(sqlContext,
+      CatalogReader.load(sqlContext.sparkSession, path, storageOptions)._2.df)
   }
 }
 

@@ -163,10 +163,11 @@ object StreamingOps {
       // batch twin (shingleRows) excludes those too, and without the
       // filter every short doc would share one signature and flood each
       // band's bucket with false collisions against the first one seen.
+      // Dedup.hasWindow drops exactly those docs before the kernel runs.
+      .filter(Dedup.hasWindow(col(textCol), shingleWords))
       .select(col(idCol).cast("long").as("doc_id"), col(tsCol).as("ts"),
         graft.functions.SketchFunctions.minhash_sig_windows(
           Dedup.tokens(col(textCol)), shingleWords, bands * rowsPerBand).as("__sig"))
-      .filter(col("__sig").isNotNull)
       .select(col("doc_id"), col("ts"),
         posexplode(graft.functions.SketchFunctions.band_hashes(
           col("__sig"), bands, rowsPerBand)))
@@ -291,9 +292,7 @@ object StreamingOps {
     require(windowTokens >= 2, s"windowTokens must be >= 2, got $windowTokens")
     val L = windowTokens
     val ttlMs = ttlMinutes.toLong * 60L * 1000L
-    val trimmed = regexp_replace(col(textCol), "^\\s+|\\s+$", "")
-    val toks = when(length(trimmed) === 0, array().cast("array<string>"))
-      .otherwise(split(trimmed, "\\s+"))
+    val toks = graft.operators.TextAnalysis.tokens(col(textCol))
     // one native expression hashes every L-token window (identical bytes to
     // xxhash64 of the space-joined window string) — replaces an interpreted
     // L-deep zip_with chain whose tree the incremental planner re-optimized

@@ -298,4 +298,23 @@ class EsmCatalogSourceSpec extends AnyFunSuite {
     assert(cols == Set("status", "member"), scan.toString.take(800))
     assert(df.distinct().count() > 0)
   }
+
+  test("format(esmcat) hands its options to the reader as storage options") {
+    // a ';'-separated table reads as two columns only if `sep` reaches the
+    // csv read, as it does through EsmCatalog.open's storageOptions
+    val dir = Files.createTempDirectory("graft_esmcat_options")
+    Files.writeString(dir.resolve("semi.csv"), "path;realm\na;atmos\nb;ocean\n")
+    val json = dir.resolve("semi.json")
+    Files.writeString(json,
+      """{"esmcat_version": "0.2.0", "id": "semi",
+        |"assets": {"column_name": "path", "format": "parquet"},
+        |"catalog_file": "semi.csv"}""".stripMargin)
+    val esmcat = spark.read.format("esmcat").option("sep", ";").load(json.toString)
+    val api = graft.catalog.EsmCatalog.open(spark, json.toString,
+      storageOptions = Map("sep" -> ";")).df
+    assert(esmcat.columns.toSeq == Seq("path", "realm"), esmcat.columns.mkString(","))
+    assert(esmcat.schema == api.schema)
+    assert(esmcat.exceptAll(api).isEmpty && api.exceptAll(esmcat).isEmpty)
+    assert(spark.read.format("esmcat").load(json.toString).columns.toSeq == Seq("path;realm"))
+  }
 }

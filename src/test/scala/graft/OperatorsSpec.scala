@@ -97,6 +97,78 @@ class DedupSpec extends AnyFunSuite {
     assert(j((1L, 3L)) > 0.3 && j((1L, 3L)) < 1.0)
   }
 
+  /** Every node of an executed plan: through AQE stages, and into each
+    * cached relation's own plan once, however often it is scanned. */
+  private def planNodes(plan: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
+    def walk(p: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.execution.SparkPlan] =
+      p match {
+        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+        case q: QueryStageExec        => q +: walk(q.plan)
+        case s: InMemoryTableScanExec =>
+          s +: (if (seen.add(s.relation.cacheBuilder)) walk(s.relation.cachedPlan) else Nil)
+        case o => o +: o.children.flatMap(walk)
+      }
+    walk(plan)
+  }
+
+  /** Plan nodes evaluating an expression that `isKernel` picks. */
+  private def evaluating(plan: org.apache.spark.sql.execution.SparkPlan)(
+      isKernel: org.apache.spark.sql.catalyst.expressions.Expression => Boolean) =
+    planNodes(plan).filter(_.expressions.exists(_.exists(isKernel)))
+
+  /** 12 unrelated 20-word documents, a variant of each of the first six
+    * with its last word changed (3-gram jaccard 17/19), exact copies of the
+    * first two, a document too short to shingle, and a null text. */
+  private lazy val shingleCorpus = {
+    val base = (0 until 12).map(b => (0 until 20).map(k => s"w${b * 20 + k}").mkString(" "))
+    val texts = base ++ base.take(6).map(_.split(" ").init.mkString(" ") + " zz") ++
+      base.take(2) ++ Seq("too short", null)
+    spark.createDataFrame(texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text").rdd, new org.apache.spark.sql.types.StructType()
+      .add("doc_id", "long", nullable = false).add("text", "string"))
+  }
+
+  test("row-local minhash signatures evaluate the kernel once per document") {
+    val sigs = Dedup.minhashSignaturesRowLocal(shingleCorpus, "text", "doc_id", 3, 16)
+    val got = sigs.collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    assert(evaluating(sigs.queryExecution.executedPlan)(
+      _.isInstanceOf[graft.functions.MinHashSigWindows]).size == 1,
+      sigs.queryExecution.executedPlan.toString)
+    // the same rows as filtering the signature itself
+    val want = shingleCorpus.select(col("doc_id"), graft.functions.SketchFunctions
+        .minhash_sig_windows(Dedup.tokens(col("text")), 3, 16).as("sig"))
+      .collect().filter(!_.isNullAt(1)).map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    assert(got == want && got.size == 20)
+  }
+
+  test("ngram jaccard shingles each candidate-touched document once, after the semi-join") {
+    val j = Dedup.ngramJaccard(shingleCorpus, "text", "doc_id", n = 3, threshold = 0.5)
+    val got = j.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val plan = j.queryExecution.executedPlan
+    val shingling = evaluating(plan)(_.isInstanceOf[graft.functions.WindowStrings])
+    assert(shingling.size == 1, plan.toString)
+    assert(planNodes(shingling.head).exists {
+      case b: org.apache.spark.sql.execution.joins.BaseJoinExec =>
+        b.joinType == org.apache.spark.sql.catalyst.plans.LeftSemi
+      case _ => false
+    }, shingling.head.toString)
+    // the pair set is every pair at or above the threshold, exactly
+    val sets = shingleCorpus.collect().collect { case r if !r.isNullAt(1) =>
+      r.getLong(0) -> r.getString(1).split(" ").sliding(3).filter(_.length == 3)
+        .map(_.mkString(" ")).toSet
+    }
+    val want = (for {
+      (a, sa) <- sets; (b, sb) <- sets if a < b && sa.nonEmpty && sb.nonEmpty
+      jac = (sa & sb).size.toDouble / (sa | sb).size.toDouble if jac >= 0.5
+    } yield (a, b) -> jac).toMap
+    assert(got == want && want.size == 10, s"$got vs $want")
+  }
+
   test("exact dup stats: histogram buckets by cluster size, doc counts add up") {
     val corpus = Seq((1L, "a"), (2L, "a"), (3L, "a"), (4L, "b"), (5L, "b"), (6L, "c"))
       .toDF("doc_id", "text")
