@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Independent validator for the CF decode layer: parses the CDF-1
 fixture (/tmp/graft_cf_fixture_v3.nc, written by graft.harness.Nc3CfFixture
-via SparkEntry.ensureCfFixture) with its own netCDF classic reader,
+via gates.CatalogScanGates.ensureCfFixture) with its own netCDF classic reader,
 applies CF mask/scale/time decoding in plain python (datetime
 arithmetic, not Spark and not DuckDB), and compares every row against
 the engine's dumped load_netcdf_cf parquet.

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Independent validator for the engine's hand-encoded HDF5 layout-v4
 fixture (/tmp/graft_h5v4_fixture_v2.nc, written by
-graft.harness.Hdf5V4Fixture via SparkEntry.ensureHdf5V4Fixture).
+graft.harness.Hdf5V4Fixture via gates.CatalogScanGates.ensureHdf5V4Fixture).
 
 This is a THIRD implementation of the relevant subset of the public HDF5
 File Format Specification v3.0 — independent of both the Scala encoder

@@ -1,17 +1,19 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
+import graft.gates.{EventGates, Gates, Tag}
+
 /** Benchmark main. Prints ONE compact JSON line with per-query seconds.
   *
-  * The line lists HEADLINE queries only (~46 rows as of r12, plus the
+  * The line lists HEADLINE queries only (50 rows, plus the
   * shared/baseline subtotals, resample count, and calib sentinels — ~1.8 KB,
   * re-measured against the harness's 2,000-char captured tail each round:
   * the r11 official line carried a 39-name resampled array, blew that tail,
   * and the driver recorded parsed=null) because a line timing the full
   * ~150-query surface gets truncated and fails to parse. Set
   * SPARK_GRAFT_BENCH_ALL=1 to time the full query surface instead (local
-  * iteration), or name rows (`graft.Bench <row>…`, any of [[runnable]]) to
-  * time only those — the A/B form: same warmup, same interleaved
+  * iteration), or name rows (`graft.Bench <row>…`, any gate in
+  * [[graft.gates.Gates]]) to time only those — the A/B form: same warmup, same interleaved
   * min-of-samples, no frozen subtotals and no streaming lanes. Either way
   * the complete per-query timing map (plus the full resampled name list)
   * is written to target/bench_full.json.
@@ -26,275 +28,20 @@ import org.apache.spark.sql.SparkSession
   *  - `calib_sec` carries the fixed CPU-bound sentinel at EVERY sweep
   *    boundary plus a streaming-phase sentinel, so a contended window is
   *    visible in the artifact itself (which sweep, headline vs streaming);
-  *  - `shared_rows_total` sums the FROZEN r10 row set ([[sharedRows]]) —
+  *  - `shared_rows_total` sums the FROZEN r10 row set (tag `Shared`) —
   *    the cross-round comparable that new headline rows cannot inflate.
   */
 object Bench {
-  /** Representative slice of the surface: parity catalog ops, joins/aggs,
-    * dedup family, similarity, text, multimodal, pipeline, events. */
-  val headline: Seq[String] = Seq(
-    "q1_agg", "q3_top_orders", "q_topk_per_group", "q_salted_join",
-    "search_require_all_on", "search_derived_union", "to_dataset_dict",
-    "combine_by_coords", "agg_union", "dedup_exact", "dedup_minhash_lsh",
-    "dedup_simhash", "dedup_ngram_jaccard", "embed_cosine_topk",
-    "ann_ivf_topk", "text_quality", "events_sessionize", "events_asof_join",
-    "multimodal_frames", "pipeline_clean_corpus", "dedup_embedding",
-    "pipeline_chunk_docs", "pipeline_decontaminate", "events_funnel",
-    "q_sketch_stats", "text_repetition", "scan_kerchunk_reference",
-    "dedup_substring",
-    // r8 additions: CF decode (fixture-scale), semantic dedup (embeddings
-    // scale incl. its in-plan property verification), gopher rules (full
-    // corpus scan of integer-exact gates)
-    "load_netcdf_cf", "pipeline_semdedup", "text_gopher_rules",
-    // r10: classifier inference (full-corpus hashed-feature scoring scan)
-    // and BPE tokenization (distributed dict agg + driver merge loop +
-    // encode scan + in-plan losslessness verification)
-    "text_classifier_score", "pipeline_bpe_tokenize",
-    // r10: stupid-backoff LM — one-scan distributed n-gram count with
-    // capped deterministic pulls + the pure-scan scoring expression —
-    // and the composed classifier+LM+gopher verdict in ONE corpus scan
-    "text_lm_levels", "pipeline_quality_filter",
-    // r9: the minhash-LSH and semdedup PIPELINES in isolation — the
-    // registered rows deliberately include their in-plan property
-    // verification (SURVEY §9), which would hide a pipeline regression
-    // inside verification noise; these rows make one attributable
-    "dedup_minhash_lsh_pipeline", "pipeline_semdedup_pipeline",
-    // r11: raw IVF path, now that the registered row carries verification
-    "ann_ivf_topk_pipeline",
-    // r11: BPE-unit sequence packing (train + encode + pack + in-plan
-    // losslessness-through-packing verification)
-    "pipeline_pack_sequences_bpe",
-    // r11: lexical BM25 retrieval (one-scan tf kernel + stats agg +
-    // two-stage top-k over a 3-query battery)
-    "search_bm25_topk",
-    // r11: IVF-PQ (codebook training + encode scan + ADC + exact re-rank
-    // + the in-plan property verification)
-    "ann_pq_topk",
-    // r11: the zarr SINK round trip (write banded zlib store + read back
-    // through the engine's own reader + decode plane)
-    "save_zarr_roundtrip",
-    // r11 late additions: transitive duplicate clustering (LSH pair graph
-    // + the large-star/small-star driver iteration), DSIR selection (two
-    // histogram training scans + the codegen'd scoring scan + two-stage
-    // top-k), and the v3 SHARDED sink round trip
-    "dedup_clusters", "pipeline_dsir_select", "save_zarr_v3_roundtrip",
-    // r12: inverted-index BM25 over a 1,000-probe battery (bench-only row;
-    // the gate twin search_bm25_batch carries correctness)
-    "search_bm25_batch_1k",
-    // r14: the SAME battery at a >1,024-term vocabulary — through r14
-    // this timed the explode+semi-join posting build; since r15 it times
-    // the sparse TermPostings kernel that replaced it at this size
-    // (correctness carried by the search_bm25_batch_bigvocab gate)
-    "search_bm25_batch_bigvocab_1k",
-    // r15: the persisted-store maintenance cycles — build + append +
-    // search as ONE timed unit per store (the operations a production
-    // deployment runs daily; correctness carried by the
-    // search_bm25_indexed / ann_index_search gate families). New series:
-    // no prior-round comparables; frozen subtotals untouched.
-    "bm25_index_cycle", "ann_index_cycle",
-    // r17: battery-as-data POSITIONAL retrieval — a 1,000-phrase battery
-    // (each probe = a document's leading 3 words) through ONE fixed
-    // positions-scan plan over a pre-built positional store (store build
-    // is warmup, not query work — the search is the operation; the
-    // per-phrase form at this battery size would plan 1,000 scan
-    // branches). Correctness carried by the search_bm25_phrase_batch /
-    // search_bm25_near_batch gates.
-    "search_bm25_phrase_batch_1k")
-
-  /** FROZEN at the round-10 headline set (37 rows). The artifact's
-    * `shared_rows_total` sums exactly these, so future rounds that add
-    * headline rows keep one directly comparable cross-round number — the
-    * r10 gate breach was an apples-to-oranges total (37 rows vs the r2
-    * baseline's sweep) inflated further by a contention window. Do NOT
-    * append to this list; a future re-freeze should introduce a new field
-    * name alongside it.
-    *
-    * One SUBSTITUTION, not an append: the registered `ann_ivf_topk`
-    * became a property-verdict row in r11 (brute-force baseline + four
-    * verification jobs — a different computation), so this list carries
-    * `ann_ivf_topk_pipeline`, which runs the r10 row's EXACT raw IVF
-    * query (same k/nCells/nProbe) — the honest continuation of that
-    * timing series. */
-  val sharedRows: Seq[String] = Seq(
-    "q1_agg", "q3_top_orders", "q_topk_per_group", "q_salted_join",
-    "search_require_all_on", "search_derived_union", "to_dataset_dict",
-    "combine_by_coords", "agg_union", "dedup_exact", "dedup_minhash_lsh",
-    "dedup_simhash", "dedup_ngram_jaccard", "embed_cosine_topk",
-    "ann_ivf_topk_pipeline", "text_quality", "events_sessionize", "events_asof_join",
-    "multimodal_frames", "pipeline_clean_corpus", "dedup_embedding",
-    "pipeline_chunk_docs", "pipeline_decontaminate", "events_funnel",
-    "q_sketch_stats", "text_repetition", "scan_kerchunk_reference",
-    "dedup_substring", "load_netcdf_cf", "pipeline_semdedup",
-    "text_gopher_rules", "text_classifier_score", "pipeline_bpe_tokenize",
-    "text_lm_levels", "pipeline_quality_filter",
-    "dedup_minhash_lsh_pipeline", "pipeline_semdedup_pipeline")
-
-  /** FROZEN at the round-2 record's 24-row query set (BENCH_r02.json,
-    * total 34.290 s) — the like-for-like comparable for the formal
-    * 2×-vs-baseline gate, which the raw `value` total stopped being once
-    * rounds started ADDING headline rows (r11: 45 rows read 2.04× of the
-    * 24-row record while the same 24 rows read 0.84×). Two SUBSTITUTIONS,
-    * same rule as [[sharedRows]]: the registered `ann_ivf_topk` and
-    * `dedup_minhash_lsh` rows gained in-plan property verification after
-    * r2 (a different computation than the r2 rows timed), so this list
-    * carries their `_pipeline` attribution rows, which run the r2 rows'
-    * EXACT raw queries. Per-row r2-vs-now table: BASELINE.md. Do NOT
-    * append or re-freeze. */
-  val baselineRows: Seq[String] = Seq(
-    "q1_agg", "q3_top_orders", "q_topk_per_group", "q_salted_join",
-    "search_require_all_on", "search_derived_union", "to_dataset_dict",
-    "combine_by_coords", "agg_union", "dedup_exact",
-    "dedup_minhash_lsh_pipeline", "dedup_simhash", "dedup_ngram_jaccard",
-    "embed_cosine_topk", "ann_ivf_topk_pipeline", "text_quality",
-    "events_sessionize", "events_asof_join", "multimodal_frames",
-    "pipeline_clean_corpus", "dedup_embedding", "pipeline_chunk_docs",
-    "events_funnel", "q_sketch_stats")
-
-  /** Bench-only rows (NOT registered gate queries — correctness for these
-    * paths is carried by the gate rows that wrap them in verification).
-    *
-    * Note the registered dedup_minhash_lsh row does NOT simply wrap this
-    * pipeline: its verification shares ONE shingling pass with its ground
-    * truth (DedupChecks.minhashProperties → shingleRows + MinHashAgg), a
-    * signature build that exists only for that sharing. This row times
-    * Dedup.minhashLsh itself — the row-local fused kernel path every
-    * production caller (and ngramJaccard, crossNearDup, the index builds)
-    * actually runs. */
-  val extras: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] = Map(
-    "dedup_minhash_lsh_pipeline" -> ((s, dir) =>
-      graft.operators.Dedup.minhashLsh(
-        s.read.parquet(s"$dir/documents.parquet"), "text", "doc_id",
-        shingleWords = 3, bands = 32, rowsPerBand = 4, threshold = 0.5)),
-    "pipeline_semdedup_pipeline" -> ((s, dir) =>
-      graft.operators.Dedup.semanticDedup(
-        s.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding",
-        threshold = 0.4, nCells = 8, kmeansIters = 2)),
-    // r11: the registered ann_ivf_topk became a property-verdict row
-    // (brute-force baseline + four in-plan checks); this row keeps the
-    // raw production IVF path separately attributable, with the EXACT
-    // parameters the r10 registered row ran (nProbe = 4) so it is the
-    // continuation of that row's timing series in sharedRows
-    "ann_ivf_topk_pipeline" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      graft.operators.Similarity.ivfTopK(emb, "vec_id", "embedding",
-        emb.filter(col("vec_id") < 3), "vec_id", "embedding",
-        k = 10, nCells = 16, nProbe = 4, kmeansIters = 2)
-    }),
-    // r12: the inverted-index BM25 form at the scale the literal form
-    // cannot plan — a 1,000-probe battery (each probe = a document's
-    // leading 5 words: the eval-decontamination look-alike shape) as
-    // DATA through one posting-join plan. Correctness is carried by the
-    // search_bm25_batch gate row (same-oracle hash vs the literal form).
-    "search_bm25_batch_1k" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-      val battery = docs.filter(col("doc_id") < 1000)
-        .select(col("doc_id").as("qid"),
-          concat_ws(" ", slice(split(col("text"), "\\s+"), 1, 5)).as("qtext"))
-      graft.operators.KeywordSearch.bm25Batch(
-        docs, "text", "doc_id", battery, "qid", "qtext", k = 10)
-    }),
-    // r14: the 1k battery with 1,100 unique no-match pad probes pushing
-    // the vocabulary past 1,024 distinct terms. Through r14 that forced
-    // the explode+semi-join posting build (13.6 s official, the suite's
-    // most expensive row); since r15 the same battery rides the sparse
-    // TermPostings kernel (binary-search probe, matched pairs only), so
-    // this row now times the big-vocab IN-SCAN path — same battery,
-    // same series, the branch lift IS the measured delta. Pads match
-    // nothing (unique nonsense tokens), so the delta vs
-    // search_bm25_batch_1k is attributable to vocabulary size alone.
-    "search_bm25_batch_bigvocab_1k" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-      val battery = docs.filter(col("doc_id") < 1000)
-        .select(col("doc_id").cast("string").as("qid"),
-          concat_ws(" ", slice(split(col("text"), "\\s+"), 1, 5)).as("qtext"))
-        .unionByName(s.range(1100).select(
-          concat(lit("pad_"), col("id")).as("qid"),
-          concat(lit("qzxpadterm"), col("id")).as("qtext")))
-      graft.operators.KeywordSearch.bm25Batch(
-        docs, "text", "doc_id", battery, "qid", "qtext", k = 10)
-    }),
-    // r15: the posting-store lifecycle at corpus scale — rebuild from
-    // the even half (overwrite = true: the staged-sibling swap resets
-    // the store, so every sample times the same cold build), append the
-    // odd half (the delta-scan path), search a 3-probe battery over the
-    // result. Timing includes the builds by design (they ARE the
-    // operation).
-    "bm25_index_cycle" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
-      val root = s"/tmp/graft_bench_bm25idx_${pathToken(dir)}"
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-      graft.operators.KeywordSearch.bm25IndexBuild(
-        docs.filter(col("doc_id") % 2 === 0), "text", "doc_id", root,
-        overwrite = true)
-      graft.operators.KeywordSearch.bm25IndexAppend(s, root,
-        docs.filter(col("doc_id") % 2 === 1), "text", "doc_id")
-      import s.implicits._
-      val battery = Seq(("q_join", "spark hash join"),
-        ("q_scan", "fast table scan"),
-        ("q_stream", "stream window agg")).toDF("qid", "qtext")
-      graft.operators.KeywordSearch.bm25SearchIndexed(
-        s, root, battery, "qid", "qtext", k = 10)
-    }),
-    // r17: the 1k-phrase battery over the warmup-built positional store —
-    // battery as DATA (one positions scan, one occurrence join), the
-    // decontamination sweep shape. Reads only; the store is prepared once
-    // per run in the warmup block (benchPhraseStore).
-    "search_bm25_phrase_batch_1k" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
-      val battery = s.read.parquet(s"$dir/documents.parquet")
-        .filter(col("doc_id") < 1000)
-        .select(col("doc_id").as("qid"),
-          concat_ws(" ", slice(split(col("text"), "\\s+"), 1, 3)).as("qtext"))
-      graft.operators.KeywordSearch.bm25PhraseBatch(
-        s, benchPhraseStore(dir), battery, "qid", "qtext", k = 10)
-    }),
-    // r15: the vector-store lifecycle — train + encode + cell-partitioned
-    // write, append the odd half under the frozen model, search a 3-query
-    // battery (partition-pruned ADC + exact re-rank).
-    "ann_index_cycle" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
-      val root = s"/tmp/graft_bench_annidx_${pathToken(dir)}"
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      graft.operators.AnnIndex.annIndexBuild(
-        emb.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", root,
-        nCells = 16, m = 8, nCentroids = 16, kmeansIters = 2, overwrite = true)
-      graft.operators.AnnIndex.annIndexAppend(s, root,
-        emb.filter(col("vec_id") % 2 === 1), "vec_id", "embedding")
-      graft.operators.AnnIndex.annSearchIndexed(s, root,
-        emb.filter(col("vec_id") < 3), "vec_id", "embedding",
-        k = 10, nProbe = 8, refine = 4)
-    }))
-
-  /** Every row the bench can time: the registered gate queries plus the
-    * bench-only [[extras]]. */
-  lazy val runnable: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
-    SparkEntry.queries ++ extras
-
-  /** The rows one run times: the named rows when given, else the headline
-    * set (the full surface under SPARK_GRAFT_BENCH_ALL=1). An unknown name
-    * is refused — a typo must not silently time nothing. */
+  /** The rows one run times: the named rows when given, else the
+    * [[Tag.Headline]] rows (every gate under SPARK_GRAFT_BENCH_ALL=1). An
+    * unknown name is refused — a typo must not silently time nothing. */
   private[graft] def rowsToTime(args: Seq[String]): Seq[String] = {
-    val unknown = args.filterNot(runnable.contains)
+    val unknown = args.filterNot(n => Gates.all.exists(_.name == n))
     require(unknown.isEmpty, s"unknown bench row(s): ${unknown.mkString(", ")}")
     if (args.nonEmpty) args.distinct
-    else if (sys.env.get("SPARK_GRAFT_BENCH_ALL").contains("1"))
-      SparkEntry.queries.keys.toSeq ++ extras.keys
-    else headline.filter(runnable.contains)
+    else if (sys.env.get("SPARK_GRAFT_BENCH_ALL").contains("1")) Gates.all.map(_.name)
+    else Gates.tagged(Tag.Headline).map(_.name)
   }
-
-  /** sf-dir → filesystem-safe token for per-sf /tmp store paths (the
-    * SparkEntry.tmpToken convention — one copy per file, same regex). */
-  private def pathToken(dir: String): String = dir.replaceAll("[^A-Za-z0-9.]", "_")
-
-  /** The positional store the phrase-battery row searches — built ONCE per
-    * bench run by [[graft.harness.GraftSession.prepareBenchFixtures]]
-    * (store build is artifact prep, like ensureCatalog; the row times the
-    * SEARCH). */
-  private[graft] def benchPhraseStore(dir: String): String =
-    s"/tmp/graft_bench_posidx_${pathToken(dir)}"
 
   def main(args: Array[String]): Unit = {
     val names = rowsToTime(args.toSeq)
@@ -481,7 +228,7 @@ object Bench {
       // rows instead executes the query exactly as written — every
       // output column evaluated, sorts kept — without paying a
       // driver-side collect/deserialize that a cluster sink wouldn't.
-      try { runnable(name)(spark, sfDir).queryExecution.toRdd.foreach(_ => ()) }
+      try { Gates(name).build(spark, sfDir).queryExecution.toRdd.foreach(_ => ()) }
       catch { case e: Throwable =>
         val tag = s"$name: ${e.getClass.getSimpleName}"
         if (!errors.contains(tag)) errors += tag
@@ -553,6 +300,8 @@ object Bench {
       if (args.nonEmpty) ""
       else {
         val resultMap = results.toMap
+        val sharedRows = Gates.tagged(Tag.Shared).map(_.name)
+        val baselineRows = Gates.tagged(Tag.Baseline).map(_.name)
         val missingShared = sharedRows.filterNot(resultMap.contains)
         require(missingShared.isEmpty,
           s"frozen shared rows missing from the timed sweep: ${missingShared.mkString(", ")}")
@@ -658,10 +407,6 @@ object Bench {
     * Cross-round comparisons go through the same-environment control run
     * of the prior commit, which carries its own harness.) */
   private def streamingThroughput(spark: SparkSession, sfDir: String): String = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.StreamingOps
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     def fmt0(v: Double): String = String.format(java.util.Locale.ROOT, "%.0f", Double.box(v))
 
     // r7 profile of the 221/255 docs/s numbers: per-KEY state writes were
@@ -715,7 +460,7 @@ object Bench {
     def bestOf(run: Int => Double): Double = (1 to streamReps).map(run).min
 
     // --- sessionize twin (flatMapGroupsWithState + event-time timeouts)
-    val events = SparkEntry.events(spark, sfDir)
+    val events = EventGates.events(spark, sfDir)
       .select("user_id", "event_id", "us").orderBy("us").limit(50000)
       .as[(Long, Long, Long)].collect()
       .map { case (u, e, us) => StreamingOps.Event(u, e, new java.sql.Timestamp(us), 0.0) }

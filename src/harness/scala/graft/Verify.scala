@@ -1,11 +1,15 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+
+import graft.gates.{Gate, Gates}
+
+/** Correctness dump: each checked gate's rows → parquet, plus
+  * oracle_sql.json, for the DuckDB hash compare
+  * (`scripts/check_correctness.py`). */
 object Verify {
 
-  /** Run every query, dumping each result to `outDir/<name>` parquet.
+  /** Build every gate, dumping each result to `outDir/<name>` parquet.
     * A query whose construction or write throws MUST leave a visible trace
     * (r6 post-mortem: four broken queries silently vanished from the
     * driver's correctness artifact because failure produced no output at
@@ -15,12 +19,12 @@ object Verify {
     * unnoticed. Returns name → error message for the failures. */
   private[graft] def dumpQueries(
       spark: SparkSession, sfDir: String, outDir: String,
-      queries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame],
+      gates: Seq[Gate],
   ): Map[String, String] = {
     new java.io.File(outDir).mkdirs()
-    queries.flatMap { case (name, fn) =>
+    gates.flatMap { case Gate(name, _, build, _) =>
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        build(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         None
       } catch {
@@ -32,7 +36,7 @@ object Verify {
           Files.writeString(Paths.get(s"$outDir/$name._ERROR.txt"), sw.toString)
           Some(name -> msg)
       }
-    }
+    }.toMap
   }
 
   def main(args: Array[String]): Unit = {
@@ -47,10 +51,7 @@ object Verify {
     // registered query must hash identically at ANY partition count
     val parts = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").map(_.toInt).getOrElse(cpus)
     val spark = graft.harness.GraftSession.local(cpus, parts)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (k, _) => names(k) }
-      case None        => SparkEntry.queries
-    }
+    val selected = Gates.checked.filter(g => only.forall(_(g.name)))
     val errors = dumpQueries(spark, sfDir, outDir, selected)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -64,8 +65,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = Gates.checked
+      .map(g => s"${q(g.name)}: ${q(g.sql)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Always written (empty object when green) so a consumer can distinguish
     // "no failures" from "failures were never recorded".

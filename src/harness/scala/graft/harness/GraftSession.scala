@@ -32,9 +32,9 @@ object GraftSession {
     * (rebuilt on every call; overwrite resets it via the staged swap). */
   def prepareBenchFixtures(spark: SparkSession, sfDir: String): Unit = {
     PipelineDemo.ensureCatalog(spark, sfDir)
-    graft.SparkEntry.ensureCsvFixture(spark, sfDir)
+    graft.gates.CatalogScanGates.ensureCsvFixture(spark, sfDir)
     graft.operators.KeywordSearch.bm25IndexBuild(
       spark.read.parquet(s"$sfDir/documents.parquet"), "text", "doc_id",
-      graft.Bench.benchPhraseStore(sfDir), overwrite = true, positions = true)
+      graft.gates.SimilarityGates.benchPhraseStore(sfDir), overwrite = true, positions = true)
   }
 }

@@ -176,7 +176,7 @@ object Hdf5V4Fixture {
       val npages = ((nelmts + pageN - 1) / pageN).toInt
       val present = if (pagesPresent.nonEmpty) pagesPresent else Seq.fill(npages)(true)
       require(present.length == npages)
-      var bmp = new Array[Byte]((npages + 7) / 8)
+      val bmp = new Array[Byte]((npages + 7) / 8)
       present.zipWithIndex.foreach { case (p, i) => if (p) bmp(i / 8) = (bmp(i / 8) | (1 << (i % 8))).toByte }
       s.bytes(bmp); s.u32(0) // bitmap + data-block checksum
       (0 until npages).foreach { pg =>

@@ -61,13 +61,47 @@ object CatalogReader {
       spark.read.options(storageOptions).parquet(path)
     else if (lower.endsWith(".json"))
       spark.read.options(storageOptions).json(path)
-    else
+    else {
       // csv / csv.gz / csv.bz2 — Spark handles the compression codecs natively.
-      spark.read
-        .option("header", "true")
-        .option("inferSchema", "false") // strings, like the reference (cat.py:641)
-        .options(storageOptions)
-        .csv(path)
+      // strings, like the reference (cat.py:641)
+      val options = Map("header" -> "true", "inferSchema" -> "false") ++ storageOptions
+      spark.read.options(options).schema(csvHeader(spark, path, options)).csv(path)
+    }
+  }
+
+  /** The all-string schema Spark's own header inference gives `path`,
+    * read on the driver instead of in a job: the first line of the first
+    * non-empty data file the path names (in path order) through Spark's
+    * codec-aware `readHeaderLine`, parsed with the reader's `CSVOptions`
+    * and deduplicated by `makeSafeHeader`. A file with no line reads as no
+    * columns. */
+  private def csvHeader(spark: SparkSession, path: String,
+                        options: Map[String, String]): StructType = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.catalyst.csv.CSVOptions
+    import org.apache.spark.sql.execution.datasources.csv.CSVUtils
+    val sqlConf = spark.sessionState.conf
+    val csvOptions = new CSVOptions(options, sqlConf.csvColumnPruning,
+      sqlConf.sessionLocalTimeZone, sqlConf.columnNameOfCorruptRecord)
+    val hadoopConf = spark.sessionState.newHadoopConfWithOptions(options)
+    val p = new Path(path)
+    val fs = p.getFileSystem(hadoopConf)
+    // the path may be a glob, as for spark.read; a directory's hidden and
+    // `_`-prefixed entries are not data, as in Spark's own listing
+    val files = Option(fs.globStatus(p)).toSeq.flatten.flatMap { st =>
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq.filter { c =>
+        val name = c.getPath.getName
+        c.isFile && !name.startsWith("_") && !name.startsWith(".")
+      }
+    }
+    val first = files.filter(_.getLen > 0).map(_.getPath).sortBy(_.toString).headOption
+    val header = first.flatMap(CSVUtils.readHeaderLine(_, csvOptions, hadoopConf))
+      .flatMap(line => Option(new com.univocity.parsers.csv.CsvParser(
+        csvOptions.asParserSettings).parseLine(line)))
+      .map(CSVUtils.makeSafeHeader(_, sqlConf.caseSensitiveAnalysis, csvOptions))
+      .getOrElse(Array.empty[String])
+    StructType(header.toSeq.map(StructField(_, StringType)))
   }
 
   /** Resolve a possibly-relative catalog_file: used as-is if it exists

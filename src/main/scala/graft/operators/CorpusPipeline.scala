@@ -14,14 +14,13 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *                       the full CCNet/fineweb-style stack in one scan
   *   2. language gate  — heuristic lang-id agreement or allow-list
   *   3. exact dedup    — content-hash groupBy, deterministic survivor
-  *   4. near dedup     — MinHash-LSH pairs → connected components via
-  *                       iterated min-neighbor propagation → keep cluster min
+  *   4. near dedup     — MinHash-LSH pairs → connected components
+  *                       ([[CorpusPipeline.dupClusters]]) → keep cluster min
   *
   * Every stage is a lazy plan; `clean` returns the cleaned corpus plus a
   * per-stage row-count audit (forced once at the end — one pass per stage,
-  * no driver loops). The near-dup component step iterates a bounded number
-  * of label-propagation rounds (diameter of dup clusters is tiny in
-  * practice; each round is one shuffle).
+  * no driver loops). The near-dup component step is a driver union-find
+  * for metadata-sized pair sets, else distributed connected components.
   */
 object CorpusPipeline {
 
@@ -130,112 +129,80 @@ object CorpusPipeline {
                         cp: CompressionPlane): DataFrame =
     docs.filter(compressionCondition(textCol, cp))
 
-  /** Connected components over near-dup pairs via min-label propagation:
-    * every doc starts as its own label; each round adopts the smallest label
-    * among itself and its neighbors. Converges in O(cluster diameter)
-    * rounds — near-dup clusters are shallow, so `maxRounds` = 5 default.
+  /** Connected components over near-dup pairs: `(id, label)` for every id
+    * in a pair, each component labelled with its minimum id.
     *
-    * Round shape: self-loop edges fold each node's OWN label into the same
-    * min-aggregate that scans its neighbors, so a round is ONE equality join
-    * + one map-side-combined min — not a neighbor join plus a second
-    * merge-with-own-label join. Convergence is detected from a bit_xor over
-    * per-row (id, label) hashes computed in the round's single action — any
-    * label move flips that row's term; a 2⁻⁶⁴ hash-collision
-    * false-stop is the price of not paying a second join per round, and
-    * `maxRounds` bounds the loop either way.
+    * Up to `maxDriverPairs` pairs an exact driver-side union-find runs.
+    * Above it every id type goes through [[Dedup.connectedComponents]]
+    * (large-star/small-star: logarithmic rounds and a loud refusal, never a
+    * silent truncation). Integral ids go in as they are. Other ids first get
+    * a dense `Long` code per distinct value, numbered in sorted order, so
+    * the minimum code of a component is the code of its minimum id.
     */
-  def dupClusters(pairs: DataFrame, maxRounds: Int = 5,
-                  maxDriverPairs: Long = 1L << 20): DataFrame = {
-    // Iterated joins double the lineage every round — without truncation the
-    // upstream (minhash) would recompute 2^rounds times. localCheckpoint
-    // materializes each round's small label table and cuts the plan.
-    // lazy checkpoints: the immediately-following action materializes them,
-    // so no separate eager job; lineage is still truncated from then on
+  def dupClusters(pairs: DataFrame, maxDriverPairs: Long = 1L << 20): DataFrame = {
     // checkpoint the pair table FIRST: it heads an expensive plan (the whole
     // LSH/verify pipeline) and union branches do NOT share subplan results —
-    // every downstream branch would re-run it
+    // every downstream branch would re-run it. Lazy: the count below
+    // materializes it.
     val p = pairs.select(col("id_a"), col("id_b")).localCheckpoint(false)
     // Adaptive execution, same idea as Spark's broadcast-join threshold: the
     // pair table is already materialized, so its size is known for free.
     // Below maxDriverPairs (~16 MB of ids) exact driver-side union-find
-    // replaces 3-5 distributed propagation rounds of pure job overhead;
-    // above it, the distributed loop is the only shape that survives.
+    // replaces the distributed rounds' pure job overhead.
     if (p.count() <= maxDriverPairs) return driverUnionFind(p)
-    // INTEGRAL ids (every production corpus) take the large-star/small-star
-    // path (Dedup.connectedComponents): O(log² n) rounds with a
-    // NON-INCREASING edge count and a LOUD refusal on non-convergence —
-    // the propagation loop below stops silently at maxRounds, which on a
-    // deeper-than-maxRounds dup chain returns over-split labels. The
-    // propagation branch stays as the fallback for other id types
-    // (connectedComponents canonicalizes through Long, which would
-    // truncate fractional ids). The caller's round budget maps to the CC
-    // bound with a floor of 50: CC rounds are logarithmic (not
-    // diameter-bound like propagation's), and its bound is a refusal
-    // guard, never a silent truncation knob.
     import org.apache.spark.sql.types.{ByteType, ShortType, IntegerType, LongType, DataType}
-    // BOTH id columns must be integral to take the CC path: the output
+    // BOTH id columns must be integral to go in as they are: the output
     // `id` column carries values from both sides, so casting back through
     // id_a's type alone would silently truncate a wider id_b (e.g. Int
-    // id_a, Long id_b). Mixed integral widths cast to the WIDER type;
-    // anything non-integral falls through to the generic propagation loop.
+    // id_a, Long id_b). Mixed integral widths cast to the WIDER type.
     val integralWidth: Map[DataType, Int] =
       Map(ByteType -> 1, ShortType -> 2, IntegerType -> 4, LongType -> 8)
     val typeA = p.schema.fields(0).dataType
     val typeB = p.schema.fields(1).dataType
-    if (integralWidth.contains(typeA) && integralWidth.contains(typeB)) {
-      val idType =
-        if (integralWidth(typeA) >= integralWidth(typeB)) typeA else typeB
-      val cc = Dedup.connectedComponents(p, "id_a", "id_b",
-          maxRounds = math.max(maxRounds, 50))
-        .select(col("id").cast(idType).as("id"), col("component").cast(idType).as("label"))
-      // contract parity with the other two paths: a node appearing ONLY in
-      // self-pairs still gets its identity label (CC drops self-pairs);
-      // self-pairs are rare-to-absent in real pair frames, so the anti-join
-      // is metadata-sized
-      val selfOnly = p.filter(col("id_a") === col("id_b"))
-        .select(col("id_a").cast(idType).as("id")).distinct()
-        .join(cc, Seq("id"), "left_anti")
-        .select(col("id"), col("id").as("label"))
-      return cc.unionByName(selfOnly)
-    }
-    val undirected = p.select(col("id_a").as("a"), col("id_b").as("b"))
-      .unionByName(p.select(col("id_b").as("a"), col("id_a").as("b")))
-    // edges/labels read the tiny checkpointed pair table — no further
-    // checkpoints needed, their plans are shallow and constant across rounds
-    val edges = undirected
-      .unionByName(undirected.select(col("a")).distinct().withColumn("b", col("a")))
-    def labelSig(df: DataFrame): Long = {
-      val r = df.agg(expr("bit_xor(xxhash64(id, label))")).head()
-      if (r.isNullAt(0)) 0L else r.getLong(0)
-    }
-    // round 1 fused into initialization: with identity labels the
-    // min-over-neighborhood is just min over the (self-looped) edge list —
-    // no label join needed
-    var labels = edges.groupBy(col("a")).agg(min(col("b")).as("label"))
-      .select(col("a").as("id"), col("label"))
-      .localCheckpoint(false)
-    var round   = 1
-    var changed = true
-    var prevSig = labelSig(labels)
-    while (round < maxRounds && changed) {
-      val next = edges
-        .join(labels.select(col("id").as("b"), col("label").as("nl")), "b")
-        .groupBy(col("a")).agg(min(col("nl")).as("label"))
-        .select(col("a").as("id"), col("label"))
-        .localCheckpoint(false)
-      val s = labelSig(next)
-      changed = s != prevSig
-      prevSig = s
-      labels = next
-      round += 1
-    }
-    labels
+    if (integralWidth.contains(typeA) && integralWidth.contains(typeB))
+      return integralComponents(p,
+        if (integralWidth(typeA) >= integralWidth(typeB)) typeA else typeB)
+    // Other ids: a range-partitioned sort (no single-partition sort) numbers
+    // the distinct ids in order — codes cannot collide, and a component's
+    // minimum code maps back to its minimum id. Checkpointed eagerly so the
+    // remap is computed once and every join below reads the same codes.
+    val ids = p.select(col("id_a").as("id")).union(p.select(col("id_b").as("id"))).distinct()
+    val codes = ids.orderBy("id").rdd.zipWithIndex()
+      .map { case (r, i) => org.apache.spark.sql.Row(r.get(0), i) }
+    val remap = p.sparkSession.createDataFrame(codes,
+        StructType(Seq(ids.schema.head, StructField("code", LongType, nullable = false))))
+      .localCheckpoint()
+    def coded(c: String) =
+      remap.select(col("id").as(c), col("code").as(s"${c}_code"))
+    val labels = integralComponents(
+      p.join(coded("id_a"), "id_a").join(coded("id_b"), "id_b")
+        .select(col("id_a_code").as("id_a"), col("id_b_code").as("id_b")),
+      LongType)
+    labels.join(remap.select(col("code").as("id"), col("id").as("orig_id")), "id")
+      .join(remap.select(col("code").as("label"), col("id").as("orig_label")), "label")
+      .select(col("orig_id").as("id"), col("orig_label").as("label"))
+  }
+
+  /** [[Dedup.connectedComponents]] over integral pair ids, cast back to
+    * `idType`, plus the identity label for a node that appears only in
+    * self-pairs (CC drops self-pairs; the driver path keeps them). */
+  private def integralComponents(p: DataFrame,
+                                 idType: org.apache.spark.sql.types.DataType): DataFrame = {
+    val cc = Dedup.connectedComponents(p, "id_a", "id_b")
+      .select(col("id").cast(idType).as("id"), col("component").cast(idType).as("label"))
+    // self-pairs are rare-to-absent in real pair frames, so the anti-join
+    // is metadata-sized
+    val selfOnly = p.filter(col("id_a") === col("id_b"))
+      .select(col("id_a").cast(idType).as("id")).distinct()
+      .join(cc, Seq("id"), "left_anti")
+      .select(col("id"), col("id").as("label"))
+    cc.unionByName(selfOnly)
   }
 
   /** Exact connected components on the driver for collectable pair sets:
     * path-halving union-find, then each component labeled with its minimum
-    * id — the same (id, label) contract the distributed rounds produce,
-    * minus their per-round job overhead and round bound. */
+    * id — the same (id, label) contract the distributed path produces,
+    * minus its per-round job overhead. */
   private def driverUnionFind(p: DataFrame): DataFrame = {
     val rows = p.collect()
     val parent = scala.collection.mutable.HashMap.empty[Any, Any]

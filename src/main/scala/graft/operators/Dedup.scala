@@ -233,32 +233,12 @@ object Dedup {
         graft.functions.SketchFunctions.minhash_sig_windows(
           tokens(col(textCol)), shingleWords, k).as("sig"))
 
-  /** Core of [[minhashLsh]] over pre-computed (id, sh) shingle rows — callers
-    * that need the shingles for other purposes too (e.g. [[ngramJaccard]]'s
-    * exact verify) share ONE shingling pass instead of re-scanning the
-    * corpus.
-    *
-    * The signature table (one k-long array per doc) is consumed three times
-    * (banding + two pair rejoins), so it persists at MEMORY_AND_DISK in
-    * [[CacheScope.untracked]]: the returned lazy plan still references it,
-    * and the untracked scope's bounded FIFO unpersists it once later
-    * operator calls have pushed it out.
-    */
-  def minhashLshFromShingleRows(
-      shRows: DataFrame,
-      bands: Int,
-      rowsPerBand: Int,
-      threshold: Double,
-  ): DataFrame =
-    minhashLshFromSignatures(
-      shRows.groupBy("id")
-        .agg(graft.functions.SketchFunctions.minhash_agg(col("sh"), bands * rowsPerBand)
-          .as("sig")),
-      bands, rowsPerBand, threshold)
-
   /** Banding + estimate over a precomputed (id, sig) signature frame —
-    * the shared tail of [[minhashLsh]] (row-local signatures) and
-    * [[minhashLshFromShingleRows]] (aggregate signatures). */
+    * the tail of [[minhashLsh]]. The signature table (one k-long array per
+    * doc) is consumed three times (banding + two pair rejoins), so it
+    * persists at MEMORY_AND_DISK in [[CacheScope.untracked]]: the returned
+    * lazy plan still references it, and the untracked scope's bounded FIFO
+    * unpersists it once later operator calls have pushed it out. */
   def minhashLshFromSignatures(
       sigFrame: DataFrame,
       bands: Int,

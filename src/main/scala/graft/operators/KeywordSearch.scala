@@ -857,7 +857,7 @@ object KeywordSearch {
     * before the all-ordinals test, keeping the rule one-per-ordinal. */
   private def phraseOccurrences(plane: DataFrame,
                                 perPhrase: Seq[(String, Seq[String])],
-                                slop: Int = 0): DataFrame =
+                                slop: Int): DataFrame =
     perPhrase.map { case (qid, ts) =>
       val terms = ts.distinct
       // ordinal list per term — a REPEATED phrase term shifts by each of

@@ -539,7 +539,7 @@ object Hdf5Index {
         val idx = r.u16(p)
         val osize = r.u64(p + 8)
         if (idx == index) return r.bytes(p + 16, osize.toInt)
-        if (idx == 0) return fail(path, s"global heap object $index not found")
+        if (idx == 0) fail(path, s"global heap object $index not found")
         p += 16 + ((osize + 7) & ~7L)
       }
       fail(path, s"global heap object $index not found")
@@ -961,7 +961,6 @@ object Hdf5Index {
       val nsblks = 1 + maxBits - log2(minElmts.toLong)
       val sblkFirstInIdx = 2 * log2(minPtrs.toLong) // super blocks whose dblks the index block points to
       val idxNdblkAddrs = 2 * (minPtrs - 1)
-      val idxNsblkAddrs = math.max(0, nsblks - sblkFirstInIdx)
       // per super block u: ndblks, dblk_nelmts, start element idx, start dblk
       case class SblkInfo(ndblks: Long, dblkNelmts: Long, startIdx: Long, startDblk: Long)
       val sblkInfo = {
@@ -1443,7 +1442,7 @@ object Hdf5Index {
   }
 
   private def entriesOf(groupAttrs: List[(String, String)], vars: List[VarInfo], url: String,
-                        base: Long = 0L, includeRoot: Boolean = true)
+                        base: Long, includeRoot: Boolean = true)
       : Iterator[(String, String, String, String, String, Option[Long], Option[Long], String)] = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods.{compact, render}

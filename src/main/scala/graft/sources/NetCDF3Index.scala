@@ -257,7 +257,7 @@ object NetCDF3Index {
     * (key, variable, member, kind, url, offset, length, inline_value).
     * `base` shifts every data offset — nonzero when the container sits
     * inside a tar archive and `url` is the archive itself. */
-  private def entriesOf(h: Header, url: String, base: Long = 0L)
+  private def entriesOf(h: Header, url: String, base: Long)
       : Iterator[(String, String, String, String, String, Option[Long], Option[Long], String)] = {
     import org.json4s.jackson.JsonMethods.{compact, render}
     import org.json4s.JsonDSL._

@@ -50,7 +50,7 @@ object TarMember {
       var pos = 0L
       var pendingName: Option[String] = None
       var pendingSize: Option[Long]   = None
-      var seen = List.newBuilder[String]
+      val seen = List.newBuilder[String]
       while (true) {
         try in.readFully(pos, hdr, 0, 512)
         catch {

@@ -345,7 +345,8 @@ class CatalogCensusSpec extends AnyFunSuite {
   test("a catalog under the cap lives on the driver: searches and the group phase run no job") {
     val json        = csvCatalog // written outside the census
     val (cat, open) = census(EsmCatalog.open(spark, json, tasRange))
-    assert(open.jobs <= 2, open)
+    // the table collect only: the csv header is read on the driver
+    assert(open.jobs == 1, open)
     assert(isLocal(cat.df) && cat.columnsWithIterables == Set("realm"))
     for (q <- queries) {
       val (ks, c) = census(cat.search(q).keys)
@@ -369,11 +370,40 @@ class CatalogCensusSpec extends AnyFunSuite {
     val json = CatalogFixtures.gcmAssets(dir, rows).toString
     val (_, open)    = census(EsmCatalog.open(spark, json))
     val (df, loaded) = census(spark.read.format("esmcat").load(json))
-    assert(loaded.jobs <= 2 && loaded.jobs == open.jobs, s"$loaded vs $open")
+    assert(loaded.jobs == 1 && loaded.jobs == open.jobs, s"$loaded vs $open")
     // later actions scan the rows held at load, not the file
     java.nio.file.Files.delete(dir.resolve("gcm-assets.csv"))
     assert(df.count() == rows.size)
     assert(df.filter(col("experiment_id") === "historical").count() == rows.size / 2)
+  }
+
+  test("equivalence: a csv header read on the driver gives Spark's inferred schema and rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_census_csv_header")
+    def write(name: String, text: String): String = {
+      val f = dir.resolve(name)
+      java.nio.file.Files.createDirectories(f.getParent)
+      val out = java.nio.file.Files.newOutputStream(f)
+      val sink = if (name.endsWith(".gz")) new java.util.zip.GZIPOutputStream(out) else out
+      try sink.write(text.getBytes("UTF-8")) finally sink.close()
+      f.toString
+    }
+    write("written/_SUCCESS", "")
+    val cases = Seq(
+      write("table.csv.gz", "a,b,c\n1,2,3\n4,5,6\n") -> Map.empty[String, String],
+      write("semi.csv", "a;b;c\n1;2;3\n") -> Map("sep" -> ";"),
+      write("quoted.csv", "\"x,y\",z\n1,2\n\"3,4\",5\n") -> Map.empty[String, String],
+      write("dups.csv", "v,v,V,w\n1,2,3,4\n") -> Map.empty[String, String],
+      write("written/part-00000.csv", "k,v\n1,a\n").stripSuffix("/part-00000.csv") ->
+        Map.empty[String, String],
+      dir.resolve("written/part-*.csv").toString -> Map.empty[String, String])
+    for ((path, opts) <- cases) {
+      val (ours, c) = census(CatalogReader.readAssetTable(spark, path, opts))
+      assert(c.jobs == 0, s"$path: $c")
+      val inferred = spark.read.option("header", "true").option("inferSchema", "false")
+        .options(opts).csv(path)
+      assert(ours.schema == inferred.schema, path)
+      assert(ours.collect().toSeq == inferred.collect().toSeq, path)
+    }
   }
 
   test("a catalog over the cap keeps the lazy scan and its distributed search") {

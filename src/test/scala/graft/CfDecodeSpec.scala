@@ -15,7 +15,7 @@ class CfDecodeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private def openCf() = {
-    val nc = SparkEntry.ensureCfFixture()
+    val nc = gates.CatalogScanGates.ensureCfFixture()
     graft.catalog.EsmCatalog // touch nothing; keep import shape simple
     graft.catalog.EsmDataSource("cf", Nil, "path", None, Nil,
         storageOptions = Map("graft.kerchunk.decode" -> "cf"))

@@ -25,9 +25,9 @@ class CorpusPipelineSpec extends AnyFunSuite {
     val driver = CorpusPipeline.dupClusters(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // integral ids route through Dedup.connectedComponents (large-star/
-    // small-star — no silent maxRounds truncation); output id type is
+    // small-star — no silent round truncation); output id type is
     // preserved, not widened to long
-    val distDf = CorpusPipeline.dupClusters(pairs, maxRounds = 10, maxDriverPairs = 0L)
+    val distDf = CorpusPipeline.dupClusters(pairs, maxDriverPairs = 0L)
     assert(distDf.schema.fields(0).dataType ==
       org.apache.spark.sql.types.LongType)
     val dist = distDf.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -39,13 +39,26 @@ class CorpusPipelineSpec extends AnyFunSuite {
     assert(iDf.schema.fields(1).dataType == org.apache.spark.sql.types.IntegerType)
     assert(iDf.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap ==
       Map(1 -> 1, 2 -> 1, 3 -> 1))
-    // non-numeric ids keep the propagation fallback — same labeling
+    // non-numeric ids go through the same components via an id remap —
+    // same labeling
     val sPairs = Seq(("a", "b"), ("b", "c"), ("x", "y")).toDF("id_a", "id_b")
     val sDriver = CorpusPipeline.dupClusters(sPairs)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val sDist = CorpusPipeline.dupClusters(sPairs, maxRounds = 10, maxDriverPairs = 0L)
+    val sDist = CorpusPipeline.dupClusters(sPairs, maxDriverPairs = 0L)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(sDriver == sDist && sDist("c") == "a" && sDist("y") == "x")
+  }
+
+  test("dup clusters: a 12-node chain of string ids is one cluster on the distributed path") {
+    // deeper than any fixed propagation budget: the labels must not over-split
+    val ids = (1 to 12).map(i => f"d$i%02d")
+    val chain = ids.zip(ids.tail).toDF("id_a", "id_b")
+    val labels = CorpusPipeline.dupClusters(chain, maxDriverPairs = 0L)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(labels === ids.map(_ -> "d01").toMap)
+    val longs = (1L to 12L).zip(2L to 12L).toDF("id_a", "id_b")
+    assert(CorpusPipeline.dupClusters(longs, maxDriverPairs = 0L)
+      .collect().map(_.getLong(1)).toSet === Set(1L))
   }
 
   test("full clean keeps one survivor per dup cluster and drops junk") {

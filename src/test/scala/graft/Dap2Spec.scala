@@ -881,7 +881,7 @@ class Dap2Spec extends AnyFunSuite {
   }
 
   test("catalog flow: open_esm_datastore -> search -> to_dataset_dict over opendap assets") {
-    val got = SparkEntry.queries("load_catalog_opendap")(spark, dir).collect()
+    val got = gates.Gates("load_catalog_opendap").build(spark, dir).collect()
     assert(got.length === 14) // 2 members x 7 variables (incl. the Grid's maps)
     val keySum = got.filter(r => r.getString(1) == "key_sum")
     assert(keySum.map(_.getString(0)).toSet === Set("1", "2"))

@@ -40,7 +40,7 @@ class FixtureSchemaSpec extends AnyFunSuite {
       assert(have.contains(col), s"$table.$col MISSING — fixture schema changed; " +
         s"present: ${s.fieldNames.mkString(", ")}")
       assert(ok(have(col)), s"$table.$col has undispatchable type ${have(col)} — " +
-        "update the reader's schema dispatch (see SparkEntry.events for the pattern)")
+        "update the reader's schema dispatch (see gates.EventGates.events for the pattern)")
     }
   }
 
@@ -59,7 +59,7 @@ class FixtureSchemaSpec extends AnyFunSuite {
     // Pin the dispatch behaviorally: `us` must equal microseconds since the
     // epoch of the UTC wall clock stored in ts, whatever the physical type.
     import org.apache.spark.sql.functions._
-    val e = SparkEntry.events(spark, dir)
+    val e = gates.EventGates.events(spark, dir)
     assert(e.schema("us").dataType === LongType, "us must be exact integer micros")
     val bad = e.schema("ts").dataType match {
       case TimestampType | TimestampNTZType =>

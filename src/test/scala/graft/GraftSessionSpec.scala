@@ -32,7 +32,7 @@ class GraftSessionSpec extends AnyFunSuite {
 
   test("Bench with no names sweeps every frozen subtotal row") {
     val rows = Bench.rowsToTime(Nil).toSet
-    assert(Bench.sharedRows.filterNot(rows).isEmpty)
-    assert(Bench.baselineRows.filterNot(rows).isEmpty)
+    assert(gates.Gates.tagged(gates.Tag.Shared).map(_.name).filterNot(rows).isEmpty)
+    assert(gates.Gates.tagged(gates.Tag.Baseline).map(_.name).filterNot(rows).isEmpty)
   }
 }

@@ -135,9 +135,9 @@ class GroupChainSpec extends AnyFunSuite {
   }
 
   test("zarr v3 coords: the group chain equals the per-asset union") {
-    val v3 = SparkEntry.ensureZarrV3Fixture()
+    val v3 = gates.CatalogScanGates.ensureZarrV3Fixture()
     assertSameAsUnion(source("coords",
-      Seq((v3, "zarr3", "r1"), (SparkEntry.ensureZarrNestedFixture(), "zarr3", "r2"),
+      Seq((v3, "zarr3", "r1"), (gates.CatalogScanGates.ensureZarrNestedFixture(), "zarr3", "r2"),
         (v3, "zarr3", "r3"))), "coords")
   }
 
@@ -171,7 +171,7 @@ class GroupChainSpec extends AnyFunSuite {
 
   test("netCDF-4 and zarr assets of one group share the chain") {
     assertSameAsUnion(source("coords",
-      Seq((SparkEntry.ensureHdf5V4Fixture(), "netcdf", "r1"), (zarrStore(2), "zarr", "r2"))),
+      Seq((gates.CatalogScanGates.ensureHdf5V4Fixture(), "netcdf", "r1"), (zarrStore(2), "zarr", "r2"))),
       "coords")
   }
 

@@ -239,7 +239,7 @@ class KerchunkProductionSpec extends AnyFunSuite {
     import graft.sources.KerchunkIndex
     // the gate fixture's sources carry a real `time` coordinate var; a
     // duplicated source double-covers time 0..3 → overlap refusal
-    val paths = SparkEntry.ensureKerchunkCombineFixture()
+    val paths = gates.CatalogScanGates.ensureKerchunkCombineFixture()
     val dup = java.nio.file.Files.createTempDirectory("kerchunk_dup").resolve("again.json")
     java.nio.file.Files.copy(java.nio.file.Paths.get(paths.head), dup)
     val e1 = intercept[IllegalArgumentException] {

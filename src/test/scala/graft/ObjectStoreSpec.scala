@@ -20,7 +20,7 @@ class ObjectStoreSpec extends AnyFunSuite {
     val bucket = dir.resolve("climate")
     java.nio.file.Files.createDirectories(bucket)
     java.nio.file.Files.copy(
-      java.nio.file.Paths.get(SparkEntry.ensureCfFixture()),
+      java.nio.file.Paths.get(gates.CatalogScanGates.ensureCfFixture()),
       bucket.resolve("cf.nc"))
     dir.toString
   }
@@ -42,7 +42,7 @@ class ObjectStoreSpec extends AnyFunSuite {
         Option(r.get(2)), Option(r.get(3)))).toSet
     val viaLocal = graft.catalog.EsmDataSource("local", Nil, "path", None, Nil,
         storageOptions = Map("graft.kerchunk.decode" -> "cf"))
-      .openAsset(spark, SparkEntry.ensureCfFixture(), "netcdf")
+      .openAsset(spark, gates.CatalogScanGates.ensureCfFixture(), "netcdf")
       .select(col("variable"),
         array_join(col("coords").cast("array<string>"), ".").as("k"),
         col("value"), col("time").cast("string").as("t"))
@@ -56,7 +56,7 @@ class ObjectStoreSpec extends AnyFunSuite {
     // the CF fixture's bytes, addressed by (offset, length) ranges through
     // the ref plane — the kerchunk-over-object-store shape
     val all = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(SparkEntry.ensureCfFixture()))
+      java.nio.file.Paths.get(gates.CatalogScanGates.ensureCfFixture()))
     val url = "mocks3://climate/cf.nc"
     val entries = Seq(
       ("v/0", "v", "0", "ref", url, Some(0L), Some(4L), None: Option[String]),

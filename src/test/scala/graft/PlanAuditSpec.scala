@@ -11,7 +11,7 @@ class PlanAuditSpec extends AnyFunSuite {
   val dir = "/root/testdata/sf0.001"
 
   private def plan(name: String): String =
-    SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
+    gates.Gates(name).build(spark, dir).queryExecution.executedPlan.toString
 
   test("search predicates push into the parquet scan") {
     val p = plan("search_exact")
@@ -139,7 +139,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("bucketed fact-fact join plans without an exchange on either side") {
     import org.apache.spark.sql.functions.col
-    val (lt, ot) = SparkEntry.ensureBucketedTables(spark, dir)
+    val (lt, ot) = gates.RelationalGates.ensureBucketedTables(spark, dir)
     val joined = spark.table(lt).join(spark.table(ot),
       col("l_orderkey") === col("o_orderkey"))
     assert(!graft.operators.Bucketing.hasShuffle(joined),
@@ -151,7 +151,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("kerchunk typed decode broadcasts the .zarray metadata join") {
-    val idx     = SparkEntry.ensureZarrFixture()
+    val idx     = gates.CatalogScanGates.ensureZarrFixture()
     val entries = graft.sources.KerchunkIndex.read(spark, idx)
     val p = graft.sources.KerchunkIndex.decodeTyped(
         graft.sources.KerchunkIndex.materializeChunks(entries),
@@ -169,7 +169,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // dims) on top of decodeTyped — all broadcasts: the per-value work must
     // stay embarrassingly parallel, with the banded repartition inside
     // materializeChunks as the only exchange
-    val idx     = SparkEntry.ensureZarrGridFixture()
+    val idx     = gates.CatalogScanGates.ensureZarrGridFixture()
     val entries = graft.sources.KerchunkIndex.read(spark, idx)
     val p = graft.sources.KerchunkIndex.decodeCoords(
         graft.sources.KerchunkIndex.materializeChunks(entries),
@@ -398,7 +398,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("kerchunk combine: data rows re-key through broadcast joins only, no data shuffle") {
-    val paths = SparkEntry.ensureKerchunkCombineFixture()
+    val paths = gates.CatalogScanGates.ensureKerchunkCombineFixture()
     val combined = graft.sources.KerchunkIndex.combineAlong(
       graft.sources.KerchunkIndex.readMany(spark, paths), "time")
     val p = combined.queryExecution.executedPlan.toString

@@ -197,7 +197,7 @@ class ReferenceFidelitySpec extends AnyFunSuite {
     assert(remote.getMessage.contains("connector boundary")
       || Option(remote.getCause).exists(_.getMessage.contains("connector boundary")))
     // local file:// ranges come back byte-exact vs a direct read of the file
-    val fixture = SparkEntry.ensureKerchunkFixture()
+    val fixture = gates.CatalogScanGates.ensureKerchunkFixture()
     val chunks = graft.sources.KerchunkIndex
       .materializeChunks(graft.sources.KerchunkIndex.read(spark, fixture))
     val b2 = chunks.filter(col("key") === "blob/2").head().getAs[Array[Byte]]("data")
@@ -257,7 +257,7 @@ class ReferenceFidelitySpec extends AnyFunSuite {
     // descends to the typed rows through the normal openAsset path
     val viaDispatch = graft.catalog.EsmDataSource("k", Nil, "path", None, Nil,
         storageOptions = Map("graft.kerchunk.decode" -> "typed"))
-      .openAsset(spark, SparkEntry.ensureZarrFixture(), "reference")
+      .openAsset(spark, gates.CatalogScanGates.ensureZarrFixture(), "reference")
     assert(viaDispatch.columns.toSeq == Seq("variable", "chunk", "idx", "value"))
     // 24 temp + 10 count + 4 big + 6 mask + 256 packed (blosc) + 32 drift
     // (delta+shuffle) + 6 check (fletcher32)
@@ -265,7 +265,7 @@ class ReferenceFidelitySpec extends AnyFunSuite {
   }
 
   test("decodeCoords labels values with global indices; padded edge elements dropped") {
-    val idx     = SparkEntry.ensureZarrGridFixture()
+    val idx     = gates.CatalogScanGates.ensureZarrGridFixture()
     val entries = graft.sources.KerchunkIndex.read(spark, idx)
     val rows = graft.sources.KerchunkIndex.decodeCoords(
       graft.sources.KerchunkIndex.materializeChunks(entries),
@@ -429,7 +429,7 @@ class ReferenceFidelitySpec extends AnyFunSuite {
 
   test("zarr v2 directory store: enumerates, decodes via dispatch; v3/non-dir refuse") {
     import org.apache.spark.sql.functions.col
-    val store = SparkEntry.ensureZarrStoreFixture()
+    val store = gates.CatalogScanGates.ensureZarrStoreFixture()
     val src = graft.catalog.EsmDataSource("z", Nil, "path", None, Nil,
       storageOptions = Map("graft.kerchunk.decode" -> "coords"))
     val rows = src.openAsset(spark, store, "zarr").collect()
@@ -470,7 +470,7 @@ class ReferenceFidelitySpec extends AnyFunSuite {
 
   test("zarr v3 store: metadata translation, both chunk-key encodings, codec chain") {
     import org.apache.spark.sql.functions.col
-    val store = SparkEntry.ensureZarrV3Fixture()
+    val store = gates.CatalogScanGates.ensureZarrV3Fixture()
     val entries = graft.catalog.EsmDataSource("z3", Nil, "path", None, Nil)
       .openAsset(spark, store, "zarr3")
     // the v3 metadata arrives as synthesized v2 documents

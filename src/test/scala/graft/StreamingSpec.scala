@@ -139,14 +139,14 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     // batch truth: the events_sessionize query (oracle-checked against DuckDB)
-    val batch = SparkEntry.queries("events_sessionize")(spark, "/root/testdata/sf0.001")
+    val batch = gates.Gates("events_sessionize").build(spark, "/root/testdata/sf0.001")
       .select("user_id", "session_id", "n_events", "first_us", "last_us")
       .as[(Long, Long, Long, Long, Long)].collect().toSet
     // same events through the incremental path. Timestamp only holds ms, so
     // feed the µs VALUE as ms (1000× stretch) and stretch the gap the same
     // way (30 min -> 30000 "minutes"): identical session structure, and the
     // streamed first/last divide back to exact µs — no precision loss.
-    val rows = SparkEntry.events(spark, "/root/testdata/sf0.001")
+    val rows = gates.EventGates.events(spark, "/root/testdata/sf0.001")
       .select("user_id", "event_id", "us")
       .as[(Long, Long, Long)].collect().sortBy(r => (r._3, r._2))
       .map { case (u, e, us) => Event(u, e, new Timestamp(us), 0.0) }
@@ -173,13 +173,13 @@ class StreamingSpec extends AnyFunSuite {
   test("native session_window sessionize equals batch sessions on real events (sf0.001)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val batch = SparkEntry.queries("events_sessionize")(spark, "/root/testdata/sf0.001")
+    val batch = gates.Gates("events_sessionize").build(spark, "/root/testdata/sf0.001")
       .select("user_id", "n_events", "first_us", "last_us")
       .as[(Long, Long, Long, Long)].collect().toSet
     // µs values fed as ms (1000x stretch, as in the stateful parity test).
     // Batch rule: diff > G starts a new session; session_window merges when
     // diff < gap — gap = G+1 makes the boundary semantics identical.
-    val rows = SparkEntry.events(spark, "/root/testdata/sf0.001")
+    val rows = gates.EventGates.events(spark, "/root/testdata/sf0.001")
       .select("user_id", "event_id", "us")
       .as[(Long, Long, Long)].collect().sortBy(r => (r._3, r._2))
       .map { case (u, e, us) => StreamingOps.Event(u, e, new Timestamp(us), 0.0) }

@@ -116,7 +116,7 @@ class TarMemberSpec extends AnyFunSuite {
   test("a tar-archived classic netCDF decodes identically to the direct read") {
     // the CF fixture (harness.Nc3CfFixture) behind a decoy member, in the
     // POSIX header dialect
-    val nc = SparkEntry.ensureCfFixture()
+    val nc = gates.CatalogScanGates.ensureCfFixture()
     val member = new java.io.File(nc).getName
     val decoy = "this member is not the one being asked for\n".getBytes("US-ASCII")
     val tar = writeTar(entry("README.txt", decoy, posix = true),
@@ -137,7 +137,7 @@ class TarMemberSpec extends AnyFunSuite {
   }
 
   test("a tar-archived HDF5 netCDF-4 decodes identically to the direct read") {
-    val nc = SparkEntry.ensureHdf5V4Fixture()
+    val nc = gates.CatalogScanGates.ensureHdf5V4Fixture()
     val member = new java.io.File(nc).getName
     val tar = writeTar(entry(member, java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(nc))))
     def decoded(path: String) = {

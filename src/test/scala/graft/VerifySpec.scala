@@ -2,8 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.gates.{Gate, Gates, Tag}
 
 /** Pins the r6 fix: a query whose construction throws must leave a visible
   * `<name>._ERROR.txt` marker in the verify output dir, never vanish. */
@@ -12,14 +13,15 @@ class VerifySpec extends AnyFunSuite {
 
   test("dumpQueries writes parquet for green queries and _ERROR.txt for broken ones") {
     val out = Files.createTempDirectory("graft_verify_spec").toString
-    val queries = Map[String, (SparkSession, String) => DataFrame](
-      "ok_query" -> ((s, _) => s.range(3).toDF("id")),
-      "broken_analysis" -> ((s, _) =>
+    def g(name: String)(build: Gate.Build) = Gate(name, Set.empty, build, Some("SELECT 1"))
+    val gates = Seq(
+      g("ok_query")((s, _) => s.range(3).toDF("id")),
+      g("broken_analysis")((s, _) =>
         // fails at construction, like the r6 events type mismatch
         s.range(3).toDF("id").selectExpr("id + no_such_col")),
-      "broken_throw" -> ((_, _) => throw new IllegalStateException("boom")),
+      g("broken_throw")((_, _) => throw new IllegalStateException("boom")),
     )
-    val errors = Verify.dumpQueries(spark, "/unused", out, queries)
+    val errors = Verify.dumpQueries(spark, "/unused", out, gates)
 
     assert(Files.exists(Paths.get(out, "ok_query")), "green query must dump parquet")
     assert(!Files.exists(Paths.get(out, "ok_query._ERROR.txt")))
@@ -33,14 +35,14 @@ class VerifySpec extends AnyFunSuite {
   }
 
   test("every oracle key names a registered query (no orphaned oracle SQL)") {
-    // an oracle whose query id was renamed/removed would silently never be
-    // compared — the driver only checks oracles for dumped queries
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracle entries without a query: $orphans")
-    // r11: the last two rows-only queries (the approximate ANN top-ks)
-    // became property-verdict rows with constant oracles — EVERY
-    // registered query now carries an oracle, and this pin keeps it so
-    val rowsOnly = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(rowsOnly.isEmpty, s"queries without an oracle: $rowsOnly")
+    // A gate is one value, so no oracle can outlive its build. What is left
+    // to pin: every gate but a bench-only row carries an oracle (r11: the
+    // last rows-only queries became property-verdict rows), and a
+    // bench-only row carries none, so Verify never dumps it.
+    val (benchOnly, checked) = Gates.all.partition(_.tags(Tag.BenchOnly))
+    assert(checked.filter(_.oracle.isEmpty).map(_.name).isEmpty)
+    assert(benchOnly.filter(_.oracle.isDefined).map(_.name).isEmpty)
+    assert(Gates.checked === checked)
+    assert(checked.size === 205)
   }
 }

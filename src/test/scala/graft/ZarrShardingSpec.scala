@@ -86,7 +86,7 @@ class ZarrShardingSpec extends AnyFunSuite {
   }
 
   test("a corrupted crc32c index checksum refuses loudly") {
-    val store = graft.SparkEntry.ensureZarrV3ShardedFixture()
+    val store = gates.CatalogScanGates.ensureZarrV3ShardedFixture()
     val dir = tmpStore()
     try {
       // copy the oracle fixture, then flip one byte of one shard's crc tail
