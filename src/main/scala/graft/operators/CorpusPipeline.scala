@@ -18,9 +18,11 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *                       ([[CorpusPipeline.dupClusters]]) → keep cluster min
   *
   * Every stage is a lazy plan; `clean` returns the cleaned corpus plus a
-  * per-stage row-count audit (forced once at the end — one pass per stage,
-  * no driver loops). The near-dup component step is a driver union-find
-  * for metadata-sized pair sets, else distributed connected components.
+  * per-stage row-count audit: stages 1–2 flag each document in one
+  * persisted projection and one aggregate counts them all, stages 3–4
+  * count once each (no driver loops). The near-dup component step is a
+  * driver union-find for metadata-sized pair sets, else distributed
+  * connected components.
   */
 object CorpusPipeline {
 
@@ -87,15 +89,9 @@ object CorpusPipeline {
   final case class DsirPlane(weights: Array[Double], minScore: Double = 0.0)
 
   /** The keep-condition of a [[DsirPlane]] — one codegen'd scan
-    * expression ([[Dsir.scoreStruct]], the gates' exact construction),
-    * shared by the batch stage and [[dsirFilter]]. */
+    * expression ([[Dsir.scoreStruct]], the gates' exact construction). */
   def dsirCondition(textCol: String, dp: DsirPlane): Column =
     Dsir.scoreStruct(col(textCol), dp.weights).getField("score") >= dp.minScore
-
-  /** Apply the DSIR plane as a standalone filter — stateless, so the same
-    * call filters a `readStream` frame (the [[qualityFilter]] precedent). */
-  def dsirFilter(docs: DataFrame, textCol: String, dp: DsirPlane): DataFrame =
-    docs.filter(dsirCondition(textCol, dp))
 
   /** The compression plane — the classic "gzip filter" as a clean()
     * stage: drop documents whose zlib-DEFLATE ratio
@@ -254,67 +250,42 @@ object CorpusPipeline {
     val docs0 =
       if (!normalize) docs
       else docs.withColumn(textCol, TextAnalysis.normalizeText(col(textCol)))
-    // 1. structural quality gate. The featurized frame is persisted once and
-    // feeds the audit counts, the gate filter, and (via the checkpointed
-    // exact-dedup below) everything downstream — ONE corpus scan for the
-    // whole clean, not one per consumer. Unpersisted before returning (all
-    // downstream plans are checkpoint-cut by then).
-    val qualityCond = col("n_tokens") >= minTokens && col("alpha_ratio") >= minAlphaRatio
-    val feats = TextAnalysis.qualityFeatures(docs0, textCol)
-      .withColumn("__pass", qualityCond)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val counts = feats
-      .agg(count(lit(1)).as("n0"),
-        sum(when(col("__pass"), 1L).otherwise(0L)).as("n1")).head()
-    val n0 = counts.getLong(0)
-    val n1 = counts.getLong(1)
-    val quality = feats.filter(col("__pass"))
+    // 1. the per-document gates, in order: structural quality, then the
+    // optional planes — model-based quality (classifier ∧ Gopher ∧ LM
+    // census), DSIR selection, compression ("gzip filter") — then the
+    // language gate when `allowedLangs` names one (the TRAINED
+    // one-vs-rest model when the caller provides one, the CCNet order, else
+    // the n-gram heuristic). Each is a scan expression, zero joins. Stage
+    // i's flag is stage i-1's flag AND its own condition, under a `when`
+    // so a document is scored only by the stages it reaches. The flags
+    // ride the featurized frame, persisted once: its one aggregate counts
+    // every stage, and the last flag filters — ONE corpus scan for the
+    // whole gate chain. Unpersisted before returning (all downstream plans
+    // are checkpoint-cut by then).
+    val langCond: Option[Column] =
+      if (allowedLangs.isEmpty) None
+      else Some(langModel match {
+        case Some(m) =>
+          TextClassifier.langIdStruct(col(textCol), m).getField("lang").isin(allowedLangs: _*)
+        case None => TextAnalysis.langId(col(textCol)).isin(allowedLangs: _*)
+      })
+    val stages: Seq[(String, Column)] =
+      Seq("quality" -> (col("n_tokens") >= minTokens && col("alpha_ratio") >= minAlphaRatio)) ++
+        qualityPlane.map(qp => "quality_plane" -> qualityPlaneCondition(textCol, qp)) ++
+        dsirPlane.map(dp => "dsir" -> dsirCondition(textCol, dp)) ++
+        compressionPlane.map(cp => "compression" -> compressionCondition(textCol, cp)) ++
+        langCond.map("lang" -> _)
+    val flagged = stages.zipWithIndex.foldLeft(TextAnalysis.qualityFeatures(docs0, textCol)) {
+      case (df, ((_, cond), 0)) => df.withColumn("__pass0", cond)
+      case (df, ((_, cond), i)) =>
+        df.withColumn(s"__pass$i", when(col(s"__pass${i - 1}"), cond).otherwise(lit(false)))
+    }
+    val feats = flagged.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val counts = feats.agg(count(lit(1)).as("n0"), stages.indices.map(i =>
+      sum(when(col(s"__pass$i"), 1L).otherwise(0L)).as(s"n${i + 1}")): _*).head()
+    val stageCounts = stages.indices.map(i => stages(i)._1 -> counts.getLong(i + 1))
+    val langed = feats.filter(col(s"__pass${stages.size - 1}"))
       .select(docs0.columns.map(col): _*)
-
-    // 1b. optional model-based quality plane: classifier ∧ Gopher ∧ LM
-    // census, all three struct-valued SCAN expressions composed in one
-    // filter over the (persisted) featurized frame — the same
-    // zero-join/zero-shuffle shape the pipeline_quality_filter gate pins.
-    // A document survives iff the classifier keeps it AND the Gopher
-    // structural rules pass AND the LM backoff census clears the integer
-    // per-mille floors.
-    val planed = qualityPlane match {
-      case None     => quality
-      case Some(qp) => quality.filter(qualityPlaneCondition(textCol, qp))
-    }
-    val n1b = if (qualityPlane.isEmpty) n1 else planed.count()
-
-    // 1c. optional DSIR selection: keep docs whose hashed-gram log
-    // importance weight toward the caller's target corpus clears the
-    // threshold — one codegen'd scan expression, no exchange
-    val selected0 = dsirPlane match {
-      case None     => planed
-      case Some(dp) => planed.filter(dsirCondition(textCol, dp))
-    }
-    val n1c = if (dsirPlane.isEmpty) n1b else selected0.count()
-
-    // 1d. optional compression plane (the "gzip filter"): drop documents
-    // whose DEFLATE ratio marks them as within-document boilerplate or
-    // near-random junk — one codegen'd scan expression, no exchange
-    val selected = compressionPlane match {
-      case None     => selected0
-      case Some(cp) => selected0.filter(compressionCondition(textCol, cp))
-    }
-    val n1d = if (compressionPlane.isEmpty) n1c else selected.count()
-
-    // 2. language gate (count only paid when the gate is active): the
-    // TRAINED one-vs-rest model when the caller provides one (the CCNet
-    // order — fastText langid before quality filtering), else the n-gram
-    // heuristic; both are pure scan expressions, zero joins
-    val langed =
-      if (allowedLangs.isEmpty) selected
-      else langModel match {
-        case Some(m) => selected.filter(
-          TextClassifier.langIdStruct(col(textCol), m).getField("lang")
-            .isin(allowedLangs: _*))
-        case None => selected.filter(TextAnalysis.langId(col(textCol)).isin(allowedLangs: _*))
-      }
-    val n2 = if (allowedLangs.isEmpty) n1d else langed.count()
 
     // 3. exact dedup (deterministic survivor = min id); materialized once —
     // it feeds the count, the LSH pass, and the final anti-join
@@ -340,15 +311,11 @@ object CorpusPipeline {
     scope.release()
     feats.unpersist(false)
 
-    // the quality_plane row appears only when the stage ran, so default
-    // callers' stats (and the gate oracles pinning them) are unchanged
-    val planeRow: Seq[(String, Long)] =
-      if (qualityPlane.isEmpty) Nil else Seq("quality_plane" -> n1b)
-    val dsirRow: Seq[(String, Long)] =
-      if (dsirPlane.isEmpty) Nil else Seq("dsir" -> n1c)
-    val comprRow: Seq[(String, Long)] =
-      if (compressionPlane.isEmpty) Nil else Seq("compression" -> n1d)
-    CleanResult(cleaned, Seq("input" -> n0, "quality" -> n1) ++ planeRow ++ dsirRow ++
-      comprRow ++ Seq("lang" -> n2, "exact_dedup" -> n3, "near_dedup" -> n4))
+    // a plane's row appears only when the stage ran, so default callers'
+    // stats (and the gate oracles pinning them) are unchanged; an inactive
+    // lang gate reports the last active stage's count
+    val langRow = if (langCond.isEmpty) Seq("lang" -> stageCounts.last._2) else Nil
+    CleanResult(cleaned, Seq("input" -> counts.getLong(0)) ++ stageCounts ++ langRow ++
+      Seq("exact_dedup" -> n3, "near_dedup" -> n4))
   }
 }

@@ -104,24 +104,6 @@ object Dedup {
 
   // ---------------------------------------------------------------- minhash
 
-  /** MinHash signature of a token/shingle array: for each of `k` hash
-    * functions h_i(x) = xxhash64(x, seed=i), take the min over the set.
-    * Expression form for ad-hoc use; the bulk pipeline below uses the
-    * exploded/codegen'd variant instead (higher-order functions are
-    * interpreted, not codegen'd — too slow for the hot path).
-    *
-    * STAGE IT: alias the result into its own column in its own `select`
-    * before any expression references it more than once ([[bandKeys]] reads
-    * it `bands` times). Inlined, each reference re-evaluates the whole
-    * input expression — k×bands shingle-pipeline evaluations per row turned
-    * a 30 s streaming test into a half-hour hang before StreamingOps staged
-    * its projections.
-    */
-  def minhashSignature(setCol: Column, k: Int = 64): Column =
-    array((0 until k).map { i =>
-      array_min(transform(setCol, x => xxhash64(x, lit(i))))
-    }: _*)
-
   /** Distinct word n-gram shingles as exploded (id, sh) rows — everything
     * codegen'd: split → posexplode → window lead → concat. Two narrow-ish
     * shuffles (window + downstream groupBy share the id partitioning).
@@ -180,14 +162,6 @@ object Dedup {
       .map { case (b, r) => (b.toInt, r) }
       .getOrElse((kMax, 1))
   }
-
-  /** LSH band keys from a minhash signature: `b` bands of `r` rows each;
-    * band key = hash of the band's slice. Docs sharing any band key are
-    * candidates. */
-  def bandKeys(sigCol: Column, bands: Int, rows: Int): Column =
-    array((0 until bands).map { b =>
-      struct(lit(b).as("band"), hash(slice(sigCol, b * rows + 1, rows)).as("bucket"))
-    }: _*)
 
   /** Near-duplicate candidate pairs via MinHash + LSH banding.
     *
@@ -277,38 +251,10 @@ object Dedup {
 
   // ---------------------------------------------------------------- simhash
 
-  /** 64-bit SimHash of a token array, as pure expressions: bit i of the
-    * fingerprint is set iff a majority of token hashes have bit i set.
-    * The bit loop is unrolled at plan-build time (shift amounts are Scala
-    * literals), so everything stays codegen'd.
-    *
-    * CAUTION: the 64 bit terms each reference the token-hash transform —
-    * pass a MATERIALIZED tokens column (its own aliased select), never an
-    * inline tokenization expression, or the tokenizer runs 64× per row.
-    * The bulk path ([[simhashFingerprints]]) uses the native SimHashAgg
-    * aggregate and does not have this hazard.
-    */
-  def simhash64(tokensCol: Column): Column = {
-    val hashes = transform(tokensCol, t => xxhash64(t))
-    val n      = size(tokensCol).cast(LongType)
-    val bits: Seq[Column] = (0 until 64).map { i =>
-      val ones = aggregate(hashes, lit(0L), (acc, h) => acc + shiftright(h, i).bitwiseAND(lit(1L)))
-      when(ones * 2 > n, lit(1L << i)).otherwise(lit(0L))
-    }
-    bits.reduce((a, b) => a.bitwiseOR(b))
-  }
-
   /** Hamming distance between two 64-bit fingerprints. */
   def hamming64(a: Column, b: Column): Column =
     bit_count(a.bitwiseXOR(b))
 
-  /** SimHash near-dup candidate pairs within a Hamming radius.
-    *
-    * Block-permutation banding: split the 64-bit fingerprint into `blocks`
-    * 16-bit chunks; by pigeonhole, any pair within distance `blocks - 1`
-    * shares at least one exact chunk → equality join on (block_idx, chunk).
-    * Again an equality shuffle, no cross join.
-    */
   /** SimHash fingerprints via the native [[graft.functions.SimHashAgg]]
     * aggregate: explode tokens → one shuffle on id carrying a 65-long count
     * buffer (map-side partial agg) → majority-vote assembly at eval. One
@@ -322,6 +268,13 @@ object Dedup {
       .filter(size(col("__t")) > 0)
       .select(col("id"), graft.functions.SketchFunctions.simhash_sig(col("__t")).as("fp"))
 
+  /** SimHash near-dup candidate pairs within a Hamming radius.
+    *
+    * Block-permutation banding: split the 64-bit fingerprint into `blocks`
+    * 16-bit chunks; by pigeonhole, any pair within distance `blocks - 1`
+    * shares at least one exact chunk → equality join on (block_idx, chunk).
+    * Again an equality shuffle, no cross join.
+    */
   def simhashPairs(
       df: DataFrame,
       textCol: String,

@@ -249,7 +249,7 @@ object Multimodal {
     // lambda — `hex(payload)` inline in the lambda re-renders the whole
     // payload once per sampled element (64× per row; megabytes × 64 on
     // real media payloads). As a column reference it is read, not
-    // recomputed (the same staging invariant minhashSignature documents).
+    // recomputed.
     val staged = df.select(col(idCol).as("id"),
       hex(col(binCol)).as("__hex"),
       octet_length(col(binCol)).cast(LongType).as("__n"))

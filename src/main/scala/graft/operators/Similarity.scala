@@ -89,29 +89,14 @@ object Similarity {
     topKPerQuery(scored, k)
   }
 
-  /** Random-hyperplane signature: `nBits` fixed pseudo-random hyperplanes
-    * (deterministic per (bit, dim) via a hash-based generator), signature bit
-    * = sign of the projection. Vectors with equal signatures are near in
-    * angle with high probability.
-    */
-  def hyperplaneSignature(vec: Column, nBits: Int = 16, seed: Int = 42): Column = {
-    // pseudo-random weight for (bit, dim): xxhash64 → uniform in [-1, 1)
-    def w(bit: Int, dimIdx: Column): Column =
-      (xxhash64(lit(seed), lit(bit), dimIdx).cast(DoubleType) / lit(Long.MaxValue.toDouble))
-    val bits: Seq[Column] = (0 until nBits).map { b =>
-      val proj = aggregate(
-        zip_with(vec, sequence(lit(0), size(vec) - 1), (x, i) => x.cast(DoubleType) * w(b, i)),
-        lit(0.0), (acc, v) => acc + v)
-      when(proj >= 0, lit(1L << b)).otherwise(lit(0L))
-    }
-    bits.reduce((a, b) => a.bitwiseOR(b))
-  }
-
-  /** Exploded/codegen'd random-hyperplane signatures: (id, table, sig) rows.
-    * Same hash-derived hyperplanes as [[hyperplaneSignature]], but computed
-    * as flat `sum(x * w)` aggregates over exploded dimensions — higher-order
-    * functions are interpreted in Spark, this path stays in whole-stage
-    * codegen. One shuffle on id.
+  /** Random-hyperplane signatures: (id, table, sig) rows. Each of `tables`
+    * signatures has `nBits` fixed pseudo-random hyperplanes (weight for
+    * (table, bit, dim) from xxhash64, uniform in [-1, 1)); signature bit =
+    * sign of the projection, so vectors with equal signatures are near in
+    * angle with high probability. The projections are flat `sum(x * w)`
+    * aggregates over exploded dimensions — higher-order functions are
+    * interpreted in Spark, this path stays in whole-stage codegen. One
+    * shuffle on id.
     */
   def hyperplaneSignaturesFlat(df: DataFrame, idCol: String, vecCol: String,
                                nBits: Int, tables: Int, seed: Int = 42): DataFrame = {

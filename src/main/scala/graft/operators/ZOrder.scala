@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * layout the reference never needs (single-process, in-memory) but a
   * Spark lake lives by.
   *
-  * Everything is unrolled literal-shift expressions (the [[Dedup.simhash64]]
-  * pattern) — fully codegen'd, no UDF, no shuffle beyond the ONE
+  * Everything is unrolled literal-shift expressions — fully codegen'd,
+  * no UDF, no shuffle beyond the ONE
   * `repartitionByRange` the layout itself is.
   */
 object ZOrder {

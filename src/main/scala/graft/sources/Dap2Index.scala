@@ -435,8 +435,7 @@ object Dap2Index {
 
   val MaxChunkBytesOption = "graft.dap2.maxChunkBytes"
 
-  /** `url` → chunk-map entry rows, kerchunk-shaped:
-    * (key, variable, member, kind, url, offset, length, inline_value).
+  /** `url` → chunk-map [[Entries.Entry]] rows, kerchunk-shaped.
     * Meta rows carry the synthesized zarr documents; each `ref` row's url
     * is a complete `.dods` hyperslab request for one band along the first
     * dimension. The driver only ever fetches the kilobyte `.dds`/`.das`
@@ -446,7 +445,6 @@ object Dap2Index {
     import org.json4s.JsonDSL._
     import org.json4s._
     import org.json4s.jackson.JsonMethods.{compact, render}
-    import spark.implicits._
 
     val base = url.stripSuffix("/")
     require(HttpFetch.isHttp(base),
@@ -474,57 +472,36 @@ object Dap2Index {
       case other     => JString(String.valueOf(other))
     }
 
-    val group = Iterator((".zgroup", "", ".zgroup", "meta", null: String,
-      None: Option[Long], None: Option[Long], """{"zarr_format": 2}"""))
     val rootAttrs = das.get("NC_GLOBAL").orElse(das.get("GLOBAL")).iterator.map { as =>
-      (".zattrs", "", ".zattrs", "meta", null: String, None: Option[Long], None: Option[Long],
-        compact(render(JObject(as.toList.map { case (k, v) => JField(k, jsonOf(v)) }))))
+      Entries.meta(".zattrs", compact(render(JObject(as.toList.map { case (k, v) =>
+        JField(k, jsonOf(v)) }))))
     }
+    def attrsOf(v: DapVar): List[JField] =
+      das.getOrElse(v.name, Map.empty).toList.map { case (k, value) => JField(k, jsonOf(value)) }
 
     val perVar = dds.vars.iterator.flatMap { v =>
       val shape = v.dims.map(_._2)
+      val dims = v.dims.map(_._1)
       if (stringTypes.contains(v.dapType)) {
         // label vector: |O meta row (numeric decode skips it), one
         // un-banded ref — see the class doc's String-array paragraph
-        val zarray: JValue =
-          ("zarr_format" -> 2) ~ ("dtype" -> "|O") ~
-            ("shape" -> shape) ~ ("chunks" -> shape) ~
-            ("compressor" -> JNull) ~ ("filters" -> JNull) ~ ("order" -> "C")
-        val zattrs: JValue = JObject(
-          das.getOrElse(v.name, Map.empty).toList.map { case (k, value) => JField(k, jsonOf(value)) } :+
-            JField("_ARRAY_DIMENSIONS", JArray(v.dims.map(d => JString(d._1)).toList)))
-        val member = Seq.fill(shape.size)("0").mkString(".")
         val slab = shape.map(n => s"[0:${n - 1}]").mkString
-        Iterator(
-          (s"${v.name}/.zarray", v.name, ".zarray", "meta", null: String,
-            None: Option[Long], None: Option[Long], compact(render(zarray))),
-          (s"${v.name}/.zattrs", v.name, ".zattrs", "meta", null: String,
-            None: Option[Long], None: Option[Long], compact(render(zattrs))),
-          (s"${v.name}/$member", v.name, member, "ref", s"$base.dods?${v.name}$slab",
-            None: Option[Long], None: Option[Long], null: String))
+        Entries.array(v.name, Entries.zarray("|O", shape, shape), Entries.zattrs(attrsOf(v), dims)) ++
+          Iterator(Entries.ref(s"${v.name}/${Seq.fill(shape.size)("0").mkString(".")}",
+            s"$base.dods?${v.name}$slab"))
       } else {
       val rowElems = shape.drop(1).product
       val rowBytes = math.max(1L, rowElems * wireElemSize(v.dapType))
       val bandRows = math.max(1L, math.min(shape.head, maxChunk / rowBytes))
       val nBands = (shape.head + bandRows - 1) / bandRows
       val chunks = bandRows +: shape.drop(1)
-
-      val zarray: JValue =
-        ("zarr_format" -> 2) ~ ("dtype" -> zarrDtype(v.dapType)) ~
-          ("shape" -> shape) ~ ("chunks" -> chunks) ~
-          ("compressor" -> JNull) ~ ("filters" -> JNull) ~ ("order" -> "C")
       // a Grid's coordinate-map association surfaces as the CF
       // `coordinates` attribute (space-joined map names) — exactly what
       // xarray writes when it flattens a pydap Grid
-      val zattrs: JValue = JObject(
-        das.getOrElse(v.name, Map.empty).toList.map { case (k, value) => JField(k, jsonOf(value)) } ++
-          (if (v.maps.nonEmpty) List(JField("coordinates", JString(v.maps.mkString(" ")))) else Nil) :+
-          JField("_ARRAY_DIMENSIONS", JArray(v.dims.map(d => JString(d._1)).toList)))
-      val meta = Iterator(
-        (s"${v.name}/.zarray", v.name, ".zarray", "meta", null: String,
-          None: Option[Long], None: Option[Long], compact(render(zarray))),
-        (s"${v.name}/.zattrs", v.name, ".zattrs", "meta", null: String,
-          None: Option[Long], None: Option[Long], compact(render(zattrs))))
+      val meta = Entries.array(v.name, Entries.zarray(zarrDtype(v.dapType), shape, chunks),
+        Entries.zattrs(attrsOf(v) ++
+          (if (v.maps.nonEmpty) List(JField("coordinates", JString(v.maps.mkString(" ")))) else Nil),
+          dims))
 
       val zeros = Seq.fill(math.max(chunks.size - 1, 0))("0")
       val data = (0L until nBands).iterator.map { b =>
@@ -532,9 +509,8 @@ object Dap2Index {
         val hi = math.min(shape.head, lo + bandRows) - 1
         // full extent on trailing dims: the hyperslab selects a row band
         val slab = (s"[$lo:$hi]" +: shape.drop(1).map(n => s"[0:${n - 1}]")).mkString
-        val member = (b.toString +: zeros).mkString(".")
-        (s"${v.name}/$member", v.name, member, "ref", s"$base.dods?${v.name}$slab",
-          None: Option[Long], None: Option[Long], null: String)
+        Entries.ref(s"${v.name}/${(b.toString +: zeros).mkString(".")}",
+          s"$base.dods?${v.name}$slab")
       }
       meta ++ data
       }
@@ -567,14 +543,11 @@ object Dap2Index {
       }.toList
       val schema: JValue = ("members" -> JArray(memberJson(sq.body)))
       Iterator(
-        (s"${sq.name}/.zseq", sq.name, ".zseq", "meta", null: String,
-          None: Option[Long], None: Option[Long], compact(render(schema))),
-        (s"${sq.name}/seq", sq.name, "seq", "seqref", s"$base.dods?${sq.name}",
-          None: Option[Long], None: Option[Long], null: String))
+        Entries.meta(s"${sq.name}/.zseq", compact(render(schema))),
+        Entries.ref(s"${sq.name}/seq", s"$base.dods?${sq.name}").copy(kind = "seqref"))
     }
 
-    spark.createDataset((group ++ rootAttrs ++ perVar ++ perSeq).toSeq)
-      .toDF("key", "variable", "member", "kind", "url", "offset", "length", "inline_value")
+    Entries.frame(spark, (Iterator(Entries.group) ++ rootAttrs ++ perVar ++ perSeq).toSeq)
   }
 
   // ----------------------------------------------------------- materialize

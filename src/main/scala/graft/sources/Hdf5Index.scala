@@ -1296,10 +1296,8 @@ object Hdf5Index {
         case "V"       => s"|V${dt.size}"
         case k         => s"${dt.order}$k${dt.size}"
       }
-      val zattrs = renderAttrs(attrs, dims).getOrElse(
-        if (dims.isEmpty) """{}"""
-        else compact(render(JObject(List(JField("_ARRAY_DIMENSIONS",
-          JArray(dims.map(JString(_)).toList)))))))
+      // never empty when `dims` names a dimension
+      val zattrs = renderAttrs(attrs, dims).getOrElse("{}")
 
       val data: VarData = layout match {
         case Compact(bytes) =>
@@ -1350,8 +1348,7 @@ object Hdf5Index {
     * subtree surfaces. */
   private def resolveExternals(
       externals: List[ExtRef], sourceUrl: String, linkingUrl: String,
-      hconf: org.apache.hadoop.conf.Configuration)
-      : Iterator[(String, String, String, String, String, Option[Long], Option[Long], String)] = {
+      hconf: org.apache.hadoop.conf.Configuration): Iterator[Entries.Entry] = {
     if (externals.isEmpty) return Iterator.empty
     require(!TarMember.isTarUrl(sourceUrl),
       s"hdf5 '$sourceUrl': external link '${externals.head.aliasKey}' from a tar member")
@@ -1414,70 +1411,34 @@ object Hdf5Index {
     * downstream decode per file — the concatenated frame is for
     * inventory/sweep use. */
   def readMany(spark: SparkSession, paths: Seq[String],
-               storageOptions: Map[String, String] = Map.empty): DataFrame = {
-    import spark.implicits._
-    val hconf = FsPaths.broadcastConf(spark, storageOptions)
-    val parts = math.max(1, math.min(paths.size, spark.sparkContext.defaultParallelism))
-    val seed  = spark.createDataset(paths)
-    // no round-robin exchange for the single-file (read()) path — the
-    // local relation maps directly; only real fan-outs pay the shuffle
-    val spread = if (paths.size <= 1) seed else seed.repartition(parts)
-    val ds = spread.mapPartitions { it =>
-      it.flatMap { p =>
-        // tar members parse at their base offset (addresses are
-        // superblock-relative); refs point into the archive itself
-        val (real, base, _) =
-          if (TarMember.isTarUrl(p)) TarMember.locate(p, hconf.value.value) else (p, 0L, 0L)
-        val hPath = FsPaths.hadoopPath(real)
-        val fs = FsPaths.fileSystemFor(hPath, hconf.value.value)
-        val in = fs.open(hPath)
-        val (groupAttrs, vars, externals, _) =
-          try parseFile(new Reader(in, p, base), p)
-          finally in.close()
-        entriesOf(groupAttrs, vars, real, base) ++
-          resolveExternals(externals, p, real, hconf.value.value)
-      }
+               storageOptions: Map[String, String] = Map.empty): DataFrame =
+    // tar members parse at their base offset (addresses are
+    // superblock-relative); refs point into the archive itself
+    Entries.perFile(spark, paths, storageOptions) { at =>
+      val in = at.fs.open(at.hPath)
+      val (groupAttrs, vars, externals, _) =
+        try parseFile(new Reader(in, at.path, at.base), at.path)
+        finally in.close()
+      entriesOf(groupAttrs, vars, at.real, at.base) ++
+        resolveExternals(externals, at.path, at.real, at.conf)
     }
-    ds.toDF("key", "variable", "member", "kind", "url", "offset", "length", "inline_value")
-  }
 
   private def entriesOf(groupAttrs: List[(String, String)], vars: List[VarInfo], url: String,
-                        base: Long, includeRoot: Boolean = true)
-      : Iterator[(String, String, String, String, String, Option[Long], Option[Long], String)] = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods.{compact, render}
-    val none: Option[Long] = None
-    val group =
-      if (!includeRoot) Iterator.empty
-      else Iterator((".zgroup", "", ".zgroup", "meta", null: String,
-        none, none, """{"zarr_format": 2}"""))
+                        base: Long, includeRoot: Boolean = true): Iterator[Entries.Entry] = {
+    val group = if (includeRoot) Iterator(Entries.group) else Iterator.empty
     val gattrs = groupAttrs.iterator.map { case (dir, za) =>
-      val key = if (dir.isEmpty) ".zattrs" else s"$dir/.zattrs"
-      (key, dir, ".zattrs", "meta", null: String, none, none, za)
+      Entries.meta(Entries.keyIn(dir, ".zattrs"), za)
     }
     val perVar = vars.iterator.flatMap { v =>
-      val zarray: JValue =
-        JObject(List(
-          JField("zarr_format", JLong(2)),
-          JField("dtype", JString(v.dtype)),
-          JField("shape", JArray(v.shape.map(JLong(_)).toList)),
-          JField("chunks", JArray(v.chunks.map(JLong(_)).toList)),
-          JField("compressor", v.compressor),
-          JField("filters", v.zfilters),
-          JField("order", JString("C"))))
-      val meta = Iterator(
-        (s"${v.pathKey}/.zarray", v.pathKey, ".zarray", "meta", null: String,
-          none, none, compact(render(zarray))),
-        (s"${v.pathKey}/.zattrs", v.pathKey, ".zattrs", "meta", null: String,
-          none, none, v.zattrs))
+      val meta = Entries.array(v.pathKey,
+        Entries.zarray(v.dtype, v.shape, v.chunks, v.compressor, v.zfilters), v.zattrs)
       val data = v.data match {
         case InlineChunk(member, bytes) =>
-          Iterator((s"${v.pathKey}/$member", v.pathKey, member, "inline", null: String,
-            none, none, "base64:" + java.util.Base64.getEncoder.encodeToString(bytes)))
+          Iterator(Entries.inline(s"${v.pathKey}/$member",
+            "base64:" + java.util.Base64.getEncoder.encodeToString(bytes)))
         case RefChunks(refs) =>
           refs.iterator.map { case (member, addr, size) =>
-            (s"${v.pathKey}/$member", v.pathKey, member, "ref", url,
-              Some(base + addr), Some(size), null: String)
+            Entries.ref(s"${v.pathKey}/$member", url, Some(base + addr), Some(size))
           }
       }
       meta ++ data

@@ -41,11 +41,7 @@ object KerchunkIndex {
     graft.operators.CacheScope.untracked.persisted(entries,
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-  /** One row per reference entry:
-    * (key, variable, member, kind ∈ meta|inline|ref, url, offset, length,
-    * inline_value). `variable` is "" for root-level keys; inline values keep
-    * their `base64:` prefix when binary.
-    */
+  /** One [[Entries.Entry]] row per reference entry ([[Entries.shred]]). */
   def read(spark: SparkSession, rawPath: String,
            storageOptions: Map[String, String] = Map.empty): DataFrame = {
     // kerchunk reference documents are routinely HOSTED over https (the
@@ -81,21 +77,7 @@ object KerchunkIndex {
         (e, Option(m.getString(0)), Option(m.getString(1)),
           if (m.isNullAt(2)) None else Some(m.getLong(2)))
       } finally spark.catalog.dropTempView(view)
-    val member = substring_index(col("key"), "/", -1)
-    val shredded = entries.select(
-      col("key"),
-      when(col("key").contains("/"),
-        expr("substring(key, 1, length(key) - length(substring_index(key, '/', -1)) - 1)"))
-        .otherwise(lit("")).as("variable"),
-      member.as("member"),
-      when(member.startsWith("."), lit("meta"))
-        .when(expr("schema_of_variant(value)").startsWith("ARRAY"), lit("ref"))
-        .otherwise(lit("inline")).as("kind"),
-      expr("try_variant_get(value, '$[0]', 'string')").as("url"),
-      expr("try_variant_get(value, '$[1]', 'long')").as("offset"),
-      expr("try_variant_get(value, '$[2]', 'long')").as("length"),
-      expr("try_variant_get(value, '$', 'string')").as("inline_value"),
-    )
+    val shredded = Entries.shred(entries)
     if (templatesJson.isEmpty && genJson.isEmpty) shredded
     else {
       // templates/gen semantics are DEFINED by spec version 1 (fsspec
@@ -363,14 +345,9 @@ object KerchunkIndex {
 
     import spark.implicits._
     // metadata documents → the same meta entry rows the JSON form emits
-    val metaRows = metadata.map { case (key, v) =>
-      val member = key.split("/").last
-      val variable = if (key.contains("/")) key.substring(0, key.length - member.length - 1) else ""
-      (key, variable, member, "meta", Option.empty[String], Option.empty[Long],
-        Option.empty[Long], Some(JsonMethods.compact(JsonMethods.render(v))))
-    }
-    val metaDf = metaRows
-      .toDF("key", "variable", "member", "kind", "url", "offset", "length", "inline_value")
+    val metaDf = Entries.frame(spark, metadata.map { case (key, v) =>
+      Entries.meta(key, JsonMethods.compact(JsonMethods.render(v)))
+    })
 
     // per-variable chunk-grid geometry from the consolidated .zarray docs
     def longs(v: JValue, what: String): Seq[Long] = v match {
@@ -541,23 +518,7 @@ object KerchunkIndex {
            | LATERAL variant_explode(variant_get(parse_json(t.value), '$$.refs', 'variant')) AS e
            |""".stripMargin)
       finally spark.catalog.dropTempView(view)
-    val member = substring_index(col("key"), "/", -1)
-    entries
-      .select(
-        col("__src").cast("int").as("__src"),
-        col("key"),
-        when(col("key").contains("/"),
-          expr("substring(key, 1, length(key) - length(substring_index(key, '/', -1)) - 1)"))
-          .otherwise(lit("")).as("variable"),
-        member.as("member"),
-        when(member.startsWith("."), lit("meta"))
-          .when(expr("schema_of_variant(value)").startsWith("ARRAY"), lit("ref"))
-          .otherwise(lit("inline")).as("kind"),
-        expr("try_variant_get(value, '$[0]', 'string')").as("url"),
-        expr("try_variant_get(value, '$[1]', 'long')").as("offset"),
-        expr("try_variant_get(value, '$[2]', 'long')").as("length"),
-        expr("try_variant_get(value, '$', 'string')").as("inline_value"),
-      )
+    Entries.shred(entries, col("__src").cast("int").as("__src"))
   }
 
   /** COMBINE source-tagged entry frames along one dimension — the
@@ -623,13 +584,13 @@ object KerchunkIndex {
           "but not in source 0 — the combined store would silently drop it")
     }
 
-    val outMeta = scala.collection.mutable.ArrayBuffer
-      .empty[(String, String, String, String, Option[String], Option[Long], Option[Long], Option[String])]
+    val outMeta = scala.collection.mutable.ArrayBuffer.empty[Entries.Entry]
+    // source 0's meta rows as they are
+    def keep(r: org.apache.spark.sql.Row): Unit =
+      outMeta += Entries.Entry(r.getString(1), r.getString(2), r.getString(3), "meta",
+        null, None, None, r.getString(4))
     // root documents from source 0
-    metaRows.filter(r => r.getInt(0) == 0 && r.getString(2).isEmpty).foreach { r =>
-      outMeta += ((r.getString(1), "", r.getString(3), "meta", None, None, None,
-        Option(r.getString(4))))
-    }
+    metaRows.filter(r => r.getInt(0) == 0 && r.getString(2).isEmpty).foreach(keep)
     // (variable, src) → (axis position, grid offset along the axis)
     val shifts = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Int, Long)]
     val concatVars = scala.collection.mutable.Set.empty[String]
@@ -663,10 +624,7 @@ object KerchunkIndex {
             fail(s"variable '$v' has no '$dim' dimension but its .zarray differs " +
               s"between sources 0 and $s — not an identical variable")
         }
-        metaRows.filter(r => r.getInt(0) == 0 && r.getString(2) == v).foreach { r =>
-          outMeta += ((r.getString(1), v, r.getString(3), "meta", None, None, None,
-            Option(r.getString(4))))
-        }
+        metaRows.filter(r => r.getInt(0) == 0 && r.getString(2) == v).foreach(keep)
       } else {
         concatVars += v
         // dimension ORDER must agree too: with square extents a transposed
@@ -715,18 +673,15 @@ object KerchunkIndex {
           })
           case _ => fail(s"variable '$v': .zarray is not an object")
         }
-        outMeta += ((s"$v/.zarray", v, ".zarray", "meta", None, None, None,
-          Some(JsonMethods.compact(JsonMethods.render(combinedZarray)))))
-        bySrcKey.get((0, s"$v/.zattrs")).foreach { t =>
-          outMeta += ((s"$v/.zattrs", v, ".zattrs", "meta", None, None, None, Some(t)))
-        }
+        outMeta += Entries.meta(s"$v/.zarray",
+          JsonMethods.compact(JsonMethods.render(combinedZarray)))
+        bySrcKey.get((0, s"$v/.zattrs")).foreach(t => outMeta += Entries.meta(s"$v/.zattrs", t))
       }
     }
     require(concatVars.nonEmpty,
       s"kerchunk combine along '$dim': NO variable carries that dimension — " +
         s"nothing would concatenate (variables: ${variables.mkString(", ")})")
-    val metaDf = outMeta.toSeq
-      .toDF("key", "variable", "member", "kind", "url", "offset", "length", "inline_value")
+    val metaDf = Entries.frame(spark, outMeta.toSeq)
 
     // ---- data rows: concat vars re-key through the broadcast shift map;
     // identical vars pass through from source 0
@@ -749,13 +704,11 @@ object KerchunkIndex {
         zip_with(transform(split(col("member"), "[.]"), s => s.cast("long")),
           sequence(lit(0), size(split(col("member"), "[.]")) - 1),
           (c, d) => when(d === col("__axis"), c + col("__shift")).otherwise(c)), "."))
-      .select(concat(col("variable"), lit("/"), col("member")).as("key"),
-        col("variable"), col("member"), col("kind"),
-        col("url"), col("offset"), col("length"), col("inline_value"))
+      .withColumn("key", concat(col("variable"), lit("/"), col("member")))
+      .select(Entries.columns: _*)
     val identical = data
       .filter(!col("variable").isin(concatSet: _*) && col("__src") === 0)
-      .drop("__src")
-      .select("key", "variable", "member", "kind", "url", "offset", "length", "inline_value")
+      .select(Entries.columns: _*)
     metaDf.unionByName(shifted).unionByName(identical)
   }
 

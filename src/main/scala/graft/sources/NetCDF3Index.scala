@@ -197,14 +197,11 @@ object NetCDF3Index {
     val conf = FsPaths.confWith(spark.sparkContext.hadoopConfiguration, storageOptions)
     // tar-archived assets (source.py:94-95 via fsspec chaining): sniff the
     // member's first bytes inside the archive, no extraction
-    val (real, base, _) =
-      if (TarMember.isTarUrl(path)) TarMember.locate(path, conf) else (path, 0L, 0L)
-    val hPath = FsPaths.hadoopPath(real)
+    val at = Entries.At(path, conf)
     val magic = new Array[Byte](4)
     try {
-      val fs = FsPaths.fileSystemFor(hPath, conf)
-      val in = fs.open(hPath)
-      try in.readFully(base, magic) finally in.close()
+      val in = at.fs.open(at.hPath)
+      try in.readFully(at.base, magic) finally in.close()
     } catch {
       case e: java.io.IOException if FsPaths.isNoFilesystem(e) =>
         FsPaths.connectorRefusal(path, e)
@@ -228,40 +225,22 @@ object NetCDF3Index {
     * file up to the session parallelism. Entry keys stay file-relative;
     * drive the downstream decode per file. */
   def readMany(spark: SparkSession, paths: Seq[String],
-               storageOptions: Map[String, String] = Map.empty): DataFrame = {
-    import spark.implicits._
-    val hconf = FsPaths.broadcastConf(spark, storageOptions)
-    val parts = math.max(1, math.min(paths.size, spark.sparkContext.defaultParallelism))
-    val seed  = spark.createDataset(paths)
-    val spread = if (paths.size <= 1) seed else seed.repartition(parts)
-    val ds = spread.mapPartitions { it =>
-      it.flatMap { p =>
-        // tar members read at their base offset; refs point into the archive
-        val (real, base, _) =
-          if (TarMember.isTarUrl(p)) TarMember.locate(p, hconf.value.value) else (p, 0L, 0L)
-        val hPath = FsPaths.hadoopPath(real)
-        val fs = FsPaths.fileSystemFor(hPath, hconf.value.value)
-        val header = {
-          val raw = fs.open(hPath)
-          if (base > 0) raw.seek(base)
-          val in = new java.io.DataInputStream(new java.io.BufferedInputStream(raw))
-          try parseHeader(in) finally in.close()
-        }
-        entriesOf(header, real, base)
-      }
+               storageOptions: Map[String, String] = Map.empty): DataFrame =
+    // tar members read at their base offset; refs point into the archive
+    Entries.perFile(spark, paths, storageOptions) { at =>
+      val raw = at.fs.open(at.hPath)
+      if (at.base > 0) raw.seek(at.base)
+      val in = new java.io.DataInputStream(new java.io.BufferedInputStream(raw))
+      val header = try parseHeader(in) finally in.close()
+      entriesOf(header, at.real, at.base)
     }
-    ds.toDF("key", "variable", "member", "kind", "url", "offset", "length", "inline_value")
-  }
 
-  /** Header → entry rows. Exposed shape:
-    * (key, variable, member, kind, url, offset, length, inline_value).
-    * `base` shifts every data offset — nonzero when the container sits
-    * inside a tar archive and `url` is the archive itself. */
-  private def entriesOf(h: Header, url: String, base: Long)
-      : Iterator[(String, String, String, String, String, Option[Long], Option[Long], String)] = {
-    import org.json4s.jackson.JsonMethods.{compact, render}
-    import org.json4s.JsonDSL._
+  /** Header → entry rows. `base` shifts every data offset — nonzero when
+    * the container sits inside a tar archive and `url` is the archive
+    * itself. */
+  private def entriesOf(h: Header, url: String, base: Long): Iterator[Entries.Entry] = {
     import org.json4s._
+    import org.json4s.jackson.JsonMethods.{compact, render}
 
     val recordVars = h.vars.filter(v => v.dimids.headOption.exists(d => h.dims(d)._2 == 0))
     // per-record slab stride: Σ of each record var's 4-padded slab — unless
@@ -272,21 +251,17 @@ object NetCDF3Index {
       if (recordVars.size == 1) slabBytes(recordVars.head)
       else recordVars.map(v => (slabBytes(v) + 3) / 4 * 4).sum
 
-    val group = Iterator((".zgroup", "", ".zgroup", "meta", null: String,
-      None: Option[Long], None: Option[Long], """{"zarr_format": 2}"""))
-
     // root .zattrs: the file's global attributes, plus the record (UNLIMITED)
     // dimension surfaced as `_graft_unlimited_dims` — multi-file (glob)
     // opens concatenate along it, the same role xarray's open_mfdataset
     // gives the record dim (source.py:102-107)
-    val rootAttrs: Iterator[(String, String, String, String, String, Option[Long], Option[Long], String)] = {
+    val rootAttrs = {
       val fields = h.gatts.map { case (k, value) => JField(k, jsonOf(value)) } ++
         h.dims.collectFirst { case (nm, 0) =>
           JField("_graft_unlimited_dims", JArray(List(JString(nm))))
         }
       if (fields.isEmpty) Iterator.empty
-      else Iterator((".zattrs", "", ".zattrs", "meta", null: String,
-        None: Option[Long], None: Option[Long], compact(render(JObject(fields)))))
+      else Iterator(Entries.meta(".zattrs", compact(render(JObject(fields)))))
     }
 
     val perVar = h.vars.iterator.flatMap { v =>
@@ -299,35 +274,23 @@ object NetCDF3Index {
       val chunks: Seq[Long] = if (isRecord) 1L +: shape.drop(1) else shape
       val dimNames: Seq[String] =
         if (v.dimids.isEmpty) Seq(v.name) else v.dimids.map(d => h.dims(d)._1)
-      val zarray: JValue =
-        ("zarr_format" -> 2) ~ ("dtype" -> dtypeOf(v.ncType)) ~
-          ("shape" -> shape) ~ ("chunks" -> chunks) ~
-          ("compressor" -> JNull) ~ ("filters" -> JNull) ~ ("order" -> "C")
-      val zattrs: JValue = JObject(
-        v.atts.map { case (k, value) => JField(k, jsonOf(value)) } :+
-          JField("_ARRAY_DIMENSIONS", JArray(dimNames.map(JString(_)).toList)))
-      val meta = Iterator(
-        (s"${v.name}/.zarray", v.name, ".zarray", "meta", null: String,
-          None: Option[Long], None: Option[Long], compact(render(zarray))),
-        (s"${v.name}/.zattrs", v.name, ".zattrs", "meta", null: String,
-          None: Option[Long], None: Option[Long], compact(render(zattrs))))
-      val data: Iterator[(String, String, String, String, String, Option[Long], Option[Long], String)] =
+      val meta = Entries.array(v.name, Entries.zarray(dtypeOf(v.ncType), shape, chunks),
+        Entries.zattrs(v.atts.map { case (k, value) => JField(k, jsonOf(value)) }, dimNames))
+      val data =
         if (isRecord) {
           val slab = slabBytes(v)
           val zeros = Seq.fill(math.max(chunks.size - 1, 0))("0")
           (0L until h.numrecs).iterator.map { r =>
-            val member = (r.toString +: zeros).mkString(".")
-            (s"${v.name}/$member", v.name, member, "ref", url,
-              Some(base + v.begin + r * recSize), Some(slab), null: String)
+            Entries.ref(s"${v.name}/${(r.toString +: zeros).mkString(".")}", url,
+              Some(base + v.begin + r * recSize), Some(slab))
           }
         } else {
-          val member = Seq.fill(chunks.size)("0").mkString(".")
-          val len    = shape.product * typeSize(v.ncType)
-          Iterator((s"${v.name}/$member", v.name, member, "ref", url,
-            Some(base + v.begin), Some(len), null: String))
+          val len = shape.product * typeSize(v.ncType)
+          Iterator(Entries.ref(s"${v.name}/${Seq.fill(chunks.size)("0").mkString(".")}", url,
+            Some(base + v.begin), Some(len)))
         }
       meta ++ data
     }
-    group ++ rootAttrs ++ perVar
+    Iterator(Entries.group) ++ rootAttrs ++ perVar
   }
 }

@@ -38,6 +38,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * chunk reads. Non-directory paths (zip stores etc.) refuse loudly.
   */
 object ZarrDirectoryIndex {
+  import Entries.Entry
 
   /** Shared store validation (driver probe AND task): directory required.
     * One implementation so the checks and their messages cannot drift
@@ -355,37 +356,28 @@ object ZarrDirectoryIndex {
     * fill_value have no file and therefore emit no rows — the plane
     * surfaces STORED data. */
   def read(spark: SparkSession, storePath: String,
-           storageOptions: Map[String, String] = Map.empty): DataFrame = {
-    import spark.implicits._
-    val hconf = FsPaths.broadcastConf(spark, storageOptions)
-    val ds = spark.createDataset(Seq(storePath)).mapPartitions { paths =>
-      paths.flatMap { p =>
-        val root = FsPaths.hadoopPath(p)
-        val fs   = FsPaths.fileSystemFor(root, hconf.value.value)
-        validateStore(fs, root, p)
-        val rootUri = root.toUri.getPath.stripSuffix("/")
-        def relOf(f: org.apache.hadoop.fs.Path): String =
-          f.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
-        def readText(f: org.apache.hadoop.fs.Path): String = {
-          val in = fs.open(f)
-          try {
-            val bos = new java.io.ByteArrayOutputStream()
-            val buf = new Array[Byte](8192)
-            var n = in.read(buf)
-            while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-            new String(bos.toByteArray, "UTF-8")
-          } finally in.close()
-        }
-        if (fs.exists(new org.apache.hadoop.fs.Path(root, "zarr.json")))
-          v3Entries(fs, root, p, relOf, readText)
-        else
-          v2Entries(fs, root, relOf, readText)
+           storageOptions: Map[String, String] = Map.empty): DataFrame =
+    Entries.perFile(spark, Seq(storePath), storageOptions) { at =>
+      val (root, fs) = (at.hPath, at.fs)
+      validateStore(fs, root, at.path)
+      val rootUri = root.toUri.getPath.stripSuffix("/")
+      def relOf(f: org.apache.hadoop.fs.Path): String =
+        f.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
+      def readText(f: org.apache.hadoop.fs.Path): String = {
+        val in = fs.open(f)
+        try {
+          val bos = new java.io.ByteArrayOutputStream()
+          val buf = new Array[Byte](8192)
+          var n = in.read(buf)
+          while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
+          new String(bos.toByteArray, "UTF-8")
+        } finally in.close()
       }
+      if (fs.exists(new org.apache.hadoop.fs.Path(root, "zarr.json")))
+        v3Entries(fs, root, at.path, relOf, readText)
+      else
+        v2Entries(fs, root, relOf, readText)
     }
-    ds.toDF("key", "variable", "member", "kind", "url", "offset", "length", "inline_value")
-  }
-
-  private type Entry = (String, String, String, String, String, Option[Long], Option[Long], String)
 
   private def v2Entries(fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
                         relOf: org.apache.hadoop.fs.Path => String,
@@ -435,11 +427,7 @@ object ZarrDirectoryIndex {
       }.getOrElse((segs.init.mkString("/"), segs.last))
     }
     val consolidatedMeta: Iterator[Entry] = consolidated.iterator.flatMap(_.iterator.map {
-      case (key, doc) =>
-        val member   = key.split('/').last
-        val variable = key.stripSuffix(member).stripSuffix("/")
-        (key, variable, member, "meta", null: String,
-          None: Option[Long], None: Option[Long], doc)
+      case (key, doc) => Entries.meta(key, doc)
     })
     val walked: Iterator[Entry] = new Iterator[Entry] {
       private var nextEntry: Entry = _
@@ -448,20 +436,18 @@ object ZarrDirectoryIndex {
         while (nextEntry == null && files.hasNext) {
           val f   = files.next()
           val key = relOf(f.getPath)
-          val member   = key.split('/').last
-          val variable = key.stripSuffix(member).stripSuffix("/")
+          val member = key.split('/').last
           if (member.startsWith(".")) {
             // metadata document: inline its (small) JSON content — unless
             // the consolidated doc already supplied it (skip the read; the
             // .zmetadata file itself is never a plane document)
             if (consolidated.isEmpty && member != ".zmetadata")
-              nextEntry = (key, variable, member, "meta", null, None, None, readText(f.getPath))
+              nextEntry = Entries.meta(key, readText(f.getPath))
           } else {
             // chunk file: a whole-file ref — offset/length resolve to
             // (0, file size) inside materializeChunks
             val (chunkVar, chunkMember) = splitChunkKey(key)
-            nextEntry = (s"$chunkVar/$chunkMember", chunkVar, chunkMember, "ref",
-              f.getPath.toString, None, None, null)
+            nextEntry = Entries.ref(s"$chunkVar/$chunkMember", f.getPath.toString)
           }
         }
       }
@@ -497,21 +483,9 @@ object ZarrDirectoryIndex {
     }
     walk("")
     val meta: Iterator[Entry] =
-      Iterator((".zgroup", "", ".zgroup", "meta", null: String,
-        None: Option[Long], None: Option[Long], """{"zarr_format": 2}""")) ++
-        groupAttrs.iterator.map { case (dir, za) =>
-          val key = if (dir.isEmpty) ".zattrs" else s"$dir/.zattrs"
-          (key, dir, ".zattrs", "meta", null: String,
-            None: Option[Long], None: Option[Long], za)
-        } ++
-        arrays.iterator.flatMap { case (dir, a) =>
-          def keyOf(m: String) = if (dir.isEmpty) m else s"$dir/$m" // root-level array store
-          Iterator(
-            (keyOf(".zarray"), dir, ".zarray", "meta", null: String,
-              None: Option[Long], None: Option[Long], a.zarray),
-            (keyOf(".zattrs"), dir, ".zattrs", "meta", null: String,
-              None: Option[Long], None: Option[Long], a.zattrs))
-        }
+      Iterator(Entries.group) ++
+        groupAttrs.iterator.map { case (dir, za) => Entries.meta(Entries.keyIn(dir, ".zattrs"), za) } ++
+        arrays.iterator.flatMap { case (dir, a) => Entries.array(dir, a.zarray, a.zattrs) }
     // pass 2: stream the chunk files, attributing each to its deepest
     // owning array and normalizing the chunk key to the dotted form;
     // sharded arrays' files expand into per-inner-chunk byte-range refs
@@ -534,9 +508,7 @@ object ZarrDirectoryIndex {
         } match {
           case Some((dir, m)) =>
             arrays(dir).shard match {
-              case None =>
-                Iterator((s"$dir/$m", dir, m, "ref", f.getPath.toString,
-                  None: Option[Long], None: Option[Long], null: String): Entry)
+              case None => Iterator(Entries.ref(s"$dir/$m", f.getPath.toString))
               case Some(ss) => expandShard(fs, f, dir, m, ss)
             }
           case None =>
@@ -545,8 +517,8 @@ object ZarrDirectoryIndex {
             // decodeTyped's chunk-key pattern, or a numerically-named
             // stray file (a half-migrated v2 `lev/0` beside `lev/c/0`)
             // would decode as a phantom chunk
-            Iterator((key, segs.init.mkString("/"), s"sidecar:${segs.last}", "ref",
-              f.getPath.toString, None: Option[Long], None: Option[Long], null: String): Entry)
+            Iterator(Entry(key, segs.init.mkString("/"), s"sidecar:${segs.last}", "ref",
+              f.getPath.toString, None, None, null))
         }
       }
     meta ++ chunks
@@ -606,9 +578,8 @@ object ZarrDirectoryIndex {
             base(d2) + local(d2) * ss.slotScale(d2)).toArray
           ss.inner match {
             case None =>
-              val m = childBase.mkString(".")
-              Iterator((s"$dir/$m", dir, m, "ref", url,
-                Some(rangeOff + off), Some(nb), null: String): Entry)
+              Iterator(Entries.ref(s"$dir/${childBase.mkString(".")}", url,
+                Some(rangeOff + off), Some(nb)))
             case Some(innerSpec) =>
               level(innerSpec, rangeOff + off, nb, childBase)
           }

@@ -272,4 +272,51 @@ class CorpusPipelineSpec extends AnyFunSuite {
     val kept = r.cleaned.select("lang").distinct().as[String].collect().toSeq
     assert(kept == Seq("fr"), kept.toString)
   }
+
+  test("clean takes every stage count from its one feature aggregate") {
+    import graft.operators.{Dsir, NgramLm, TextClassifier}
+    val s1 = "the catalog holds many datasets and every record describes " +
+      "one asset of that collection with stable names"
+    val s2 = "the archive keeps every dataset and that index lists one " +
+      "location of each member with precise offsets"
+    val good1 = (s1 + " ") * 4
+    val good2 = (s2 + " ") * 4
+    val ref = Seq((1L, good1), (2L, good2)).toDF("doc_id", "text")
+    val bLm = spark.sparkContext.broadcast(NgramLm.train(ref, "text"))
+    val labeled = (Seq((1L, good1, true), (2L, good2, true)) ++
+      (3L to 8L).map(i => (i, (1 to 52).map(j => s"zzspam${i * 100 + j} filler$j")
+        .mkString(" "), false))).toDF("doc_id", "text", "y")
+    val (w, b) = TextClassifier.train(labeled, "text", "y", dim = 256,
+      iters = 60, lr = 4.0)
+    val scale = 50.0 / math.max(math.max(w.map(math.abs).max, math.abs(b)), 1e-12)
+    val qp = CorpusPipeline.QualityPlane(
+      TextClassifier.quantize(w.map(_ * scale)),
+      TextClassifier.quantize(Array(b * scale)).head, bLm)
+    val docs = Seq(
+      (1L, good1),
+      (2L, good2),
+      (3L, (1 to 52).map(i => s"zzspam$i word$i").mkString(" ")),
+      (4L, (1 to 55).map(i => s"zzunseen$i").mkString(" ")),
+      (5L, "tiny text"),
+      (6L, good1),
+      (7L, (s2 + " ") * 2 + s1),
+    ).toDF("doc_id", "text")
+    val dsir = Dsir.importanceWeights(
+      Dsir.bucketHistogram(ref, "text"), Dsir.bucketHistogram(docs, "text"))
+    // every plane active: each stage but the last drops nothing or
+    // something, and all five stage counts come out of one aggregate
+    val (r, census) = JobCensus(spark) {
+      CorpusPipeline.clean(docs, minTokens = 5, minAlphaRatio = 0.5,
+        allowedLangs = Seq("en"), nearDupThreshold = 0.8, qualityPlane = Some(qp),
+        dsirPlane = Some(CorpusPipeline.DsirPlane(dsir, minScore = -1e9)),
+        compressionPlane = Some(CorpusPipeline.CompressionPlane()))
+    }
+    assert(r.stats == Seq("input" -> 7L, "quality" -> 6L, "quality_plane" -> 4L,
+      "dsir" -> 4L, "compression" -> 4L, "lang" -> 4L, "exact_dedup" -> 3L,
+      "near_dedup" -> 3L), r.stats.toString)
+    // 32 jobs when each of the quality_plane, dsir, compression and lang
+    // stages ran a count of its own (2 jobs each); the stage flags ride the
+    // feature aggregate instead
+    assert(census.jobs == 32 - 4 * 2, census.actions.mkString("; "))
+  }
 }
