@@ -1015,13 +1015,13 @@ object SimilarityGates extends GateFamily {
 
   gate("search_hybrid_indexed_pruned")((s, dir) => {
       // r16: the PRODUCTION-PARAMETER fused shape — bm25SearchIndexed +
-      // annSearchIndexedBatch (battery-as-data, nProbe = 8 of 16 cells,
-      // refine = 4) through rrfFuse. Approximate probes admit no SQL
-      // truth, so the pin is in-plan equality against the fusion of the
-      // independently-gated equivalent forms: the literal bm25TopK
-      // (hash-identical to the store search by the indexed-gate family)
-      // and the driver-form annSearchIndexed over the SAME store
-      // (bit-identical to the batch form by ann_index_search_batch).
+      // annSearchIndexed (nProbe = 8 of 16 cells, refine = 4) through
+      // rrfFuse. Approximate probes admit no SQL truth, so the pin is
+      // in-plan equality against the fusion of the independently-gated
+      // equivalent forms: the literal bm25TopK (hash-identical to the
+      // store search by the indexed-gate family) and the in-flight pqTopK
+      // over the same corpus (bit-identical to the store search by
+      // ann_index_search).
       // Equality here isolates exactly the new surface: the fusion
       // WIRING over the two stores. Store pruning under the fused plan
       // (cell PartitionFilters, pushed term IN) is pinned in
@@ -1052,13 +1052,13 @@ object SimilarityGates extends GateFamily {
       val overStores = fused(
         graft.operators.KeywordSearch.bm25SearchIndexed(
           s, bmRoot, battery, "qid", "qtext", k = 10),
-        graft.operators.AnnIndex.annSearchIndexedBatch(s, annRoot,
+        graft.operators.AnnIndex.annSearchIndexed(s, annRoot,
           qv, "qid", "embedding", k = 10, nProbe = 8, refine = 4))
       val overForms = fused(
         graft.operators.KeywordSearch.bm25TopK(docs, "text", "doc_id",
           probes, k = 10),
-        graft.operators.AnnIndex.annSearchIndexed(s, annRoot,
-          qv, "qid", "embedding", k = 10, nProbe = 8, refine = 4))
+        Similarity.pqTopK(emb, "vec_id", "embedding", qv, "qid", "embedding",
+          k = 10, m = 8, nCentroids = 16, nCells = 16, nProbe = 8, kmeansIters = 2))
       // topKMismatches compares (query_id, rank, neighbor_id, cosine) —
       // the fused surface maps onto it as (doc_id, rrf_score): a rank,
       // document, or float-bit divergence all trip the same counter
@@ -1224,23 +1224,23 @@ object SimilarityGates extends GateFamily {
         |FROM embeddings WHERE vec_id < 3""".stripMargin)
 
   gate("ann_index_search_batch")((s, dir) => {
-      // r14: BATTERY-AS-DATA search over the persisted store — the bm25
-      // big-battery doctrine on the vector plane: queries never collect
-      // to the driver, probes become a cell-equality join, the ADC inner
-      // product computes from the plan-riding codebooks (PqAdcDirect, no
-      // per-query driver table), so the plan is CONSTANT in battery size
-      // (plan-pinned). The gate pins bit-identity against the driver-side
-      // form over a 50-query battery.
+      // r14: a 50-query battery over the persisted store — queries stay
+      // data (never collected to the driver), each joins its own probed
+      // cells, the ADC inner product computes from the plan-riding
+      // codebooks (PqAdcDirect, no per-query driver table), so the plan
+      // is CONSTANT in battery size (plan-pinned). `batch_equals_driver`
+      // pins bit-identity against the in-flight pqTopK, whose per-query
+      // driver-built ADC tables are the independent reference.
       val emb = T(s, dir, "embeddings")
       val q   = emb.filter(col("vec_id") < 50)
       val root = s"/tmp/graft_ann_bat_${tmpToken(dir)}"
       graft.operators.AnnIndex.annIndexBuild(emb, "vec_id", "embedding", root,
         nCells = 16, m = 8, nCentroids = 16, kmeansIters = 2, overwrite = true)
-      val bat = graft.operators.AnnIndex.annSearchIndexedBatch(s, root,
+      val bat = graft.operators.AnnIndex.annSearchIndexed(s, root,
         q, "vec_id", "embedding", k = 10, nProbe = 8, refine = 4)
-      val drv = graft.operators.AnnIndex.annSearchIndexed(s, root,
-        q, "vec_id", "embedding", k = 10, nProbe = 8, refine = 4)
-      val mism = topKMismatches(bat, drv)
+      val fly = Similarity.pqTopK(emb, "vec_id", "embedding", q, "vec_id", "embedding",
+        k = 10, m = 8, nCentroids = 16, nCells = 16, nProbe = 8, kmeansIters = 2)
+      val mism = topKMismatches(bat, fly)
       val nQueries = q.select("vec_id").distinct().count()
       s.range(1).select(
         lit("ivfpq_batch").as("method"), lit(nQueries).as("n_queries"),
@@ -1396,10 +1396,11 @@ object SimilarityGates extends GateFamily {
       // occupy short-list slots). The pin: filtering the FULL store to
       // the even ids searches bit-identically to an unfiltered search of
       // a store holding ONLY the even vectors under the same frozen
-      // model (train = full corpus on both sides) — and the batch form
-      // agrees with the driver form under the same predicate. Disallowed
-      // ids must never appear. Cell pruning surviving the predicate is
-      // plan-pinned in PlanAuditSpec.
+      // model (train = full corpus on both sides). `batch_equals_driver`
+      // pins the filtered search at its EXACT calibration point (every
+      // cell probed, refine spanning the corpus) against brute force over
+      // the allowed ids. Disallowed ids must never appear. Cell pruning
+      // surviving the predicate is plan-pinned in PlanAuditSpec.
       val emb  = T(s, dir, "embeddings")
       val even = emb.filter(col("vec_id") % 2 === 0)
       val rootF = s"/tmp/graft_ann_filt_${tmpToken(dir)}"
@@ -1417,11 +1418,13 @@ object SimilarityGates extends GateFamily {
         .localCheckpoint(true) // three consumers below
       val restricted = graft.operators.AnnIndex.annSearchIndexed(s, rootR,
         q, "vec_id", "embedding", k = 10, nProbe = 8, refine = 4)
-      val batch = graft.operators.AnnIndex.annSearchIndexedBatch(s, rootF,
-        q, "vec_id", "embedding", k = 10, nProbe = 8, refine = 4,
-        predicate = pred)
+      val exact = graft.operators.AnnIndex.annSearchIndexed(s, rootF,
+        q, "vec_id", "embedding", k = 10, nProbe = 16,
+        refine = (emb.count() / 10L + 1L).toInt, predicate = pred)
+      val brute = Similarity.bruteForceTopK(even, "vec_id", "embedding",
+        q, "vec_id", "embedding", k = 10)
       val mism = topKMismatches(filtered, restricted)
-      val mismB = topKMismatches(batch, filtered)
+      val mismB = topKMismatches(exact, brute)
       val disallowed = filtered.filter(col("neighbor_id") % 2 === 1).count()
       val nQueries = q.select("vec_id").distinct().count()
       s.range(1).select(
@@ -1431,8 +1434,8 @@ object SimilarityGates extends GateFamily {
         lit(disallowed == 0L).as("only_allowed_ids"))
     },
     // r16 filtered vector search: equality to the restricted-store search
-    // and the batch-form agreement are verified in-plan; the oracle pins
-    // them TRUE and re-derives the query count
+    // and, at the calibration point, to brute force are verified in-plan;
+    // the oracle pins them TRUE and re-derives the query count
     oracle = """SELECT 'ivfpq_filtered' AS method,
         |       CAST(count(DISTINCT vec_id) AS BIGINT) AS n_queries,
         |       TRUE AS filtered_equals_restricted_store,
@@ -1503,19 +1506,17 @@ object SimilarityGates extends GateFamily {
         |       TRUE AS equals_brute_force""".stripMargin)
 
   gate("ann_index_search_filtered_refill_batch")((s, dir) => {
-      // r18: REFILL on the battery-as-data form — the r17 asymmetry
-      // closed: corpus-scale filtered batteries (THE production retrieval
-      // shape) now auto-widen relationally (starved ids by anti-join,
-      // doubled probes as a cell-equality join; queries never collect).
-      // Same deterministic-starvation fixture as the driver-form gate:
+      // r18: REFILL's widening rounds — starved ids by anti-join, doubled
+      // probes as a cell-equality join; queries never collect. Same
+      // deterministic-starvation fixture as ann_index_search_filtered_refill:
       // the predicate confines survivors to ONE cell that is not the
-      // query's first probe, so the 1-probe batch search returns ZERO
-      // rows, and whichever widening round first probes that cell sees
-      // ALL survivors — the refilled top-k is EXACT brute force over
-      // them, bit-for-bit. Additionally pinned: bit-equality to the
-      // DRIVER refill form (same schedule, probe rule, fill rule), and
-      // widening fires ONLY on starved queries (an unstarved battery
-      // runs exactly one pass).
+      // query's first probe, so the 1-probe search returns ZERO rows, and
+      // whichever widening round first probes that cell sees ALL
+      // survivors — the refilled top-k is EXACT brute force over them,
+      // bit-for-bit. Additionally pinned: the refill took widening rounds
+      // and equals the plain (refill = false) search at its last round's
+      // probe count (`equals_driver_refill`), and widening fires ONLY on
+      // starved queries (an unstarved battery runs exactly one pass).
       val emb  = T(s, dir, "embeddings")
       val root = s"/tmp/graft_ann_rflb_${tmpToken(dir)}"
       graft.operators.AnnIndex.annIndexBuild(emb, "vec_id", "embedding", root,
@@ -1532,30 +1533,27 @@ object SimilarityGates extends GateFamily {
       val k = 5
       val refine = math.max(4, math.ceil(nSurv.toDouble / k).toInt)
       val pred = Some(col("cell") === fCell)
-      val dry = graft.operators.AnnIndex.annSearchIndexedBatch(s, root, q,
-        "vec_id", "embedding", k = k, nProbe = 1, refine = refine,
-        predicate = pred)
-      val refilled = graft.operators.AnnIndex.annSearchIndexedBatch(s, root, q,
-        "vec_id", "embedding", k = k, nProbe = 1, refine = refine,
-        predicate = pred, refill = true)
-      val got = refilled.orderBy("rank").collect().map(r =>
+      def bits(df: org.apache.spark.sql.DataFrame) = df.orderBy("rank").collect().map(r =>
         (r.getAs[Long]("neighbor_id"),
           java.lang.Double.doubleToLongBits(r.getAs[Double]("cosine"))))
-      val widened = graft.operators.AnnIndex.lastBatchRefillRounds.get() > 1
-      val driver = graft.operators.AnnIndex.annSearchIndexed(s, root, q,
+      val dry = graft.operators.AnnIndex.annSearchIndexed(s, root, q,
         "vec_id", "embedding", k = k, nProbe = 1, refine = refine,
-        predicate = pred, refill = true)
-        .orderBy("rank").collect().map(r =>
-          (r.getAs[Long]("neighbor_id"),
-            java.lang.Double.doubleToLongBits(r.getAs[Double]("cosine"))))
+        predicate = pred)
+      val got = bits(graft.operators.AnnIndex.annSearchIndexed(s, root, q,
+        "vec_id", "embedding", k = k, nProbe = 1, refine = refine,
+        predicate = pred, refill = true))
+      val rounds = graft.operators.AnnIndex.lastRefillRounds.get().intValue
+      val plainAtLastRound = bits(graft.operators.AnnIndex.annSearchIndexed(s, root, q,
+        "vec_id", "embedding", k = k, nProbe = 1 << (rounds - 1), refine = refine,
+        predicate = pred))
       // unstarved control: one pass only, rows bit-equal to refill = false
-      val calmA = graft.operators.AnnIndex.annSearchIndexedBatch(s, root, q,
+      val calmA = graft.operators.AnnIndex.annSearchIndexed(s, root, q,
         "vec_id", "embedding", k = k, nProbe = 8, refine = 4)
         .orderBy("rank").collect().map(_.toSeq)
-      val calmB = graft.operators.AnnIndex.annSearchIndexedBatch(s, root, q,
+      val calmB = graft.operators.AnnIndex.annSearchIndexed(s, root, q,
         "vec_id", "embedding", k = k, nProbe = 8, refine = 4, refill = true)
         .orderBy("rank").collect().map(_.toSeq)
-      val onePass = graft.operators.AnnIndex.lastBatchRefillRounds.get() == 1
+      val onePass = graft.operators.AnnIndex.lastRefillRounds.get() == 1
       import graft.functions.VectorFunctions.vec_cosine
       val qv = q.select("embedding").head().getSeq[Float](0)
       val brute = store0.filter(col("cell") === fCell)
@@ -1570,11 +1568,12 @@ object SimilarityGates extends GateFamily {
         lit(dry.count() == 0L).as("starved_without_refill"),
         lit(got.length == k).as("refill_fills_k"),
         lit(got.sameElements(brute)).as("equals_brute_force"),
-        lit(got.sameElements(driver) && widened).as("equals_driver_refill"),
+        lit(rounds > 1 && got.sameElements(plainAtLastRound)).as("equals_driver_refill"),
         lit(calmA.sameElements(calmB) && onePass).as("widens_only_on_starved"))
     },
-    // r18 batch-form refill: same fixture; additionally pins bit-equality
-    // to the driver refill and one-pass behavior on an unstarved battery
+    // r18 refill rounds: same fixture; additionally pins bit-equality to
+    // the plain search at the last round's probe count and one-pass
+    // behavior on an unstarved battery
     oracle = """SELECT 'ivfpq_refill_batch' AS method, CAST(1 AS BIGINT) AS n_queries,
         |       TRUE AS fixture_has_k_survivors,
         |       TRUE AS starved_without_refill,

@@ -61,10 +61,10 @@ import graft.sources.StoreMeta
   * mid-append sees the old consistent snapshot.
   *
   * Search results are BIT-IDENTICAL to [[Similarity.pqTopK]] run with the
-  * same parameters over the same corpus (same NearestCells/PqEncode/
-  * PqAdcDot kernels, same driver-side probe order and ADC tables, same
-  * two-stage deterministic top-k; floats round-trip parquet exactly) —
-  * which is what the `ann_index_search` gate pins.
+  * same parameters over the same corpus (same NearestCells/PqEncode
+  * kernels, ADC sums folded in pqTopK's table order, same two-stage
+  * deterministic top-k; floats round-trip parquet exactly) — which is
+  * what the `ann_index_search` gate pins.
   */
 object AnnIndex {
 
@@ -107,8 +107,8 @@ object AnnIndex {
   }
 
   /** DELETE vectors from the index — the takedown/dedup-prune maintenance
-    * path ([[graft.sources.StoreMeta.Store.delete]]): both search forms
-    * anti-join the tombstone plane (broadcast — above the scan, so
+    * path ([[graft.sources.StoreMeta.Store.delete]]): the search
+    * anti-joins the tombstone plane (broadcast — above the scan, so
     * partition pruning and column pruning are untouched), and
     * [[annIndexCompact]] physically drops the rows and resets the plane.
     * The frozen model never moves, so search over the store-with-deletes
@@ -118,43 +118,53 @@ object AnnIndex {
                      ids: DataFrame, idCol: String): Unit =
     store(spark, dir).delete("annIndexDelete", ids, idCol)
 
-  /** Search the index: zero corpus scans, zero training — probed cells
-    * become PartitionFilters on the store, ADC scores the column-pruned
-    * candidates, and the `k·refine` short list re-ranks with exact
-    * cosines. Output columns and the deterministic (cosine desc,
-    * neighbor_id asc) tie rule match [[Similarity.pqTopK]] exactly.
-    * `queries` must be a driver-sized battery (vectors are collected to
-    * build the per-query ADC tables, exactly as in pqTopK).
+  /** Search the index: zero corpus scans, zero training. The battery stays
+    * DATA — query vectors never reach the driver, and the plan has one
+    * shape at any battery size (no per-query branches):
     *
-    * `predicate` (r16) is FILTERED vector search — the compose-a-metadata-
-    * filter shape production search almost always runs: a Column over the
-    * store row (id, cell, codes, vnorm, vec — in practice the id, with
-    * metadata reduced to an id predicate or semi-joined upstream) applied
-    * PRE-RANK, so the `k·refine` short list draws entirely from
-    * survivors (disallowed vectors never occupy short-list slots) and
+    *  - the battery is read ONCE (`localCheckpoint`), so pruning and
+    *    scoring see the same rows of a non-deterministic source;
+    *  - one job collects the battery's distinct probed cells (at most the
+    *    store's cell count) and refuses an empty battery or a query whose
+    *    dim differs from the index — the query's id and dim are all that
+    *    reach the driver;
+    *  - PRUNING RULE: both store scans filter on `cell IN (probed cells)`,
+    *    static PartitionFilters that skip every other `cell=` directory
+    *    without opening a file; each query then joins its OWN probed cells
+    *    by cell equality;
+    *  - ADC scores the column-pruned (id, codes, vnorm) candidates straight
+    *    from the plan-riding codebooks ([[graft.functions.PqAdcDirect]]),
+    *    and the `k·refine` short list re-ranks with exact cosines.
+    *
+    * Output columns and the deterministic (cosine desc, neighbor_id asc)
+    * tie rule match [[Similarity.pqTopK]], and the rows are BIT-IDENTICAL
+    * to it over the same corpus and parameters: the probe rule is the same
+    * NearestCells kernel the corpus was assigned with (pqTopK's driver
+    * probe order uses its arithmetic and tie rule, NaN cosines ranked
+    * last), PqAdcDirect folds each subspace dot exactly as pqTopK's table
+    * entries, and both share the two-stage top-k.
+    *
+    * `predicate` is FILTERED vector search: a Column over the store row
+    * (id, cell, codes, vnorm, vec — in practice the id, with metadata
+    * reduced to an id predicate or semi-joined upstream) applied PRE-RANK,
+    * so the `k·refine` short list draws entirely from survivors and
     * results are exactly the unfiltered search of an index holding only
-    * the allowed vectors under the same frozen model (the gate's pin).
-    * Composes WITH the probed-cell pruning: the predicate sits above the
-    * scan next to the tombstone anti-join, so PartitionFilters and column
-    * pruning are untouched (plan-pinned) — an id predicate even pushes
-    * into the scan itself.
+    * the allowed vectors under the same frozen model. It sits above the
+    * scan next to the tombstone anti-join, so the probed-cell
+    * PartitionFilters and column pruning are untouched — an id predicate
+    * even pushes into the scan itself.
     *
-    * `refill` (r17) closes the residual under-fill: probing still visits
-    * only the `nProbe` cells nearest the query, so under a SELECTIVE
-    * predicate the survivors may cluster in unprobed cells and the result
-    * runs dry below `k` — honest per the contract, surprising in
-    * production, where vector search auto-widens. With `refill = true`,
-    * any query returning fewer than `k` rows re-probes with the probe
-    * count DOUBLED (×2 per round, capped at the store's cell count) until
-    * it fills or the probes span every cell — at full span the candidate
-    * set IS every survivor, so a still-short result means the filtered
-    * store genuinely holds fewer than `k` vectors. Queries already filled
-    * keep their original rows untouched (widening is per-query — the
-    * spec's pin); the default stays `false` so fixed-parameter results
-    * remain bit-reproducible against [[Similarity.pqTopK]]. Driver-side
-    * iteration is sound here because this form's battery is ALREADY
-    * driver-sized by contract and each round's result is at most
-    * `k × queries` rows. */
+    * `refill` widens probing for starved queries: under a SELECTIVE
+    * predicate the survivors may cluster in unprobed cells and a query
+    * returns fewer than `k` rows. With `refill = true`, each pass keeps the
+    * rows of queries that filled, and the starved ones (an anti-join
+    * against the per-query fill counts, so zero-row queries starve too)
+    * take the next pass at DOUBLED probes, capped at the store's cell
+    * count. At full span the candidate set IS every survivor, so a
+    * still-short query genuinely has fewer than `k` allowed vectors. The
+    * driver iterates only rounds (≤ log₂(cells)+1); each round's probed-
+    * cell collect is also its emptiness check. The default stays `false`,
+    * so fixed-parameter results remain bit-reproducible against pqTopK. */
   def annSearchIndexed(spark: SparkSession, dir: String,
                        queries: DataFrame, qidCol: String, qvecCol: String,
                        k: Int = 10, nProbe: Int = 8, refine: Int = 4,
@@ -162,71 +172,104 @@ object AnnIndex {
                        refill: Boolean = false): DataFrame = {
     require(k >= 1 && nProbe >= 1 && refine >= 1,
       s"annSearchIndexed: k, nProbe, refine must be >= 1 (got $k, $nProbe, $refine)")
-    val (dim, cents, books, unfiltered) = openSearch(spark, dir, "annSearchIndexed")
-    val store = predicate.map(unfiltered.filter).getOrElse(unfiltered)
-    val qProj = queries.select(col(qidCol).as("query_id"), col(qvecCol).as("__qv"))
-      .filter(col("__qv").isNotNull)
-    val qRows = qProj.collect()
-    require(qRows.nonEmpty, "annSearchIndexed: empty query battery")
-    qRows.foreach { r =>
-      val d = r.getAs[scala.collection.Seq[Float]](1).length
-      require(d == dim,
-        s"annSearchIndexed: query '${r.get(0)}' has dim $d, index at '$dir' holds dim $dim")
-    }
-
-    def searchAt(rows: Array[org.apache.spark.sql.Row], probes: Int): DataFrame = {
-      val perQuery = rows.map { r =>
-        val qid = r.get(0)
-        val qv = r.getAs[scala.collection.Seq[Float]](1).toArray
-        // probe order and ADC table: ONE copy of the driver math, shared
-        // with pqTopK (Similarity.pqProbeOrder / pqAdcTable) — the
-        // bit-identity contract between the forms is structural, not
-        // parallel-maintenance
-        val probed: Seq[Int] = Similarity.pqProbeOrder(qv, cents).take(probes)
-        var qn0 = 0.0
-        qv.foreach(x => qn0 += x.toDouble * x.toDouble)
-        val qNorm = math.sqrt(qn0)
-        val table = Similarity.pqAdcTable(qv, books)
-        val adc = GraftColumnBridge.column(graft.functions.PqAdcDot(
-          GraftColumnBridge.expression(col("codes")), table))
-        store
-          .filter(col("cell").isin(probed.map(Int.box): _*))
-          .select(typedLit(qid).as("query_id"), col("id").as("neighbor_id"),
-            (adc / (lit(qNorm) * col("vnorm"))).as("__approx"))
-      }.reduce(_ unionByName _)
-      // rescore from the ALREADY-COLLECTED battery rows, not a re-read of
-      // `queries` (a non-deterministic battery could diverge between the
-      // two evaluations — the pqTopK fix, mirrored)
-      val qVec = broadcast(spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), qProj.schema))
-      rescoreTopK(perQuery, store, qVec, k, refine)
-    }
-
-    if (!refill) return searchAt(qRows, nProbe)
+    val (index, meta) = open(spark, dir)
+    require(meta.n > 0, s"annSearchIndexed: index at '$dir' holds no vectors")
+    val (cents, books) = checkedModel(index, meta)
+    val dim = dimOf(meta)
+    // a deleted vector can be neither a candidate nor a re-rank survivor
+    val live = index.live(index.plane("vectors", meta.batches), meta)
+    val store = predicate.map(live.filter).getOrElse(live)
     val nCells = cents.length
-    val kept = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-    var outSchema: org.apache.spark.sql.types.StructType = null
-    var remaining = qRows
+    val battery = queries.select(col(qidCol).as("query_id"), col(qvecCol).as("__qv"))
+      .filter(col("__qv").isNotNull)
+      .localCheckpoint(false) // materialized by the first probed-cell collect
+
+    // the distinct cells `q` probes at `probes`, sorted
+    def probedCells(q: DataFrame, probes: Int): Seq[Int] = {
+      val fits = size(col("__qv")) === dim
+      val r = q.select(
+          when(!fits, struct(col("query_id").cast("string"), size(col("__qv")))).as("__bad"),
+          explode_outer(nearest_cells(when(fits, col("__qv")), cents, probes)).as("cell"))
+        .agg(min(col("__bad")), collect_set(col("cell")))
+        .head()
+      require(r.isNullAt(0), {
+        val bad = r.getStruct(0)
+        s"annSearchIndexed: query '${bad.get(0)}' has dim ${bad.get(1)}, " +
+          s"index at '$dir' holds dim $dim"
+      })
+      r.getSeq[Int](1).sorted
+    }
+
+    val adc = GraftColumnBridge.column(graft.functions.PqAdcDirect(
+      GraftColumnBridge.expression(col("codes")),
+      GraftColumnBridge.expression(col("__qv")), books))
+    def passAt(q: DataFrame, probes: Int, cells: Seq[Int]): DataFrame = {
+      val probed = store.filter(col("cell").isin(cells.map(Int.box): _*))
+      val qCells = q
+        .withColumn("cell", explode(nearest_cells(col("__qv"), cents, probes)))
+        // per-QUERY norm, hoisted before the candidate join — recomputing
+        // the dim-length dot per (query, candidate) row would double the
+        // ADC stage's arithmetic; same expression, bit-identical value
+        .withColumn("__qn", sqrt(vec_dot(col("__qv"), col("__qv"))))
+      // corpus side is assigned with nProbe = 1, so (query, neighbor)
+      // pairs are unique across probed cells
+      val scored = qCells.join(probed, "cell")
+        .select(col("query_id"), col("id").as("neighbor_id"),
+          (adc / (col("__qn") * col("vnorm"))).as("__approx"))
+      // short-list the top k·refine by approximate cosine, then re-rank
+      // with exact cosines; every short-listed neighbor lies in a probed
+      // cell, so the raw vectors come from the pruned scan too
+      val shortList = Similarity.twoStageTopK(scored, "query_id",
+          col("__approx"), col("neighbor_id"), k * refine, "__ar")
+        .select("query_id", "neighbor_id")
+      val rescored = shortList
+        .join(probed.select(col("id").as("neighbor_id"), col("vec")), "neighbor_id")
+        .join(q, "query_id")
+        .withColumn("cosine", vec_cosine(col("vec"), col("__qv")))
+      Similarity.twoStageTopK(
+          rescored.select("query_id", "neighbor_id", "cosine"), "query_id",
+          col("cosine"), col("neighbor_id"), k)
+        .select("query_id", "neighbor_id", "cosine", "rank")
+    }
+
     var probes = math.min(nProbe, nCells)
-    while (remaining.nonEmpty) {
-      val res = searchAt(remaining, probes)
-      outSchema = res.schema
-      val rows = res.collect() // ≤ k × |remaining| by construction
-      val fill = rows.groupBy(_.get(0)).view.mapValues(_.length).toMap
-      val starved = remaining.filter(r => fill.getOrElse(r.get(0), 0) < k)
-      if (starved.isEmpty || probes >= nCells) {
-        kept ++= rows // at full span a short query has < k survivors, period
-        remaining = Array.empty
+    var cells = probedCells(battery, probes)
+    require(cells.nonEmpty, "annSearchIndexed: empty query battery")
+    if (!refill) return passAt(battery, probes, cells)
+    var remaining = battery
+    var rounds = 0
+    var kept: DataFrame = null
+    def keep(rows: DataFrame): Unit = kept = if (kept == null) rows else kept.unionByName(rows)
+    while (cells.nonEmpty) {
+      rounds += 1
+      // ≤ k rows per remaining query; checkpointed because it feeds both
+      // the fill counts and the kept/starved split below
+      val res = passAt(remaining, probes, cells).localCheckpoint(true)
+      if (probes >= nCells) {
+        keep(res) // at full span a short query has < k allowed vectors, period
+        cells = Nil
       } else {
-        val starvedIds = starved.map(_.get(0)).toSet
-        kept ++= rows.filterNot(r => starvedIds.contains(r.get(0)))
-        remaining = starved
+        val filledIds = res.groupBy("query_id")
+          .agg(count(lit(1)).as("__n")).filter(col("__n") >= k)
+          .select("query_id")
+        val starved = remaining.join(filledIds, Seq("query_id"), "left_anti")
+          .localCheckpoint(false)
         probes = math.min(probes * 2, nCells)
+        cells = probedCells(starved, probes)
+        keep(if (cells.isEmpty) res
+          else res.join(starved.select("query_id"), Seq("query_id"), "left_anti"))
+        remaining = starved
       }
     }
-    spark.createDataFrame(
-      java.util.Arrays.asList(kept.toSeq: _*), outSchema)
+    lastRefillRounds.set(rounds)
+    kept
   }
+
+  /** Rounds the last `refill = true` [[annSearchIndexed]] executed on THIS
+    * thread — spec instrumentation only (the widening-fires-only-on-
+    * starved-queries pin); production code never reads it. */
+  private[graft] val lastRefillRounds: ThreadLocal[Integer] =
+    ThreadLocal.withInitial(() => Integer.valueOf(0))
 
   /** Compact a many-batch store into a fresh single-batch store at
     * `dstDir` — the small-files maintenance every append-only store needs:
@@ -267,153 +310,6 @@ object AnnIndex {
         s"annIndexCompact: rewrote $written rows but '$srcDir' meta says ${meta.n} — " +
           "source store torn or write incomplete; not committing")
     }
-  }
-
-  /** Battery-scale search — the queries stay DATA (the bm25 big-battery
-    * doctrine on the vector plane): one constant-size plan for any battery,
-    * no driver collect, no per-query plan branches. Probes become a
-    * cell-equality JOIN against the store instead of driver-side
-    * PartitionFilters (right when the battery is too large to enumerate
-    * probed cells as literals), the ADC inner product computes directly
-    * from the codebooks riding the plan ([[graft.functions.PqAdcDirect]] —
-    * no per-query driver table), and the exact re-rank joins survivors
-    * back to raw vectors.
-    *
-    * Output is BIT-IDENTICAL to [[annSearchIndexed]] over the same store
-    * and battery: the query-side probe rule is the same NearestCells
-    * kernel the corpus was assigned with (same cosine arithmetic and
-    * lowest-index tie rule as the driver-side probe loop), the per-query
-    * ADC table's entries ARE PqAdcDirect's per-subspace dots in the same
-    * fold order, and both share the deterministic two-stage top-k (the
-    * degenerate-cosine ordering also agrees: NearestCells ranks NaN
-    * cosines last, and the shared [[Similarity.pqProbeOrder]] maps NaN
-    * cosines to -Infinity — both below every real cosine, ties on cell
-    * index). A wrong-dim query refuses in-plan before it can probe.
-    *
-    * `refill` (r18) is the batch twin of the driver form's r17 refill —
-    * through r17 only the driver-sized form auto-widened, so a
-    * corpus-scale FILTERED battery (the production retrieval shape)
-    * still silently under-filled when a selective predicate's survivors
-    * clustered in unprobed cells. The widening is RELATIONAL: after each
-    * pass, starved query ids (fewer than `k` result rows — an anti-join
-    * against the per-query fill counts, so zero-row queries starve too)
-    * get the next pass at DOUBLED probes via the same cell-equality
-    * join; filled queries keep their original rows untouched. Queries
-    * NEVER collect — the driver only iterates ROUNDS (≤ log₂(cells)+1,
-    * one bounded emptiness check per round), and each round's result
-    * (≤ k rows per starved query) plus the starved id set localCheckpoint
-    * so the battery is scanned once and round plans stay constant-depth.
-    * Same doubling schedule, probe rule, and fill rule as the driver
-    * form, so the two refill forms are bit-identical over the same store
-    * and battery; at full span the candidate set IS every survivor, so a
-    * still-short query genuinely has fewer than `k` allowed vectors. */
-  def annSearchIndexedBatch(spark: SparkSession, dir: String,
-                            queries: DataFrame, qidCol: String, qvecCol: String,
-                            k: Int = 10, nProbe: Int = 8, refine: Int = 4,
-                            predicate: Option[Column] = None,
-                            refill: Boolean = false): DataFrame = {
-    require(k >= 1 && nProbe >= 1 && refine >= 1,
-      s"annSearchIndexedBatch: k, nProbe, refine must be >= 1 (got $k, $nProbe, $refine)")
-    val (dim, cents, books, unfiltered) = openSearch(spark, dir, "annSearchIndexedBatch")
-    // filtered search (r16): the predicate applies PRE-RANK, exactly as
-    // in the driver form — short list drawn from survivors, candidate
-    // pruning untouched (the cell-equality join composes above it)
-    val store = predicate.map(unfiltered.filter).getOrElse(unfiltered)
-    val q0 = queries.select(col(qidCol).as("query_id"), col(qvecCol).as("__qv"))
-      .filter(col("__qv").isNotNull)
-      // the dim guard stays IN-PLAN (queries are data): a wrong-dim query
-      // refuses when its vector is first touched, even if its probed
-      // cells would hold no candidates to reach PqAdcDirect's own check
-      .withColumn("__qv", when(size(col("__qv")) === dim, col("__qv"))
-        .otherwise(raise_error(concat(
-          lit("annSearchIndexedBatch: query of dim "),
-          size(col("__qv")).cast("string"),
-          lit(s" does not match codebook dim $dim")))))
-    // an all-null or empty battery refuses loudly like the driver form
-    // (one bounded probe job — isEmpty stops at the first non-empty slice)
-    require(!q0.isEmpty, "annSearchIndexedBatch: empty query battery")
-    val adc = GraftColumnBridge.column(graft.functions.PqAdcDirect(
-      GraftColumnBridge.expression(col("codes")),
-      GraftColumnBridge.expression(col("__qv")), books))
-    def passAt(q: DataFrame, probes: Int): DataFrame = {
-      val qCells = q
-        .withColumn("cell", explode(nearest_cells(col("__qv"), cents, probes)))
-        // per-QUERY norm, hoisted before the candidate join — recomputing
-        // the dim-length dot per (query, candidate) row would double the
-        // ADC stage's arithmetic; same expression, bit-identical value
-        .withColumn("__qn", sqrt(vec_dot(col("__qv"), col("__qv"))))
-      // corpus side is assigned with nProbe = 1, so (query, neighbor) pairs
-      // are unique across probed cells — same invariant as the driver form
-      val scored = qCells.join(store, "cell")
-        .select(col("query_id"), col("id").as("neighbor_id"),
-          (adc / (col("__qn") * col("vnorm"))).as("__approx"))
-      rescoreTopK(scored, store, q, k, refine)
-    }
-    if (!refill) return passAt(q0, nProbe)
-    // checkpoint the battery once: the widening rounds re-join it, and a
-    // non-deterministic battery must not diverge between passes (the
-    // collect the driver form runs for the same reason, kept distributed)
-    val nCells = cents.length
-    var remaining = q0.localCheckpoint(true)
-    var probes = math.min(nProbe, nCells)
-    var rounds = 0
-    var kept: DataFrame = null
-    var done = false
-    while (!done) {
-      rounds += 1
-      // ≤ k rows per remaining query; checkpointed because it feeds both
-      // the fill counts and the kept/starved split below
-      val res = passAt(remaining, probes).localCheckpoint(true)
-      val filledIds = res.groupBy("query_id")
-        .agg(count(lit(1)).as("__n")).filter(col("__n") >= k)
-        .select("query_id")
-      // anti-join, not a filter on counts: a query with ZERO result rows
-      // appears in no count row and must starve
-      val starved = remaining.join(filledIds, Seq("query_id"), "left_anti")
-        .localCheckpoint(true)
-      if (probes >= nCells || starved.isEmpty) {
-        // at full span a short query has < k allowed vectors, period
-        kept = if (kept == null) res else kept.unionByName(res)
-        done = true
-      } else {
-        kept = {
-          val filledRows =
-            res.join(starved.select("query_id"), Seq("query_id"), "left_anti")
-          if (kept == null) filledRows else kept.unionByName(filledRows)
-        }
-        remaining = starved
-        probes = math.min(probes * 2, nCells)
-      }
-    }
-    lastBatchRefillRounds.set(rounds)
-    kept
-  }
-
-  /** Rounds the last `refill = true` [[annSearchIndexedBatch]] executed
-    * on THIS thread — spec instrumentation only (the widening-fires-only-
-    * on-starved-queries pin); production code never reads it. */
-  private[graft] val lastBatchRefillRounds: ThreadLocal[Integer] =
-    ThreadLocal.withInitial(() => Integer.valueOf(0))
-
-  /** The shared re-rank tail of both search forms: short-list the top
-    * `k·refine` by approximate cosine (deterministic two-stage top-k),
-    * rejoin the survivors' raw vectors from the store, and rank the exact
-    * cosines under the shared (cosine desc, neighbor_id asc) tie rule.
-    * `qVec` supplies (query_id, __qv) — broadcast by the driver form,
-    * left as data by the batch form. */
-  private def rescoreTopK(scored: DataFrame, store: DataFrame,
-                          qVec: DataFrame, k: Int, refine: Int): DataFrame = {
-    val shortList = Similarity.twoStageTopK(
-        scored.select("query_id", "neighbor_id", "__approx"), "query_id",
-        col("__approx"), col("neighbor_id"), k * refine, "__ar")
-      .select("query_id", "neighbor_id")
-    val cVec = store.select(col("id").as("neighbor_id"), col("vec"))
-    val rescored = shortList.join(cVec, "neighbor_id").join(qVec, "query_id")
-      .withColumn("cosine", vec_cosine(col("vec"), col("__qv")))
-    Similarity.twoStageTopK(
-        rescored.select("query_id", "neighbor_id", "cosine"), "query_id",
-        col("cosine"), col("neighbor_id"), k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
   }
 
   /** One-row OPERATIONAL snapshot of a vector store (r17) — the
@@ -485,17 +381,6 @@ object AnnIndex {
         avg(col("__dist")).as("mean_centroid_dist"),
         percentile(col("__dist"), lit(0.95)).as("p95_centroid_dist"))
       .orderBy("batch")
-  }
-
-  /** The shared store-opening header of both search forms: meta + model
-    * reads, cross-checks, and the LIVE vector view (a deleted vector can
-    * neither be a candidate nor a re-rank survivor). */
-  private def openSearch(spark: SparkSession, dir: String, caller: String)
-      : (Int, Array[Array[Float]], Array[Array[Array[Float]]], DataFrame) = {
-    val (index, meta) = open(spark, dir)
-    require(meta.n > 0, s"$caller: index at '$dir' holds no vectors")
-    val (cents, books) = checkedModel(index, meta)
-    (dimOf(meta), cents, books, index.live(index.plane("vectors", meta.batches), meta))
   }
 
   /** One delta ENCODE → a `vectors/b<i>` batch (overwrite mode, so an

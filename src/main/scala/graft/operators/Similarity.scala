@@ -421,16 +421,16 @@ object Similarity {
     (ids, cents, books)
   }
 
-  /** Driver-side probe order for a query against the coarse centroids —
-    * THE probe rule, shared by [[pqTopK]] and the persisted-index search
-    * forms (their bit-identity contract depends on one copy): cosine
-    * descending with the SAME arithmetic as the [[graft.functions.NearestCells]]
-    * kernel (dot / (sqrt(q)·sqrt(c)), q-side sqrt first), any
+  /** [[pqTopK]]'s driver-side probe order for a query against the coarse
+    * centroids — the rule the persisted-index search runs in-plan through
+    * the [[graft.functions.NearestCells]] kernel (their bit-identity
+    * contract depends on it): cosine descending with the SAME arithmetic
+    * as the kernel (dot / (sqrt(q)·sqrt(c)), q-side sqrt first), any
     * non-finite cosine (zero-norm or NaN-component on either side)
     * ranked LAST as -Inf — exactly the kernel's NaN rule — and ties on
     * the lower cell index. */
-  private[operators] def pqProbeOrder(qv: Array[Float],
-                                      cents: Array[Array[Float]]): Seq[Int] = {
+  private def pqProbeOrder(qv: Array[Float],
+                           cents: Array[Array[Float]]): Seq[Int] = {
     val dim = qv.length
     // a query longer than the index dim would otherwise silently probe on
     // its prefix and return plausible-but-wrong neighbors (the store entry
@@ -459,10 +459,10 @@ object Similarity {
   /** Driver-side ADC table for a query: table(m)(c) = dot of the query's
     * m-th sub-vector with codebook centroid c — each entry the exact
     * index-ascending fold [[graft.functions.PqAdcDirect]] runs in-kernel,
-    * so the table form and the direct form are bit-identical. One copy,
-    * shared by [[pqTopK]] and the persisted-index search. */
-  private[operators] def pqAdcTable(qv: Array[Float],
-                                    books: Array[Array[Array[Float]]])
+    * so the table form ([[pqTopK]]) and the direct form (the
+    * persisted-index search) are bit-identical. */
+  private def pqAdcTable(qv: Array[Float],
+                         books: Array[Array[Array[Float]]])
       : Array[Array[Double]] = {
     var off = 0
     books.map { book =>

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, LongType}
 
+import scala.collection.immutable.ListMap
+
 /** Catalog-plane reader for kerchunk `reference://` indexes
   * (fsspec reference filesystem, kerchunk v1 JSON).
   *
@@ -304,76 +306,31 @@ object KerchunkIndex {
                       // append path's boundary-only read; metadata always
                       // loads whole. None = scan every variable directory.
                       onlyRecords: Option[Map[String, Long]] = None): DataFrame = {
-    import org.json4s._
     import org.json4s.jackson.JsonMethods
     val conf = FsPaths.confWith(spark.sparkContext.hadoopConfiguration, storageOptions)
     val root = FsPaths.hadoopPath(dir)
     val fs = try FsPaths.fileSystemFor(root, conf)
     catch { case e: java.io.IOException if FsPaths.isNoFilesystem(e) =>
       FsPaths.connectorRefusal(dir, e) }
-    val metaPath = new org.apache.hadoop.fs.Path(root, ".zmetadata")
     // heal a crashed rebuild swap, then wait out a live writer's
     // two-rename swap window (bounded) — the r17 store-open convention
     StoreMeta.recoverCrashedSwap(fs, root, ".zmetadata")
     StoreMeta.awaitSwapWindow(fs, root, ".zmetadata")
-    val metaStatus = fs.getFileStatus(metaPath) // missing → plain FileNotFound with the path
-    require(metaStatus.getLen <= (256L << 20),
-      s"kerchunk parquet store '$dir': .zmetadata is ${metaStatus.getLen} bytes (cap 256 MiB) — " +
-        "consolidated metadata is the small plane; a document this big is corrupt")
-    val metaText = {
-      val in = fs.open(metaPath)
-      try {
-        val buf = new Array[Byte](metaStatus.getLen.toInt)
-        in.readFully(0, buf)
-        new String(buf, "UTF-8")
-      } finally in.close()
-    }
-    val metaJson = JsonMethods.parse(metaText)
-    val metadata: Seq[(String, JValue)] = metaJson \ "metadata" match {
-      case JObject(fields) => fields
-      case other => throw new IllegalArgumentException(
-        s"kerchunk parquet store '$dir': .zmetadata 'metadata' is " +
-          s"${other.getClass.getSimpleName}, not an object")
-    }
-    val recordSize: Long = metaJson \ "record_size" match {
-      case JInt(v)  => v.longValue
-      case JNothing => 10000L // fsspec LazyReferenceMapper's default
-      case other => throw new IllegalArgumentException(
-        s"kerchunk parquet store '$dir': record_size is ${other.getClass.getSimpleName}")
-    }
-    require(recordSize > 0, s"kerchunk parquet store '$dir': record_size $recordSize")
+    val meta = RefStoreMeta.load(fs, root, s"kerchunk parquet store '$dir'")
+    val recordSize = meta.recordSize
 
     import spark.implicits._
     // metadata documents → the same meta entry rows the JSON form emits
-    val metaDf = Entries.frame(spark, metadata.map { case (key, v) =>
+    val metaDf = Entries.frame(spark, meta.docs.map { case (key, v) =>
       Entries.meta(key, JsonMethods.compact(JsonMethods.render(v)))
     })
 
-    // per-variable chunk-grid geometry from the consolidated .zarray docs
-    def longs(v: JValue, what: String): Seq[Long] = v match {
-      case JArray(items) => items.map {
-        case JInt(n) => n.longValue
-        case other => throw new IllegalArgumentException(
-          s"kerchunk parquet store '$dir': $what holds ${other.getClass.getSimpleName}")
-      }
-      case other => throw new IllegalArgumentException(
-        s"kerchunk parquet store '$dir': $what is ${other.getClass.getSimpleName}, not an array")
-    }
-    val geometry: Seq[(String, Seq[Long], Long)] = metadata.collect {
-      case (key, zarray) if key == ".zarray" || key.endsWith("/.zarray") =>
-        val variable = if (key == ".zarray") "" else key.dropRight("/.zarray".length)
-        val shape  = longs(zarray \ "shape", s"$variable .zarray shape")
-        val chunks = longs(zarray \ "chunks", s"$variable .zarray chunks")
-        require(shape.length == chunks.length && chunks.forall(_ > 0),
-          s"kerchunk parquet store '$dir': variable '$variable' has shape $shape / chunks $chunks")
-        val grid = shape.zip(chunks).map { case (s, c) => math.max(1L, (s + c - 1) / c) }
-        (variable, grid, grid.product)
-    }
-    require(!geometry.exists(_._1.isEmpty) ||
+    val geometry = meta.geometry
+    require(!meta.docs.exists(_._1 == ".zarray") ||
         !fs.exists(new org.apache.hadoop.fs.Path(root, "refs.0.parq")),
       s"kerchunk parquet store '$dir': a ROOT-level array's ref files are " +
         "unsupported (zarr consolidated stores name their arrays)")
-    val knownVars = geometry.map(_._1).toSet
+    val knownVars = geometry.keySet
     val varDirs = onlyRecords match {
       case Some(recs) =>
         recs.foreach { case (v, r) =>
@@ -383,13 +340,12 @@ object KerchunkIndex {
         recs.toSeq.map { case (v, r) => new org.apache.hadoop.fs.Path(root, s"$v/refs.$r.parq") }
           .filter(fs.exists).map(_.toString)
       case None =>
-        geometry.map(_._1).filter(v => v.nonEmpty &&
-          fs.exists(new org.apache.hadoop.fs.Path(root, v)))
+        geometry.keys.toSeq.filter(v => fs.exists(new org.apache.hadoop.fs.Path(root, v)))
           .map(v => new org.apache.hadoop.fs.Path(root, v).toString)
     }
     if (varDirs.isEmpty) return metaDf
 
-    val geoDf = broadcast(geometry.map { case (v, grid, n) => (v, grid, n) }
+    val geoDf = broadcast(geometry.toSeq.map { case (v, (grid, n)) => (v, grid, n) }
       .toDF("variable", "grid", "nchunks"))
     val rootQ = fs.makeQualified(root).toString.stripSuffix("/")
     val refs = spark.read.options(storageOptions).parquet(varDirs: _*)
@@ -833,7 +789,8 @@ object KerchunkIndex {
           s"kerchunk parquet write: metadata entry '$key' is not JSON: ${e.getMessage}")
       })
     }
-    val geometry = refStoreGeometry(metaDocs)
+    val meta = RefStoreMeta(metaDocs, recordSize, "kerchunk parquet write")
+    val geometry = meta.geometry
     val root = FsPaths.hadoopPath(dir)
     val fs = try FsPaths.fileSystemFor(root, conf.value)
     catch { case e: java.io.IOException if FsPaths.isNoFilesystem(e) =>
@@ -862,42 +819,99 @@ object KerchunkIndex {
         writeRecordFiles(recordRowsOf(entries, geometry, recordSize), staged,
           recordSize, geometry.map { case (v, (_, n)) => v -> n }, conf,
           overwrite = false)
-        val metaJson = JObject(List(
-          JField("metadata", JObject(metaDocs.map { case (k, v) => JField(k, v) }.toList)),
-          JField("record_size", JLong(recordSize)),
-          JField("zarr_consolidated_format", JInt(1))))
-        val out = fs.create(new org.apache.hadoop.fs.Path(staged, ".zmetadata"), true)
-        try out.write(JsonMethods.compact(JsonMethods.render(metaJson)).getBytes("UTF-8"))
-        finally out.close()
+        meta.commit(fs, staged)
       }
     }
   }
 
-  /** Consolidated-metadata `.zarray` docs → per-variable (chunk grid,
-    * chunk count) — shared by [[writeParquetRefs]] and
-    * [[appendParquetRefs]]. */
-  private def refStoreGeometry(metaDocs: Seq[(String, org.json4s.JValue)])
-      : Map[String, (Seq[Long], Long)] = {
+  /** A parquet reference store's `.zmetadata`: the consolidated metadata
+    * documents by key, in document order, and `record_size`. The one
+    * parse and render of the document, shared by [[readParquetRefs]],
+    * [[writeParquetRefs]] and [[appendParquetRefs]]; `where` prefixes its
+    * refusals. */
+  private final case class RefStoreMeta(docs: Seq[(String, org.json4s.JValue)],
+                                        recordSize: Long, where: String) {
     import org.json4s._
-    def longs(v: JValue, what: String): Seq[Long] = v match {
-      case JArray(items) => items.map {
-        case JInt(x) => x.longValue
+    import org.json4s.jackson.JsonMethods
+    require(recordSize > 0, s"$where: record_size $recordSize")
+
+    /** Per named array (document order): its chunk grid and chunk count,
+      * from the `.zarray` docs. A root `.zarray` names no array here. */
+    lazy val geometry: ListMap[String, (Seq[Long], Long)] = {
+      def longs(v: JValue, what: String): Seq[Long] = v match {
+        case JArray(items) => items.map {
+          case JInt(x) => x.longValue
+          case other => throw new IllegalArgumentException(
+            s"$where: $what holds ${other.getClass.getSimpleName}")
+        }
         case other => throw new IllegalArgumentException(
-          s"kerchunk parquet write: $what holds ${other.getClass.getSimpleName}")
+          s"$where: $what is ${other.getClass.getSimpleName}, not an array")
       }
-      case other => throw new IllegalArgumentException(
-        s"kerchunk parquet write: $what is ${other.getClass.getSimpleName}")
+      ListMap(docs.collect {
+        case (key, zarray) if key.endsWith("/.zarray") =>
+          val variable = key.dropRight("/.zarray".length)
+          val shape  = longs(zarray \ "shape", s"$variable .zarray shape")
+          val chunks = longs(zarray \ "chunks", s"$variable .zarray chunks")
+          require(shape.length == chunks.length && chunks.forall(_ > 0),
+            s"$where: variable '$variable' has shape $shape / chunks $chunks")
+          val grid = shape.zip(chunks).map { case (s, c) => math.max(1L, (s + c - 1) / c) }
+          variable -> ((grid, grid.product))
+      }: _*)
     }
-    metaDocs.collect {
-      case (key, zarray) if key.endsWith("/.zarray") =>
-        val variable = key.dropRight("/.zarray".length)
-        val shape  = longs(zarray \ "shape", s"$variable shape")
-        val chunks = longs(zarray \ "chunks", s"$variable chunks")
-        require(shape.length == chunks.length && chunks.forall(_ > 0),
-          s"kerchunk parquet write: variable '$variable' shape $shape / chunks $chunks")
-        val grid = shape.zip(chunks).map { case (s, c) => math.max(1L, (s + c - 1) / c) }
-        variable -> ((grid, grid.product))
+
+    /** `_ARRAY_DIMENSIONS` per variable, from the `.zattrs` docs. */
+    lazy val dims: Map[String, Seq[String]] = docs.collect {
+      case (key, doc) if key.endsWith("/.zattrs") =>
+        key.dropRight("/.zattrs".length) -> ((doc \ "_ARRAY_DIMENSIONS") match {
+          case JArray(ds) => ds.collect { case JString(x) => x }
+          case _          => Seq.empty[String]
+        })
     }.toMap
+
+    /** Commit the document as `<root>/.zmetadata` — atomically, so a
+      * failed write leaves the previous document in place. */
+    def commit(fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path): Unit =
+      StoreMeta.atomicWriteJson(fs, new org.apache.hadoop.fs.Path(root, ".zmetadata"),
+        JsonMethods.compact(JsonMethods.render(JObject(List(
+          JField("metadata", JObject(docs.map { case (k, v) => JField(k, v) }.toList)),
+          JField("record_size", JLong(recordSize)),
+          JField("zarr_consolidated_format", JInt(1)))))))
+  }
+
+  private object RefStoreMeta {
+    /** Read and parse `<root>/.zmetadata` (size-capped: consolidated
+      * metadata is the small plane). A missing document is a plain
+      * FileNotFound naming the path. */
+    def load(fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
+             where: String): RefStoreMeta = {
+      import org.json4s._
+      val path = new org.apache.hadoop.fs.Path(root, ".zmetadata")
+      val len = fs.getFileStatus(path).getLen
+      require(len <= (256L << 20),
+        s"$where: .zmetadata is $len bytes (cap 256 MiB) — " +
+          "consolidated metadata is the small plane; a document this big is corrupt")
+      val text = {
+        val in = fs.open(path)
+        try {
+          val buf = new Array[Byte](len.toInt)
+          in.readFully(0, buf)
+          new String(buf, "UTF-8")
+        } finally in.close()
+      }
+      val json = org.json4s.jackson.JsonMethods.parse(text)
+      val docs = json \ "metadata" match {
+        case JObject(fields) => fields
+        case other => throw new IllegalArgumentException(
+          s"$where: .zmetadata 'metadata' is ${other.getClass.getSimpleName}, not an object")
+      }
+      val recordSize = json \ "record_size" match {
+        case JInt(v)  => v.longValue
+        case JNothing => 10000L // fsspec LazyReferenceMapper's default
+        case other => throw new IllegalArgumentException(
+          s"$where: record_size is ${other.getClass.getSimpleName}")
+      }
+      RefStoreMeta(docs, recordSize, where)
+    }
   }
 
   /** Data entry rows → (variable, __record, __flat, url, offset, length,
@@ -1116,36 +1130,20 @@ object KerchunkIndex {
   def appendParquetRefs(spark: SparkSession, dir: String, newTagged: DataFrame,
                         dim: String,
                         storageOptions: Map[String, String] = Map.empty): Unit = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
     val conf = new org.apache.spark.util.SerializableConfiguration(
       FsPaths.confWith(spark.sparkContext.hadoopConfiguration, storageOptions))
     val root = FsPaths.hadoopPath(dir)
     val fs = try FsPaths.fileSystemFor(root, conf.value)
     catch { case e: java.io.IOException if FsPaths.isNoFilesystem(e) =>
       FsPaths.connectorRefusal(dir, e) }
-    StoreMeta.withWriterLock(fs, root, "kerchunk parquet append") {
+    val where = "kerchunk parquet append"
+    StoreMeta.withWriterLock(fs, root, where) {
       // heal a crashed rebuild swap before reading the store (r17)
       StoreMeta.recoverCrashedSwap(fs, root, ".zmetadata")
-      val metaPath = new org.apache.hadoop.fs.Path(root, ".zmetadata")
-      require(fs.exists(metaPath),
-        s"kerchunk parquet append: '$dir' is not a parquet reference store (no .zmetadata)")
-      val oldJson = {
-        val in = fs.open(metaPath)
-        val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-        JsonMethods.parse(text)
-      }
-      val recordSize: Long = oldJson \ "record_size" match {
-        case JInt(v)  => v.longValue
-        case JNothing => 10000L // fsspec LazyReferenceMapper's default
-        case other => throw new IllegalArgumentException(
-          s"kerchunk parquet append: record_size is ${other.getClass.getSimpleName}")
-      }
-      val oldGeometry = refStoreGeometry(oldJson \ "metadata" match {
-        case JObject(fields) => fields
-        case other => throw new IllegalArgumentException(
-          s"kerchunk parquet append: .zmetadata 'metadata' is ${other.getClass.getSimpleName}")
-      })
+      require(fs.exists(new org.apache.hadoop.fs.Path(root, ".zmetadata")),
+        s"$where: '$dir' is not a parquet reference store (no .zmetadata)")
+      val old = RefStoreMeta.load(fs, root, where)
+      val (recordSize, oldGeometry) = (old.recordSize, old.geometry)
 
       // existing store = source 0; the new sources shift up by one, so the
       // full combine machinery arbitrates the append. The store's DATA scan
@@ -1154,18 +1152,8 @@ object KerchunkIndex {
       // candidate is read — an append to a years-old store reads O(1) old
       // record files, not the whole history (metadata always loads whole,
       // so every combine guard still sees the full variable set).
-      val oldDims: Map[String, Seq[String]] = (oldJson \ "metadata") match {
-        case JObject(fields) => fields.collect {
-          case (key, doc) if key.endsWith("/.zattrs") =>
-            key.dropRight("/.zattrs".length) -> ((doc \ "_ARRAY_DIMENSIONS") match {
-              case JArray(ds) => ds.collect { case JString(x) => x }
-              case _          => Seq.empty[String]
-            })
-        }.toMap
-        case _ => Map.empty
-      }
       val boundaryRecs: Map[String, Long] = oldGeometry.collect {
-        case (v, (_, oldN)) if oldDims.get(v).exists(_.contains(dim)) =>
+        case (v, (_, oldN)) if old.dims.get(v).exists(_.contains(dim)) =>
           v -> oldN / recordSize
       }
       val existing = readParquetRefs(spark, dir, storageOptions,
@@ -1175,30 +1163,24 @@ object KerchunkIndex {
       val combined = combineAlong(tagged, dim)
 
       // grown geometry + the leading-axis requirement
-      val newMetaDocs: Seq[(String, JValue)] = combined.filter(col("kind") === "meta")
+      val grownMeta = RefStoreMeta(combined.filter(col("kind") === "meta")
         .select("key", "inline_value").collect().toSeq
-        .map(r => r.getString(0) -> JsonMethods.parse(r.getString(1)))
-      val newGeometry = refStoreGeometry(newMetaDocs)
-      val dimsByVar: Map[String, Seq[String]] = newMetaDocs.collect {
-        case (key, doc) if key.endsWith("/.zattrs") =>
-          key.dropRight("/.zattrs".length) -> ((doc \ "_ARRAY_DIMENSIONS") match {
-            case JArray(ds) => ds.collect { case JString(x) => x }
-            case _          => Seq.empty[String]
-          })
-      }.toMap
+        .map(r => r.getString(0) -> org.json4s.jackson.JsonMethods.parse(r.getString(1))),
+        recordSize, where)
+      val newGeometry = grownMeta.geometry
       val grown = newGeometry.filter { case (v, (_, newN)) =>
         newN != oldGeometry.getOrElse(v,
           throw new IllegalArgumentException(
-            s"kerchunk parquet append: variable '$v' is not in the existing store"))._2
+            s"$where: variable '$v' is not in the existing store"))._2
       }
       grown.keys.foreach { v =>
-        require(dimsByVar.get(v).exists(_.headOption.contains(dim)),
-          s"kerchunk parquet append: variable '$v' concatenates along '$dim', which is " +
+        require(grownMeta.dims.get(v).exists(_.headOption.contains(dim)),
+          s"$where: variable '$v' concatenates along '$dim', which is " +
             "not its LEADING dimension — existing chunk positions would shift, so no " +
             "incremental append exists; build a fresh store with writeParquetRefs")
       }
       require(grown.nonEmpty, // combineAlong already refuses a no-op combine
-        s"kerchunk parquet append: nothing grew along '$dim'")
+        s"$where: nothing grew along '$dim'")
 
       // only the boundary-and-beyond records of grown variables rewrite;
       // identical variables and earlier records never leave the disk
@@ -1215,13 +1197,7 @@ object KerchunkIndex {
         newGeometry.map { case (v, (_, n)) => v -> n }, conf, overwrite = true)
 
       // metadata last: the store is torn-read-safe throughout the append
-      val metaJson = JObject(List(
-        JField("metadata", JObject(newMetaDocs.map { case (k, v) => JField(k, v) }.toList)),
-        JField("record_size", JLong(recordSize)),
-        JField("zarr_consolidated_format", JInt(1))))
-      val out = fs.create(metaPath, true)
-      try out.write(JsonMethods.compact(JsonMethods.render(metaJson)).getBytes("UTF-8"))
-      finally out.close()
+      grownMeta.commit(fs, root)
     }
   }
 
@@ -1509,8 +1485,25 @@ object KerchunkIndex {
     * any other filter id raises — silently wrong values would be worse
     * than a loud connector-boundary error.
     */
-  def decodeTyped(chunks: DataFrame, meta: DataFrame): DataFrame = {
-    val dataChunk = chunks.filter(isChunk(col("member")))
+  def decodeTyped(chunks: DataFrame, meta: DataFrame): DataFrame =
+    decodedPlane(chunks, meta, ZarrCodec.zarr_decode, "value")
+
+  /** [[decodeTyped]]'s LABEL-plane twin: fixed-width string chunks
+    * (`|S<n>`/`<U<n>`) decode to (variable, chunk, idx, label) rows —
+    * [[ZarrCodec.decodeLabels]] returns null for every other dtype, so
+    * numeric variables drop here exactly as string variables drop from
+    * the numeric plane. Same scan shape: one generated stage, no shuffle. */
+  def decodeLabelsTyped(chunks: DataFrame, meta: DataFrame): DataFrame =
+    decodedPlane(chunks, meta, ZarrCodec.zarr_decode_labels, "label")
+
+  /** The shared body of the value and label decode planes: the data
+    * chunks joined to their variable's `.zarray` metadata, decoded by
+    * `kernel` (data, dtype, compressor, filters) into (variable, chunk,
+    * idx, &lt;payload&gt;) rows. */
+  private def decodedPlane(chunks: DataFrame, meta: DataFrame,
+                           kernel: (Column, Column, Column, Column) => Column,
+                           payload: String): DataFrame =
+    chunks.filter(isChunk(col("member")))
       // LEFT join so a data chunk whose variable has NO .zarray row (or a
       // .zarray stored as a byte-range ref, which arrayMeta cannot parse —
       // dtype comes back null either way) is still present to fail the
@@ -1523,29 +1516,8 @@ object KerchunkIndex {
           lit("' has no inline .zarray metadata (missing, or stored as a " +
             "byte-range ref) — cannot decode its chunks"))),
         lit(true)))
-    dataChunk
       .select(col("variable"), col("member").as("chunk"),
-        posexplode(ZarrCodec.zarr_decode(col("data"), col("dtype"),
+        posexplode(kernel(col("data"), col("dtype"),
           coalesce(col("compressor"), lit("")), coalesce(col("filters"), lit("null")))))
-      .select(col("variable"), col("chunk"), col("pos").as("idx"), col("col").as("value"))
-  }
-
-  /** [[decodeTyped]]'s LABEL-plane twin: fixed-width string chunks
-    * (`|S<n>`/`<U<n>`) decode to (variable, chunk, idx, label) rows —
-    * [[ZarrCodec.decodeLabels]] returns null for every other dtype, so
-    * numeric variables drop here exactly as string variables drop from
-    * the numeric plane. Same scan shape: one generated stage, no shuffle. */
-  def decodeLabelsTyped(chunks: DataFrame, meta: DataFrame): DataFrame = {
-    chunks.filter(isChunk(col("member")))
-      .join(broadcast(meta), Seq("variable"), "left")
-      .filter(coalesce(assert_true(col("dtype").isNotNull,
-        concat(lit("zarr variable '"), shown(col("variable")),
-          lit("' has no inline .zarray metadata (missing, or stored as a " +
-            "byte-range ref) — cannot decode its chunks"))),
-        lit(true)))
-      .select(col("variable"), col("member").as("chunk"),
-        posexplode(ZarrCodec.zarr_decode_labels(col("data"), col("dtype"),
-          coalesce(col("compressor"), lit("")), coalesce(col("filters"), lit("null")))))
-      .select(col("variable"), col("chunk"), col("pos").as("idx"), col("col").as("label"))
-  }
+      .select(col("variable"), col("chunk"), col("pos").as("idx"), col("col").as(payload))
 }

@@ -379,6 +379,11 @@ object ZarrDirectoryIndex {
         v2Entries(fs, root, relOf, readText)
     }
 
+  private val V2MetaNames = Set(".zarray", ".zattrs", ".zgroup")
+
+  /** A Hadoop checksum sidecar (`.<name>.crc`) — not store content. */
+  private def isChecksum(name: String): Boolean = name.startsWith(".") && name.endsWith(".crc")
+
   private def v2Entries(fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
                         relOf: org.apache.hadoop.fs.Path => String,
                         readText: org.apache.hadoop.fs.Path => String): Iterator[Entry] = {
@@ -439,9 +444,10 @@ object ZarrDirectoryIndex {
           val member = key.split('/').last
           if (member.startsWith(".")) {
             // metadata document: inline its (small) JSON content — unless
-            // the consolidated doc already supplied it (skip the read; the
-            // .zmetadata file itself is never a plane document)
-            if (consolidated.isEmpty && member != ".zmetadata")
+            // the consolidated doc already supplied it (skip the read).
+            // Other hidden files (.zmetadata itself, the `.<name>.crc`
+            // checksums Hadoop writers leave) are not plane documents.
+            if (consolidated.isEmpty && V2MetaNames(member))
               nextEntry = Entries.meta(key, readText(f.getPath))
           } else {
             // chunk file: a whole-file ref — offset/length resolve to
@@ -495,7 +501,7 @@ object ZarrDirectoryIndex {
       override def next(): org.apache.hadoop.fs.LocatedFileStatus = files.next()
     }
     val chunks: Iterator[Entry] = fileIt
-      .filter(_.getPath.getName != "zarr.json")
+      .filter(f => f.getPath.getName != "zarr.json" && !isChecksum(f.getPath.getName))
       .flatMap { f =>
         val key  = relOf(f.getPath)
         val segs = key.split('/')

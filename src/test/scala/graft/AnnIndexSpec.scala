@@ -25,42 +25,21 @@ class AnnIndexSpec extends AnyFunSuite {
 
   test("indexed search is bit-identical to the in-flight pqTopK") {
     val dir = freshDir("eq")
-    val q = emb.filter(col("vec_id") < 3)
     AnnIndex.annIndexBuild(emb, "vec_id", "embedding", dir,
       nCells = 16, m = 8, nCentroids = 16, kmeansIters = 2)
-    val idx = AnnIndex.annSearchIndexed(spark, dir, q, "vec_id", "embedding",
-      k = 10, nProbe = 8, refine = 4)
-    val fly = Similarity.pqTopK(emb, "vec_id", "embedding", q, "vec_id", "embedding",
-      k = 10, m = 8, nCentroids = 16, nCells = 16, nProbe = 8, kmeansIters = 2)
-    val a = collectTopK(idx)
-    val b = collectTopK(fly)
-    assert(a.size == 30 && a == b) // cosine compared as exact doubles
-  }
-
-  test("battery-as-data search is bit-identical to the driver-side form") {
-    val dir = freshDir("bat")
-    AnnIndex.annIndexBuild(emb, "vec_id", "embedding", dir,
-      nCells = 8, m = 8, nCentroids = 8, kmeansIters = 1)
-    val q = emb.filter(col("vec_id") < 10)
-    val a = collectTopK(AnnIndex.annSearchIndexed(spark, dir, q, "vec_id", "embedding",
-      k = 10, nProbe = 4, refine = 4))
-    val b = collectTopK(AnnIndex.annSearchIndexedBatch(spark, dir, q, "vec_id", "embedding",
-      k = 10, nProbe = 4, refine = 4))
-    assert(a.size == 100 && a == b)
-  }
-
-  test("battery-as-data search refuses a wrong-dim query in-kernel") {
-    val dir = freshDir("batdim")
-    AnnIndex.annIndexBuild(emb.filter(col("vec_id") < 100), "vec_id", "embedding", dir,
-      nCells = 4, m = 8, nCentroids = 4, kmeansIters = 1)
-    val q = emb.filter(col("vec_id") === 1)
-      .withColumn("embedding", slice(col("embedding"), 1, 16))
-    val e = intercept[Exception] {
-      AnnIndex.annSearchIndexedBatch(spark, dir, q, "vec_id", "embedding").collect()
+    // a 3-query and a 40-query battery: pqTopK builds each query's probe
+    // order and ADC table on the driver, the store search keeps the
+    // battery as data — the rows must agree to the last bit either way
+    for (nq <- Seq(3, 40)) {
+      val q = emb.filter(col("vec_id") < nq)
+      val idx = AnnIndex.annSearchIndexed(spark, dir, q, "vec_id", "embedding",
+        k = 10, nProbe = 8, refine = 4)
+      val fly = Similarity.pqTopK(emb, "vec_id", "embedding", q, "vec_id", "embedding",
+        k = 10, m = 8, nCentroids = 16, nCells = 16, nProbe = 8, kmeansIters = 2)
+      val a = collectTopK(idx)
+      val b = collectTopK(fly)
+      assert(a.size == 10 * nq && a == b, s"$nq queries") // cosine compared as exact doubles
     }
-    val msg = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
-      .map(t => Option(t.getMessage).getOrElse("")).mkString("\n")
-    assert(msg.contains("does not match codebook dim"), msg.take(300))
   }
 
   test("append encodes identically to a one-shot build under the same training sample") {
@@ -231,9 +210,6 @@ class AnnIndexSpec extends AnyFunSuite {
     val a = top(dirA)
     assert(a == top(dirB)) // bit-identical, cosine doubles included
     assert(!a.exists { case (_, _, n, _) => n.asInstanceOf[Long] % 2 == 1 })
-    // the batch form shares the live view
-    assert(collectTopK(AnnIndex.annSearchIndexedBatch(
-      spark, dirA, q, "vec_id", "embedding", k = 10, nProbe = 4, refine = 4)) == a)
     // refusals: absent, already deleted, duplicates, empty
     import spark.implicits._
     def del(ids: Seq[Long]) = AnnIndex.annIndexDelete(
@@ -349,14 +325,12 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(full == fullR)
   }
 
-  test("batch filtered-search refill: relational widening, bit-equal to the driver form (r18)") {
-    // the r17 asymmetry: only the driver-sized form refilled — a
-    // corpus-scale filtered battery (THE production retrieval shape)
-    // still silently under-filled. The batch refill widens RELATIONALLY
-    // (starved ids by anti-join, next pass a cell-equality join at
-    // doubled probes; queries never collect) on the driver form's exact
-    // schedule and fill rule, so the two forms must be bit-identical
-    // over the same store, battery, and predicate.
+  test("battery refill: each query equals its first filling plain pass (r18)") {
+    // refill widens RELATIONALLY (starved ids by anti-join, next pass a
+    // cell-equality join at doubled probes; queries never collect), so
+    // over a 10-query battery each query's rows must equal the plain
+    // (refill = false) search at the first probe count of the schedule
+    // 1, 2, 4, … where that query fills to k — or at the full span.
     val dir = freshDir("batrfl")
     AnnIndex.annIndexBuild(emb, "vec_id", "embedding", dir,
       nCells = 16, m = 8, nCentroids = 16, kmeansIters = 2)
@@ -367,29 +341,32 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(nSurv >= k, s"fixture drifted: $nSurv survivors")
     // precondition: at 1 probe the filtered batch search leaves at least
     // one query short of k (survivors cluster away from some query's cell)
-    val dry = AnnIndex.annSearchIndexedBatch(spark, dir, q, "vec_id", "embedding",
-      k = k, nProbe = 1, refine = 4, predicate = pred)
-    val dryFill = dry.groupBy("query_id").count().collect().map(_.getLong(1))
-    assert(dryFill.length < 10 || dryFill.exists(_ < k),
+    // the plain passes of the doubling schedule, per query
+    val passes = Seq(1, 2, 4, 8, 16).map(p => collectTopK(AnnIndex.annSearchIndexed(
+      spark, dir, q, "vec_id", "embedding", k = k, nProbe = p, refine = 4,
+      predicate = pred)).groupBy(_._1))
+    assert(passes.head.size < 10 || passes.head.values.exists(_.size < k),
       "pre-condition lost: no query starved at 1 probe")
-    val batch = collectTopK(AnnIndex.annSearchIndexedBatch(spark, dir, q,
+    val refilled = collectTopK(AnnIndex.annSearchIndexed(spark, dir, q,
       "vec_id", "embedding", k = k, nProbe = 1, refine = 4,
       predicate = pred, refill = true))
-    assert(AnnIndex.lastBatchRefillRounds.get() > 1,
+    assert(AnnIndex.lastRefillRounds.get() > 1,
       "the starving battery should have taken widening rounds")
-    val driver = collectTopK(AnnIndex.annSearchIndexed(spark, dir, q,
-      "vec_id", "embedding", k = k, nProbe = 1, refine = 4,
-      predicate = pred, refill = true))
-    assert(batch.nonEmpty && batch == driver) // cosines compared as exact doubles
+    val qids = q.select("vec_id").collect().map(_.get(0)).toSeq
+    val expected = qids.flatMap { qid =>
+      val filling = passes.find(_.get(qid).exists(_.size >= k)).getOrElse(passes.last)
+      filling.getOrElse(qid, Nil)
+    }.sortBy(t => (t._1.toString, t._2))
+    assert(refilled.nonEmpty && refilled == expected) // cosines compared as exact doubles
     // every query fills to k (enough survivors exist at full span)
-    assert(batch.groupBy(_._1).forall(_._2.size == k))
+    assert(refilled.groupBy(_._1).forall(_._2.size == k))
     // widening fires ONLY when a query starves: an unstarved battery runs
     // exactly one pass and returns bit-identical rows to refill = false
-    val plain = collectTopK(AnnIndex.annSearchIndexedBatch(spark, dir, q,
+    val plain = collectTopK(AnnIndex.annSearchIndexed(spark, dir, q,
       "vec_id", "embedding", k = k, nProbe = 8, refine = 4))
-    val plainR = collectTopK(AnnIndex.annSearchIndexedBatch(spark, dir, q,
+    val plainR = collectTopK(AnnIndex.annSearchIndexed(spark, dir, q,
       "vec_id", "embedding", k = k, nProbe = 8, refine = 4, refill = true))
-    assert(AnnIndex.lastBatchRefillRounds.get() == 1,
+    assert(AnnIndex.lastRefillRounds.get() == 1,
       "an unstarved battery must not take widening rounds")
     assert(plain == plainR)
     // a predicate with fewer than k survivors fills to ALL of them per
@@ -397,7 +374,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val tiny = Some(col("id") % 499 === 0)
     val nTiny = emb.filter(col("vec_id") % 499 === 0).count()
     assert(nTiny < k && nTiny > 0)
-    val short = AnnIndex.annSearchIndexedBatch(spark, dir, q, "vec_id", "embedding",
+    val short = AnnIndex.annSearchIndexed(spark, dir, q, "vec_id", "embedding",
       k = k, nProbe = 1, refine = 4, predicate = tiny, refill = true)
     assert(short.count() == 10L * nTiny)
   }
@@ -516,12 +493,14 @@ class AnnIndexSpec extends AnyFunSuite {
     val dir = freshDir("qdim")
     AnnIndex.annIndexBuild(emb.filter(col("vec_id") < 50), "vec_id", "embedding", dir,
       nCells = 4, m = 8, nCentroids = 4, kmeansIters = 1)
-    val q = emb.filter(col("vec_id") === 1)
-      .withColumn("embedding", slice(col("embedding"), 1, 16))
+    // a well-formed query beside the short one: the refusal names the
+    // offending query, whatever its position in the battery
+    val q = emb.filter(col("vec_id") === 0).unionByName(emb.filter(col("vec_id") === 1)
+      .withColumn("embedding", slice(col("embedding"), 1, 16)))
     val e = intercept[IllegalArgumentException] {
       AnnIndex.annSearchIndexed(spark, dir, q, "vec_id", "embedding")
     }
-    assert(e.getMessage.contains("has dim 16"))
+    assert(e.getMessage.contains("query '1' has dim 16"), e.getMessage)
   }
 
   test("filtered search: pre-rank predicate, refill from survivors, both forms agree (r16)") {
@@ -547,10 +526,14 @@ class AnnIndexSpec extends AnyFunSuite {
     // it self-hits; queries 1 — odd — cannot return themselves)
     assert(filtered.exists(t => t._1 == 0L && t._2 == 1 && t._3 == 0L))
     assert(!filtered.exists(t => t._1 == 1L && t._3 == 1L))
-    // battery-as-data form agrees under the same predicate
-    val batch = collectTopK(AnnIndex.annSearchIndexedBatch(spark, dirF,
-      q, "vec_id", "embedding", k = 10, nProbe = 4, refine = 4, predicate = pred))
-    assert(batch == filtered)
+    // at the exact calibration point (every cell probed, a short list
+    // spanning the corpus) the filtered search is brute force over the
+    // allowed vectors, to the last bit
+    val exact = collectTopK(AnnIndex.annSearchIndexed(spark, dirF, q, "vec_id", "embedding",
+      k = 10, nProbe = 8, refine = (emb.count() / 10L + 1L).toInt, predicate = pred))
+    val brute = collectTopK(Similarity.bruteForceTopK(emb.filter(col("vec_id") % 2 === 0),
+      "vec_id", "embedding", q, "vec_id", "embedding", k = 10))
+    assert(exact.size == 30 && exact == brute)
   }
 
   test("writer lease, crashed-swap auto-recovery, tombstone ledger + cap (r16)") {

@@ -367,6 +367,32 @@ class KerchunkProductionSpec extends AnyFunSuite {
     assert(storeCells(store) == before)
   }
 
+  test("appendParquetRefs: a .zmetadata write failing midway leaves the previous document byte-identical") {
+    // the append commits the grown .zmetadata LAST; a truncate-in-place
+    // write that dies midway would leave a torn document — unparseable,
+    // so the store would no longer open
+    import graft.harness.FaultInjectingFs
+    val dir = java.nio.file.Files.createTempDirectory("kerchunk_app_meta")
+    val (a, b, c) = (combineIndex(dir, "a", 4, 0), combineIndex(dir, "b", 4, 4),
+      combineIndex(dir, "c", 3, 8))
+    val store = dir.resolve("store").toString
+    KerchunkIndex.writeParquetRefs(
+      KerchunkIndex.combineAlong(KerchunkIndex.readMany(spark, Seq(a, b)), "time"),
+      store, recordSize = 3)
+    val metaPath = java.nio.file.Paths.get(store, ".zmetadata")
+    val before = java.nio.file.Files.readAllBytes(metaPath)
+    FaultInjectingFs.failNextCreate(_.contains(".zmetadata"), afterBytes = 16)
+    val e = intercept[Exception] {
+      KerchunkIndex.appendParquetRefs(spark, FaultInjectingFs.path(store),
+        KerchunkIndex.readMany(spark, Seq(c)), "time", FaultInjectingFs.options)
+    }
+    assert(FaultInjectingFs.disarm(), "the .zmetadata write never started")
+    val texts = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+      .map(t => Option(t.getMessage).getOrElse("")).mkString("\n")
+    assert(texts.contains("injected fault"), texts.take(400))
+    assert(java.util.Arrays.equals(before, java.nio.file.Files.readAllBytes(metaPath)))
+  }
+
   test("appendParquetRefs: record-aligned boundary (no rewrite) and multi-source append (r13)") {
     val dir = java.nio.file.Files.createTempDirectory("kerchunk_app3")
     val (a, b, c) = (combineIndex(dir, "a", 4, 0), combineIndex(dir, "b", 4, 4),

@@ -689,25 +689,22 @@ class PlanAuditSpec extends AnyFunSuite {
     val idx = java.nio.file.Files.createTempDirectory("graft_ann_bataudit").toString
     graft.operators.AnnIndex.annIndexBuild(emb, "vec_id", "embedding", idx,
       nCells = 8, m = 8, nCentroids = 8, kmeansIters = 1, overwrite = true)
-    def planOf(nq: Int): String = graft.operators.AnnIndex.annSearchIndexedBatch(
+    def planOf(nq: Int): String = graft.operators.AnnIndex.annSearchIndexed(
         spark, idx, emb.filter(col("vec_id") < nq), "vec_id", "embedding",
         k = 5, nProbe = 4, refine = 4)
       .queryExecution.executedPlan.toString
     val small = planOf(2)
     val big   = planOf(40)
     // queries stay DATA: no per-query Union fan-out, and the 40-query
-    // plan is the 2-query plan modulo the battery filter literal
+    // plan is the 2-query plan modulo the probed-cell literals
     assert(!small.contains("Union"), small.take(2500))
     assert(!big.contains("Union"), big.take(2500))
     def shape(p: String) = ("Scan parquet".r.findAllIn(p).size,
       "Exchange".r.findAllIn(p).size, "Join".r.findAllIn(p).size)
     assert(shape(small) == shape(big), s"${shape(small)} vs ${shape(big)}")
-    // ...whereas the driver-side form's plan grows a branch per query
-    val drv = graft.operators.AnnIndex.annSearchIndexed(
-        spark, idx, emb.filter(col("vec_id") < 3), "vec_id", "embedding",
-        k = 5, nProbe = 4, refine = 4)
-      .queryExecution.executedPlan.toString
-    assert(drv.contains("Union"), drv.take(2500))
+    // ...and both still prune cells statically
+    for (p <- Seq(small, big))
+      assert("""PartitionFilters: \[cell#\d+ IN \(""".r.findFirstIn(p).isDefined, p.take(2500))
   }
 
   test("hybrid fusion over the stores keeps both stores' pruning; joins only top-k volume (r16)") {
@@ -730,8 +727,8 @@ class PlanAuditSpec extends AnyFunSuite {
           ann.select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))),
           k = 5)
         .queryExecution.executedPlan.toString
-    // the production fused shape: battery-as-data ann side (the gate's)
-    val p = fusedPlan(graft.operators.AnnIndex.annSearchIndexedBatch(spark, annIdx,
+    // the production fused shape (the gate's)
+    val p = fusedPlan(graft.operators.AnnIndex.annSearchIndexed(spark, annIdx,
       emb.filter(col("vec_id") < 2), "vec_id", "embedding",
       k = 5, nProbe = 4, refine = 4))
     // zero corpus scans anywhere under the fused plan — both sides answer
@@ -739,11 +736,10 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!p.contains("documents.parquet"), p.take(3000))
     // the bm25 store keeps its pushed `term IN (…)` vocabulary pruning...
     assert(p.contains("PushedFilters: [In(term"), p.take(3000))
-    // ...and the batch ann side keeps ITS pruning shape under fusion: the
-    // ADC candidate scan stays column-pruned to (id, codes, vnorm) — the
-    // batch form prunes cells by equality JOIN, not PartitionFilters
-    // (pinned in the batch-plan test above), so column pruning is the
-    // store-read property fusion could break
+    // ...and the ann side keeps its probed-cell PartitionFilters and the
+    // (id, codes, vnorm) column pruning of its ADC candidate scan
+    assert("""PartitionFilters: \[cell#\d+ IN \(""".r.findFirstIn(p).isDefined,
+      p.take(3000))
     assert(p.contains("ReadSchema: struct<id:bigint,codes:array<int>,vnorm:double>"),
       p.take(3000))
     // fusion joins only top-k survivor volume: every rrfFuse input is a
@@ -754,14 +750,6 @@ class PlanAuditSpec extends AnyFunSuite {
     val localPrunes = """partial_topkrows""".r.findAllIn(p).size
     assert(localPrunes >= 3, // bm25 retrieval top-k + ann shortlist + ann re-rank
       s"expected the sources' map-side partial heap prunes, got $localPrunes\n" + p.take(3000))
-    // the driver-form ann side keeps probed-cell PartitionFilters under
-    // the same fusion (its pruning shape)
-    val pd = fusedPlan(graft.operators.AnnIndex.annSearchIndexed(spark, annIdx,
-      emb.filter(col("vec_id") < 2), "vec_id", "embedding",
-      k = 5, nProbe = 4, refine = 4))
-    assert("""PartitionFilters: \[cell#\d+ IN \(""".r.findFirstIn(pd).isDefined,
-      pd.take(3000))
-    assert(pd.contains("PushedFilters: [In(term"), pd.take(3000))
   }
 
   test("GD loop over a did-clustered feature cache: residual groupBy and " +

@@ -340,7 +340,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("PqAdcDirect equals the driver-table PqAdcDot bit-for-bit on random inputs (r14)") {
-    // the battery-as-data search's bit-identity claim reduces to this law:
+    // the store search's bit-identity to pqTopK reduces to this law:
     // for ANY (query, codebooks, codes), summing driver-precomputed table
     // entries equals computing the per-subspace dots in-kernel
     val genDims = Gen.zip(Gen.choose(1, 4), Gen.choose(1, 5), Gen.choose(1, 6))
@@ -352,7 +352,7 @@ class PropertySpec extends AnyFunSuite {
         Array.tabulate(nCent)(c => Array.tabulate(sd)(i => f(s0 * 31 + c, i))))
       val qv: Array[Float] = Array.tabulate(dim)(i => f(9991, i))
       val codes: Array[Int] = Array.tabulate(m)(s0 => (s0 * 7 + 3) % nCent)
-      // driver table: the exact loop annSearchIndexed runs
+      // driver table: the exact loop pqTopK runs (Similarity.pqAdcTable)
       val table: Array[Array[Double]] = {
         var off = 0
         books.map { book =>

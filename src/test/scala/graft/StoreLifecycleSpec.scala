@@ -66,9 +66,9 @@ class StoreLifecycleSpec extends AnyFunSuite {
       k = 3, nProbe = 2, refine = 2).collect().toSet)
 
   /** Build A, append, delete two ids twice (so the second delete, the
-    * compact and the stats read a tombstone plane of one and two batches),
-    * compact A into B: the jobs of each step and the meta.json bytes it
-    * leaves. */
+    * compact, the stats and the search read a tombstone plane of one and
+    * two batches), compact A into B: the jobs of each step and the
+    * meta.json bytes it leaves. The search's jobs include its collect. */
   private def run(store: Lifecycle, tag: String): (Map[String, Int], Map[String, String]) = {
     val (a, b) = (tmp(s"${tag}_a"), tmp(s"${tag}_b"))
     val counts = Seq.newBuilder[(String, Int)]
@@ -83,15 +83,16 @@ class StoreLifecycleSpec extends AnyFunSuite {
     step("delete2", a)(store.delete(a, Seq(5L, 6L)))
     step("compact", b)(store.compact(a, b, false))
     counts += "stats" -> jobs(store.stats(a))
+    counts += "search" -> jobs(store.search(a))
     (counts.result().toMap, metas.result().toMap)
   }
 
   // measured on `local[4]`: a change here is a change in the stores'
   // Spark traffic or in their on-disk format
   private val bm25Jobs = Map("build" -> 11, "append" -> 15, "delete" -> 6, "delete2" -> 8,
-    "compact" -> 35, "stats" -> 6)
+    "compact" -> 35, "stats" -> 6, "search" -> 19)
   private val annJobs = Map("build" -> 8, "append" -> 9, "delete" -> 7, "delete2" -> 9,
-    "compact" -> 9, "stats" -> 0)
+    "compact" -> 9, "stats" -> 0, "search" -> 13)
 
   private val bm25Metas = Map(
     "build" -> """{"format": "graft-bm25-index", "version": 1, "batches": 1, "n": 12, "sumdl": 48, "tombBatches": 0, "tombRows": 0, "positions": true}""",
